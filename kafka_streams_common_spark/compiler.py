@@ -131,13 +131,16 @@ class BatchCompiler:
 
     # -- roots ---------------------------------------------------------------
 
+    def _read_source(self, p: PipelineDef) -> DataFrame:
+        """The pipeline's source relation (a stream in ``StreamingCompiler``)."""
+        if p.initial_source_is_stream:
+            return self.registry.stream(p.source)
+        return self.registry.table(p.source)
+
     def _root(self, p: PipelineDef) -> DataFrame:
         """Source + optional filter + key column (P2 re-key,
         DynamicTopologyBuilder.java:112-126)."""
-        if p.initial_source_is_stream:
-            df = self.registry.stream(p.source)
-        else:
-            df = self.registry.table(p.source)
+        df = self._read_source(p)
         if p.filter:
             df = df.filter(p.filter)
         key_col = self._extract_key(df, p.source, p.key_extraction)

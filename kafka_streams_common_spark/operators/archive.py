@@ -22,12 +22,11 @@ training-data-pipeline extension, not a port.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 GZIP_MAGIC = b"\x1f\x8b"
 
@@ -356,20 +355,13 @@ def encode_gzip_docs(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                fname = f"doc-{int(did)}.txt" if int(did) % 2 == 0 else None
-                payloads.append(_gzip_compress_bytes(text.encode(), fname=fname))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        fname = f"doc-{int(did)}.txt" if int(did) % 2 == 0 else None
+        yield did, _gzip_compress_bytes(text.encode(), fname=fname)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 GZIP_TEXT_SCHEMA = T.StructType(
@@ -392,22 +384,11 @@ def decode_gzip_text_stats(gz: DataFrame) -> DataFrame:
     wrong trailer offset breaks the hash. Map-only."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                fname, data = _gzip_decompress_bytes(bytes(p))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "member_name": fname,
-                        "n_bytes": len(data),
-                        "text_md5": hashlib.md5(data).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in GZIP_TEXT_SCHEMA])
+    def decode(did, p):
+        fname, data = _gzip_decompress_bytes(bytes(p))
+        yield did, fname, len(data), hashlib.md5(data).hexdigest()
 
-    return gz.mapInPandas(batches, GZIP_TEXT_SCHEMA)
+    return row_kernel(gz.select("doc_id", "payload"), decode, GZIP_TEXT_SCHEMA)
 
 
 def encode_webdataset_shard(
@@ -428,26 +409,18 @@ def encode_webdataset_shard(
 
     out_schema = T.StructType([T.StructField("payload", T.BinaryType(), True)])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % 16 + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                pgm = b"P5\n%d %d\n255\n" % (w, h) + raster
-                key = f"doc-{int(did)}"
-                payloads.append(
-                    _tar_bytes(
-                        [(f"{key}.pgm", pgm), (f"{key}.txt", text.encode())]
-                    )
-                )
-            yield pd.DataFrame({"payload": payloads}, columns=["payload"])
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        pgm = b"P5\n%d %d\n255\n" % (w, h) + raster
+        key = f"doc-{int(did)}"
+        yield (_tar_bytes([(f"{key}.pgm", pgm), (f"{key}.txt", text.encode())]),)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 WEBDATASET_SCHEMA = T.StructType(
@@ -479,36 +452,29 @@ def decode_webdataset_pairs(shards: DataFrame) -> DataFrame:
 
     from kafka_streams_common_spark.operators.multimodal import _parse_netpbm
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p in pdf["payload"]:
-                members = _parse_tar(bytes(p))
-                groups: dict[str, dict[str, bytes]] = {}
-                for name, data in members:
-                    key, _, ext = name.partition(".")
-                    groups.setdefault(key, {})[ext] = data
-                for key, parts in groups.items():
-                    if "pgm" not in parts or "txt" not in parts:
-                        raise ValueError(f"incomplete WebDataset pair {key!r}")
-                    if not key.startswith("doc-"):
-                        raise ValueError(f"unrecognized member key {key!r}")
-                    channels, w, h, px = _parse_netpbm(parts["pgm"])
-                    flat = px.astype(np.int64).ravel()
-                    rows.append(
-                        {
-                            "doc_id": int(key[4:]),
-                            "n_members": len(parts),
-                            "width": w,
-                            "height": h,
-                            "mean_px": float(flat.mean()),
-                            "caption_bytes": len(parts["txt"]),
-                            "caption_md5": hashlib.md5(parts["txt"]).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in WEBDATASET_SCHEMA])
+    def decode(p):
+        groups: dict[str, dict[str, bytes]] = {}
+        for name, data in _parse_tar(bytes(p)):
+            key, _, ext = name.partition(".")
+            groups.setdefault(key, {})[ext] = data
+        for key, parts in groups.items():
+            if "pgm" not in parts or "txt" not in parts:
+                raise ValueError(f"incomplete WebDataset pair {key!r}")
+            if not key.startswith("doc-"):
+                raise ValueError(f"unrecognized member key {key!r}")
+            channels, w, h, px = _parse_netpbm(parts["pgm"])
+            flat = px.astype(np.int64).ravel()
+            yield {
+                "doc_id": int(key[4:]),
+                "n_members": len(parts),
+                "width": w,
+                "height": h,
+                "mean_px": float(flat.mean()),
+                "caption_bytes": len(parts["txt"]),
+                "caption_md5": hashlib.md5(parts["txt"]).hexdigest(),
+            }
 
-    return shards.mapInPandas(batches, WEBDATASET_SCHEMA)
+    return row_kernel(shards.select("payload"), decode, WEBDATASET_SCHEMA)
 
 
 def encode_zip_bundles(
@@ -527,24 +493,20 @@ def encode_zip_bundles(
     exchange is inserted."""
     out_schema = T.StructType([T.StructField("payload", T.BinaryType(), True)])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                key = f"doc-{int(did)}"
-                payloads.append(
-                    _zip_bytes(
-                        [
-                            (f"{key}.txt", text.encode(), True),
-                            (f"{key}.rev", text[::-1].encode(), False),
-                        ]
-                    )
-                )
-            yield pd.DataFrame({"payload": payloads}, columns=["payload"])
+    def encode(did, text):
+        key = f"doc-{int(did)}"
+        yield (
+            _zip_bytes(
+                [
+                    (f"{key}.txt", text.encode(), True),
+                    (f"{key}.rev", text[::-1].encode(), False),
+                ]
+            ),
+        )
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 ZIP_BUNDLE_SCHEMA = T.StructType(
@@ -570,31 +532,25 @@ def decode_zip_bundles(bundles: DataFrame) -> DataFrame:
     breaks one hash and not the other. Map-only."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for p in pdf["payload"]:
-                groups: dict[str, dict[str, bytes]] = {}
-                for name, data in _parse_zip(bytes(p)):
-                    key, _, ext = name.partition(".")
-                    groups.setdefault(key, {})[ext] = data
-                for key, parts in groups.items():
-                    if "txt" not in parts or "rev" not in parts:
-                        raise ValueError(f"incomplete zip bundle {key!r}")
-                    if not key.startswith("doc-"):
-                        raise ValueError(f"unrecognized member key {key!r}")
-                    rows.append(
-                        {
-                            "doc_id": int(key[4:]),
-                            "n_members": len(parts),
-                            "text_bytes": len(parts["txt"]),
-                            "text_md5": hashlib.md5(parts["txt"]).hexdigest(),
-                            "rev_md5": hashlib.md5(parts["rev"]).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in ZIP_BUNDLE_SCHEMA])
+    def decode(p):
+        groups: dict[str, dict[str, bytes]] = {}
+        for name, data in _parse_zip(bytes(p)):
+            key, _, ext = name.partition(".")
+            groups.setdefault(key, {})[ext] = data
+        for key, parts in groups.items():
+            if "txt" not in parts or "rev" not in parts:
+                raise ValueError(f"incomplete zip bundle {key!r}")
+            if not key.startswith("doc-"):
+                raise ValueError(f"unrecognized member key {key!r}")
+            yield {
+                "doc_id": int(key[4:]),
+                "n_members": len(parts),
+                "text_bytes": len(parts["txt"]),
+                "text_md5": hashlib.md5(parts["txt"]).hexdigest(),
+                "rev_md5": hashlib.md5(parts["rev"]).hexdigest(),
+            }
 
-    return bundles.mapInPandas(batches, ZIP_BUNDLE_SCHEMA)
+    return row_kernel(bundles.select("payload"), decode, ZIP_BUNDLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -766,28 +722,17 @@ def encode_bz2_xz_docs(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                data = text.encode()
-                if did % 2 == 0:
-                    payloads.append(_bz2_compress_member(data, 1 + did % 9))
-                else:
-                    payloads.append(
-                        _xz_compress_member(
-                            data, "crc32" if did % 4 == 1 else "crc64"
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        did = int(did)
+        data = text.encode()
+        if did % 2 == 0:
+            yield did, _bz2_compress_member(data, 1 + did % 9)
+        else:
+            yield did, _xz_compress_member(data, "crc32" if did % 4 == 1 else "crc64")
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 BZ2_XZ_TEXT_SCHEMA = T.StructType(
@@ -814,29 +759,23 @@ def decode_bz2_xz_text_stats(members: DataFrame) -> DataFrame:
     end. Map-only."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                if p[:3] == BZ2_MAGIC:
-                    level, data = _bz2_verify_and_decompress(p)
-                    codec, check_name = "bz2", None
-                elif p[:6] == XZ_MAGIC:
-                    check_name, data = _xz_verify_and_decompress(p)
-                    codec, level = "xz", None
-                else:
-                    raise ValueError(f"unrecognized compressed member: {p[:6]!r}")
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "codec": codec,
-                        "level": level,
-                        "check_name": check_name,
-                        "n_bytes": len(data),
-                        "text_md5": hashlib.md5(data).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in BZ2_XZ_TEXT_SCHEMA])
+    def decode(did, p):
+        p = bytes(p)
+        if p[:3] == BZ2_MAGIC:
+            level, data = _bz2_verify_and_decompress(p)
+            codec, check_name = "bz2", None
+        elif p[:6] == XZ_MAGIC:
+            check_name, data = _xz_verify_and_decompress(p)
+            codec, level = "xz", None
+        else:
+            raise ValueError(f"unrecognized compressed member: {p[:6]!r}")
+        yield {
+            "doc_id": did,
+            "codec": codec,
+            "level": level,
+            "check_name": check_name,
+            "n_bytes": len(data),
+            "text_md5": hashlib.md5(data).hexdigest(),
+        }
 
-    return members.mapInPandas(batches, BZ2_XZ_TEXT_SCHEMA)
+    return row_kernel(members.select("doc_id", "payload"), decode, BZ2_XZ_TEXT_SCHEMA)

@@ -42,12 +42,14 @@ import hashlib
 import json
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 OCF_MAGIC = b"Obj\x01"
 CONFLUENT_MAGIC = 0x00
@@ -537,26 +539,20 @@ def decode_orders_ocf(containers: DataFrame) -> DataFrame:
     id and the codec the file itself declares — both oracle-gated, so
     a wrong codec route or a swallowed block breaks the hash."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid, payload in zip(pdf["container_id"], pdf["payload"]):
-                _, codec, recs = read_ocf(bytes(payload))
-                for r in recs:
-                    rows.append(
-                        {
-                            "o_orderkey": r["o_orderkey"],
-                            "o_custkey": r["o_custkey"],
-                            "o_totalprice": r["o_totalprice"],
-                            "o_orderstatus": r["o_orderstatus"],
-                            "priority": r["priority"],
-                            "container_id": int(cid),
-                            "codec": codec,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _OCF_ROWS])
+    def decode(cid, payload):
+        _, codec, recs = read_ocf(bytes(payload))
+        for r in recs:
+            yield {
+                "o_orderkey": r["o_orderkey"],
+                "o_custkey": r["o_custkey"],
+                "o_totalprice": r["o_totalprice"],
+                "o_orderstatus": r["o_orderstatus"],
+                "priority": r["priority"],
+                "container_id": int(cid),
+                "codec": codec,
+            }
 
-    return containers.mapInPandas(batches, _OCF_ROWS)
+    return row_kernel(containers.select("container_id", "payload"), decode, _OCF_ROWS)
 
 
 EVENT_SCHEMA_V1 = {
@@ -615,42 +611,33 @@ def encode_events_confluent(events: DataFrame) -> DataFrame:
     the kernel across the session's cores; a many-split production table
     takes the no-op branch and no exchange is inserted."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for eid, et, val, uid in zip(
-                pdf["event_id"], pdf["event_type"], pdf["value"], pdf["user_id"]
-            ):
-                eid = int(eid)
-                if eid % 3 == 0:
-                    body = encode_record(
-                        EVENT_SCHEMA_V1,
-                        {"event_id": eid, "event_type": str(et), "value": float(val)},
-                    )
-                    payloads.append(confluent_frame(1, body))
-                else:
-                    body = encode_record(
-                        EVENT_SCHEMA_V2,
-                        {
-                            "event_id": eid,
-                            "event_type": str(et),
-                            "value": float(val),
-                            "source": f"u{int(uid)}",
-                            "debug": f"host-{eid % 17}",
-                        },
-                    )
-                    payloads.append(confluent_frame(2, body))
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
+    def encode(eid, et, val, uid):
+        eid = int(eid)
+        if eid % 3 == 0:
+            body = encode_record(
+                EVENT_SCHEMA_V1,
+                {"event_id": eid, "event_type": str(et), "value": float(val)},
             )
+            yield eid, confluent_frame(1, body)
+        else:
+            body = encode_record(
+                EVENT_SCHEMA_V2,
+                {
+                    "event_id": eid,
+                    "event_type": str(et),
+                    "value": float(val),
+                    "source": f"u{int(uid)}",
+                    "debug": f"host-{eid % 17}",
+                },
+            )
+            yield eid, confluent_frame(2, body)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "event_type", "value", "user_id")
-    ).mapInPandas(
-        batches, _CONFLUENT_MSG
+    return row_kernel(
+        fan_out(events.select("event_id", "event_type", "value", "user_id")),
+        encode,
+        _CONFLUENT_MSG,
     )
 
 
@@ -673,25 +660,19 @@ def decode_events_confluent(msgs: DataFrame) -> DataFrame:
     and discarded. Emits the resolved record + the writer's schema id
     (oracle-gated, so the id split itself is checked)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                sid, rec = confluent_parse(
-                    bytes(payload), EVENT_SCHEMAS_BY_ID, EVENT_SCHEMA_READER
-                )
-                rows.append(
-                    {
-                        "event_id": rec["event_id"],
-                        "event_type": rec["event_type"],
-                        "value": rec["value"],
-                        "source": rec["source"],
-                        "schema_id": sid,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _CONFLUENT_ROWS])
+    def decode(payload):
+        sid, rec = confluent_parse(
+            bytes(payload), EVENT_SCHEMAS_BY_ID, EVENT_SCHEMA_READER
+        )
+        yield {
+            "event_id": rec["event_id"],
+            "event_type": rec["event_type"],
+            "value": rec["value"],
+            "source": rec["source"],
+            "schema_id": sid,
+        }
 
-    return msgs.mapInPandas(batches, _CONFLUENT_ROWS)
+    return row_kernel(msgs.select("payload"), decode, _CONFLUENT_ROWS)
 
 
 def read_ocf_files(spark, path: str) -> DataFrame:
@@ -785,36 +766,27 @@ def encode_events_avro_props(events: DataFrame) -> DataFrame:
     import hashlib
     import json as _json
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for eid, props_json, et, uid in zip(
-                pdf["event_id"], pdf["props"], pdf["event_type"], pdf["user_id"]
-            ):
-                eid, uid = int(eid), int(uid)
-                k = int(_json.loads(props_json)["k"])
-                entries = [("k", k), ("u", uid)]
-                if eid % 3 != 0:
-                    entries.append(("t", eid % 7))
-                digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
-                tags = [int(digest[2 * i : 2 * i + 2], 16) for i in range(3)]
-                body = (
-                    write_long(eid)
-                    + encode_map_blocks("long", entries, split=2)
-                    + encode_array_blocks("long", tags, negative=eid % 2 == 0)
-                )
-                payloads.append(confluent_frame(3, body))
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
-            )
+    def encode(eid, props_json, et, uid):
+        eid, uid = int(eid), int(uid)
+        k = int(_json.loads(props_json)["k"])
+        entries = [("k", k), ("u", uid)]
+        if eid % 3 != 0:
+            entries.append(("t", eid % 7))
+        digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
+        tags = [int(digest[2 * i : 2 * i + 2], 16) for i in range(3)]
+        body = (
+            write_long(eid)
+            + encode_map_blocks("long", entries, split=2)
+            + encode_array_blocks("long", tags, negative=eid % 2 == 0)
+        )
+        yield eid, confluent_frame(3, body)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "props", "event_type", "user_id")
-    ).mapInPandas(
-        batches, _PROPS_MSG
+    return row_kernel(
+        fan_out(events.select("event_id", "props", "event_type", "user_id")),
+        encode,
+        _PROPS_MSG,
     )
 
 
@@ -837,28 +809,22 @@ def decode_events_avro_props(msgs: DataFrame) -> DataFrame:
     negative-count arrays both land here, so the chaining walk and the
     skip-size parse are load-bearing for every row's hash."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                msg = bytes(payload)
-                if msg[0] != CONFLUENT_MAGIC or struct.unpack_from(">I", msg, 1)[0] != 3:
-                    raise ValueError("bad frame for EventProps message")
-                rec, pos = decode_record(EVENT_PROPS_SCHEMA, msg, 5)
-                if pos != len(msg):
-                    raise ValueError(f"{len(msg) - pos} trailing bytes")
-                props, tags = rec["props"], rec["tags"]
-                rows.append(
-                    {
-                        "event_id": rec["event_id"],
-                        "k": props["k"],
-                        "u": props["u"],
-                        "t": props.get("t"),
-                        "n_props": len(props),
-                        "tags_sum": sum(tags),
-                        "n_tags": len(tags),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PROPS_ROWS])
+    def decode(payload):
+        msg = bytes(payload)
+        if msg[0] != CONFLUENT_MAGIC or struct.unpack_from(">I", msg, 1)[0] != 3:
+            raise ValueError("bad frame for EventProps message")
+        rec, pos = decode_record(EVENT_PROPS_SCHEMA, msg, 5)
+        if pos != len(msg):
+            raise ValueError(f"{len(msg) - pos} trailing bytes")
+        props, tags = rec["props"], rec["tags"]
+        yield {
+            "event_id": rec["event_id"],
+            "k": props["k"],
+            "u": props["u"],
+            "t": props.get("t"),
+            "n_props": len(props),
+            "tags_sum": sum(tags),
+            "n_tags": len(tags),
+        }
 
-    return msgs.mapInPandas(batches, _PROPS_ROWS)
+    return row_kernel(msgs.select("payload"), decode, _PROPS_ROWS)

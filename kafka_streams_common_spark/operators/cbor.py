@@ -24,11 +24,12 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Any, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 _BREAK = object()  # sentinel returned for the 0xFF stop code
 
@@ -306,24 +307,16 @@ def encode_events_cbor(events: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _event_cbor(int(i), t, float(v), int(u))
-                for i, t, v, u in zip(
-                    pdf["event_id"], pdf["event_type"], pdf["value"], pdf["user_id"]
-                )
-            ]
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
-            )
+    def encode(i, t, v, u):
+        yield int(i), _event_cbor(int(i), t, float(v), int(u))
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "event_type", "value", "user_id")
-    ).mapInPandas(batches, out_schema)
+    return row_kernel(
+        fan_out(events.select("event_id", "event_type", "value", "user_id")),
+        encode,
+        out_schema,
+    )
 
 
 CBOR_EVENT_SCHEMA = T.StructType(
@@ -352,30 +345,24 @@ def decode_events_cbor(msgs: DataFrame) -> DataFrame:
     before the generic walk), so the even/odd policy is itself
     oracle-gated. Map-only Arrow stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for eid, p in zip(pdf["event_id"], pdf["payload"]):
-                raw = bytes(p)
-                form = "indef" if raw[:1] == b"\xbf" else "def"
-                m = cbor_loads(raw)
-                if m["id"] != int(eid):
-                    raise ValueError(f"id mismatch: wire {m['id']} vs key {eid}")
-                rows.append(
-                    {
-                        "event_id": m["id"],
-                        "event_type": m["type"],
-                        "value": m["value"],
-                        "half": m["half"],
-                        "delta": m["delta"],
-                        "bignum": m["big"],
-                        "tags_sum": sum(m["tags"]),
-                        "n_tags": len(m["tags"]),
-                        "note": m["note"],
-                        "flagged": m["flagged"],
-                        "map_form": form,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in CBOR_EVENT_SCHEMA])
+    def decode(eid, p):
+        raw = bytes(p)
+        form = "indef" if raw[:1] == b"\xbf" else "def"
+        m = cbor_loads(raw)
+        if m["id"] != int(eid):
+            raise ValueError(f"id mismatch: wire {m['id']} vs key {eid}")
+        yield {
+            "event_id": m["id"],
+            "event_type": m["type"],
+            "value": m["value"],
+            "half": m["half"],
+            "delta": m["delta"],
+            "bignum": m["big"],
+            "tags_sum": sum(m["tags"]),
+            "n_tags": len(m["tags"]),
+            "note": m["note"],
+            "flagged": m["flagged"],
+            "map_form": form,
+        }
 
-    return msgs.mapInPandas(batches, CBOR_EVENT_SCHEMA)
+    return row_kernel(msgs.select("event_id", "payload"), decode, CBOR_EVENT_SCHEMA)

@@ -29,11 +29,11 @@ training-data-pipeline extension, not a port.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # a char in the UTF-8 LEAD-BYTE range (0xC2-0xF4 read as latin-1)
 # followed by one in the continuation range (0x80-0xBF) — what every
@@ -97,33 +97,21 @@ def plant_encoding_lake(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                k = int(did) % 4
-                if k == 0:
-                    p = (text + _SUFFIX_PLAIN).encode("utf-8")
-                elif k == 1:
-                    p = (
-                        (text + _SUFFIX_PLAIN)
-                        .encode("utf-8")
-                        .decode("latin-1")
-                        .encode("utf-8")
-                    )
-                elif k == 2:
-                    p = (text + _SUFFIX_QUOTED).encode("cp1252")
-                else:
-                    p = (text + _SUFFIX_PLAIN).encode("latin-1")
-                payloads.append(p)
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        k = int(did) % 4
+        if k == 0:
+            p = (text + _SUFFIX_PLAIN).encode("utf-8")
+        elif k == 1:
+            p = (text + _SUFFIX_PLAIN).encode("utf-8").decode("latin-1").encode("utf-8")
+        elif k == 2:
+            p = (text + _SUFFIX_QUOTED).encode("cp1252")
+        else:
+            p = (text + _SUFFIX_PLAIN).encode("latin-1")
+        yield did, p
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 ENCODING_CENSUS_SCHEMA = T.StructType(
@@ -146,24 +134,9 @@ def encoding_census(raw: DataFrame) -> DataFrame:
     no shuffle — the ingest-scrub shape at 100 TB."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                enc, repaired = _classify_and_repair(p)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "encoding": enc,
-                        "n_bytes": len(p),
-                        "repaired_md5": hashlib.md5(
-                            repaired.encode("utf-8")
-                        ).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ENCODING_CENSUS_SCHEMA]
-            )
+    def census(did, p):
+        p = bytes(p)
+        enc, repaired = _classify_and_repair(p)
+        yield did, enc, len(p), hashlib.md5(repaired.encode("utf-8")).hexdigest()
 
-    return raw.mapInPandas(batches, ENCODING_CENSUS_SCHEMA)
+    return row_kernel(raw.select("doc_id", "payload"), census, ENCODING_CENSUS_SCHEMA)

@@ -11,11 +11,10 @@ reference engine has no binary surface — extension tier, not a port.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # the IFD0 tags this tier carries (public EXIF/TIFF tag ids)
 TAG_IMAGE_WIDTH = 0x0100  # LONG
@@ -180,33 +179,26 @@ def encode_jpeg_exif(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
-                jpeg = _encode_jpeg_bytes(px)
-                make, dt, orientation, _ = _md5_exif_fields(text)
-                app1 = exif_app1(
-                    [
-                        (TAG_MAKE, _TYPE_ASCII, make),
-                        (TAG_DATETIME, _TYPE_ASCII, dt),
-                        (TAG_ORIENTATION, _TYPE_SHORT, orientation),
-                        (TAG_IMAGE_WIDTH, _TYPE_LONG, w),
-                    ],
-                    byteorder="II" if int(did) % 2 == 0 else "MM",
-                )
-                payloads.append(jpeg[:2] + app1 + jpeg[2:])
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
+        jpeg = _encode_jpeg_bytes(px)
+        make, dt, orientation, _ = _md5_exif_fields(text)
+        app1 = exif_app1(
+            [
+                (TAG_MAKE, _TYPE_ASCII, make),
+                (TAG_DATETIME, _TYPE_ASCII, dt),
+                (TAG_ORIENTATION, _TYPE_SHORT, orientation),
+                (TAG_IMAGE_WIDTH, _TYPE_LONG, w),
+            ],
+            byteorder="II" if int(did) % 2 == 0 else "MM",
+        )
+        yield did, jpeg[:2] + app1 + jpeg[2:]
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 EXIF_SCHEMA = T.StructType(
@@ -233,26 +225,20 @@ def decode_jpeg_exif(images: DataFrame) -> DataFrame:
     walk against the independent SOF parse. Map-only."""
     from kafka_streams_common_spark.operators.jpeg import _sof_header
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(p)
-                tiff = _find_exif(payload)
-                tags = _parse_tiff_ifd0(tiff)
-                _, _, w, h = _sof_header(payload)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "byte_order": tiff[:2].decode(),
-                        "make": tags.get(TAG_MAKE),
-                        "datetime": tags.get(TAG_DATETIME),
-                        "orientation": tags.get(TAG_ORIENTATION),
-                        "exif_width": tags.get(TAG_IMAGE_WIDTH),
-                        "sof_width": w,
-                        "sof_height": h,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in EXIF_SCHEMA])
+    def decode(did, p):
+        payload = bytes(p)
+        tiff = _find_exif(payload)
+        tags = _parse_tiff_ifd0(tiff)
+        _, _, w, h = _sof_header(payload)
+        yield {
+            "doc_id": did,
+            "byte_order": tiff[:2].decode(),
+            "make": tags.get(TAG_MAKE),
+            "datetime": tags.get(TAG_DATETIME),
+            "orientation": tags.get(TAG_ORIENTATION),
+            "exif_width": tags.get(TAG_IMAGE_WIDTH),
+            "sof_width": w,
+            "sof_height": h,
+        }
 
-    return images.mapInPandas(batches, EXIF_SCHEMA)
+    return row_kernel(images.select("doc_id", "payload"), decode, EXIF_SCHEMA)

@@ -28,11 +28,11 @@ module is part of the mandated multimodal extension tier.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 FLAC_MAGIC = b"fLaC"
 _SAMPLE_RATES = (8000, 16000, 22050, 44100, 48000)
@@ -232,37 +232,26 @@ def encode_flac_meta(docs: DataFrame) -> DataFrame:
     cores; a many-split production table takes the no-op branch and no
     exchange is inserted."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                did = int(did)
-                sr, ch, bps, total, amd5 = _doc_flac_fields(did, str(text))
-                payloads.append(
-                    build_flac_meta(
-                        sr,
-                        ch,
-                        bps,
-                        total,
-                        amd5,
-                        [
-                            ("TITLE", f"Doc {did}"),
-                            ("ARTIST", f"corpus-{did % 10}"),
-                            ("LANGUAGE", str(lang)),
-                        ],
-                        padding=did % 64 + 16,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text, lang):
+        did = int(did)
+        sr, ch, bps, total, amd5 = _doc_flac_fields(did, str(text))
+        yield did, build_flac_meta(
+            sr,
+            ch,
+            bps,
+            total,
+            amd5,
+            [
+                ("TITLE", f"Doc {did}"),
+                ("ARTIST", f"corpus-{did % 10}"),
+                ("LANGUAGE", str(lang)),
+            ],
+            padding=did % 64 + 16,
+        )
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        batches, _FLAC_OUT
-    )
+    return row_kernel(fan_out(docs.select("doc_id", "text", "lang")), encode, _FLAC_OUT)
 
 
 _FLAC_META = T.StructType(
@@ -288,26 +277,20 @@ def decode_flac_meta(flacs: DataFrame) -> DataFrame:
     is-last termination), emitting every recovered field plus the
     derived clip duration — all oracle-replayable."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = parse_flac_meta(bytes(payload))
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "sample_rate": m["sample_rate"],
-                        "channels": m["channels"],
-                        "bits_per_sample": m["bits_per_sample"],
-                        "total_samples": m["total_samples"],
-                        "audio_md5": m["audio_md5"],
-                        "title": m["comments"]["TITLE"],
-                        "artist": m["comments"]["ARTIST"],
-                        "language": m["comments"]["LANGUAGE"],
-                        "n_blocks": m["n_blocks"],
-                        "duration_sec": m["total_samples"] / m["sample_rate"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _FLAC_META])
+    def decode(did, payload):
+        m = parse_flac_meta(bytes(payload))
+        yield {
+            "doc_id": int(did),
+            "sample_rate": m["sample_rate"],
+            "channels": m["channels"],
+            "bits_per_sample": m["bits_per_sample"],
+            "total_samples": m["total_samples"],
+            "audio_md5": m["audio_md5"],
+            "title": m["comments"]["TITLE"],
+            "artist": m["comments"]["ARTIST"],
+            "language": m["comments"]["LANGUAGE"],
+            "n_blocks": m["n_blocks"],
+            "duration_sec": m["total_samples"] / m["sample_rate"],
+        }
 
-    return flacs.mapInPandas(batches, _FLAC_META)
+    return row_kernel(flacs.select("doc_id", "payload"), decode, _FLAC_META)

@@ -42,10 +42,8 @@ module is part of the mandated multimodal extension tier.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -56,6 +54,7 @@ from kafka_streams_common_spark.operators.flac import (
     _parse_streaminfo,
     _streaminfo_block,
 )
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # ---------------------------------------------------------------------------
 # CRCs (both MSB-first / non-reflected, init 0 — per the FLAC spec)
@@ -771,20 +770,11 @@ def encode_flac_audio_docs(
     is a no-op)."""
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    docs = fan_out(docs.select(id_col, text_col))
+    def encode(did, text):
+        chans, rate, bs, mode = _doc_audio_params(int(did), str(text))
+        yield did, encode_flac_audio(chans, rate, 16, bs, mode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                chans, rate, bs, mode = _doc_audio_params(int(did), str(text))
-                payloads.append(encode_flac_audio(chans, rate, 16, bs, mode))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(batches, _FLAC_AUDIO_OUT)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, _FLAC_AUDIO_OUT)
 
 
 FLAC_AUDIO_SCHEMA = T.StructType(
@@ -811,37 +801,31 @@ def decode_flac_audio_stats(flacs: DataFrame) -> DataFrame:
     headers, so the decorrelation dispatch is itself oracle-gated.
     Map-only."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                rec = decode_flac_audio(buf)
-                # recover the mode from the FIRST frame header
-                meta_end = 4
-                while True:
-                    head = buf[meta_end]
-                    ln = int.from_bytes(buf[meta_end + 1 : meta_end + 4], "big")
-                    meta_end += 4 + ln
-                    if head & 0x80:
-                        break
-                chan_code = buf[meta_end + 3] >> 4
-                mode = next(m for m, c in _CHAN_CODES.items() if c == chan_code)
-                audio = rec["audio"]
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "channels": rec["channels"],
-                        "channel_mode": mode,
-                        "sample_rate": rec["sample_rate"],
-                        "bits": rec["bits_per_sample"],
-                        "blocksize": rec["blocksize"],
-                        "n_samples": rec["n_samples"],
-                        "n_frames": rec["n_frames"],
-                        "sum_left": int(audio[0].sum()),
-                        "sum_right": int(audio[1].sum()) if rec["channels"] == 2 else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in FLAC_AUDIO_SCHEMA])
+    def decode(did, payload):
+        buf = bytes(payload)
+        rec = decode_flac_audio(buf)
+        # recover the mode from the FIRST frame header
+        meta_end = 4
+        while True:
+            head = buf[meta_end]
+            ln = int.from_bytes(buf[meta_end + 1 : meta_end + 4], "big")
+            meta_end += 4 + ln
+            if head & 0x80:
+                break
+        chan_code = buf[meta_end + 3] >> 4
+        mode = next(m for m, c in _CHAN_CODES.items() if c == chan_code)
+        audio = rec["audio"]
+        yield {
+            "doc_id": int(did),
+            "channels": rec["channels"],
+            "channel_mode": mode,
+            "sample_rate": rec["sample_rate"],
+            "bits": rec["bits_per_sample"],
+            "blocksize": rec["blocksize"],
+            "n_samples": rec["n_samples"],
+            "n_frames": rec["n_frames"],
+            "sum_left": int(audio[0].sum()),
+            "sum_right": int(audio[1].sum()) if rec["channels"] == 2 else None,
+        }
 
-    return flacs.mapInPandas(batches, FLAC_AUDIO_SCHEMA)
+    return row_kernel(flacs.select("doc_id", "payload"), decode, FLAC_AUDIO_SCHEMA)

@@ -34,12 +34,11 @@ training-data-pipeline extension, not a port.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
@@ -619,26 +618,17 @@ def encode_gif(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
-                payloads.append(
-                    _encode_gif_bytes(
-                        px, uncompressed=uncompressed, interlaced=interlaced
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
+        yield did, _encode_gif_bytes(
+            px, uncompressed=uncompressed, interlaced=interlaced
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 def encode_gif_anim(
@@ -670,32 +660,23 @@ def encode_gif_anim(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                hx = hashlib.md5(text.encode()).hexdigest()
-                d = bytes.fromhex(hx)
-                w = int(hx[:15], 16) % 8 + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 8 + 1
-                nf = int(hashlib.md5((text + "|nf").encode()).hexdigest()[:15], 16) % 6 + 2
-                raster = (d * 28)[: nf * w * h]
-                frames = [
-                    np.frombuffer(
-                        raster[f * w * h : (f + 1) * w * h], dtype=np.uint8
-                    ).reshape(h, w, 1)
-                    for f in range(nf)
-                ]
-                delays = [d[f % 16] % 50 + 2 for f in range(nf)]
-                payloads.append(
-                    _encode_gif_anim_bytes(frames, delays, composite=composite)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        d = bytes.fromhex(hx)
+        w = int(hx[:15], 16) % 8 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 8 + 1
+        nf = int(hashlib.md5((text + "|nf").encode()).hexdigest()[:15], 16) % 6 + 2
+        raster = (d * 28)[: nf * w * h]
+        frames = [
+            np.frombuffer(raster[f * w * h : (f + 1) * w * h], dtype=np.uint8).reshape(
+                h, w, 1
             )
+            for f in range(nf)
+        ]
+        delays = [d[f % 16] % 50 + 2 for f in range(nf)]
+        yield did, _encode_gif_anim_bytes(frames, delays, composite=composite)
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 def encode_gif_anim_composite(
@@ -727,41 +708,32 @@ def encode_gif_anim_composite(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                hx = hashlib.md5(text.encode()).hexdigest()
-                d = bytes.fromhex(hx)
-                w = int(hx[:15], 16) % 8 + 2
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 8 + 2
-                nf = int(hashlib.md5((text + "|nf").encode()).hexdigest()[:15], 16) % 5 + 2
-                canvas = np.array(
-                    [d[p % 16] for p in range(w * h)], dtype=np.uint8
-                ).reshape(h, w)
-                canvases = [canvas]
-                for f in range(1, nf):
-                    x0 = d[(2 * f) % 16] % w
-                    y0 = d[(2 * f + 1) % 16] % h
-                    rw = d[(2 * f + 3) % 16] % (w - x0) + 1
-                    rh = d[(2 * f + 5) % 16] % (h - y0) + 1
-                    cv = canvases[-1].copy()
-                    for r in range(y0, y0 + rh):
-                        for c in range(x0, x0 + rw):
-                            cv[r, c] = d[(f * w * h + r * w + c) % 16]
-                    canvases.append(cv)
-                delays = [d[f % 16] % 50 + 2 for f in range(nf)]
-                payloads.append(
-                    _encode_gif_anim_bytes(
-                        [c[:, :, None] for c in canvases], delays, composite=True
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        d = bytes.fromhex(hx)
+        w = int(hx[:15], 16) % 8 + 2
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 8 + 2
+        nf = int(hashlib.md5((text + "|nf").encode()).hexdigest()[:15], 16) % 5 + 2
+        canvas = np.array(
+            [d[p % 16] for p in range(w * h)], dtype=np.uint8
+        ).reshape(h, w)
+        canvases = [canvas]
+        for f in range(1, nf):
+            x0 = d[(2 * f) % 16] % w
+            y0 = d[(2 * f + 1) % 16] % h
+            rw = d[(2 * f + 3) % 16] % (w - x0) + 1
+            rh = d[(2 * f + 5) % 16] % (h - y0) + 1
+            cv = canvases[-1].copy()
+            for r in range(y0, y0 + rh):
+                for c in range(x0, x0 + rw):
+                    cv[r, c] = d[(f * w * h + r * w + c) % 16]
+            canvases.append(cv)
+        delays = [d[f % 16] % 50 + 2 for f in range(nf)]
+        yield did, _encode_gif_anim_bytes(
+            [c[:, :, None] for c in canvases], delays, composite=True
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 GIF_ANIM_STATS_SCHEMA = T.StructType(
@@ -789,30 +761,22 @@ def decode_gif_anim_frame_stats(gifs: DataFrame) -> DataFrame:
     container walk, never passed through; a zero-frame batch still
     carries the schema."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, delays, frames = _parse_gif_frames(bytes(p))
-                prev = None
-                for fi, (fr, delay) in enumerate(zip(frames, delays)):
-                    m = float(fr.astype(np.float64).mean())
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame_idx": fi,
-                            "width": w,
-                            "height": h,
-                            "delay_cs": delay,
-                            "mean_luma": m,
-                            "min_luma": int(fr.min()),
-                            "max_luma": int(fr.max()),
-                            "diff_prev": None if prev is None else abs(m - prev),
-                        }
-                    )
-                    prev = m
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GIF_ANIM_STATS_SCHEMA]
-            )
+    def decode(did, p):
+        w, h, delays, frames = _parse_gif_frames(bytes(p))
+        prev = None
+        for fi, (fr, delay) in enumerate(zip(frames, delays)):
+            m = float(fr.astype(np.float64).mean())
+            yield {
+                "doc_id": did,
+                "frame_idx": fi,
+                "width": w,
+                "height": h,
+                "delay_cs": delay,
+                "mean_luma": m,
+                "min_luma": int(fr.min()),
+                "max_luma": int(fr.max()),
+                "diff_prev": None if prev is None else abs(m - prev),
+            }
+            prev = m
 
-    return gifs.mapInPandas(batches, GIF_ANIM_STATS_SCHEMA)
+    return row_kernel(gifs.select("doc_id", "payload"), decode, GIF_ANIM_STATS_SCHEMA)

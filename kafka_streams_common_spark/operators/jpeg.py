@@ -44,12 +44,12 @@ training-data-pipeline extension, not a port.
 from __future__ import annotations
 
 from bisect import bisect_left
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # ---------------------------------------------------------------------------
 # transform + tables
@@ -2000,26 +2000,15 @@ def encode_jpeg(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for text in pdf[text_col]:
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
-                payloads.append(_encode_jpeg_bytes(px))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "payload": payloads,
-                    "text": pdf[text_col].values,
-                },
-                columns=["doc_id", "payload", "text"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
+        yield did, _encode_jpeg_bytes(px), text
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 JPEG_RECON_SCHEMA = T.StructType(
@@ -2059,29 +2048,25 @@ def decode_jpeg_recon_report(
 
     decode = decoder if decoder is not None else _parse_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p, text in zip(pdf["doc_id"], pdf["payload"], pdf["text"]):
-                channels, w, h, px = decode(bytes(p))
-                hx = hashlib.md5(text.encode()).hexdigest()
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                src = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
-                err = np.abs(px.astype(np.int64) - src.astype(np.int64))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "format": "jpeg",
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "max_err_le_32": bool(err.max() <= 32),
-                        "mean_err_le_12": bool(err.mean() <= 12.0),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_RECON_SCHEMA])
+    def report(did, p, text):
+        channels, w, h, px = decode(bytes(p))
+        hx = hashlib.md5(text.encode()).hexdigest()
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        src = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
+        err = np.abs(px.astype(np.int64) - src.astype(np.int64))
+        yield {
+            "doc_id": did,
+            "format": "jpeg",
+            "width": w,
+            "height": h,
+            "n_px": w * h,
+            "max_err_le_32": bool(err.max() <= 32),
+            "mean_err_le_12": bool(err.mean() <= 12.0),
+        }
 
-    return images.mapInPandas(batches, JPEG_RECON_SCHEMA)
+    return row_kernel(
+        images.select("doc_id", "payload", "text"), report, JPEG_RECON_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2227,25 +2212,12 @@ def encode_jpeg_color(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                px = _md5_color_image(text, dim_mod)
-                mode = "444" if int(did) % 2 == 0 else "420"
-                payloads.append(
-                    _encode_jpeg_color_bytes(px, mode, restart_interval)
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "payload": payloads,
-                    "text": pdf[text_col].values,
-                },
-                columns=["doc_id", "payload", "text"],
-            )
+    def encode(did, text):
+        px = _md5_color_image(text, dim_mod)
+        mode = "444" if int(did) % 2 == 0 else "420"
+        yield did, _encode_jpeg_color_bytes(px, mode, restart_interval), text
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 JPEG_COLOR_RECON_SCHEMA = T.StructType(
@@ -2281,31 +2253,27 @@ def decode_jpeg_color_recon_report(
     codec swap (contract-tested in tests/test_jpeg.py)."""
     decode = decoder if decoder is not None else _parse_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p, text in zip(pdf["doc_id"], pdf["payload"], pdf["text"]):
-                payload = bytes(p)
-                channels, w, h, px = decode(payload)
-                if channels != 3:
-                    raise ValueError(f"expected a color JPEG, got {channels} channel")
-                src = _md5_color_image(text, dim_mod)
-                err = np.abs(px.astype(np.int64) - src.astype(np.int64))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "format": "jpeg",
-                        "subsample": _sof_sampling(payload),
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "max_err_le_32": bool(err.max() <= 32),
-                        "mean_err_le_8": bool(err.mean() <= 8.0),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_COLOR_RECON_SCHEMA])
+    def report(did, p, text):
+        payload = bytes(p)
+        channels, w, h, px = decode(payload)
+        if channels != 3:
+            raise ValueError(f"expected a color JPEG, got {channels} channel")
+        src = _md5_color_image(text, dim_mod)
+        err = np.abs(px.astype(np.int64) - src.astype(np.int64))
+        yield {
+            "doc_id": did,
+            "format": "jpeg",
+            "subsample": _sof_sampling(payload),
+            "width": w,
+            "height": h,
+            "n_px": w * h,
+            "max_err_le_32": bool(err.max() <= 32),
+            "mean_err_le_8": bool(err.mean() <= 8.0),
+        }
 
-    return images.mapInPandas(batches, JPEG_COLOR_RECON_SCHEMA)
+    return row_kernel(
+        images.select("doc_id", "payload", "text"), report, JPEG_COLOR_RECON_SCHEMA
+    )
 
 
 JPEG_PROGRESSIVE_SCHEMA = T.StructType(
@@ -2365,44 +2333,34 @@ def jpeg_progressive_report(
         raise ValueError("equality_mod must be >= 1")
     docs = fan_out(docs)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                src = _md5_color_image(text, dim_mod)
-                ss = "444" if int(did) % 2 == 0 else "420"
-                prog = encode(src, ss, True)
-                mode, got_ss, w, h = _sof_header(prog)
-                if int(did) % equality_mod == 0:
-                    base = encode(src, ss, False)
-                    c, dw, dh, px = decode(prog)
-                    if (dw, dh) != (w, h):
-                        raise ValueError("SOF header and decode disagree on dims")
-                    _, _, _, px_base = decode(base)
-                    err = np.abs(px.astype(np.int64) - src.astype(np.int64))
-                    matches = bool(np.array_equal(px, px_base))
-                    max_ok = bool(err.max() <= 32)
-                    mean_ok = bool(err.mean() <= 8.0)
-                else:
-                    matches = max_ok = mean_ok = None
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "format": "jpeg",
-                        "mode": mode,
-                        "subsample": got_ss,
-                        "width": w,
-                        "height": h,
-                        "n_px": w * h,
-                        "matches_baseline": matches,
-                        "max_err_le_32": max_ok,
-                        "mean_err_le_8": mean_ok,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_PROGRESSIVE_SCHEMA]
-            )
+    def report(did, text):
+        src = _md5_color_image(text, dim_mod)
+        ss = "444" if int(did) % 2 == 0 else "420"
+        prog = encode(src, ss, True)
+        mode, got_ss, w, h = _sof_header(prog)
+        if int(did) % equality_mod == 0:
+            base = encode(src, ss, False)
+            c, dw, dh, px = decode(prog)
+            if (dw, dh) != (w, h):
+                raise ValueError("SOF header and decode disagree on dims")
+            _, _, _, px_base = decode(base)
+            err = np.abs(px.astype(np.int64) - src.astype(np.int64))
+            matches = bool(np.array_equal(px, px_base))
+            max_ok = bool(err.max() <= 32)
+            mean_ok = bool(err.mean() <= 8.0)
+        else:
+            matches = max_ok = mean_ok = None
+        yield {
+            "doc_id": did,
+            "format": "jpeg",
+            "mode": mode,
+            "subsample": got_ss,
+            "width": w,
+            "height": h,
+            "n_px": w * h,
+            "matches_baseline": matches,
+            "max_err_le_32": max_ok,
+            "mean_err_le_8": mean_ok,
+        }
 
-    return docs.select("doc_id", "text").mapInPandas(
-        batches, JPEG_PROGRESSIVE_SCHEMA
-    )
+    return row_kernel(docs.select("doc_id", "text"), report, JPEG_PROGRESSIVE_SCHEMA)

@@ -33,11 +33,11 @@ stages — the video-lake census shape, no shuffle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 _LANG_639_2 = {"en": "eng", "de": "deu", "zh": "zho", "fr": "fra", "es": "spa"}
 
@@ -322,42 +322,31 @@ def encode_mp4_meta(docs: DataFrame) -> DataFrame:
     many-split production table takes the no-op branch and no exchange
     is inserted."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                did = int(did)
-                text = str(text)
-                hx = hashlib.md5(text.encode()).hexdigest()
-                d = bytes.fromhex(hx)
-                duration_ms = int.from_bytes(d[0:3], "big") % 600_000 + 1000
-                w = int(hx[:15], 16) % 16 + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
-                audio_rate = (8000, 16000, 22050, 44100, 48000)[d[3] % 5]
-                n = len(text) % 256 + 32
-                mdat = (d * ((n + 15) // 16))[:n]
-                payloads.append(
-                    build_mp4_meta(
-                        did,
-                        duration_ms,
-                        w * 16,
-                        h * 16,
-                        audio_rate,
-                        _LANG_639_2[str(lang)],
-                        mdat,
-                        mdat_form="large" if did % 2 == 1 else "eof",
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text, lang):
+        did = int(did)
+        text = str(text)
+        hx = hashlib.md5(text.encode()).hexdigest()
+        d = bytes.fromhex(hx)
+        duration_ms = int.from_bytes(d[0:3], "big") % 600_000 + 1000
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
+        audio_rate = (8000, 16000, 22050, 44100, 48000)[d[3] % 5]
+        n = len(text) % 256 + 32
+        mdat = (d * ((n + 15) // 16))[:n]
+        yield did, build_mp4_meta(
+            did,
+            duration_ms,
+            w * 16,
+            h * 16,
+            audio_rate,
+            _LANG_639_2[str(lang)],
+            mdat,
+            mdat_form="large" if did % 2 == 1 else "eof",
+        )
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        batches, _MP4_OUT
-    )
+    return row_kernel(fan_out(docs.select("doc_id", "text", "lang")), encode, _MP4_OUT)
 
 
 _MP4_META = T.StructType(
@@ -382,31 +371,25 @@ def decode_mp4_meta(videos: DataFrame) -> DataFrame:
     doc id recovered from the video handler NAME, language unpacked
     from the 3×5-bit mdhd code — every column oracle-replayable."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                m = parse_mp4_meta(bytes(payload))
-                vid = next(t for t in m["tracks"] if t["handler"] == "vide")
-                aud = next(t for t in m["tracks"] if t["handler"] == "soun")
-                if not vid["name"].startswith("vide:doc-"):
-                    raise ValueError(f"bad video handler name {vid['name']!r}")
-                if m["timescale"] != 1000:
-                    raise ValueError(f"unexpected movie timescale {m['timescale']}")
-                rows.append(
-                    {
-                        "doc_id": int(vid["name"][9:]),
-                        "major_brand": m["major_brand"],
-                        "duration_ms": m["duration"],
-                        "n_tracks": len(m["tracks"]),
-                        "video_width": vid["width"],
-                        "video_height": vid["height"],
-                        "video_timescale": vid["media_timescale"],
-                        "audio_rate": aud["media_timescale"],
-                        "lang": vid["lang"],
-                        "mdat_bytes": m["mdat_bytes"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _MP4_META])
+    def decode(payload):
+        m = parse_mp4_meta(bytes(payload))
+        vid = next(t for t in m["tracks"] if t["handler"] == "vide")
+        aud = next(t for t in m["tracks"] if t["handler"] == "soun")
+        if not vid["name"].startswith("vide:doc-"):
+            raise ValueError(f"bad video handler name {vid['name']!r}")
+        if m["timescale"] != 1000:
+            raise ValueError(f"unexpected movie timescale {m['timescale']}")
+        yield {
+            "doc_id": int(vid["name"][9:]),
+            "major_brand": m["major_brand"],
+            "duration_ms": m["duration"],
+            "n_tracks": len(m["tracks"]),
+            "video_width": vid["width"],
+            "video_height": vid["height"],
+            "video_timescale": vid["media_timescale"],
+            "audio_rate": aud["media_timescale"],
+            "lang": vid["lang"],
+            "mdat_bytes": m["mdat_bytes"],
+        }
 
-    return videos.mapInPandas(batches, _MP4_META)
+    return row_kernel(videos.select("payload"), decode, _MP4_META)

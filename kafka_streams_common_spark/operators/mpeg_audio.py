@@ -21,11 +21,10 @@ training-data-pipeline extension, not a port.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # MPEG-1 Layer III bitrate table, kbps, index 1..14 (0 = free-format
 # and 15 = reserved are both rejected)
@@ -198,35 +197,26 @@ def encode_mp3_meta(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                hx = hashlib.md5(text.encode()).hexdigest()
-                rhx = hashlib.md5(text[::-1].encode()).hexdigest()
-                payloads.append(
-                    _mp3_bytes(
-                        n_frames=len(text.encode()) % 8 + 2,
-                        bitrate_idx=did % 14 + 1,
-                        sr_idx=did % 3,
-                        channel_mode=did % 4,
-                        fill=bytes.fromhex(hx),
-                        title=hx[:30],
-                        artist=rhx[:30],
-                        album="corpus",
-                        year=1980 + did % 40,
-                        genre=did % 80,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        did = int(did)
+        hx = hashlib.md5(text.encode()).hexdigest()
+        rhx = hashlib.md5(text[::-1].encode()).hexdigest()
+        yield did, _mp3_bytes(
+            n_frames=len(text.encode()) % 8 + 2,
+            bitrate_idx=did % 14 + 1,
+            sr_idx=did % 3,
+            channel_mode=did % 4,
+            fill=bytes.fromhex(hx),
+            title=hx[:30],
+            artist=rhx[:30],
+            album="corpus",
+            year=1980 + did % 40,
+            genre=did % 80,
+        )
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col)).mapInPandas(batches, out_schema)
+    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
 
 
 MP3_META_SCHEMA = T.StructType(
@@ -255,15 +245,10 @@ def decode_mp3_meta(files: DataFrame) -> DataFrame:
     rather than mis-counting. Map-only, no shuffle — the audio-lake
     census shape at 100 TB."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _parse_mp3_meta(bytes(p))
-                rows.append({"doc_id": did, **meta})
-            yield pd.DataFrame(rows, columns=[f.name for f in MP3_META_SCHEMA])
+    def decode(did, p):
+        yield {"doc_id": did, **_parse_mp3_meta(bytes(p))}
 
-    return files.mapInPandas(batches, MP3_META_SCHEMA)
+    return row_kernel(files.select("doc_id", "payload"), decode, MP3_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -445,47 +430,38 @@ def encode_mp3_id3v2(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text, lang in zip(pdf[id_col], pdf[text_col], pdf["lang"]):
-                did = int(did)
-                hx = hashlib.md5(text.encode()).hexdigest()
-                tag2 = _id3v2_tag(
-                    [
-                        ("TIT2", f"Doc {did}"),
-                        ("TPE1", f"corpus-{did % 10}"),
-                        ("TALB", str(lang)),
-                        ("TYER", str(1990 + did % 30)),
-                        ("TRCK", str(did % 12 + 1)),
-                    ],
-                    comment=("eng", "note", hx[:16]),
-                    utf16=did % 2 == 1,
-                    padding=did % 33,
-                )
-                audio = _mp3_bytes(
-                    n_frames=len(text.encode()) % 8 + 2,
-                    bitrate_idx=did % 14 + 1,
-                    sr_idx=did % 3,
-                    channel_mode=did % 4,
-                    fill=bytes.fromhex(hx),
-                    title=hx[:30],
-                    artist=hx[:30],
-                    album="corpus",
-                    year=1980 + did % 40,
-                    genre=did % 80,
-                )
-                payloads.append(tag2 + audio)
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text, lang):
+        did = int(did)
+        hx = hashlib.md5(text.encode()).hexdigest()
+        tag2 = _id3v2_tag(
+            [
+                ("TIT2", f"Doc {did}"),
+                ("TPE1", f"corpus-{did % 10}"),
+                ("TALB", str(lang)),
+                ("TYER", str(1990 + did % 30)),
+                ("TRCK", str(did % 12 + 1)),
+            ],
+            comment=("eng", "note", hx[:16]),
+            utf16=did % 2 == 1,
+            padding=did % 33,
+        )
+        audio = _mp3_bytes(
+            n_frames=len(text.encode()) % 8 + 2,
+            bitrate_idx=did % 14 + 1,
+            sr_idx=did % 3,
+            channel_mode=did % 4,
+            fill=bytes.fromhex(hx),
+            title=hx[:30],
+            artist=hx[:30],
+            album="corpus",
+            year=1980 + did % 40,
+            genre=did % 80,
+        )
+        yield did, tag2 + audio
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select(id_col, text_col, "lang")).mapInPandas(
-        batches, out_schema
-    )
+    return row_kernel(fan_out(docs.select(id_col, text_col, "lang")), encode, out_schema)
 
 
 MP3_ID3V2_SCHEMA = T.StructType(
@@ -514,28 +490,22 @@ def decode_mp3_id3v2(files: DataFrame) -> DataFrame:
     emitted, so the oracle gates both tag layers AND the boundary
     between them."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(p)
-                fields, encoding, tag_len = _parse_id3v2(p)
-                audio = _parse_mp3_meta(p[tag_len:])
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "title": fields["TIT2"],
-                        "artist": fields["TPE1"],
-                        "album": fields["TALB"],
-                        "year_v2": int(fields["TYER"]),
-                        "track": int(fields["TRCK"]),
-                        "comment": fields["COMM"],
-                        "comment_lang": fields["COMM_LANG"],
-                        "text_encoding": encoding,
-                        "n_frames": audio["n_frames"],
-                        "year_v1": audio["year"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP3_ID3V2_SCHEMA])
+    def decode(did, p):
+        p = bytes(p)
+        fields, encoding, tag_len = _parse_id3v2(p)
+        audio = _parse_mp3_meta(p[tag_len:])
+        yield {
+            "doc_id": did,
+            "title": fields["TIT2"],
+            "artist": fields["TPE1"],
+            "album": fields["TALB"],
+            "year_v2": int(fields["TYER"]),
+            "track": int(fields["TRCK"]),
+            "comment": fields["COMM"],
+            "comment_lang": fields["COMM_LANG"],
+            "text_encoding": encoding,
+            "n_frames": audio["n_frames"],
+            "year_v1": audio["year"],
+        }
 
-    return files.mapInPandas(batches, MP3_ID3V2_SCHEMA)
+    return row_kernel(files.select("doc_id", "payload"), decode, MP3_ID3V2_SCHEMA)

@@ -23,11 +23,12 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Any, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # ---------------------------------------------------------------------------
 # encode primitives
@@ -266,24 +267,16 @@ def encode_events_msgpack(events: DataFrame) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                _event_msgpack(int(i), t, float(v), int(u))
-                for i, t, v, u in zip(
-                    pdf["event_id"], pdf["event_type"], pdf["value"], pdf["user_id"]
-                )
-            ]
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
-            )
+    def encode(i, t, v, u):
+        yield int(i), _event_msgpack(int(i), t, float(v), int(u))
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "event_type", "value", "user_id")
-    ).mapInPandas(batches, out_schema)
+    return row_kernel(
+        fan_out(events.select("event_id", "event_type", "value", "user_id")),
+        encode,
+        out_schema,
+    )
 
 
 MSGPACK_EVENT_SCHEMA = T.StructType(
@@ -311,28 +304,22 @@ def decode_events_msgpack(msgs: DataFrame) -> DataFrame:
     ``blob`` bytes summed. Trailing bytes rejected per message.
     Map-only Arrow stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for eid, p in zip(pdf["event_id"], pdf["payload"]):
-                m = msgpack_loads(bytes(p))
-                if m["id"] != int(eid):
-                    raise ValueError(f"id mismatch: wire {m['id']} vs key {eid}")
-                meta = m["meta"]
-                rows.append(
-                    {
-                        "event_id": m["id"],
-                        "event_type": m["type"],
-                        "value": m["value"],
-                        "delta": m["delta"],
-                        "source": meta["source"],
-                        "tags_sum": sum(meta["tags"]),
-                        "n_tags": len(meta["tags"]),
-                        "blob_sum": sum(m["blob"]),
-                        "flagged": m["flagged"],
-                        "note": m["note"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MSGPACK_EVENT_SCHEMA])
+    def decode(eid, p):
+        m = msgpack_loads(bytes(p))
+        if m["id"] != int(eid):
+            raise ValueError(f"id mismatch: wire {m['id']} vs key {eid}")
+        meta = m["meta"]
+        yield {
+            "event_id": m["id"],
+            "event_type": m["type"],
+            "value": m["value"],
+            "delta": m["delta"],
+            "source": meta["source"],
+            "tags_sum": sum(meta["tags"]),
+            "n_tags": len(meta["tags"]),
+            "blob_sum": sum(m["blob"]),
+            "flagged": m["flagged"],
+            "note": m["note"],
+        }
 
-    return msgs.mapInPandas(batches, MSGPACK_EVENT_SCHEMA)
+    return row_kernel(msgs.select("event_id", "payload"), decode, MSGPACK_EVENT_SCHEMA)

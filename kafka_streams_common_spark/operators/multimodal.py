@@ -21,15 +21,13 @@ Two payload paths:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_streams_common_spark.functions.hashing import md5_int64
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -282,23 +280,16 @@ def encode_bmp(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                n = 3 * w * h
-                raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-                payloads.append(_encode_bmp_bytes(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        n = 3 * w * h
+        raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
+        px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
+        yield did, _encode_bmp_bytes(px)
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
@@ -760,26 +751,10 @@ def decode_image_features(images: DataFrame) -> DataFrame:
     inside the batch.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [_decode_image(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "format": [s["format"] for s in stats],
-                    "channels": [s["channels"] for s in stats],
-                    "bit_depth": [s["bit_depth"] for s in stats],
-                    "width": [s["width"] for s in stats],
-                    "height": [s["height"] for s in stats],
-                    "n_px": [s["n_px"] for s in stats],
-                    "mean_px": [s["mean_px"] for s in stats],
-                    "min_px": [s["min_px"] for s in stats],
-                    "max_px": [s["max_px"] for s in stats],
-                    "hist": [s["hist"] for s in stats],
-                }
-            )
+    def decode(did, p):
+        yield {"doc_id": did, **_decode_image(bytes(p))}
 
-    return images.mapInPandas(decode_batches, PIXEL_STATS_SCHEMA)
+    return row_kernel(images.select("doc_id", "payload"), decode, PIXEL_STATS_SCHEMA)
 
 
 # the pre-r12 name (PGM was the only real container then); same decoder
@@ -810,27 +785,18 @@ def encode_compressed_image_mixed(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
-                px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
-                if int(did) % 2 == 0:
-                    payloads.append(
-                        _encode_png_bytes(px, level=level, filter_seed=int(did))
-                    )
-                else:
-                    payloads.append(_encode_gif_bytes(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
+        px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
+        if int(did) % 2 == 0:
+            yield did, _encode_png_bytes(px, level=level, filter_seed=int(did))
+        else:
+            yield did, _encode_gif_bytes(px)
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 def encode_png(
@@ -897,39 +863,28 @@ def encode_png(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                hx = hashlib.md5(text.encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
-                nch = channels + (1 if alpha else 0)
-                n = nch * w * h * (depth // 8)
-                raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
-                if depth == 8:
-                    px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, nch)
-                else:  # big-endian byte pairs → uint16 samples
-                    px = np.frombuffer(raster, dtype=">u2").astype(
-                        np.uint16
-                    ).reshape(h, w, nch)
-                payloads.append(
-                    _encode_png_bytes(
-                        px,
-                        level=level,
-                        filter_seed=int(did),
-                        palette=_AFFINE_GRAY_PALETTE if indexed else None,
-                        interlace=interlaced,
-                        alpha=alpha,
-                        depth=depth,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        nch = channels + (1 if alpha else 0)
+        n = nch * w * h * (depth // 8)
+        raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
+        if depth == 8:
+            px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, nch)
+        else:  # big-endian byte pairs → uint16 samples
+            px = np.frombuffer(raster, dtype=">u2").astype(np.uint16).reshape(h, w, nch)
+        yield did, _encode_png_bytes(
+            px,
+            level=level,
+            filter_seed=int(did),
+            palette=_AFFINE_GRAY_PALETTE if indexed else None,
+            interlace=interlaced,
+            alpha=alpha,
+            depth=depth,
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
 
 
 def _le16(n) -> "F.Column":
@@ -1167,38 +1122,29 @@ def decode_wav_features(audio: DataFrame) -> DataFrame:
     by clip, decode inside the Arrow batch, emit fixed-width features.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                tag, channels, rate, bits, s = _parse_wav_full(bytes(p))
-                mono = s.mean(axis=1) if channels > 1 else s[:, 0].astype(np.float64)
-                unsigned8 = tag == 1 and bits == 8
-                centered = mono - (128.0 if unsigned8 else 0.0)
-                zc = int(np.sum(centered[:-1] * centered[1:] < 0))
-                # peak: PCM 8-bit samples are unsigned (0..255) so max IS
-                # the peak level; signed samples (PCM-16, expanded μ-law)
-                # report max |sample| — a negative-dominant clip would
-                # otherwise under-report
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "channels": channels,
-                        "sample_rate": rate,
-                        "n_samples": s.shape[0],
-                        "duration_ms": s.shape[0] * 1000.0 / rate,
-                        "mean_amp": float(mono.mean()),
-                        "rms": float(np.sqrt(np.mean(mono * mono))),
-                        "peak": int(s.max() if unsigned8 else np.abs(s).max()),
-                        "zero_crossings": zc,
-                    }
-                )
-            # explicit columns: an all-clips-empty batch must still carry
-            # the schema (pd.DataFrame([]) would be zero-column and fail
-            # the mapInPandas schema mapping)
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
+    def decode(did, p):
+        tag, channels, rate, bits, s = _parse_wav_full(bytes(p))
+        mono = s.mean(axis=1) if channels > 1 else s[:, 0].astype(np.float64)
+        unsigned8 = tag == 1 and bits == 8
+        centered = mono - (128.0 if unsigned8 else 0.0)
+        zc = int(np.sum(centered[:-1] * centered[1:] < 0))
+        # peak: PCM 8-bit samples are unsigned (0..255) so max IS the
+        # peak level; signed samples (PCM-16, expanded μ-law) report
+        # max |sample| — a negative-dominant clip would otherwise
+        # under-report
+        yield {
+            "doc_id": did,
+            "channels": channels,
+            "sample_rate": rate,
+            "n_samples": s.shape[0],
+            "duration_ms": s.shape[0] * 1000.0 / rate,
+            "mean_amp": float(mono.mean()),
+            "rms": float(np.sqrt(np.mean(mono * mono))),
+            "peak": int(s.max() if unsigned8 else np.abs(s).max()),
+            "zero_crossings": zc,
+        }
 
-    return audio.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    return row_kernel(audio.select("doc_id", "payload"), decode, AUDIO_FEATURES_SCHEMA)
 
 
 AUDIO_CODEC_FEATURES_SCHEMA = T.StructType(
@@ -1225,31 +1171,25 @@ def decode_audio_codec_features(audio: DataFrame) -> DataFrame:
     sign changes around the stream midpoint (128 for unsigned PCM-8,
     0 for signed linear)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                tag, channels, rate, bits, s = _parse_wav_full(bytes(p))
-                mono = s.mean(axis=1) if channels > 1 else s[:, 0].astype(np.float64)
-                unsigned8 = tag == 1 and bits == 8
-                centered = mono - (128.0 if unsigned8 else 0.0)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "codec": {1: "pcm", 6: "alaw", 7: "mulaw"}[tag],
-                        "sample_rate": rate,
-                        "n_samples": s.shape[0],
-                        "mean_lin": float(mono.mean()),
-                        "rms_lin": float(np.sqrt(np.mean(mono * mono))),
-                        "peak_lin": int(s.max() if unsigned8 else np.abs(s).max()),
-                        "zero_crossings": int(np.sum(centered[:-1] * centered[1:] < 0)),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_CODEC_FEATURES_SCHEMA]
-            )
+    def decode(did, p):
+        tag, channels, rate, bits, s = _parse_wav_full(bytes(p))
+        mono = s.mean(axis=1) if channels > 1 else s[:, 0].astype(np.float64)
+        unsigned8 = tag == 1 and bits == 8
+        centered = mono - (128.0 if unsigned8 else 0.0)
+        yield {
+            "doc_id": did,
+            "codec": {1: "pcm", 6: "alaw", 7: "mulaw"}[tag],
+            "sample_rate": rate,
+            "n_samples": s.shape[0],
+            "mean_lin": float(mono.mean()),
+            "rms_lin": float(np.sqrt(np.mean(mono * mono))),
+            "peak_lin": int(s.max() if unsigned8 else np.abs(s).max()),
+            "zero_crossings": int(np.sum(centered[:-1] * centered[1:] < 0)),
+        }
 
-    return audio.mapInPandas(batches, AUDIO_CODEC_FEATURES_SCHEMA)
+    return row_kernel(
+        audio.select("doc_id", "payload"), decode, AUDIO_CODEC_FEATURES_SCHEMA
+    )
 
 
 def encode_y4m(
@@ -1361,35 +1301,26 @@ def decode_y4m_frame_stats(video: DataFrame) -> DataFrame:
     inside the batch kernel, never in a shuffle.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, frames = _parse_y4m(bytes(p))
-                prev = None
-                for i, fr in enumerate(frames):
-                    m = float(fr.astype(np.float64).mean())
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame_idx": i,
-                            "width": w,
-                            "height": h,
-                            "mean_luma": m,
-                            "min_luma": int(fr.min()),
-                            "max_luma": int(fr.max()),
-                            "diff_prev": None if prev is None else abs(m - prev),
-                        }
-                    )
-                    prev = m
-            # explicit columns: a zero-frame batch (possible for
-            # externally-supplied Y4M with no FRAME sections) must still
-            # carry the schema for the mapInPandas mapping
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_STATS_SCHEMA]
-            )
+    def decode(did, p):
+        w, h, frames = _parse_y4m(bytes(p))
+        prev = None
+        for i, fr in enumerate(frames):
+            m = float(fr.astype(np.float64).mean())
+            yield {
+                "doc_id": did,
+                "frame_idx": i,
+                "width": w,
+                "height": h,
+                "mean_luma": m,
+                "min_luma": int(fr.min()),
+                "max_luma": int(fr.max()),
+                "diff_prev": None if prev is None else abs(m - prev),
+            }
+            prev = m
 
-    return video.mapInPandas(batches, VIDEO_FRAME_STATS_SCHEMA)
+    return row_kernel(
+        video.select("doc_id", "payload"), decode, VIDEO_FRAME_STATS_SCHEMA
+    )
 
 
 def _ahash_bands(payload: bytes) -> list[int]:
@@ -1442,20 +1373,10 @@ def ahash_signatures(images: DataFrame) -> DataFrame:
 
     images = fan_out(images)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            bands = [_ahash_bands(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "b0": [b[0] for b in bands],
-                    "b1": [b[1] for b in bands],
-                    "b2": [b[2] for b in bands],
-                    "b3": [b[3] for b in bands],
-                }
-            )
+    def signature(did, p):
+        yield (did, *_ahash_bands(bytes(p)))
 
-    return images.mapInPandas(batches, AHASH_SCHEMA)
+    return row_kernel(images.select("doc_id", "payload"), signature, AHASH_SCHEMA)
 
 
 def ahash_near_dup_pairs(
@@ -1603,21 +1524,10 @@ def audio_envelope_signatures(audio: DataFrame) -> DataFrame:
 
     audio = fan_out(audio)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            bands = [_audio_envelope_bands(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "b0": [b[0] for b in bands],
-                    "b1": [b[1] for b in bands],
-                    "b2": [b[2] for b in bands],
-                    "b3": [b[3] for b in bands],
-                },
-                columns=["doc_id", "b0", "b1", "b2", "b3"],
-            )
+    def signature(did, p):
+        yield (did, *_audio_envelope_bands(bytes(p)))
 
-    return audio.mapInPandas(batches, AHASH_SCHEMA)
+    return row_kernel(audio.select("doc_id", "payload"), signature, AHASH_SCHEMA)
 
 
 def audio_near_dup_pairs(
@@ -1670,21 +1580,10 @@ def video_envelope_signatures(video: DataFrame) -> DataFrame:
 
     video = fan_out(video)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            bands = [_video_envelope_bands(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "b0": [b[0] for b in bands],
-                    "b1": [b[1] for b in bands],
-                    "b2": [b[2] for b in bands],
-                    "b3": [b[3] for b in bands],
-                },
-                columns=["doc_id", "b0", "b1", "b2", "b3"],
-            )
+    def signature(did, p):
+        yield (did, *_video_envelope_bands(bytes(p)))
 
-    return video.mapInPandas(batches, AHASH_SCHEMA)
+    return row_kernel(video.select("doc_id", "payload"), signature, AHASH_SCHEMA)
 
 
 def video_near_dup_pairs(
@@ -1732,41 +1631,28 @@ def cross_modal_signatures(lake: DataFrame) -> DataFrame:
 
     lake = fan_out(lake)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(p)
-                if payload[:4] == b"RIFF":
-                    modality, bands = "audio", _audio_envelope_bands(payload)
-                elif payload[:9] == b"YUV4MPEG2":
-                    modality, bands = "video", _video_envelope_bands(payload)
-                elif (
-                    payload[:2] in (b"P5", b"P6")
-                    or payload[:8] == PNG_SIGNATURE
-                    or payload[:6] in (b"GIF87a", b"GIF89a")
-                ):
-                    # every LOSSLESS image container recovers the same
-                    # md5-derived raster, so one aHash serves all three
-                    _fmt, channels, w, h, px = _parse_image(payload)
-                    modality, bands = "image", _ahash_bands_px(channels, w, h, px)
-                else:
-                    raise ValueError(f"unknown container magic {payload[:9]!r}")
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "modality": modality,
-                        "b0": bands[0],
-                        "b1": bands[1],
-                        "b2": bands[2],
-                        "b3": bands[3],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CROSS_MODAL_SIG_SCHEMA]
-            )
+    def signature(did, p):
+        payload = bytes(p)
+        if payload[:4] == b"RIFF":
+            modality, bands = "audio", _audio_envelope_bands(payload)
+        elif payload[:9] == b"YUV4MPEG2":
+            modality, bands = "video", _video_envelope_bands(payload)
+        elif (
+            payload[:2] in (b"P5", b"P6")
+            or payload[:8] == PNG_SIGNATURE
+            or payload[:6] in (b"GIF87a", b"GIF89a")
+        ):
+            # every LOSSLESS image container recovers the same
+            # md5-derived raster, so one aHash serves all three
+            _fmt, channels, w, h, px = _parse_image(payload)
+            modality, bands = "image", _ahash_bands_px(channels, w, h, px)
+        else:
+            raise ValueError(f"unknown container magic {payload[:9]!r}")
+        yield (did, modality, *bands)
 
-    return lake.mapInPandas(batches, CROSS_MODAL_SIG_SCHEMA)
+    return row_kernel(
+        lake.select("doc_id", "payload"), signature, CROSS_MODAL_SIG_SCHEMA
+    )
 
 
 def cross_modal_near_dup_pairs(
@@ -1834,15 +1720,9 @@ def extract_byte_histogram_features(multimodal: DataFrame) -> DataFrame:
         ]
     )
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pdf["meta"].map(lambda m: m["width"]),
-                    "height": pdf["meta"].map(lambda m: m["height"]),
-                    "features": pdf["payload"].map(lambda p: _decode_payload(bytes(p))),
-                }
-            )
+    def extract(did, meta, p):
+        yield did, meta["width"], meta["height"], _decode_payload(bytes(p))
 
-    return multimodal.mapInPandas(decode_batches, out_schema)
+    return row_kernel(
+        multimodal.select("doc_id", "meta", "payload"), extract, out_schema
+    )

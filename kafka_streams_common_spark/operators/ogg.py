@@ -32,11 +32,11 @@ module is part of the mandated multimodal extension tier.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 OGG_MAGIC = b"OggS"
 _SAMPLE_RATES = (8000, 16000, 22050, 44100, 48000)
@@ -207,40 +207,33 @@ def encode_ogg_meta(docs: DataFrame) -> DataFrame:
     lacing is live on every row), and an EOS audio page whose granule
     position is the total-sample count. Map-only."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                did = int(did)
-                text = str(text)
-                d = hashlib.md5(text.encode()).digest()
-                serial = int.from_bytes(d[8:12], "big")
-                channels = d[1] % 2 + 1
-                rate = _SAMPLE_RATES[d[0] % 5]
-                bitrate = (d[2] % 8 + 1) * 32000
-                total = int.from_bytes(d[3:7], "big") % 10_000_000
-                ident = vorbis_id_packet(channels, rate, bitrate)
-                comment = vorbis_comment_packet(
-                    "kafka-streams-common-spark",
-                    [
-                        ("TITLE", f"Doc {did}"),
-                        ("LANGUAGE", str(lang)),
-                        # pad the packet past one lacing segment
-                        ("PAD", "x" * (260 + did % 40)),
-                    ],
-                )
-                audio = (d * 20)[: 64 + did % 64]
-                payloads.append(
-                    build_page(ident, serial, 0, 0, bos=True)
-                    + build_page(comment, serial, 1, 0)
-                    + build_page(audio, serial, 2, total, eos=True)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text, lang):
+        did = int(did)
+        text = str(text)
+        d = hashlib.md5(text.encode()).digest()
+        serial = int.from_bytes(d[8:12], "big")
+        channels = d[1] % 2 + 1
+        rate = _SAMPLE_RATES[d[0] % 5]
+        bitrate = (d[2] % 8 + 1) * 32000
+        total = int.from_bytes(d[3:7], "big") % 10_000_000
+        ident = vorbis_id_packet(channels, rate, bitrate)
+        comment = vorbis_comment_packet(
+            "kafka-streams-common-spark",
+            [
+                ("TITLE", f"Doc {did}"),
+                ("LANGUAGE", str(lang)),
+                # pad the packet past one lacing segment
+                ("PAD", "x" * (260 + did % 40)),
+            ],
+        )
+        audio = (d * 20)[: 64 + did % 64]
+        yield did, (
+            build_page(ident, serial, 0, 0, bos=True)
+            + build_page(comment, serial, 1, 0)
+            + build_page(audio, serial, 2, total, eos=True)
+        )
 
-    return docs.select("doc_id", "text", "lang").mapInPandas(batches, _OGG_OUT)
+    return row_kernel(docs.select("doc_id", "text", "lang"), encode, _OGG_OUT)
 
 
 _OGG_META = T.StructType(
@@ -266,26 +259,20 @@ def decode_ogg_meta(streams: DataFrame) -> DataFrame:
     ``(packet_len // 255) + 1`` only if lacing was honored. Every
     column oracle-replayable."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pages = parse_pages(bytes(payload))
-                ident = parse_vorbis_id(pages[0]["packet"])
-                _, comments = parse_vorbis_comment(pages[1]["packet"])
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "n_pages": len(pages),
-                        "channels": ident["channels"],
-                        "sample_rate": ident["sample_rate"],
-                        "bitrate_nominal": ident["bitrate_nominal"],
-                        "total_samples": pages[-1]["granule"],
-                        "title": comments["TITLE"],
-                        "language": comments["LANGUAGE"],
-                        "comment_segments": pages[1]["n_segments"],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _OGG_META])
+    def decode(did, payload):
+        pages = parse_pages(bytes(payload))
+        ident = parse_vorbis_id(pages[0]["packet"])
+        _, comments = parse_vorbis_comment(pages[1]["packet"])
+        yield {
+            "doc_id": int(did),
+            "n_pages": len(pages),
+            "channels": ident["channels"],
+            "sample_rate": ident["sample_rate"],
+            "bitrate_nominal": ident["bitrate_nominal"],
+            "total_samples": pages[-1]["granule"],
+            "title": comments["TITLE"],
+            "language": comments["LANGUAGE"],
+            "comment_segments": pages[1]["n_segments"],
+        }
 
-    return streams.mapInPandas(batches, _OGG_META)
+    return row_kernel(streams.select("doc_id", "payload"), decode, _OGG_META)

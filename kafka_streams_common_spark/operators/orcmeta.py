@@ -31,13 +31,12 @@ never touched.
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from kafka_streams_common_spark.operators.protowire import decode_message
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 ORC_MAGIC = b"ORC"
 
@@ -183,52 +182,46 @@ def orc_footer_stats(files: DataFrame, key_column: str, str_column: str) -> Data
     right), and the key/string column statistics located by the root
     struct's subtype ordering."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for content in pdf["content"]:
-                rec = parse_orc_tail(bytes(content))
-                footer = rec["footer"]
-                types = footer["types"]
-                root = types[0]
-                if root["kind"] != _KIND_STRUCT:
-                    raise ValueError("ORC root type is not a struct")
-                names = root.get("field_names", [])
-                subtypes = root.get("subtypes", [])
-                if len(names) != len(subtypes):
-                    raise ValueError("root field/subtype arity mismatch")
-                stripes = footer.get("stripes", [])
-                stripe_rows = sum(s["number_of_rows"] for s in stripes)
-                if stripe_rows != footer["number_of_rows"]:
-                    raise ValueError("stripe row counts != footer total")
-                stats = footer.get("statistics", [])
-                mn = mx = ks = smin = smax = None
-                for name, sub in zip(names, subtypes):
-                    st = stats[sub] if sub < len(stats) else {}
-                    if name == key_column and "int_statistics" in st:
-                        ist = st["int_statistics"]
-                        mn, mx = ist.get("minimum"), ist.get("maximum")
-                        ks = ist.get("sum")
-                    elif name == str_column and "string_statistics" in st:
-                        sst = st["string_statistics"]
-                        smin, smax = sst.get("minimum"), sst.get("maximum")
-                rows.append(
-                    {
-                        "compression": rec["compression"],
-                        "num_rows": footer["number_of_rows"],
-                        "n_stripes": len(stripes),
-                        "stripe_rows": stripe_rows,
-                        "field_names": ",".join(names),
-                        "min_key": mn,
-                        "max_key": mx,
-                        "key_sum": ks,
-                        "min_name": smin,
-                        "max_name": smax,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in ORC_FOOTER_SCHEMA])
+    def footer_stats(content):
+        rec = parse_orc_tail(bytes(content))
+        footer = rec["footer"]
+        types = footer["types"]
+        root = types[0]
+        if root["kind"] != _KIND_STRUCT:
+            raise ValueError("ORC root type is not a struct")
+        names = root.get("field_names", [])
+        subtypes = root.get("subtypes", [])
+        if len(names) != len(subtypes):
+            raise ValueError("root field/subtype arity mismatch")
+        stripes = footer.get("stripes", [])
+        stripe_rows = sum(s["number_of_rows"] for s in stripes)
+        if stripe_rows != footer["number_of_rows"]:
+            raise ValueError("stripe row counts != footer total")
+        stats = footer.get("statistics", [])
+        mn = mx = ks = smin = smax = None
+        for name, sub in zip(names, subtypes):
+            st = stats[sub] if sub < len(stats) else {}
+            if name == key_column and "int_statistics" in st:
+                ist = st["int_statistics"]
+                mn, mx = ist.get("minimum"), ist.get("maximum")
+                ks = ist.get("sum")
+            elif name == str_column and "string_statistics" in st:
+                sst = st["string_statistics"]
+                smin, smax = sst.get("minimum"), sst.get("maximum")
+        yield {
+            "compression": rec["compression"],
+            "num_rows": footer["number_of_rows"],
+            "n_stripes": len(stripes),
+            "stripe_rows": stripe_rows,
+            "field_names": ",".join(names),
+            "min_key": mn,
+            "max_key": mx,
+            "key_sum": ks,
+            "min_name": smin,
+            "max_name": smax,
+        }
 
-    return files.select("content").mapInPandas(batches, ORC_FOOTER_SCHEMA)
+    return row_kernel(files.select("content"), footer_stats, ORC_FOOTER_SCHEMA)
 
 
 def read_orc_files(spark: SparkSession, path: str) -> DataFrame:

@@ -22,13 +22,12 @@ data, exactly how query engines prune row groups.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from kafka_streams_common_spark.operators.thriftcompact import decode_struct
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 PARQUET_MAGIC = b"PAR1"
 
@@ -149,58 +148,44 @@ def parquet_footer_stats(
     consistency bit the reader can only get right by walking the
     nested list<struct> chain correctly."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for content in pdf["content"]:
-                meta = parse_parquet_footer(bytes(content))
-                schema = meta["schema"]
-                root, leaves = schema[0], schema[1:]
-                if root.get("num_children") != len(leaves):
-                    raise ValueError("schema root num_children != leaf count")
-                mins, maxs, numv = [], [], 0
-                smins, smaxs = [], []
-                for rg in meta["row_groups"]:
-                    for col in rg["columns"]:
-                        cm = col["meta_data"]
-                        st = cm.get("statistics", {})
-                        if cm["path_in_schema"] == [key_column]:
-                            mins.append(
-                                decode_stat_value(st.get("min_value"), cm["type"])
-                            )
-                            maxs.append(
-                                decode_stat_value(st.get("max_value"), cm["type"])
-                            )
-                            numv += cm["num_values"]
-                        elif str_column and cm["path_in_schema"] == [str_column]:
-                            smins.append(
-                                decode_stat_value(st.get("min_value"), cm["type"])
-                            )
-                            smaxs.append(
-                                decode_stat_value(st.get("max_value"), cm["type"])
-                            )
-                rg_rows = sum(rg["num_rows"] for rg in meta["row_groups"])
-                mins = [m for m in mins if m is not None]
-                maxs = [m for m in maxs if m is not None]
-                smins = [m for m in smins if m is not None]
-                smaxs = [m for m in smaxs if m is not None]
-                rows.append(
-                    {
-                        "num_rows": meta["num_rows"],
-                        "n_columns": len(leaves),
-                        "n_row_groups": len(meta["row_groups"]),
-                        "column_names": ",".join(e["name"] for e in leaves),
-                        "min_key": min(mins) if mins else None,
-                        "max_key": max(maxs) if maxs else None,
-                        "key_num_values": numv,
-                        "rowgroup_rows_match": rg_rows == meta["num_rows"],
-                        "min_name": min(smins) if smins else None,
-                        "max_name": max(smaxs) if smaxs else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PARQUET_FOOTER_SCHEMA])
+    def footer_stats(content):
+        meta = parse_parquet_footer(bytes(content))
+        schema = meta["schema"]
+        root, leaves = schema[0], schema[1:]
+        if root.get("num_children") != len(leaves):
+            raise ValueError("schema root num_children != leaf count")
+        mins, maxs, numv = [], [], 0
+        smins, smaxs = [], []
+        for rg in meta["row_groups"]:
+            for col in rg["columns"]:
+                cm = col["meta_data"]
+                st = cm.get("statistics", {})
+                if cm["path_in_schema"] == [key_column]:
+                    mins.append(decode_stat_value(st.get("min_value"), cm["type"]))
+                    maxs.append(decode_stat_value(st.get("max_value"), cm["type"]))
+                    numv += cm["num_values"]
+                elif str_column and cm["path_in_schema"] == [str_column]:
+                    smins.append(decode_stat_value(st.get("min_value"), cm["type"]))
+                    smaxs.append(decode_stat_value(st.get("max_value"), cm["type"]))
+        rg_rows = sum(rg["num_rows"] for rg in meta["row_groups"])
+        mins = [m for m in mins if m is not None]
+        maxs = [m for m in maxs if m is not None]
+        smins = [m for m in smins if m is not None]
+        smaxs = [m for m in smaxs if m is not None]
+        yield {
+            "num_rows": meta["num_rows"],
+            "n_columns": len(leaves),
+            "n_row_groups": len(meta["row_groups"]),
+            "column_names": ",".join(e["name"] for e in leaves),
+            "min_key": min(mins) if mins else None,
+            "max_key": max(maxs) if maxs else None,
+            "key_num_values": numv,
+            "rowgroup_rows_match": rg_rows == meta["num_rows"],
+            "min_name": min(smins) if smins else None,
+            "max_name": max(smaxs) if smaxs else None,
+        }
 
-    return files.select("content").mapInPandas(batches, PARQUET_FOOTER_SCHEMA)
+    return row_kernel(files.select("content"), footer_stats, PARQUET_FOOTER_SCHEMA)
 
 
 def read_parquet_files(spark: SparkSession, path: str) -> DataFrame:

@@ -22,11 +22,12 @@ stages over per-message rows — the decode-at-ingest shape, no shuffle.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 _WT_VARINT, _WT_I64, _WT_LEN, _WT_I32 = 0, 1, 2, 5
 
@@ -80,10 +81,6 @@ def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
         shift += 7
         if shift > 70:
             raise ValueError("varint longer than 10 bytes")
-
-
-def zigzag32(n: int) -> int:
-    return ((n << 1) ^ (n >> 31)) & 0xFFFFFFFF
 
 
 def zigzag64(n: int) -> int:
@@ -323,37 +320,28 @@ def encode_events_proto(events: DataFrame) -> DataFrame:
     is inserted."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for eid, et, val, uid in zip(
-                pdf["event_id"], pdf["event_type"], pdf["value"], pdf["user_id"]
-            ):
-                eid, uid = int(eid), int(uid)
-                digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
-                tokens = [int(digest[2 * i : 2 * i + 2], 16) for i in range(4)]
-                values = {
-                    "event_id": eid,
-                    "event_type": str(et),
-                    "value": float(val),
-                    "delta": uid - 500,
-                    "meta": {"source": f"u{uid}", "tag32": eid % 1000},
-                    "token_bytes": tokens,
-                    "trace_fixed": (eid * 2654435761) % (1 << 63) if eid % 2 == 0 else None,
-                    "trace_blob": digest.encode()[:8] if eid % 2 == 1 else None,
-                }
-                payloads.append(encode_message(EVENT_PROTO_SPEC, values))
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
-            )
+    def encode(eid, et, val, uid):
+        eid, uid = int(eid), int(uid)
+        digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
+        tokens = [int(digest[2 * i : 2 * i + 2], 16) for i in range(4)]
+        values = {
+            "event_id": eid,
+            "event_type": str(et),
+            "value": float(val),
+            "delta": uid - 500,
+            "meta": {"source": f"u{uid}", "tag32": eid % 1000},
+            "token_bytes": tokens,
+            "trace_fixed": (eid * 2654435761) % (1 << 63) if eid % 2 == 0 else None,
+            "trace_blob": digest.encode()[:8] if eid % 2 == 1 else None,
+        }
+        yield eid, encode_message(EVENT_PROTO_SPEC, values)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "event_type", "value", "user_id")
-    ).mapInPandas(
-        batches, _PROTO_MSG
+    return row_kernel(
+        fan_out(events.select("event_id", "event_type", "value", "user_id")),
+        encode,
+        _PROTO_MSG,
     )
 
 
@@ -379,24 +367,18 @@ def decode_events_proto(msgs: DataFrame) -> DataFrame:
     to (sum, count) so the oracle can replay them from md5
     arithmetic."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                rec = decode_message(EVENT_PROTO_READER_SPEC, bytes(payload))
-                toks = rec["token_bytes"]
-                rows.append(
-                    {
-                        "event_id": rec["event_id"],
-                        "event_type": rec["event_type"],
-                        "value": rec["value"],
-                        "delta": rec["delta"],
-                        "source": rec["meta"]["source"],
-                        "tag32": rec["meta"]["tag32"],
-                        "packed_sum": sum(toks),
-                        "packed_n": len(toks),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PROTO_ROWS])
+    def decode(payload):
+        rec = decode_message(EVENT_PROTO_READER_SPEC, bytes(payload))
+        toks = rec["token_bytes"]
+        yield {
+            "event_id": rec["event_id"],
+            "event_type": rec["event_type"],
+            "value": rec["value"],
+            "delta": rec["delta"],
+            "source": rec["meta"]["source"],
+            "tag32": rec["meta"]["tag32"],
+            "packed_sum": sum(toks),
+            "packed_n": len(toks),
+        }
 
-    return msgs.mapInPandas(batches, _PROTO_ROWS)
+    return row_kernel(msgs.select("payload"), decode, _PROTO_ROWS)

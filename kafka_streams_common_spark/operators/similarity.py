@@ -107,6 +107,8 @@ def _lloyd_refine(
         ).collect()
         if not cent_rows:
             break
+        # a null or ragged vector gets no cell: keep it out of the means,
+        # or it forms a NULL-keyed centroid the next step cannot assign to
         assigned = corpus.select(
             F.col(vec_col).alias(vec_col),
             F.element_at(
@@ -115,7 +117,7 @@ def _lloyd_refine(
                 )["cells"],
                 1,
             ).alias("c_id"),
-        )
+        ).where(F.col("c_id").isNotNull())
         centroids = (
             assigned.select("c_id", F.posexplode(to_double_array(F.col(vec_col))))
             .groupBy("c_id", "pos")
@@ -1577,24 +1579,6 @@ def _pq_encode_udf(codebooks: DataFrame):
     # asNondeterministic: §4.4 duplication guard (see _block_topk_udf) —
     # downstream implicit filters otherwise clone the encode pass
     return pandas_udf(encode, "array<int>").asNondeterministic()
-
-
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Map-only PQ encoding: ``(vec_id, codes array<int>)`` — the
-    :func:`_pq_encode_udf` kernel over one corpus pass. A corpus row
-    compresses from dim doubles to m small ints — the 8-32× storage cut
-    that makes the PQ index scannable at 100 TB.
-    """
-    base = fan_out(corpus)
-    return base.select(
-        F.col(id_col).alias(id_col),
-        _pq_encode_udf(codebooks)(to_double_array(F.col(vec_col))).alias("codes"),
-    )
 
 
 def ivf_pq_topk(

@@ -21,11 +21,11 @@ stages, the sidecar-census shape.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 CUE_CHARS = 120
 
@@ -128,25 +128,18 @@ def encode_subtitles(docs: DataFrame) -> DataFrame:
     100 ms gap; EVEN doc_ids ship SubRip (CRLF, comma), ODD WebVTT
     (LF, dot) — both dialects in every batch. Map-only."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                text = str(text)
-                dur = 2000 + did % 1000
-                cues = [
-                    (i * (dur + 100), i * (dur + 100) + dur, text[j : j + CUE_CHARS])
-                    for i, j in enumerate(range(0, len(text), CUE_CHARS))
-                ]
-                raw = build_srt(cues) if did % 2 == 0 else build_vtt(cues)
-                payloads.append(raw.encode("utf-8"))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        did = int(did)
+        text = str(text)
+        dur = 2000 + did % 1000
+        cues = [
+            (i * (dur + 100), i * (dur + 100) + dur, text[j : j + CUE_CHARS])
+            for i, j in enumerate(range(0, len(text), CUE_CHARS))
+        ]
+        raw = build_srt(cues) if did % 2 == 0 else build_vtt(cues)
+        yield did, raw.encode("utf-8")
 
-    return docs.select("doc_id", "text").mapInPandas(batches, _SUB_OUT)
+    return row_kernel(docs.select("doc_id", "text"), encode, _SUB_OUT)
 
 
 _SUB_META = T.StructType(
@@ -167,22 +160,16 @@ def decode_subtitles(sidecars: DataFrame) -> DataFrame:
     reassembled EXACTLY (md5-gated), span from first start to last
     end. Every column oracle-replayable."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, cues = parse_cues(bytes(payload).decode("utf-8"))
-                caption = "".join(c[2] for c in cues)
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "format": fmt,
-                        "n_cues": len(cues),
-                        "span_ms": cues[-1][1] - cues[0][0] if cues else 0,
-                        "caption_md5": hashlib.md5(caption.encode()).hexdigest(),
-                        "caption_chars": len(caption),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _SUB_META])
+    def decode(did, payload):
+        fmt, cues = parse_cues(bytes(payload).decode("utf-8"))
+        caption = "".join(c[2] for c in cues)
+        yield {
+            "doc_id": int(did),
+            "format": fmt,
+            "n_cues": len(cues),
+            "span_ms": cues[-1][1] - cues[0][0] if cues else 0,
+            "caption_md5": hashlib.md5(caption.encode()).hexdigest(),
+            "caption_chars": len(caption),
+        }
 
-    return sidecars.mapInPandas(batches, _SUB_META)
+    return row_kernel(sidecars.select("doc_id", "payload"), decode, _SUB_META)

@@ -28,11 +28,12 @@ stages over per-message rows — decode-at-ingest, no shuffle.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 # compact-protocol type ids (field headers and collection element types)
 CT_STOP = 0x00
@@ -185,6 +186,14 @@ def encode_struct(spec: dict, values: dict) -> bytes:
 _MAX_NEST_DEPTH = 64
 
 
+def _check_collection_size(n: int, buf: bytes, pos: int) -> None:
+    """Every collection element takes at least one wire byte, so a
+    declared size beyond the remaining bytes is corrupt; rejecting it up
+    front keeps a hostile size from spinning the skip loop."""
+    if n > len(buf) - pos:
+        raise ValueError(f"collection size {n} exceeds the remaining bytes")
+
+
 def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
     """Skip one value of compact type ``ct`` — the forward-compat
     path. Bool-in-header types carry no body. ``depth`` bounds hostile
@@ -213,6 +222,7 @@ def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
         n = head >> 4
         if n == 15:
             n, pos = _read_uvarint(buf, pos)
+        _check_collection_size(n, buf, pos)
         for _ in range(n):
             pos = _skip_value(ect, buf, pos, depth + 1)
         return pos
@@ -220,6 +230,7 @@ def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
         n, pos = _read_uvarint(buf, pos)
         if n == 0:
             return pos
+        _check_collection_size(n, buf, pos)
         head = buf[pos]
         pos += 1
         kct, vct = head >> 4, head & 0x0F
@@ -405,43 +416,36 @@ def encode_events_thrift(events: DataFrame) -> DataFrame:
     exchange is inserted."""
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for eid, et, val, uid in zip(
-                pdf["event_id"], pdf["event_type"], pdf["value"], pdf["user_id"]
-            ):
-                eid, uid = int(eid), int(uid)
-                digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
-                nbytes = 16 if eid % 2 == 0 else 4
-                toks = [int(digest[2 * i : 2 * i + 2], 16) for i in range(nbytes)]
-                first4 = [int(digest[2 * i : 2 * i + 2], 16) for i in range(4)]
-                values = {
-                    "event_id": eid,
-                    "event_type": str(et),
-                    "value": float(val),
-                    "delta": uid - 500,
-                    "meta": {"source": f"u{uid}", "tag16": eid % 1000 - 500},
-                    "flag": eid % 2 == 0,
-                    "tokens": toks,
-                    "token_set": sorted(set(first4)),
-                    "props": {} if eid % 5 == 0 else {"u": uid, "m": eid % 97},
-                    "trace_double": float(eid) * 0.5 if eid % 2 == 0 else None,
-                    "trace_note": (
-                        {"note": digest[:6], "n": eid % 31} if eid % 2 == 1 else None
-                    ),
-                }
-                payloads.append(encode_struct(EVENT_THRIFT_SPEC, values))
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"].values, "payload": payloads},
-                columns=["event_id", "payload"],
-            )
+    def encode(eid, et, val, uid):
+        eid, uid = int(eid), int(uid)
+        digest = hashlib.md5(f"{et}-{eid}".encode()).hexdigest()
+        nbytes = 16 if eid % 2 == 0 else 4
+        toks = [int(digest[2 * i : 2 * i + 2], 16) for i in range(nbytes)]
+        first4 = [int(digest[2 * i : 2 * i + 2], 16) for i in range(4)]
+        values = {
+            "event_id": eid,
+            "event_type": str(et),
+            "value": float(val),
+            "delta": uid - 500,
+            "meta": {"source": f"u{uid}", "tag16": eid % 1000 - 500},
+            "flag": eid % 2 == 0,
+            "tokens": toks,
+            "token_set": sorted(set(first4)),
+            "props": {} if eid % 5 == 0 else {"u": uid, "m": eid % 97},
+            "trace_double": float(eid) * 0.5 if eid % 2 == 0 else None,
+            "trace_note": (
+                {"note": digest[:6], "n": eid % 31} if eid % 2 == 1 else None
+            ),
+        }
+        yield eid, encode_struct(EVENT_THRIFT_SPEC, values)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(
-        events.select("event_id", "event_type", "value", "user_id")
-    ).mapInPandas(batches, _THRIFT_MSG)
+    return row_kernel(
+        fan_out(events.select("event_id", "event_type", "value", "user_id")),
+        encode,
+        _THRIFT_MSG,
+    )
 
 
 _THRIFT_ROWS = T.StructType(
@@ -470,30 +474,24 @@ def decode_events_thrift(msgs: DataFrame) -> DataFrame:
     header nibble, and fold the collections to SQL-replayable scalars
     (list sum+count, set count, map count + the 'u' value)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                buf = bytes(payload)
-                rec, end = decode_struct(EVENT_THRIFT_READER_SPEC, buf)
-                if end != len(buf):
-                    raise ValueError("trailing bytes after thrift struct")
-                rows.append(
-                    {
-                        "event_id": rec["event_id"],
-                        "event_type": rec["event_type"],
-                        "value": rec["value"],
-                        "delta": rec["delta"],
-                        "source": rec["meta"]["source"],
-                        "tag16": rec["meta"]["tag16"],
-                        "flag": rec["flag"],
-                        "token_sum": sum(rec["tokens"]),
-                        "token_n": len(rec["tokens"]),
-                        "set_n": len(rec["token_set"]),
-                        "map_n": len(rec["props"]),
-                        "map_u": rec["props"].get("u"),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _THRIFT_ROWS])
+    def decode(payload):
+        buf = bytes(payload)
+        rec, end = decode_struct(EVENT_THRIFT_READER_SPEC, buf)
+        if end != len(buf):
+            raise ValueError("trailing bytes after thrift struct")
+        yield {
+            "event_id": rec["event_id"],
+            "event_type": rec["event_type"],
+            "value": rec["value"],
+            "delta": rec["delta"],
+            "source": rec["meta"]["source"],
+            "tag16": rec["meta"]["tag16"],
+            "flag": rec["flag"],
+            "token_sum": sum(rec["tokens"]),
+            "token_n": len(rec["tokens"]),
+            "set_n": len(rec["token_set"]),
+            "map_n": len(rec["props"]),
+            "map_u": rec["props"].get("u"),
+        }
 
-    return msgs.mapInPandas(batches, _THRIFT_ROWS)
+    return row_kernel(msgs.select("payload"), decode, _THRIFT_ROWS)

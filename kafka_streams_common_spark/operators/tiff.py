@@ -26,14 +26,13 @@ stages — the image-lake census shape, no shuffle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from kafka_streams_common_spark.operators.exif import _parse_tiff_ifd0
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 _TYPE_SHORT, _TYPE_LONG = 3, 4
 
@@ -207,34 +206,23 @@ def encode_tiff(docs: DataFrame, dim_mod: int = 16) -> DataFrame:
     class, and multi-strip assembly all vary inside one lake.
     Map-only."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                hx = hashlib.md5(str(text).encode()).hexdigest()
-                w = int(hx[:15], 16) % dim_mod + 1
-                h = (
-                    int(hashlib.md5(str(text)[::-1].encode()).hexdigest()[:15], 16)
-                    % dim_mod
-                    + 1
-                )
-                if did % 2 == 0:
-                    n = w * h
-                    raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
-                    px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w)
-                    payloads.append(_tiff_image_bytes(px, "II"))
-                else:
-                    n = 3 * w * h
-                    raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
-                    px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-                    payloads.append(_tiff_image_bytes(px, "MM", rows_per_strip=4))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, "payload": payloads},
-                columns=["doc_id", "payload"],
-            )
+    def encode(did, text):
+        did = int(did)
+        hx = hashlib.md5(str(text).encode()).hexdigest()
+        w = int(hx[:15], 16) % dim_mod + 1
+        h = int(hashlib.md5(str(text)[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        if did % 2 == 0:
+            n = w * h
+            raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
+            px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w)
+            yield did, _tiff_image_bytes(px, "II")
+        else:
+            n = 3 * w * h
+            raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
+            px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
+            yield did, _tiff_image_bytes(px, "MM", rows_per_strip=4)
 
-    return docs.select("doc_id", "text").mapInPandas(batches, _TIFF_OUT)
+    return row_kernel(docs.select("doc_id", "text"), encode, _TIFF_OUT)
 
 
 _TIFF_FEATS = T.StructType(
@@ -258,25 +246,19 @@ def decode_tiff_features(images: DataFrame) -> DataFrame:
     strips, stats from decoded content — every column
     oracle-replayable from the md5 arithmetic."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                bo, ch, w, h, n_strips, px = parse_tiff_image(bytes(payload))
-                flat = px.reshape(-1).astype(np.float64)
-                rows.append(
-                    {
-                        "doc_id": int(did),
-                        "byteorder": bo,
-                        "channels": ch,
-                        "width": w,
-                        "height": h,
-                        "n_strips": n_strips,
-                        "mean_px": float(flat.mean()),
-                        "min_px": int(flat.min()),
-                        "max_px": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _TIFF_FEATS])
+    def decode(did, payload):
+        bo, ch, w, h, n_strips, px = parse_tiff_image(bytes(payload))
+        flat = px.reshape(-1).astype(np.float64)
+        yield {
+            "doc_id": int(did),
+            "byteorder": bo,
+            "channels": ch,
+            "width": w,
+            "height": h,
+            "n_strips": n_strips,
+            "mean_px": float(flat.mean()),
+            "min_px": int(flat.min()),
+            "max_px": int(flat.max()),
+        }
 
-    return images.mapInPandas(batches, _TIFF_FEATS)
+    return row_kernel(images.select("doc_id", "payload"), decode, _TIFF_FEATS)

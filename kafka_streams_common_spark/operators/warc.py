@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_streams_common_spark.operators.archive import _gzip_compress_bytes
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 CRLF = b"\r\n"
 WARC_DATE = "2026-01-01T00:00:00Z"
@@ -256,37 +257,31 @@ def decode_warc_responses(shards: DataFrame) -> DataFrame:
     doc id recovered from the target URI. Emits per-response rows
     whose every column the oracle replays from ``documents``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                saw_info = False
-                for member in split_gzip_members(bytes(payload)):
-                    headers, block = parse_warc_record(member)
-                    rtype = headers.get("warc-type")
-                    if rtype != "response":
-                        if rtype == "warcinfo":
-                            saw_info = True
-                        continue
-                    uri = headers["warc-target-uri"]
-                    if not uri.startswith(URI_PREFIX):
-                        raise ValueError(f"unexpected target URI {uri!r}")
-                    status, http_headers, body = parse_http_response(block)
-                    rows.append(
-                        {
-                            "doc_id": int(uri[len(URI_PREFIX) :]),
-                            "http_status": status,
-                            "content_type": http_headers.get("content-type", ""),
-                            "payload_bytes": len(body),
-                            "payload_md5": hashlib.md5(body).hexdigest(),
-                            "shard_id": int(sid),
-                        }
-                    )
-                if not saw_info:
-                    raise ValueError(f"shard {sid} missing warcinfo record")
-            yield pd.DataFrame(rows, columns=[f.name for f in _INGEST_SCHEMA])
+    def decode(sid, payload):
+        saw_info = False
+        for member in split_gzip_members(bytes(payload)):
+            headers, block = parse_warc_record(member)
+            rtype = headers.get("warc-type")
+            if rtype != "response":
+                if rtype == "warcinfo":
+                    saw_info = True
+                continue
+            uri = headers["warc-target-uri"]
+            if not uri.startswith(URI_PREFIX):
+                raise ValueError(f"unexpected target URI {uri!r}")
+            status, http_headers, body = parse_http_response(block)
+            yield {
+                "doc_id": int(uri[len(URI_PREFIX) :]),
+                "http_status": status,
+                "content_type": http_headers.get("content-type", ""),
+                "payload_bytes": len(body),
+                "payload_md5": hashlib.md5(body).hexdigest(),
+                "shard_id": int(sid),
+            }
+        if not saw_info:
+            raise ValueError(f"shard {sid} missing warcinfo record")
 
-    return shards.mapInPandas(batches, _INGEST_SCHEMA)
+    return row_kernel(shards.select("shard_id", "payload"), decode, _INGEST_SCHEMA)
 
 
 _PIPELINE_SCHEMA = T.StructType(
@@ -306,32 +301,26 @@ def warc_html_extract(shards: DataFrame) -> DataFrame:
     <h1> carries (the two ids travel through different layers, so a
     mix-up in either is caught)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kafka_streams_common_spark.operators.webtext import _extract_row
+    from kafka_streams_common_spark.operators.webtext import _extract_row
 
-        for pdf in it:
-            rows = []
-            for payload in pdf["payload"]:
-                for member in split_gzip_members(bytes(payload)):
-                    headers, block = parse_warc_record(member)
-                    if headers.get("warc-type") != "response":
-                        continue
-                    uri_id = int(headers["warc-target-uri"][len(URI_PREFIX) :])
-                    status, http_headers, body = parse_http_response(block)
-                    if "text/html" not in http_headers.get("content-type", ""):
-                        raise ValueError("pipeline shard must carry HTML")
-                    ex = _extract_row(body.decode("utf-8"))
-                    rows.append(
-                        {
-                            "doc_id": ex["doc_id"],
-                            "uri_id_match": ex["doc_id"] == uri_id,
-                            "main_md5": ex["main_md5"],
-                            "n_paragraphs": ex["n_paragraphs"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in _PIPELINE_SCHEMA])
+    def extract(payload):
+        for member in split_gzip_members(bytes(payload)):
+            headers, block = parse_warc_record(member)
+            if headers.get("warc-type") != "response":
+                continue
+            uri_id = int(headers["warc-target-uri"][len(URI_PREFIX) :])
+            status, http_headers, body = parse_http_response(block)
+            if "text/html" not in http_headers.get("content-type", ""):
+                raise ValueError("pipeline shard must carry HTML")
+            ex = _extract_row(body.decode("utf-8"))
+            yield {
+                "doc_id": ex["doc_id"],
+                "uri_id_match": ex["doc_id"] == uri_id,
+                "main_md5": ex["main_md5"],
+                "n_paragraphs": ex["n_paragraphs"],
+            }
 
-    return shards.mapInPandas(batches, _PIPELINE_SCHEMA)
+    return row_kernel(shards.select("payload"), extract, _PIPELINE_SCHEMA)
 
 
 def read_warc_shard_files(spark, path: str) -> DataFrame:

@@ -33,11 +33,11 @@ no shuffle anywhere.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from kafka_streams_common_spark.rowkernel import row_kernel
 
 PARA_CHARS = 200
 
@@ -346,19 +346,12 @@ def render_docs_html(docs: DataFrame) -> DataFrame:
     takes the no-op branch and no exchange is inserted."""
     out_schema = T.StructType([T.StructField("page", T.StringType(), False)])
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pages = [
-                render_doc_html(int(d), str(t), str(lg))
-                for d, t, lg in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
-            ]
-            yield pd.DataFrame({"page": pages})
+    def render(d, t, lg):
+        yield (render_doc_html(int(d), str(t), str(lg)),)
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
-        batches, out_schema
-    )
+    return row_kernel(fan_out(docs.select("doc_id", "text", "lang")), render, out_schema)
 
 
 def extract_docs_main_text(pages: DataFrame, page_col: str = "page") -> DataFrame:
@@ -366,9 +359,7 @@ def extract_docs_main_text(pages: DataFrame, page_col: str = "page") -> DataFram
     article <h1>, title/lang/main-text/chrome stats emitted — every
     column oracle-replayable from ``documents``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [_extract_row(str(p)) for p in pdf[page_col]]
-            yield pd.DataFrame(rows, columns=[f.name for f in _EXTRACT_SCHEMA])
+    def extract(p):
+        yield _extract_row(str(p))
 
-    return pages.mapInPandas(batches, _EXTRACT_SCHEMA)
+    return row_kernel(pages.select(page_col), extract, _EXTRACT_SCHEMA)

@@ -193,6 +193,7 @@ def decode_confluent_values(
     is DERIVED from the reader schema, so a topic's consumer is one
     call. Stateless Arrow stage — batch and streaming identical."""
     from kafka_streams_common_spark.operators.avro import confluent_parse
+    from kafka_streams_common_spark.rowkernel import row_kernel
 
     out_schema = _reader_spark_schema(reader_schema)
     if with_schema_id:
@@ -201,17 +202,11 @@ def decode_confluent_values(
         )
     names = [f["name"] for f in reader_schema["fields"]]
 
-    def batches(it):
-        import pandas as pd
+    def decode(payload):
+        sid, rec = confluent_parse(bytes(payload), schemas_by_id, reader_schema)
+        row = {n: rec[n] for n in names}
+        if with_schema_id:
+            row["schema_id"] = sid
+        yield row
 
-        for pdf in it:
-            rows = []
-            for payload in pdf[value_col]:
-                sid, rec = confluent_parse(bytes(payload), schemas_by_id, reader_schema)
-                row = {n: rec[n] for n in names}
-                if with_schema_id:
-                    row["schema_id"] = sid
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return df.select(value_col).mapInPandas(batches, out_schema)
+    return row_kernel(df.select(value_col), decode, out_schema)

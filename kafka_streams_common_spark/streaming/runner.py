@@ -29,7 +29,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_streams_common_spark.catalog import TableCatalog
+from kafka_streams_common_spark.catalog import _READER_CONFS, TableCatalog, normalize_ts
 from kafka_streams_common_spark.compiler import BatchCompiler
 from kafka_streams_common_spark.registry import latest_per_key
 
@@ -89,8 +89,6 @@ class StreamingCompiler(BatchCompiler):
         # raw on-disk schema — normalization (nanos → timestamp) must happen
         # AFTER the scan, or the reader would map int64-nanos columns to a
         # timestamp schema and fail on type mismatch
-        from kafka_streams_common_spark.catalog import _READER_CONFS
-
         for k, v in _READER_CONFS:
             self.spark.conf.set(k, v)
         raw_schema = self.spark.read.format(ref.format).load(ref.path).schema
@@ -107,23 +105,63 @@ class StreamingCompiler(BatchCompiler):
             path = link_dir
         df = reader.load(path)
         # re-apply time-column normalization on the streaming frame
-        from kafka_streams_common_spark.catalog import normalize_ts
-
         return normalize_ts(df, ref.ts_nanos_cols)
 
-    def _root(self, p):
-        df = self.stream_source(p.source.name)
-        if p.filter:
-            df = df.filter(p.filter)
-        key_col = self._extract_key(df, p.source, p.key_extraction)
-        from kafka_streams_common_spark.compiler import KEY_COL
-
-        return df.withColumn(KEY_COL, key_col)
+    def _read_source(self, p):
+        return self.stream_source(p.source.name)
 
     def _compile_simple_stream(self, p):
         # observe() is unsupported on some streaming plans; identity is the
         # semantic contract (P6 peek is a side-effect tap)
         return self._root(p)
+
+
+def _drain(spark: SparkSession, writer) -> None:
+    """Start ``writer``'s query, run it until its bounded input is
+    consumed, then stop it."""
+    with bounded_shuffle_partitions(spark):
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+
+def _current_state(spark: SparkSession, marker: str) -> DataFrame | None:
+    """The state version the ``marker`` file points at, if any."""
+    if not os.path.exists(marker):
+        return None
+    with open(marker, encoding="utf-8") as fh:
+        path = fh.read().strip()
+    return spark.read.parquet(path) if path else None
+
+
+def _fold_into_state(
+    spark: SparkSession,
+    marker: str,
+    batch_df: DataFrame,
+    epoch_id: int,
+    key_field: str,
+    seq_field: str,
+    tiebreak_field: str | None,
+) -> str:
+    """Fold one microbatch into the latest-per-key state beside
+    ``marker``: write the merged table to a new versioned directory, then
+    atomically repoint the marker at it (plain-parquet MERGE without
+    Delta). Returns the new version's path."""
+    state = _current_state(spark, marker)
+    merged = batch_df if state is None else state.unionByName(batch_df)
+    new_state = latest_per_key(merged, key_field, seq_field, tiebreak_field)
+    version_path = os.path.join(
+        os.path.dirname(marker), f"v{epoch_id}_{uuid.uuid4().hex[:8]}"
+    )
+    new_state.write.mode("overwrite").parquet(version_path)
+    tmp = marker + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(version_path)
+    os.replace(tmp, marker)  # atomic repoint
+    return version_path
 
 
 def run_stream_to_memory(
@@ -144,20 +182,16 @@ def run_stream_to_memory(
     pinned by ``tests/test_streaming.py::test_memory_sink_view_cleanup``.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with bounded_shuffle_partitions(spark):
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            return spark.table(name)
-        finally:
-            q.stop()
-            q.awaitTermination()
-            spark.catalog.dropTempView(name)
+    writer = (
+        streaming_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+    )
+    try:
+        _drain(spark, writer)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_changelog_materialization(
@@ -193,23 +227,10 @@ def run_changelog_materialization(
     os.makedirs(state_dir, exist_ok=True)
     marker = os.path.join(state_dir, "_CURRENT")
 
-    def current_state() -> DataFrame | None:
-        if not os.path.exists(marker):
-            return None
-        with open(marker, encoding="utf-8") as fh:
-            path = fh.read().strip()
-        return spark.read.parquet(path) if path else None
-
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state = current_state()
-        merged = batch_df if state is None else state.unionByName(batch_df)
-        new_state = latest_per_key(merged, key_field, seq_field, tiebreak_field)
-        version_path = os.path.join(state_dir, f"v{epoch_id}_{uuid.uuid4().hex[:8]}")
-        new_state.write.mode("overwrite").parquet(version_path)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version_path)
-        os.replace(tmp, marker)  # atomic repoint
+        _fold_into_state(
+            spark, marker, batch_df, epoch_id, key_field, seq_field, tiebreak_field
+        )
 
     writer = streaming_df.writeStream.foreachBatch(merge_batch).outputMode("append")
     if checkpoint_dir:
@@ -217,14 +238,8 @@ def run_changelog_materialization(
         # resumes after the last committed microbatch (already-processed
         # input is NOT replayed into the state merge)
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with bounded_shuffle_partitions(spark):
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    state = current_state()
+    _drain(spark, writer)
+    state = _current_state(spark, marker)
     assert state is not None, "no microbatch produced state"
     if tombstone_predicate is not None:
         # coalesce(…, false): a NULL-valued predicate (e.g. a NULL
@@ -275,25 +290,10 @@ def run_fk_join_materialization(
     os.makedirs(emit_dir, exist_ok=True)
     marker = os.path.join(dim_dir, "CURRENT")
 
-    def current_state() -> DataFrame | None:
-        if not os.path.exists(marker):
-            return None
-        with open(marker, "r", encoding="utf-8") as fh:
-            path = fh.read().strip()
-        return spark.read.parquet(path) if path else None
-
-    dim_cols = dim_stream.columns
-
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state = current_state()
-        merged = batch_df if state is None else state.unionByName(batch_df)
-        new_state = latest_per_key(merged, dim_key, seq_field, tiebreak_field)
-        version_path = os.path.join(dim_dir, f"v{epoch_id}_{uuid.uuid4().hex[:8]}")
-        new_state.write.mode("overwrite").parquet(version_path)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version_path)
-        os.replace(tmp, marker)
+        version_path = _fold_into_state(
+            spark, marker, batch_df, epoch_id, dim_key, seq_field, tiebreak_field
+        )
         # changed keys this batch = keys present in the batch (a
         # latest-per-key fold can only change a key it saw); re-emit
         # their dependent facts with the fresh enrichment
@@ -316,14 +316,8 @@ def run_fk_join_materialization(
     writer = dim_stream.writeStream.foreachBatch(merge_batch).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with bounded_shuffle_partitions(spark):
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    state = current_state()
+    _drain(spark, writer)
+    state = _current_state(spark, marker)
     assert state is not None, "no microbatch produced state"
     view = facts.join(
         state, facts[fk_field] == state[dim_key], "left"

@@ -2258,3 +2258,23 @@ def test_assign_probes_null_and_ragged_rows_skipped(spark):
     )
     assert got == want and len(want) > 0
     assert not any(v in (100, 101) or n in (100, 101) for v, n, _ in got)
+
+
+def test_lloyd_refine_skips_ragged_rows(spark):
+    """A ragged embedding gets no cell from the assignment kernel, so Lloyd
+    refinement must leave it out of the centroid means: averaged in under
+    a NULL ``c_id`` it formed a centroid the next step's kernel could not
+    take ``int()`` of. Results equal the run without the ragged row."""
+    schema = "vec_id long, embedding array<double>"
+    clean = [(i, [float(i == j) + 0.01 * j for j in range(4)]) for i in range(8)]
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.5, 0.0, 0.0])], "q_id long, q_emb array<double>"
+    )
+
+    def run(rows):
+        corpus = spark.createDataFrame(rows, schema)
+        out = ivf_cosine_topk(corpus, q, k=3, n_centroids=2, n_probe=2, kmeans_iters=2)
+        return sorted(tuple(r) for r in out.collect())
+
+    want = run(clean)
+    assert run(clean + [(101, [1.0, 2.0])]) == want and len(want) > 0

@@ -466,6 +466,21 @@ def test_thrift_nesting_depth_bounded():
         tc.decode_struct({}, hostile)
 
 
+def test_thrift_skip_rejects_oversized_collection():
+    """An unknown list field declaring ten million bool elements in a
+    few bytes must be rejected on its declared size, not skipped one
+    element at a time (random fuzz bytes hit such headers)."""
+    n = 10**7
+    size = bytearray()
+    while n > 0x7F:
+        size.append(n & 0x7F | 0x80)
+        n >>= 7
+    size.append(n)
+    hostile = bytes([0xF9, 0xF1]) + bytes(size)  # field 15: list<bool>
+    with pytest.raises(ValueError, match="exceeds the remaining bytes"):
+        tc.decode_struct({}, hostile)
+
+
 from kafka_streams_common_spark.operators import orcmeta as om
 
 
