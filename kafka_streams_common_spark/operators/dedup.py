@@ -24,7 +24,7 @@ and reproducible in ANSI SQL for the DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_streams_common_spark.functions.hashing import md5_int64
@@ -313,6 +313,40 @@ def minhash_signatures(
     )
 
 
+def _band_keys(sig: Column, width: int, bands: int) -> Column:
+    """LSH band buckets of a ``width``-entry signature array as one
+    higher-order expression: ``array<struct<band:int, bkey:string>>``,
+    band ``b`` keyed by the md5 of its ``width // bands`` entries written
+    as comma-joined decimal strings. A signature of any other width fails
+    the query with an error naming both widths (``slice`` alone would
+    quietly hash shorter bands). One expression instead of a per-band
+    Column tree keeps analysis cost independent of ``bands``."""
+    rows = width // bands
+    keys = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.md5(
+                F.array_join(
+                    F.transform(
+                        F.slice(sig, b * rows + 1, rows), lambda x: x.cast("string")
+                    ),
+                    ",",
+                )
+            ).alias("bkey"),
+        ),
+    )
+    return F.when(
+        F.size(sig) != width,
+        F.raise_error(
+            F.concat(
+                F.lit(f"LSH signature must have {width} entries, got "),
+                F.size(sig).cast("string"),
+            )
+        ),
+    ).otherwise(keys)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -356,7 +390,6 @@ def minhash_lsh_pairs(
     probability ≈ (1-0.41)^remaining ≈ 0. Default None keeps the
     registered query bit-identical to its SQL oracle.
     """
-    rows_per_band = num_perm // bands
     # materialize the signature table ONCE: it is map-only output (no
     # exchange for ReuseExchange to share) consumed by both sides of the
     # band self-join and, transitively, every candidate re-expansion —
@@ -367,26 +400,7 @@ def minhash_lsh_pairs(
     sig = minhash_signatures(docs, n, num_perm, text_col, id_col).localCheckpoint(
         eager=True
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at("sig", b * rows_per_band + r + 1).cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sig.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
+    buckets = sig.select("doc_id", F.inline(_band_keys(F.col("sig"), num_perm, bands)))
     if max_bucket is not None:
         # bucket-size census is one scalar-row aggregation (O(n·bands)
         # shuffle rows with map-side combine); the surviving-bucket join
@@ -484,36 +498,9 @@ def minhash_lsh_match(
     computed over a superset of the docs is bit-identical to
     recomputing (results unchanged by construction; the no-index
     default path is untouched). Verification still reads the raw
-    candidate docs — only the signature pass is indexable.
-
-    The banding expression intentionally mirrors
-    :func:`minhash_lsh_pairs` rather than extracting a shared helper:
-    that function's code is pinned by prior driver-verified rounds, and
-    a refactor would re-open its changed-code re-exposure debt for no
-    behavioral gain.
+    candidate docs — only the signature pass is indexable. A supplied
+    signature of the wrong width fails the query (see :func:`_band_keys`).
     """
-    rows_per_band = num_perm // bands
-
-    def band_structs():
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(
-                                    "sig", b * rows_per_band + r + 1
-                                ).cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ).alias("bkey"),
-                )
-                for b in range(bands)
-            ]
-        )
 
     def buckets_of(
         docs: DataFrame, out_id: str, sigs: DataFrame | None
@@ -533,11 +520,7 @@ def minhash_lsh_match(
         )
         return sig.select(
             F.col("doc_id").alias(out_id),
-            F.explode(band_structs()).alias("bs"),
-        ).select(
-            out_id,
-            F.col("bs.band").alias("band"),
-            F.col("bs.bkey").alias("bkey"),
+            F.inline(_band_keys(F.col("sig"), num_perm, bands)),
         )
 
     b_new = buckets_of(new_docs, "new_id", new_sigs)

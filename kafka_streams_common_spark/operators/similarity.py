@@ -27,7 +27,7 @@ from kafka_streams_common_spark.functions.vectors import (
     l2_norm,
     to_double_array,
 )
-from kafka_streams_common_spark.operators.dedup import fan_out
+from kafka_streams_common_spark.operators.dedup import _band_keys, fan_out
 
 
 def brute_force_cosine_topk(
@@ -954,7 +954,6 @@ def hyperplane_lsh_near_dup_pairs(
     n² (band count scales candidates linearly, not quadratically).
     Approximation is only in candidate RECALL; every emitted score is exact.
     """
-    rows_per_band = num_bits // bands
     vecs = fan_out(corpus).select(
         F.col(id_col).alias("id"),
         to_double_array(F.col(vec_col)).alias("v"),
@@ -969,26 +968,7 @@ def hyperplane_lsh_near_dup_pairs(
     # is O(rows · num_bits · 4B) — at 100 TB this is the signature layer
     # one would persist to parquet anyway.
     sigs = vecs.select("id", bits.alias("sig")).localCheckpoint(eager=True)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sigs.select("id", F.explode(band_structs).alias("bs")).select(
-        "id", F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
+    buckets = sigs.select("id", F.inline(_band_keys(F.col("sig"), num_bits, bands)))
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -1039,9 +1019,8 @@ def hyperplane_lsh_match(
     corpus×corpus). Same signature/banding math and miss-probability
     analysis as :func:`hyperplane_lsh_near_dup_pairs`; candidates are
     NEW×CORPUS bucket collisions only, every emitted score is the exact
-    double-fold cosine. The banding expression intentionally mirrors
-    the self-join form rather than extracting a shared helper — that
-    function's code is pinned by prior driver-verified rounds.
+    double-fold cosine; both forms band through
+    ``operators/dedup.py: _band_keys``.
 
     ``new_sigs`` / ``corpus_sigs`` (r17, guide §5/§6 — don't recompute
     what an index already persists): optionally supply PREBUILT
@@ -1053,9 +1032,9 @@ def hyperplane_lsh_match(
     same ``(num_bits, dim)`` over exactly that side's vectors; the
     kernel is row-deterministic, so slices of a superset signature
     table are bit-identical to recomputing and results cannot differ.
-    Exact-cosine verification still reads the raw vectors.
+    Exact-cosine verification still reads the raw vectors. Supplied bits
+    of the wrong width fail the query.
     """
-    rows_per_band = num_bits // bands
 
     def buckets_of(
         df: DataFrame, out_id: str, prebuilt: DataFrame | None
@@ -1071,33 +1050,8 @@ def hyperplane_lsh_match(
             sigs = vecs.select(out_id, bits.alias("sig")).localCheckpoint(
                 eager=True
             )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ).alias("bkey"),
-                )
-                for b in range(bands)
-            ]
-        )
         return sigs.select(
-            out_id, F.explode(band_structs).alias("bs")
-        ).select(
-            out_id,
-            F.col("bs.band").alias("band"),
-            F.col("bs.bkey").alias("bkey"),
+            out_id, F.inline(_band_keys(F.col("sig"), num_bits, bands))
         )
 
     cand = (

@@ -36,26 +36,29 @@ from kafka_streams_common_spark.registry import latest_per_key
 
 @contextmanager
 def bounded_shuffle_partitions(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` down to the session's core
-    count for the duration of a bounded streaming run (r16).
+    """Scope ``spark.sql.shuffle.partitions`` down to one task wave —
+    ``defaultParallelism`` partitions — for the duration of a bounded
+    streaming run.
 
     Stateful streaming pays a per-microbatch, per-partition state-store
     commit: under a vanilla session's 200 default shuffle partitions, a
     multi-batch ``applyInPandasWithState`` run at sf0.1 measured ~300×
     pathological (SCALE.md — 1,055 s for ``streaming_holt_trend`` on a
-    bare ``local[8]``) purely on empty-partition commit overhead. The
-    stateful operator's state partitioning is pinned to the shuffle
-    partition count at query START, so an explicit ``repartition()``
-    cannot fix it — Spark re-inserts its own exchange. This scope-down
-    is the enforceable form of the production rule "size shuffle
-    partitions to the state parallelism": it only ever LOWERS the
-    setting (a session already at or below ``defaultParallelism`` is
-    untouched), and restores the previous value after the query stops —
-    batch queries planned outside the scope never see it.
+    bare ``local[8]``) purely on empty-partition commit overhead. Any
+    count above one wave runs every stateful operator in several waves,
+    each with its own round of commits per microbatch; fewer than one
+    wave leaves cores idle. The stateful operator's state partitioning is
+    pinned to the shuffle partition count at query START (a restart
+    keeps the checkpointed count), so an explicit ``repartition()``
+    cannot change it — Spark re-inserts its own exchange. The scope only
+    ever LOWERS the setting (a session already at or below
+    ``defaultParallelism`` is untouched), and restores the previous
+    value after the query stops — batch queries planned outside the
+    scope never see it.
     """
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    target = max(spark.sparkContext.defaultParallelism, 8)
+    target = spark.sparkContext.defaultParallelism
     if int(prev) <= target:
         yield
         return
@@ -116,13 +119,15 @@ class StreamingCompiler(BatchCompiler):
         return self._root(p)
 
 
-def _drain(spark: SparkSession, writer) -> None:
-    """Start ``writer``'s query, run it until its bounded input is
-    consumed, then stop it."""
+def _drain(spark: SparkSession, writer) -> list:
+    """Start ``writer``'s query under :func:`bounded_shuffle_partitions`,
+    run it until its bounded input is consumed, stop it, and return its
+    ``recentProgress``."""
     with bounded_shuffle_partitions(spark):
         q = writer.start()
         try:
             q.processAllAvailable()
+            return q.recentProgress
         finally:
             q.stop()
             q.awaitTermination()

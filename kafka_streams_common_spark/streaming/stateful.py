@@ -159,16 +159,13 @@ def run_latest_per_key_tws(
     final state is their per-key max — the same compaction a Kafka
     changelog-topic consumer applies. The RocksDB provider is set for the
     query and restored afterwards (built-in streaming aggs elsewhere keep
-    their default provider). Runs under ``bounded_shuffle_partitions``
-    (r16) so a vanilla 200-partition session cannot pay 200 state-store
-    commits per microbatch; the ``tws_*`` temp view is dropped before
-    returning (the result plan binds eagerly at ``spark.table``)."""
+    their default provider). Runs through ``runner._drain``, so state
+    gets one task wave of partitions; the ``tws_*`` temp view is dropped
+    before returning (the result plan binds eagerly at ``spark.table``)."""
     import uuid
 
     from kafka_streams_common_spark.registry import latest_per_key
-    from kafka_streams_common_spark.streaming.runner import (
-        bounded_shuffle_partitions,
-    )
+    from kafka_streams_common_spark.streaming.runner import _drain
 
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(conf_key, None)
@@ -181,13 +178,7 @@ def run_latest_per_key_tws(
         )
         if checkpoint_dir:
             writer = writer.option("checkpointLocation", checkpoint_dir)
-        with bounded_shuffle_partitions(spark):
-            q = writer.start()
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-                q.awaitTermination()
+        _drain(spark, writer)
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
@@ -273,14 +264,12 @@ def run_latest_per_key_state(
     state table as a batch DataFrame (per-key max over the monotone
     changelog emissions — the Kafka changelog-topic compaction) and the
     query's last StreamingQueryProgress rows for state-size assertions.
-    Runs under ``bounded_shuffle_partitions`` (r16); the ``lpks_*`` temp
-    view is dropped before returning."""
+    Runs through ``runner._drain``; the ``lpks_*`` temp view is dropped
+    before returning."""
     import uuid
 
     from kafka_streams_common_spark.registry import latest_per_key
-    from kafka_streams_common_spark.streaming.runner import (
-        bounded_shuffle_partitions,
-    )
+    from kafka_streams_common_spark.streaming.runner import _drain
 
     out = latest_per_key_state(stream, key_field, seq_field, tiebreak_field)
     name = f"lpks_{uuid.uuid4().hex[:12]}"
@@ -289,14 +278,7 @@ def run_latest_per_key_state(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    with bounded_shuffle_partitions(spark):
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-            progress = list(q.recentProgress)
-        finally:
-            q.stop()
-            q.awaitTermination()
+    progress = _drain(spark, writer)
     final = latest_per_key(
         spark.table(name), key_field, seq_field, tiebreak_field
     )

@@ -36,6 +36,7 @@ import time
 from pyspark.sql import functions as F
 
 from kafka_streams_common_spark.operators.dedup import (
+    _band_keys,
     _hashed_shingles,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -236,29 +237,7 @@ def main() -> None:
 
     # --- 1. bucket census on the skewed corpus ---------------------------
     sig = minhash_signatures(skew, 3, 128).localCheckpoint(eager=True)
-    rows_per_band = 128 // 32
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at("sig", b * rows_per_band + r + 1).cast(
-                                "string"
-                            )
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for b in range(32)
-        ]
-    )
-    buckets = sig.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        F.col("bs.band").alias("band"), F.col("bs.bkey").alias("bkey")
-    )
+    buckets = sig.select(F.inline(_band_keys(F.col("sig"), 128, 32)))
     census = (
         buckets.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("sz"))

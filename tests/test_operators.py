@@ -2210,6 +2210,95 @@ def test_lsh_match_prebuilt_sigs_bit_identical(spark):
     assert base_v == indexed_v and len(base_v) > 0
 
 
+def _unrolled_band_keys(width, bands, per_entry):
+    """The per-band Column tree the LSH operators built before
+    ``_band_keys``: MinHash read each entry with ``element_at``, the
+    hyperplane forms sliced each band. Kept as the bit-identity
+    reference."""
+    rows = width // bands
+
+    def band(b):
+        if per_entry:
+            vals = [
+                F.element_at("sig", b * rows + r + 1).cast("string")
+                for r in range(rows)
+            ]
+        else:
+            vals = [
+                F.transform(
+                    F.slice(F.col("sig"), b * rows + 1, rows),
+                    lambda x: x.cast("string"),
+                )
+            ]
+        return F.struct(
+            F.lit(b).alias("band"), F.md5(F.concat_ws(",", *vals)).alias("bkey")
+        )
+
+    return F.array(*[band(b) for b in range(bands)])
+
+
+@pytest.mark.parametrize(
+    "sig_type,width,bands,draw,per_entry",
+    [
+        ("bigint", 128, 32, lambda r: r.randrange(0, 2**31 - 1), True),
+        ("int", 320, 20, lambda r: r.randrange(2), False),
+    ],
+    ids=["minhash", "hyperplane"],
+)
+def test_band_keys_match_unrolled_reference(
+    spark, sig_type, width, bands, draw, per_entry
+):
+    """``_band_keys`` (one higher-order expression) yields the same
+    ``(id, band, bkey)`` rows as the unrolled per-band tree it replaced,
+    on a seeded table of MinHash signatures and hyperplane bit arrays at
+    their default widths."""
+    import random
+
+    from kafka_streams_common_spark.operators.dedup import _band_keys
+
+    rng = random.Random(17)
+    sigs = spark.createDataFrame(
+        [(i, [draw(rng) for _ in range(width)]) for i in range(64)],
+        f"id long, sig array<{sig_type}>",
+    )
+    want = sigs.select(
+        "id", F.explode(_unrolled_band_keys(width, bands, per_entry)).alias("bs")
+    ).select("id", "bs.band", "bs.bkey")
+    got = sigs.select("id", F.inline(_band_keys(F.col("sig"), width, bands)))
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 64 * bands
+
+
+def test_lsh_match_rejects_wrong_width_sigs(spark):
+    """A prebuilt signature of the wrong width fails the query with an
+    error naming the expected width, instead of hashing short bands."""
+    from pyspark.errors import SparkRuntimeException
+
+    from kafka_streams_common_spark.operators.dedup import minhash_lsh_match
+    from kafka_streams_common_spark.operators.similarity import (
+        hyperplane_lsh_match,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    short_mh = spark.createDataFrame(
+        [(1, list(range(120)))], "doc_id long, sig array<bigint>"
+    )
+    with pytest.raises(SparkRuntimeException, match="128 entries, got 120"):
+        minhash_lsh_match(docs, docs, new_sigs=short_mh).collect()
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0] * 64), (2, [0.5] * 64)], "vec_id long, embedding array<double>"
+    )
+    short_hp = spark.createDataFrame(
+        [(1, [1] * 300)], "vec_id long, sig array<int>"
+    )
+    with pytest.raises(SparkRuntimeException, match="320 entries, got 300"):
+        hyperplane_lsh_match(vecs, vecs, dim=64, corpus_sigs=short_hp).collect()
+
+
 def test_integral_id_precondition_fails_fast(spark):
     """r17 (the ADVICE r16 item): the r16 Arrow block kernels materialize
     ids as int64, so non-integral id columns must fail fast with a clear

@@ -761,10 +761,11 @@ def test_stateful_survives_vanilla_session_defaults(spark):
     applyInPandasWithState run at sf0.1 measured ~1,055 s
     (``streaming_holt_trend``, SCALE.md) — state-store commit overhead
     times 200 mostly-empty partitions per microbatch. The run harnesses
-    now scope ``spark.sql.shuffle.partitions`` down to the core count
-    for the duration of the bounded run, so the same query on 200
-    default partitions must complete in the normal ceiling band — and
-    the session's own setting must be restored afterwards."""
+    now scope ``spark.sql.shuffle.partitions`` down to one task wave
+    (``defaultParallelism`` partitions) for the duration of the bounded
+    run, so the same query on 200 default partitions must complete in
+    the normal ceiling band — and the session's own setting must be
+    restored afterwards."""
     import time
 
     from kafka_streams_common_spark.queries import QUERIES
@@ -780,3 +781,67 @@ def test_stateful_survives_vanilla_session_defaults(spark):
     # sits in the single-digit ceiling band — 120 s is a loose CI bound
     assert elapsed < 120, f"stateful run took {elapsed:.1f}s under 200 partitions"
     assert sess.conf.get("spark.sql.shuffle.partitions") == "200"
+
+
+def test_bounded_stateful_run_uses_one_wave(spark, tmp_path):
+    """A bounded stateful run gets one task wave of state partitions
+    (``defaultParallelism``) however high the session's shuffle setting
+    is. A restart from a checkpoint written under another partition
+    count keeps that count (Spark pins it in the checkpoint) and still
+    converges to the batch result."""
+    import uuid
+
+    from kafka_streams_common_spark.streaming.runner import _drain
+
+    src = TableCatalog.for_directory(SF_SMOKE).resolve("events").read(spark)
+    stream_dir = str(tmp_path / "ev")
+    src.filter(F.col("user_id") % 2 == 0).repartition(2).write.parquet(stream_dir)
+    sess = spark.newSession()  # shares the JVM, separate SQLConf
+    dp = sess.sparkContext.defaultParallelism
+    cat = TableCatalog(
+        {"events": TableRef(name="events", path=stream_dir, key_field="user_id")}
+    )
+
+    def run(partitions: int, ckpt: str):
+        sess.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        name = f"wave_{uuid.uuid4().hex[:12]}"
+        sdf = (
+            StreamingCompiler(sess, cat, max_files_per_trigger=1)
+            .stream_source("events")
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        writer = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+        )
+        progress = _drain(sess, writer)
+        got = {r["event_type"]: r["n"] for r in sess.table(name).collect()}
+        sess.catalog.dropTempView(name)
+        ops = [p["stateOperators"][0] for p in progress if p["stateOperators"]]
+        return got, {o["numStateStoreInstances"] for o in ops}
+
+    def batch():
+        return {
+            r["event_type"]: r["n"]
+            for r in sess.read.parquet(stream_dir)
+            .groupBy("event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+
+    got, instances = run(dp + 8, str(tmp_path / "fresh"))
+    assert got == batch()
+    assert instances == {dp}
+
+    narrow = max(1, dp // 2)
+    ckpt = str(tmp_path / "restart")
+    run(narrow, ckpt)
+    src.filter(F.col("user_id") % 2 == 1).repartition(2).write.mode(
+        "append"
+    ).parquet(stream_dir)
+    got, instances = run(dp + 8, ckpt)
+    assert got == batch()
+    assert instances == {narrow}
