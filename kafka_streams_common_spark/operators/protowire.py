@@ -1,8 +1,7 @@
 """From-scratch Protocol Buffers WIRE-FORMAT codec — the other serde a
-Kafka fleet actually carries. No protobuf runtime exists in this
-container (verified each round; the ``transformWithStateInPandas`` twin
-is gated on the same absence), but the wire format itself is a tiny
-PUBLIC spec (protobuf.dev/programming-guides/encoding): varint tags
+Kafka fleet actually carries. It needs no protobuf runtime: the wire
+format itself is a tiny PUBLIC spec
+(protobuf.dev/programming-guides/encoding): varint tags
 ``(field_number << 3) | wire_type``, wire types 0 (varint, with zigzag
 for sint), 1 (fixed 64-bit), 2 (length-delimited: string/bytes/nested
 message/packed repeated), 5 (fixed 32-bit).

@@ -41,6 +41,29 @@ def _streaming_compiler(spark: SparkSession, sf_dir: str) -> StreamingCompiler:
     return StreamingCompiler(spark, TableCatalog.for_directory(sf_dir))
 
 
+def _decided_region(streamed: DataFrame, *sources) -> DataFrame:
+    """Keep the rows of a bounded 1-hour-watermark run that its final
+    watermark decided: ``ts_us`` older than the latest source event time
+    less the lag and a 1-second margin for millisecond watermark
+    truncation. ``sources`` are ``(frame, timestamp column)`` pairs; the
+    cut is the greatest of their maxima, joined in as a one-row broadcast
+    so no Spark job runs while the frame is built."""
+    from pyspark.sql import functions as F
+
+    cut, maxima = None, []
+    for i, (frame, ts) in enumerate(sources):
+        m = frame.agg(F.max(F.unix_micros(ts)).alias(f"__m{i}"))
+        cut = m if cut is None else cut.crossJoin(m)
+        maxima.append(F.col(f"__m{i}"))
+    latest = maxima[0] if len(maxima) == 1 else F.greatest(*maxima)
+    cut = cut.select((latest - 3_600_000_000 - 1_000_000).alias("__cut"))
+    return (
+        streamed.crossJoin(F.broadcast(cut))
+        .filter(F.col("ts_us") < F.col("__cut"))
+        .drop("__cut")
+    )
+
+
 @query(
     "streaming_count_by_event_type",
     oracle="SELECT event_type AS key, count(*) AS n_events FROM events GROUP BY event_type",
@@ -743,12 +766,11 @@ def streaming_latest_per_key_state(spark: SparkSession, sf_dir: str) -> DataFram
     This is the KTable materialization the reference keeps in RocksDB
     (``KTableRegistry.java:41-50``), executed through Spark's arbitrary
     per-key state API rather than the foreachBatch parquet merge that
-    ``streaming_latest_per_key`` exercises — the two registered paths plus
-    the (protobuf-gated) transformWithState twin cover the whole S2
-    design ladder from SURVEY §4.2. Timestamps ride through state as
-    ``unix_micros`` (integer, engine-neutral) and are restored on the way
-    out; the update-log compaction is the per-key max over monotone
-    emissions.
+    ``streaming_latest_per_key`` exercises — the two registered paths
+    cover the S2 design ladder from SURVEY §4.2. Timestamps ride through
+    state as ``unix_micros`` (integer, engine-neutral) and are restored on
+    the way out; the update-log compaction is the per-key max over
+    monotone emissions.
     """
     from pyspark.sql import functions as F
 
@@ -1072,13 +1094,7 @@ def streaming_rate_limit_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, n_per_window=3, window_us=3_600_000_000
     )
     admitted = run_stream_to_memory(out, spark, output_mode="append")
-    max_us = (
-        table(spark, sf_dir, "events")
-        .agg(F.max(F.unix_micros("ts")))
-        .collect()[0][0]
-    )
-    cut = max_us - 3_600_000_000 - 1_000_000
-    return admitted.filter(F.col("ts_us") < cut).select(
+    return _decided_region(admitted, (table(spark, sf_dir, "events"), "ts")).select(
         F.col("key").alias("user_id"),
         F.col("id").alias("event_id"),
         "ts_us",
@@ -1197,14 +1213,11 @@ def streaming_temporal_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = temporal_asof_state(unioned)
     decided = run_stream_to_memory(out, spark, output_mode="append")
 
-    ev = table(spark, sf_dir, "events")
-    orders = table(spark, sf_dir, "orders")
-    mx_ev = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    mx_or = orders.agg(
-        F.max(F.unix_micros(F.col("o_orderdate").cast("timestamp")))
-    ).collect()[0][0]
-    cut = max(mx_ev, mx_or) - 3_600_000_000 - 1_000_000
-    return decided.filter(F.col("ts_us") < cut).select(
+    return _decided_region(
+        decided,
+        (table(spark, sf_dir, "events"), "ts"),
+        (table(spark, sf_dir, "orders"), F.col("o_orderdate").cast("timestamp")),
+    ).select(
         F.col("id").alias("event_id"),
         F.col("key").alias("user_id"),
         "ts_us",
@@ -1276,13 +1289,7 @@ def streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = holt_state(stream, alpha=0.5, beta=0.25, key_field="event_type")
     decided = run_stream_to_memory(out, spark, output_mode="append")
-    max_us = (
-        table(spark, sf_dir, "events")
-        .agg(F.max(F.unix_micros("ts")))
-        .collect()[0][0]
-    )
-    cut = max_us - 3_600_000_000 - 1_000_000
-    return decided.filter(F.col("ts_us") < cut).select(
+    return _decided_region(decided, (table(spark, sf_dir, "events"), "ts")).select(
         "key", "ts_us", "event_id", "x", "level", "trend", "forecast"
     )
 
@@ -1349,13 +1356,7 @@ def streaming_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = ewma_state(stream, alpha=0.25, key_field="event_type")
     decided = run_stream_to_memory(out, spark, output_mode="append")
-    max_us = (
-        table(spark, sf_dir, "events")
-        .agg(F.max(F.unix_micros("ts")))
-        .collect()[0][0]
-    )
-    cut = max_us - 3_600_000_000 - 1_000_000
-    return decided.filter(F.col("ts_us") < cut).select(
+    return _decided_region(decided, (table(spark, sf_dir, "events"), "ts")).select(
         "key", "ts_us", "event_id", "x", "ewma"
     )
 

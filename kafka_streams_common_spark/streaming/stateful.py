@@ -1,17 +1,25 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState`` —
-the Spark-side shape for per-key state the built-in aggregations can't
-express (session state machines, per-key counters with emission policies,
-enrichment caches).
+"""Custom stateful streaming operators on ``applyInPandasWithState``:
+per-key state the built-in aggregations cannot express.
 
-``running_counter`` is the demonstration operator: a per-key cumulative
-event counter whose state survives across microbatches. The structure —
-state schema, GroupState get/update, Arrow-batched group iteration — is the
-production pattern; the body is where domain logic goes.
+Three shapes live here:
+
+- plain per-key state, no timers: :func:`running_counter` (a cumulative
+  count) and :func:`latest_per_key_state` (the KTable winner, emitted as
+  a changelog on change);
+- :func:`session_aggregate_state`: gap sessions closed by event-time
+  timers;
+- five order-sensitive folds that must see each key's events in event-time
+  order although the stream delivers them out of order:
+  :func:`funnel_state_machine`, :func:`rate_limit_state`,
+  :func:`temporal_asof_state`, :func:`holt_state` and :func:`ewma_state`.
+  They share :func:`_watermark_fold`, which buffers rows in state until
+  the watermark passes them and owns the state layout and the timer; each
+  operator supplies only its schemas and a pure fold.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -54,144 +62,6 @@ def running_counter(grouped_stream: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def latest_per_key_tws(
-    stream: DataFrame,
-    key_field: str,
-    seq_field: str,
-    tiebreak_field: str,
-) -> DataFrame:
-    """KTable latest-per-key as a NATIVE Spark 4 stateful operator —
-    ``transformWithStateInPandas`` with one ValueState row per key holding
-    the current winner under the ``(seq, tiebreak)`` total order. Emits a
-    key's row whenever its winner changes (update mode): a true changelog
-    stream, the idiomatic endgame for S2 streaming that SURVEY §4.2 staged
-    after the ``foreachBatch`` parquet merge
-    (cited: KTableRegistry.java:41-50 — the RocksDB-backed KTable this
-    mirrors; here the state store IS RocksDB, managed by Spark).
-
-    Requires the RocksDB state-store provider
-    (``spark.sql.streaming.stateStore.providerClass`` — set by
-    :func:`run_latest_per_key_tws`). All input columns must be scalar
-    (project timestamps to ``unix_micros`` first; the caller restores
-    them) so state round-trips through Arrow without engine-specific
-    timestamp semantics.
-
-    Scale shape: state is one row per DISTINCT key (RocksDB-backed,
-    incrementally checkpointed), input streams through per-key Arrow
-    batches, and nothing is collected — the same posture as the built-in
-    streaming aggregations.
-
-    ENVIRONMENT GATE (declared, like the Kafka broker wiring): Spark's
-    ``transformWithState`` Python worker speaks a protobuf protocol to
-    the JVM state server and needs the ``protobuf`` package at runtime —
-    absent from this container (no installs allowed), so the equivalence
-    + recovery test skips here (``tests/test_streaming.py``, importorskip).
-    The SAME semantics are fully exercised at runtime anyway:
-    :func:`latest_per_key_state` is the ``applyInPandasWithState`` twin
-    (no protobuf — its GroupState protocol rides the regular Arrow
-    channel), with a live multi-batch pytest and a registered
-    oracle-gated query (``streaming_latest_per_key_state``), alongside
-    the ``foreachBatch`` merge path (``streaming_latest_per_key``). On a
-    cluster with protobuf this operator is the drop-in upgrade of both.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    schema = stream.schema
-    cols = [f.name for f in schema.fields]
-    seq_i, tie_i = cols.index(seq_field), cols.index(tiebreak_field)
-
-    class _LatestPerKey(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState("latest", schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            best = tuple(self._latest.get()) if self._latest.exists() else None
-            changed = False
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                top = pdf.sort_values(
-                    [seq_field, tiebreak_field], ascending=False
-                ).iloc[0]
-                cand = tuple(
-                    x.item() if hasattr(x, "item") else x for x in (top[c] for c in cols)
-                )
-                if best is None or (cand[seq_i], cand[tie_i]) > (
-                    best[seq_i],
-                    best[tie_i],
-                ):
-                    best = cand
-                    changed = True
-            if changed:
-                self._latest.update(best)
-                yield pd.DataFrame([best], columns=cols)
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_field).transformWithStateInPandas(
-        _LatestPerKey(),
-        outputStructType=schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_latest_per_key_tws(
-    stream: DataFrame,
-    spark,
-    key_field: str,
-    seq_field: str,
-    tiebreak_field: str,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Drive :func:`latest_per_key_tws` to completion and return the final
-    state table as a batch DataFrame.
-
-    The memory sink appends every changelog emission; per key those
-    emissions are monotone in ``(seq, tiebreak)`` by construction, so the
-    final state is their per-key max — the same compaction a Kafka
-    changelog-topic consumer applies. The RocksDB provider is set for the
-    query and restored afterwards (built-in streaming aggs elsewhere keep
-    their default provider). Runs through ``runner._drain``, so state
-    gets one task wave of partitions; the ``tws_*`` temp view is dropped
-    before returning (the result plan binds eagerly at ``spark.table``)."""
-    import uuid
-
-    from kafka_streams_common_spark.registry import latest_per_key
-    from kafka_streams_common_spark.streaming.runner import _drain
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
-        out = latest_per_key_tws(stream, key_field, seq_field, tiebreak_field)
-        name = f"tws_{uuid.uuid4().hex[:12]}"
-        writer = (
-            out.writeStream.format("memory").queryName(name).outputMode("update")
-        )
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        _drain(spark, writer)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-    try:
-        return latest_per_key(
-            spark.table(name), key_field, seq_field, tiebreak_field
-        )
-    finally:
-        spark.catalog.dropTempView(name)
-
-
 def latest_per_key_state(
     stream: DataFrame,
     key_field: str,
@@ -199,17 +69,14 @@ def latest_per_key_state(
     tiebreak_field: str,
 ) -> DataFrame:
     """KTable latest-per-key as a custom stateful operator via
-    ``applyInPandasWithState`` — the SAME changelog semantics as
-    :func:`latest_per_key_tws` (one state row per key holding the current
-    winner under the ``(seq, tiebreak)`` total order, emitted on change)
-    but on the GroupState API, whose Python protocol rides the regular
-    Arrow worker channel and needs NO protobuf — so unlike the
-    transformWithState twin this one RUNS in this container and carries a
-    live runtime test + a registered oracle-gated query
-    (``streaming_latest_per_key_state``).
+    ``applyInPandasWithState``: one state row per key holding the current
+    winner under the ``(seq, tiebreak)`` total order, emitted on change —
+    a true changelog stream. Runs live in a multi-batch test and in the
+    registered oracle-gated query ``streaming_latest_per_key_state``.
 
-    Same caller contract as the TWS twin: all columns scalar (project
-    timestamps to ``unix_micros`` first; restore after). State is one row
+    Caller contract: all columns scalar (project timestamps to
+    ``unix_micros`` first; restore after) so state round-trips through
+    Arrow without engine-specific timestamp semantics. State is one row
     per distinct key in the state store; emissions per key are monotone
     in ``(seq, tiebreak)`` by construction. Mirrors
     ``KTableRegistry.java:41-50`` (the reference's RocksDB-backed KTable).
@@ -388,6 +255,110 @@ def session_aggregate_state(
     )
 
 
+# Buffered values as plain Python scalars, from pandas input or state
+# arrays alike: a NULL bigint stays None, a NULL double becomes NaN.
+def _long(v):
+    return None if v is None or v != v else int(v)
+
+
+def _double(v):
+    return float("nan") if v is None else float(v)
+
+
+def _column(values: list, dtype: T.DataType):
+    # A NULL in a bigint column keeps it object-typed: pandas would widen
+    # it to float64, exact only up to 2**53.
+    if isinstance(dtype, T.LongType) and None in values:
+        return pd.Series(values, dtype=object)
+    return values
+
+
+def _watermark_fold(
+    stream: DataFrame,
+    key_field: str,
+    buffer: list[tuple[str, T.DataType]],
+    carry: list[T.StructField],
+    fold: Callable[[tuple, tuple | None, list[tuple], int], tuple],
+    out_schema: T.StructType,
+    output_mode: str,
+) -> DataFrame:
+    """Fold each key's rows in event-time order, as the watermark decides
+    them: the one event-time protocol of the buffered stateful operators.
+
+    ``buffer`` lists the input columns a row keeps while it waits, as
+    ``(column, LongType() | DoubleType())`` pairs; the first is the event
+    time in microseconds, and tuple order is fold order. ``carry`` is the
+    per-key value the fold threads from call to call. The state struct is
+    the carry fields, then one ``buf_<column>`` array per buffered column.
+
+    Each call (new input for the key, or its timer firing) appends the
+    input rows to the buffer unless the call timed out, then passes the
+    rows the watermark has passed, sorted, to
+    ``fold(key, carry, eligible_rows, wm_us) -> (carry, out_rows,
+    wake_us)``; ``carry`` is None for a key with no carry yet. The cut is
+    STRICT ``ts < wm``: the engine admits rows with ts == watermark (only
+    ts < watermark is guaranteed late-dropped), so an equal-ts peer may
+    still arrive, and folding at equality could fold out of order.
+
+    Then, if the fold returned no carry and nothing stays buffered, the
+    state row is removed. Otherwise state is written back (a None carry
+    as nulls) and the timer armed at the earliest buffered event, or at
+    ``wake_us`` when the buffer is empty (no timer when that is None), as
+    ``max(us // 1000 + 1, wm_ms + 1)``: past the event, and past the
+    current watermark as the engine requires. ``out_rows`` are tuples in
+    ``out_schema`` order.
+    """
+    n_carry = len(carry)
+    cols = [c for c, _ in buffer]
+    convs = [_double if isinstance(t, T.DoubleType) else _long for _, t in buffer]
+    state_schema = T.StructType(
+        list(carry)
+        + [T.StructField(f"buf_{c}", T.ArrayType(t)) for c, t in buffer]
+    )
+
+    def update(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000
+        prior, buf = None, []
+        if state.exists:
+            row = state.get
+            if any(v is not None for v in row[:n_carry]):
+                prior = row[:n_carry]
+            buf = list(zip(*(map(f, row[n_carry + j]) for j, f in enumerate(convs))))
+        if not state.hasTimedOut:
+            for pdf in pdfs:
+                buf.extend(zip(*(map(f, pdf[c].tolist()) for c, f in zip(cols, convs))))
+        eligible = sorted(e for e in buf if e[0] < wm_us)
+        buf = [e for e in buf if e[0] >= wm_us]
+        new, rows, wake_us = fold(key, prior, eligible, wm_us)
+        if new is None and not buf:
+            state.remove()
+        else:
+            held = [list(c) for c in zip(*buf)] if buf else [[] for _ in cols]
+            state.update((*((None,) * n_carry if new is None else new), *held))
+            if buf:
+                wake_us = min(e[0] for e in buf)
+            if wake_us is not None:
+                state.setTimeoutTimestamp(max(wake_us // 1000 + 1, wm_ms + 1))
+        if rows:
+            yield pd.DataFrame(
+                {
+                    f.name: _column(list(c), f.dataType)
+                    for f, c in zip(out_schema.fields, zip(*rows))
+                }
+            )
+
+    return stream.groupBy(key_field).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
 def funnel_state_machine(
     stream: DataFrame,
     n_stages: int,
@@ -420,40 +391,20 @@ def funnel_state_machine(
     ``funnel_stage`` never decreases — so the per-key compaction is a
     null-skipping max per column.
 
-    Event-time timers flush the tail: after each input fold the timer is
-    set to the earliest still-buffered event, so when the watermark
-    passes it (including the engine's trailing no-data batch) the
-    timeout path folds newly-eligible events and re-arms for the rest.
     Scale shape: state per key = k stage slots + the events inside the
     watermark lag (bounded by delay × per-key rate, the standard
     buffered-reorder cost); everything folds in per-key Arrow batches.
     """
-    out_fields = [T.StructField("key", T.LongType())]
-    out_fields += [
-        T.StructField(f"t{i}_us", T.LongType()) for i in range(1, n_stages + 1)
-    ]
-    out_fields.append(T.StructField("funnel_stage", T.LongType()))
-    out_schema = T.StructType(out_fields)
-    state_schema = T.StructType(
-        [
-            T.StructField("t", T.ArrayType(T.LongType())),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_stage", T.ArrayType(T.LongType())),
-        ]
+    out_schema = T.StructType(
+        [T.StructField("key", T.LongType())]
+        + [T.StructField(f"t{i}_us", T.LongType()) for i in range(1, n_stages + 1)]
+        + [T.StructField("funnel_stage", T.LongType())]
     )
 
-    def _fold(t, buf, wm_us):
-        """Fold buffered (ts, stage) events with ts < wm_us in event-time
-        order; return (changed, remaining_buffer)."""
-        # STRICT <: the engine admits rows with ts == watermark (only
-        # ts < watermark is guaranteed late-dropped), so an equal-ts
-        # peer may still arrive — folding at equality could emit
-        # out of (ts, id) order
-        eligible = sorted(e for e in buf if e[0] < wm_us)
-        remaining = [e for e in buf if e[0] >= wm_us]
+    def fold(key, carry, rows, wm_us):
+        t = list(carry[0]) if carry else [-1] * n_stages
         changed = False
-        for ts, stage in eligible:
-            s = int(stage)
+        for ts, s in rows:
             if s == 1:
                 if t[0] < 0:
                     t[0] = ts
@@ -461,56 +412,20 @@ def funnel_state_machine(
             elif t[s - 2] >= 0 and ts > t[s - 2] and t[s - 1] < 0:
                 t[s - 1] = ts
                 changed = True
-        return changed, remaining
-
-    def _emit(key, t):
-        depth = 0
-        for v in t:
-            if v < 0:
-                break
-            depth += 1
-        row = {"key": [key[0]]}
-        for i, v in enumerate(t, start=1):
-            row[f"t{i}_us"] = [v if v >= 0 else None]
-        row["funnel_stage"] = [depth]
-        return pd.DataFrame(row)
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            t, buf_ts, buf_stage = (
-                list(state.get[0]),
-                list(state.get[1]),
-                list(state.get[2]),
-            )
-        else:
-            t, buf_ts, buf_stage = [-1] * n_stages, [], []
-        buf = list(zip(buf_ts, buf_stage))
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                buf.extend(
-                    (int(a), int(b))
-                    for a, b in zip(pdf[ts_us_field], pdf[stage_field])
-                )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        changed, buf = _fold(t, buf, wm_us)
-        state.update((t, [e[0] for e in buf], [e[1] for e in buf]))
-        if buf:
-            # re-arm: fold the rest when the watermark passes the
-            # EARLIEST still-buffered event (must stay > current wm)
-            nxt = max(min(e[0] for e in buf) // 1000 + 1,
-                      state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(nxt)
+        out = []
         if changed and t[0] >= 0:
-            yield _emit(key, t)
+            depth = next((i for i, v in enumerate(t) if v < 0), n_stages)
+            out.append((key[0], *(v if v >= 0 else None for v in t), depth))
+        return (t,), out, None
 
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermark_fold(
+        stream,
+        key_field,
+        [(ts_us_field, T.LongType()), (stage_field, T.LongType())],
+        [T.StructField("t", T.ArrayType(T.LongType()))],
+        fold,
+        out_schema,
+        "update",
     )
 
 
@@ -539,7 +454,10 @@ def rate_limit_state(
     events inside the watermark lag. Windows whose end the watermark has
     passed are evicted (their counts can never change), so state is
     bounded by windows-in-flight × lag — the metrics-asserted contract
-    in tests/test_stateful_and_bucketing.py. Buffered events whose
+    in tests/test_stateful_and_bucketing.py. A key with no open window
+    and nothing buffered has its state row removed, so dormant keys do
+    not accumulate; a key with open windows but an empty buffer wakes
+    when its last open window ends, to evict it. Buffered events whose
     window was already evicted (late beyond watermark) are dropped, the
     same policy windowed aggregation applies to late data.
     """
@@ -551,40 +469,12 @@ def rate_limit_state(
             T.StructField("window_start_us", T.LongType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("win_starts", T.ArrayType(T.LongType())),
-            T.StructField("win_counts", T.ArrayType(T.LongType())),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_id", T.ArrayType(T.LongType())),
-            T.StructField("evict_wm", T.LongType()),
-        ]
-    )
 
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            wins = dict(zip(state.get[0], state.get[1]))
-            buf = list(zip(state.get[2], state.get[3]))
-            evict_wm = int(state.get[4] or 0)
-        else:
-            wins, buf, evict_wm = {}, [], 0
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                buf.extend(
-                    (int(a), int(b))
-                    for a, b in zip(pdf[ts_us_field], pdf[id_field])
-                )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # STRICT <: the engine admits rows with ts == watermark (only
-        # ts < watermark is guaranteed late-dropped), so an equal-ts
-        # peer may still arrive — folding at equality could emit
-        # out of (ts, id) order
-        eligible = sorted(e for e in buf if e[0] < wm_us)
-        buf = [e for e in buf if e[0] >= wm_us]
+    def fold(key, carry, rows, wm_us):
+        starts, counts, evict_wm = carry or ([], [], 0)
+        wins = dict(zip(starts, counts))
         admitted = []
-        for ts, eid in eligible:
+        for ts, eid in rows:
             w = ts - (ts % window_us)
             if w + window_us <= evict_wm:
                 # late beyond an earlier fold's watermark: its window's
@@ -599,53 +489,23 @@ def rate_limit_state(
         # ts < window end can still be eligible in a FUTURE fold, and
         # evict_wm above drops the contract-violating stragglers)
         wins = {w: c for w, c in wins.items() if w + window_us > wm_us}
-        evict_wm = max(evict_wm, wm_us)
-        if not wins and not buf:
-            # Nothing buffered and every window's count evicted: delete
-            # the state row so dormant keys don't accumulate forever
-            # (high-cardinality key sets would otherwise grow state
-            # unboundedly — one empty row per key ever seen).
-            state.remove()
-        else:
-            state.update(
-                (
-                    list(wins.keys()),
-                    list(wins.values()),
-                    [e[0] for e in buf],
-                    [e[1] for e in buf],
-                    evict_wm,
-                )
-            )
-            if buf:
-                nxt = max(
-                    min(e[0] for e in buf) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            else:
-                # No buffered events but open windows remain: wake when
-                # the last open window's end passes the watermark so the
-                # eviction above fires and the state row is removed.
-                nxt = max(
-                    max(w + window_us for w in wins) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            state.setTimeoutTimestamp(nxt)
-        if admitted:
-            yield pd.DataFrame(
-                {
-                    "key": [a[0] for a in admitted],
-                    "id": [a[1] for a in admitted],
-                    "ts_us": [a[2] for a in admitted],
-                    "window_start_us": [a[3] for a in admitted],
-                }
-            )
+        if not wins:
+            return None, admitted, None
+        carry = (list(wins), list(wins.values()), max(evict_wm, wm_us))
+        return carry, admitted, max(wins) + window_us
 
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermark_fold(
+        stream,
+        key_field,
+        [(ts_us_field, T.LongType()), (id_field, T.LongType())],
+        [
+            T.StructField("win_starts", T.ArrayType(T.LongType())),
+            T.StructField("win_counts", T.ArrayType(T.LongType())),
+            T.StructField("evict_wm", T.LongType()),
+        ],
+        fold,
+        out_schema,
+        "append",
     )
 
 
@@ -694,111 +554,44 @@ def temporal_asof_state(
             T.StructField("matched_ts_us", T.LongType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_ts", T.LongType()),
-            T.StructField("last_id", T.LongType()),
-            T.StructField("last_rkey", T.LongType()),
-            T.StructField("last_rval", T.DoubleType()),
-            T.StructField("buf_side", T.ArrayType(T.LongType())),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_id", T.ArrayType(T.LongType())),
-            T.StructField("buf_rkey", T.ArrayType(T.LongType())),
-            T.StructField("buf_rval", T.ArrayType(T.DoubleType())),
-            T.StructField("evict_wm", T.LongType()),
-        ]
-    )
 
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            (last_ts, last_id, last_rkey, last_rval,
-             b_side, b_ts, b_id, b_rkey, b_rval, evict_wm) = state.get
-            buf = [
-                (int(t), int(s), int(i),
-                 None if rk is None else int(rk),
-                 None if rv is None or rv != rv else float(rv))
-                for s, t, i, rk, rv in zip(b_side, b_ts, b_id, b_rkey, b_rval)
-            ]
-            evict_wm = int(evict_wm or 0)
-        else:
-            last_ts, last_id, last_rkey, last_rval = None, None, None, None
-            buf, evict_wm = [], 0
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                for s, t, i, rk, rv in zip(
-                    pdf["side"], pdf["ts_us"], pdf["id"],
-                    pdf["rkey"], pdf["rval"],
-                ):
-                    buf.append(
-                        (int(t), int(s), int(i),
-                         None if pd.isna(rk) else int(rk),
-                         None if pd.isna(rv) else float(rv))
-                    )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # STRICT <: the engine admits rows with ts == watermark (only
-        # ts < watermark is guaranteed late-dropped), so an equal-ts
-        # peer may still arrive — folding at equality could emit
-        # out of (ts, id) order
-        eligible = sorted(e for e in buf if e[0] < wm_us)
-        buf = [e for e in buf if e[0] >= wm_us]
+    def fold(key, carry, rows, wm_us):
+        last_ts, last_id, last_rkey, last_rval, evict_wm = carry or (
+            None, None, None, None, 0,
+        )
         emitted = []
-        for t, s, i, rk, rv in eligible:
+        for t, s, i, rk, rv in rows:
             if s == 0:
                 # monotone version carry: a late right OLDER than the
                 # carried version must not regress it
                 if last_ts is None or (t, i) >= (last_ts, last_id):
                     last_ts, last_id, last_rkey, last_rval = t, i, rk, rv
-            else:
-                if t <= evict_wm:
-                    continue  # left beyond an earlier fold: late-drop
+            elif t > evict_wm:  # else: left beyond an earlier fold, late-drop
                 emitted.append((key[0], i, t, last_rkey, last_rval,
                                 last_ts if last_rkey is not None else None))
-        evict_wm = max(evict_wm, wm_us)
-        state.update(
-            (
-                last_ts, last_id, last_rkey, last_rval,
-                [e[1] for e in buf],
-                [e[0] for e in buf],
-                [e[2] for e in buf],
-                [e[3] for e in buf],
-                [float("nan") if e[4] is None else e[4] for e in buf],
-                evict_wm,
-            )
-        )
-        if buf:
-            state.setTimeoutTimestamp(
-                max(
-                    min(e[0] for e in buf) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
-            )
-        if emitted:
-            yield pd.DataFrame(
-                {
-                    "key": [e[0] for e in emitted],
-                    "id": [e[1] for e in emitted],
-                    "ts_us": [e[2] for e in emitted],
-                    "matched_rkey": pd.array(
-                        [e[3] for e in emitted], dtype="Int64"
-                    ),
-                    "matched_rval": [
-                        float("nan") if e[4] is None else e[4]
-                        for e in emitted
-                    ],
-                    "matched_ts_us": pd.array(
-                        [e[5] for e in emitted], dtype="Int64"
-                    ),
-                }
-            )
+        carry = (last_ts, last_id, last_rkey, last_rval, max(evict_wm, wm_us))
+        return carry, emitted, None
 
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermark_fold(
+        stream,
+        key_field,
+        [
+            ("ts_us", T.LongType()),
+            ("side", T.LongType()),
+            ("id", T.LongType()),
+            ("rkey", T.LongType()),
+            ("rval", T.DoubleType()),
+        ],
+        [
+            T.StructField("last_ts", T.LongType()),
+            T.StructField("last_id", T.LongType()),
+            T.StructField("last_rkey", T.LongType()),
+            T.StructField("last_rval", T.DoubleType()),
+            T.StructField("evict_wm", T.LongType()),
+        ],
+        fold,
+        out_schema,
+        "append",
     )
 
 
@@ -818,11 +611,10 @@ def holt_state(
     ``b = β·(l − l_prev) + (1−β)·b_prev``; each event emits its folded
     (level, trend, forecast = level + trend) exactly once when the
     watermark decides it. Identical conventions to :func:`ewma_state`
-    (buffered reorder under the watermark, strict ``ts < wm`` fold,
-    event-time timers re-armed to the earliest buffered event): the
-    only difference is TWO carried scalars instead of one — still the
-    O(1)-per-key KTable-aggregate footprint, never removed because any
-    later event continues the chain.
+    (the buffered watermark fold): the only difference is TWO carried
+    scalars instead of one — still the O(1)-per-key KTable-aggregate
+    footprint, never removed because any later event continues the
+    chain.
 
     Determinism contract: both update expressions are evaluated in
     float64 in exactly the shapes the batch kernel and the
@@ -843,40 +635,11 @@ def holt_state(
             T.StructField("forecast", T.DoubleType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("lv", T.DoubleType()),
-            T.StructField("bv", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_id", T.ArrayType(T.LongType())),
-            T.StructField("buf_x", T.ArrayType(T.DoubleType())),
-        ]
-    )
 
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            lv, bv, n, buf_ts, buf_id, buf_x = state.get
-            buf = list(zip(buf_ts, buf_id, buf_x))
-        else:
-            lv, bv, n, buf = 0.0, 0.0, 0, []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                buf.extend(
-                    (int(t), int(i), float(x))
-                    for t, i, x in zip(
-                        pdf[ts_us_field], pdf[id_field], pdf[value_field]
-                    )
-                )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # STRICT <: same rationale as ewma_state — equal-ts peers may
-        # still arrive, folding at equality could emit out of order
-        eligible = sorted(e for e in buf if e[0] < wm_us)
-        buf = [e for e in buf if e[0] >= wm_us]
-        rows: list[tuple] = []
-        for t, i, x in eligible:
+    def fold(key, carry, rows, wm_us):
+        lv, bv, n = carry or (0.0, 0.0, 0)
+        out = []
+        for t, i, x in rows:
             if n == 0:
                 lv, bv = x, 0.0
             else:
@@ -885,38 +648,25 @@ def holt_state(
                 lv = a * x + (1.0 - a) * (prev + bv)
                 bv = g * (lv - prev) + (1.0 - g) * bv
             n += 1
-            rows.append((str(key[0]), t, i, x, lv, bv, lv + bv))
-        state.update(
-            (
-                lv,
-                bv,
-                n,
-                [e[0] for e in buf],
-                [e[1] for e in buf],
-                [e[2] for e in buf],
-            )
-        )
-        if buf:
-            nxt = max(
-                min(e[0] for e in buf) // 1000 + 1,
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(nxt)
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "key", "ts_us", "event_id", "x",
-                    "level", "trend", "forecast",
-                ],
-            )
+            out.append((str(key[0]), t, i, x, lv, bv, lv + bv))
+        return (lv, bv, n), out, None
 
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermark_fold(
+        stream,
+        key_field,
+        [
+            (ts_us_field, T.LongType()),
+            (id_field, T.LongType()),
+            (value_field, T.DoubleType()),
+        ],
+        [
+            T.StructField("lv", T.DoubleType()),
+            T.StructField("bv", T.DoubleType()),
+            T.StructField("n", T.LongType()),
+        ],
+        fold,
+        out_schema,
+        "append",
     )
 
 
@@ -945,9 +695,6 @@ def ewma_state(
     Kafka Streams ``aggregate()`` would keep, which is why state is
     never removed (a key's next event, whenever it comes, continues the
     chain; |keys| scalars is the permanent footprint, not a leak).
-    Event-time timers flush the buffered tail exactly like the funnel
-    operator: re-armed to the earliest still-buffered event after every
-    fold, cleared when the buffer drains (no pending obligation).
 
     Determinism contract: the fold computes ``a*x + (1.0-a)*prev`` in
     float64 — the same expression shape the batch kernel and the
@@ -964,69 +711,27 @@ def ewma_state(
             T.StructField("ewma", T.DoubleType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("prev", T.DoubleType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_id", T.ArrayType(T.LongType())),
-            T.StructField("buf_x", T.ArrayType(T.DoubleType())),
-        ]
-    )
 
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            prev, n, buf_ts, buf_id, buf_x = state.get
-            buf = list(zip(buf_ts, buf_id, buf_x))
-        else:
-            prev, n, buf = 0.0, 0, []
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                buf.extend(
-                    (int(t), int(i), float(x))
-                    for t, i, x in zip(
-                        pdf[ts_us_field], pdf[id_field], pdf[value_field]
-                    )
-                )
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        # STRICT <: the engine admits rows with ts == watermark (only
-        # ts < watermark is guaranteed late-dropped), so an equal-ts
-        # peer may still arrive — folding at equality could emit
-        # out of (ts, id) order
-        eligible = sorted(e for e in buf if e[0] < wm_us)
-        buf = [e for e in buf if e[0] >= wm_us]
-        rows: list[tuple] = []
-        for t, i, x in eligible:
+    def fold(key, carry, rows, wm_us):
+        prev, n = carry or (0.0, 0)
+        out = []
+        for t, i, x in rows:
             # identical expression shape to the batch kernel/oracle
             prev = x if n == 0 else a * x + (1.0 - a) * prev
             n += 1
-            rows.append((str(key[0]), t, i, x, prev))
-        state.update(
-            (
-                prev,
-                n,
-                [e[0] for e in buf],
-                [e[1] for e in buf],
-                [e[2] for e in buf],
-            )
-        )
-        if buf:
-            nxt = max(
-                min(e[0] for e in buf) // 1000 + 1,
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(nxt)
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["key", "ts_us", "event_id", "x", "ewma"]
-            )
+            out.append((str(key[0]), t, i, x, prev))
+        return (prev, n), out, None
 
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermark_fold(
+        stream,
+        key_field,
+        [
+            (ts_us_field, T.LongType()),
+            (id_field, T.LongType()),
+            (value_field, T.DoubleType()),
+        ],
+        [T.StructField("prev", T.DoubleType()), T.StructField("n", T.LongType())],
+        fold,
+        out_schema,
+        "append",
     )

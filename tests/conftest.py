@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 import os
+import time
 
 import duckdb
 import pytest
@@ -20,6 +21,19 @@ TABLES = (
 def spark():
     s = get_spark("tests")
     yield s
+
+
+def write_wave(spark, src: str, k: int, rows, schema: str) -> None:
+    """Land ``rows`` (a DDL ``schema`` string) as ONE parquet file
+    ``<src>/<k:02d>.parquet``: written beside ``src`` first, then moved
+    in whole, its mtime set k seconds ahead so a file stream with
+    ``maxFilesPerTrigger=1`` reads wave k as micro-batch k."""
+    stage = f"{src}_stage{k}"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    dst = os.path.join(src, f"{k:02d}.parquet")
+    os.rename(os.path.join(stage, part), dst)
+    os.utime(dst, (time.time() + k, time.time() + k))
 
 
 @pytest.fixture(scope="session")

@@ -9,7 +9,7 @@ from kafka_streams_common_spark.catalog import TableCatalog, TableRef
 from kafka_streams_common_spark.streaming import StreamingCompiler
 from kafka_streams_common_spark.streaming.runner import run_stream_to_memory
 from kafka_streams_common_spark.streaming.stateful import running_counter
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, write_wave
 
 
 def test_running_counter_state_survives_microbatches(spark, tmp_path):
@@ -135,7 +135,6 @@ def test_session_aggregate_state_event_time_timers(spark, tmp_path):
     open at stream end are never emitted (the decided-region contract)."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import (
         session_aggregate_state,
@@ -145,33 +144,22 @@ def test_session_aggregate_state_event_time_timers(spark, tmp_path):
     os.makedirs(src)
     t0 = dt.datetime(2024, 1, 1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "user_id bigint, ts timestamp"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "user_id bigint, ts timestamp"
 
     sec = dt.timedelta(seconds=1)
     # wave 0: user 1 has a 3-event session, then an in-batch gap split;
     # user 2 a single event
-    write_wave(0, [
+    write_wave(spark, src, 0, [
         (1, t0), (1, t0 + 10 * sec), (1, t0 + 20 * sec),
         (1, t0 + 120 * sec),
         (2, t0),
-    ])
+    ], schema)
     # wave 1, hours later: advances the watermark far past wave 0 so the
     # open wave-0 sessions time out; its own sessions stay open forever
-    write_wave(1, [(3, t0 + dt.timedelta(hours=4))])
+    write_wave(spark, src, 1, [(3, t0 + dt.timedelta(hours=4))], schema)
 
     stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "10 seconds")
@@ -217,7 +205,6 @@ def test_funnel_state_machine_out_of_order_across_batches(spark, tmp_path):
     folds view(t+30) then click(t+40) and reaches stage 2."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import (
         funnel_state_machine,
@@ -228,32 +215,27 @@ def test_funnel_state_machine_out_of_order_across_batches(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "user_id bigint, event_type string, ts timestamp"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "user_id bigint, event_type string, ts timestamp"
 
     # batch 0: user 1's CLICK (event time t+40) arrives FIRST;
     #          user 2's view
-    write_wave(0, [(1, "click", t0 + 40 * sec), (2, "view", t0 + 10 * sec)])
+    write_wave(
+        spark, src, 0,
+        [(1, "click", t0 + 40 * sec), (2, "view", t0 + 10 * sec)], schema,
+    )
     # batch 1: user 1's VIEW (event time t+30 — EARLIER than the click
     #          already seen); user 2's click
-    write_wave(1, [(1, "view", t0 + 30 * sec), (2, "click", t0 + 20 * sec)])
+    write_wave(
+        spark, src, 1,
+        [(1, "view", t0 + 30 * sec), (2, "click", t0 + 20 * sec)], schema,
+    )
     # batch 2: user 2's purchase (event time t+25 — BEFORE their click,
     #          so it must NOT count: strict-sequential order); user 3 far
     #          in the future drives the watermark past everything old
-    write_wave(2, [
+    write_wave(spark, src, 2, [
         (2, "purchase", t0 + 25 * sec),
         (3, "view", t0 + dt.timedelta(hours=2)),
-    ])
+    ], schema)
 
     stage = (
         F.when(F.col("event_type") == "view", 1)
@@ -261,7 +243,7 @@ def test_funnel_state_machine_out_of_order_across_batches(spark, tmp_path):
         .when(F.col("event_type") == "purchase", 3)
     )
     stream = (
-        spark.readStream.schema("user_id bigint, event_type string, ts timestamp")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "60 seconds")
@@ -322,7 +304,6 @@ def test_rate_limit_state_out_of_order_quota(spark, tmp_path):
     the admitted set is exactly the first-2-per-window by event time."""
     import datetime as dt
     import os
-    import time
     import uuid
 
     from kafka_streams_common_spark.streaming.stateful import rate_limit_state
@@ -332,35 +313,24 @@ def test_rate_limit_state_out_of_order_quota(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "user_id bigint, event_id bigint, ts timestamp"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "user_id bigint, event_id bigint, ts timestamp"
 
     # wave 0: user 1 at t+10 and t+50 (same 60s window)
-    write_wave(0, [(1, 1, t0 + 10 * sec), (1, 4, t0 + 50 * sec)])
+    write_wave(spark, src, 0, [(1, 1, t0 + 10 * sec), (1, 4, t0 + 50 * sec)], schema)
     # wave 1: user 1 at t+5 — EARLIER event time, arrives later (inside
     # the 120s watermark): must outrank id 4 for the window's 2 slots;
     # user 2 fills a later window with three events
-    write_wave(1, [
+    write_wave(spark, src, 1, [
         (1, 0, t0 + 5 * sec),
         (2, 10, t0 + 70 * sec),
         (2, 11, t0 + 80 * sec),
         (2, 12, t0 + 90 * sec),
-    ])
+    ], schema)
     # wave 2: far-future driver pushes the watermark past everything
-    write_wave(2, [(9, 99, t0 + dt.timedelta(hours=1))])
+    write_wave(spark, src, 2, [(9, 99, t0 + dt.timedelta(hours=1))], schema)
 
     stream = (
-        spark.readStream.schema("user_id bigint, event_id bigint, ts timestamp")
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "120 seconds")
@@ -404,7 +374,6 @@ def test_temporal_asof_out_of_order_across_batches(spark, tmp_path):
     at equal timestamp) convention and NULLs before the first version."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import (
         temporal_asof_state,
@@ -415,53 +384,40 @@ def test_temporal_asof_out_of_order_across_batches(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows,
-            "key bigint, ts timestamp, side bigint, id bigint, "
-            "rkey bigint, rval double",
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = (
+        "key bigint, ts timestamp, side bigint, id bigint, "
+        "rkey bigint, rval double"
+    )
 
     L, R = 1, 0
     # batch 0: user 1's PROBE (t+20) arrives BEFORE its version;
     #          user 2's version lands at t+30 (after user 2's probe time)
-    write_wave(0, [
+    write_wave(spark, src, 0, [
         (1, t0 + 20 * sec, L, 1001, None, None),
         (2, t0 + 30 * sec, R, 200, 200, 2.0),
-    ])
+    ], schema)
     # batch 1: user 1's version (event time t+10 — EARLIER than the
     #          probe already seen); user 2's probe at t+25 (no version
     #          at-or-before ⇒ NULL match)
-    write_wave(1, [
+    write_wave(spark, src, 1, [
         (1, t0 + 10 * sec, R, 101, 101, 1.0),
         (2, t0 + 25 * sec, L, 1002, None, None),
-    ])
+    ], schema)
     # batch 2: a STALE user-1 version (t+5, older than the carried t+10
     #          one — monotone carry must ignore it); a second user-1
     #          probe at t+40; user 4 probes AT its version's exact
     #          timestamp (the ≥ convention); user 3 far in the future
     #          drives the watermark past everything
-    write_wave(2, [
+    write_wave(spark, src, 2, [
         (1, t0 + 5 * sec, R, 100, 100, 0.5),
         (1, t0 + 40 * sec, L, 1003, None, None),
         (4, t0 + 20 * sec, R, 400, 400, 4.0),
         (4, t0 + 20 * sec, L, 1004, None, None),
         (3, t0 + dt.timedelta(hours=2), R, 300, 300, 3.0),
-    ])
+    ], schema)
 
     stream = (
-        spark.readStream.schema(
-            "key bigint, ts timestamp, side bigint, id bigint, "
-            "rkey bigint, rval double"
-        )
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "60 seconds")
@@ -509,7 +465,6 @@ def test_temporal_asof_recovers_from_checkpoint(spark, tmp_path):
     final emissions must equal the uninterrupted run's."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import (
         temporal_asof_state,
@@ -520,29 +475,16 @@ def test_temporal_asof_recovers_from_checkpoint(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows,
-            "key bigint, ts timestamp, side bigint, id bigint, "
-            "rkey bigint, rval double",
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = (
+        "key bigint, ts timestamp, side bigint, id bigint, "
+        "rkey bigint, rval double"
+    )
 
     L, R = 1, 0
 
     def make_stream():
         return (
-            spark.readStream.schema(
-                "key bigint, ts timestamp, side bigint, id bigint, "
-                "rkey bigint, rval double"
-            )
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .withWatermark("ts", "60 seconds")
@@ -569,8 +511,8 @@ def test_temporal_asof_recovers_from_checkpoint(spark, tmp_path):
 
     # waves 0-1 before the restart: the version arrives, and a probe
     # BUFFERS (still inside the watermark) — both live only in state
-    write_wave(0, [(1, t0 + 10 * sec, R, 101, 101, 1.0)])
-    write_wave(1, [(1, t0 + 20 * sec, L, 1001, None, None)])
+    write_wave(spark, src, 0, [(1, t0 + 10 * sec, R, 101, 101, 1.0)], schema)
+    write_wave(spark, src, 1, [(1, t0 + 20 * sec, L, 1001, None, None)], schema)
     q = start()
     try:
         q.processAllAvailable()
@@ -580,10 +522,10 @@ def test_temporal_asof_recovers_from_checkpoint(spark, tmp_path):
 
     # wave 2 lands while the query is DOWN; the restarted query must
     # resume from state: carried version 101 + buffered probe 1001
-    write_wave(2, [
+    write_wave(spark, src, 2, [
         (1, t0 + 40 * sec, L, 1002, None, None),
         (2, t0 + dt.timedelta(hours=2), R, 300, 300, 3.0),
-    ])
+    ], schema)
     q2 = start()
     try:
         q2.processAllAvailable()
@@ -610,7 +552,6 @@ def test_streaming_ewma_out_of_order_across_batches(spark, tmp_path):
     once."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import ewma_state
 
@@ -619,33 +560,20 @@ def test_streaming_ewma_out_of_order_across_batches(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "event_type string, ts timestamp, event_id bigint, value double"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "event_type string, ts timestamp, event_id bigint, value double"
 
     # event-time order for key "a": t+10 (4.0), t+20 (8.0), t+30 (2.0)
     # delivered: the MIDDLE event first, then the first, then the last
-    write_wave(0, [("a", t0 + 20 * sec, 2, 8.0)])
-    write_wave(1, [("a", t0 + 10 * sec, 1, 4.0)])
-    write_wave(2, [
+    write_wave(spark, src, 0, [("a", t0 + 20 * sec, 2, 8.0)], schema)
+    write_wave(spark, src, 1, [("a", t0 + 10 * sec, 1, 4.0)], schema)
+    write_wave(spark, src, 2, [
         ("a", t0 + 30 * sec, 3, 2.0),
         # far-future row drives the global watermark past key a's events
         ("z", t0 + dt.timedelta(hours=2), 99, 1.0),
-    ])
+    ], schema)
 
     stream = (
-        spark.readStream.schema(
-            "event_type string, ts timestamp, event_id bigint, value double"
-        )
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "60 seconds")
@@ -684,7 +612,6 @@ def test_streaming_holt_out_of_order_across_batches(spark, tmp_path):
     (level, trend, forecast) chain."""
     import datetime as dt
     import os
-    import time
 
     from kafka_streams_common_spark.streaming.stateful import holt_state
 
@@ -693,32 +620,19 @@ def test_streaming_holt_out_of_order_across_batches(spark, tmp_path):
     t0 = dt.datetime(2024, 1, 1)
     sec = dt.timedelta(seconds=1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "event_type string, ts timestamp, event_id bigint, value double"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"hstage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"hstage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"hstage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "event_type string, ts timestamp, event_id bigint, value double"
 
     # event-time order for "a": t+10 (4.0), t+20 (8.0), t+30 (2.0);
     # delivered middle-first
-    write_wave(0, [("a", t0 + 20 * sec, 2, 8.0)])
-    write_wave(1, [("a", t0 + 10 * sec, 1, 4.0)])
-    write_wave(2, [
+    write_wave(spark, src, 0, [("a", t0 + 20 * sec, 2, 8.0)], schema)
+    write_wave(spark, src, 1, [("a", t0 + 10 * sec, 1, 4.0)], schema)
+    write_wave(spark, src, 2, [
         ("a", t0 + 30 * sec, 3, 2.0),
         ("z", t0 + dt.timedelta(hours=2), 99, 1.0),
-    ])
+    ], schema)
 
     stream = (
-        spark.readStream.schema(
-            "event_type string, ts timestamp, event_id bigint, value double"
-        )
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .withWatermark("ts", "60 seconds")

@@ -13,7 +13,7 @@ from kafka_streams_common_spark.streaming import (
     run_changelog_materialization,
     run_stream_to_memory,
 )
-from tests.conftest import SF_SMOKE, canonical_rows
+from tests.conftest import SF_SMOKE, canonical_rows, write_wave
 
 
 @pytest.fixture(scope="module")
@@ -98,52 +98,6 @@ def test_changelog_materialization_multibatch_equals_batch_view(spark, stream_ca
     assert canonical_rows(state.select(*cols).toPandas()) == canonical_rows(
         batch_view.select(*cols).toPandas()
     )
-
-
-def test_latest_per_key_tws_equals_batch(spark, stream_catalog, tmp_path):
-    """transformWithStateInPandas latest-per-key (the native Spark 4
-    stateful path) must converge to the batch latest-per-key view across
-    microbatch boundaries, and resume from its checkpoint.
-
-    SKIPS when the ``protobuf`` package is unavailable: Spark's
-    transformWithState Python worker requires it (environment gate
-    documented in streaming/stateful.py); the foreachBatch path above
-    covers S2 streaming semantics in this container."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState python worker needs protobuf (not in container)",
-    )
-    from kafka_streams_common_spark.streaming.stateful import run_latest_per_key_tws
-
-    comp = StreamingCompiler(spark, stream_catalog, max_files_per_trigger=1)
-    stream = comp.stream_source("events").select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_type",
-        "value",
-        "props",
-    )
-    ckpt = str(tmp_path / "tws_ckpt")
-    state = run_latest_per_key_tws(
-        stream, spark, "user_id", "ts_us", "event_id", checkpoint_dir=ckpt
-    )
-    batch_view = latest_per_key(
-        stream_catalog.resolve("events")
-        .read(spark)
-        .select("user_id", "event_id", F.unix_micros("ts").alias("ts_us")),
-        "user_id",
-        "ts_us",
-        "event_id",
-    )
-    got = {(r["user_id"], r["event_id"]) for r in state.collect()}
-    want = {(r["user_id"], r["event_id"]) for r in batch_view.collect()}
-    assert got == want
-    # restart with the same checkpoint: no replay, state intact
-    state2 = run_latest_per_key_tws(
-        stream, spark, "user_id", "ts_us", "event_id", checkpoint_dir=ckpt
-    )
-    assert {(r["user_id"], r["event_id"]) for r in state2.collect()} <= want
 
 
 def test_streaming_join_chain_equals_batch(spark, stream_catalog):
@@ -389,10 +343,10 @@ def test_stream_stream_join_state_evicts_under_watermark(spark, tmp_path):
     working set — while the join output stays exactly correct."""
     import datetime as dt
     import os
-    import time
 
     src = str(tmp_path / "src")
     os.makedirs(src)
+    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
     base = dt.datetime(2024, 1, 1)
     n_users = 20
     for k in range(3):
@@ -403,20 +357,8 @@ def test_stream_stream_join_state_evicts_under_watermark(spark, tmp_path):
             rows.append(
                 (1000 * k + 500 + u, u, "purchase", t0 + dt.timedelta(minutes=5))
             )
-        df = spark.createDataFrame(
-            rows, "event_id bigint, user_id bigint, event_type string, ts timestamp"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        # file source orders by modification time: make it strictly increasing
-        os.utime(dst, (time.time() + k, time.time() + k))
+        write_wave(spark, src, k, rows, schema)
 
-    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
     reader = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -496,10 +438,10 @@ def test_stream_stream_left_outer_join_emits_unmatched_after_watermark(
     passes)."""
     import datetime as dt
     import os
-    import time
 
     src = str(tmp_path / "src")
     os.makedirs(src)
+    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
     base = dt.datetime(2024, 1, 1)
     n_users = 10
     for k in range(2):
@@ -512,19 +454,8 @@ def test_stream_stream_left_outer_join_emits_unmatched_after_watermark(
                     (1000 * k + 500 + u, u, "purchase",
                      t0 + dt.timedelta(minutes=5))
                 )
-        df = spark.createDataFrame(
-            rows, "event_id bigint, user_id bigint, event_type string, ts timestamp"
-        ).coalesce(1)
-        df.write.parquet(str(tmp_path / f"stage{k}"))
-        part = [
-            f for f in os.listdir(str(tmp_path / f"stage{k}"))
-            if f.endswith(".parquet")
-        ][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(str(tmp_path / f"stage{k}"), part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+        write_wave(spark, src, k, rows, schema)
 
-    schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
     reader = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -644,7 +575,6 @@ def test_fk_join_reemits_dependent_facts_on_dimension_update(spark, tmp_path):
     updates with no dependent facts emit nothing."""
     import datetime as dt
     import os
-    import time
 
     from pyspark.sql import functions as F
 
@@ -656,29 +586,20 @@ def test_fk_join_reemits_dependent_facts_on_dimension_update(spark, tmp_path):
     os.makedirs(src)
     t0 = dt.datetime(2024, 1, 1)
 
-    def write_wave(k, rows):
-        df = spark.createDataFrame(
-            rows, "user_id bigint, ts timestamp, event_id bigint, event_type string"
-        ).coalesce(1)
-        stage = str(tmp_path / f"stage{k}")
-        df.write.parquet(stage)
-        part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-        dst = os.path.join(src, f"{k:02d}.parquet")
-        os.rename(os.path.join(stage, part), dst)
-        os.utime(dst, (time.time() + k, time.time() + k))
+    schema = "user_id bigint, ts timestamp, event_id bigint, event_type string"
 
-    write_wave(0, [(1, t0, 10, "segA"), (2, t0, 11, "segX")])
-    write_wave(1, [(1, t0 + dt.timedelta(hours=1), 12, "segB"),
-                   (3, t0, 13, "segZ")])
+    write_wave(spark, src, 0, [(1, t0, 10, "segA"), (2, t0, 11, "segX")], schema)
+    write_wave(spark, src, 1, [
+        (1, t0 + dt.timedelta(hours=1), 12, "segB"),
+        (3, t0, 13, "segZ"),
+    ], schema)
 
     facts = spark.createDataFrame(
         [(101, 1, 10.0), (102, 1, 20.0), (103, 2, 30.0)],
         "o_orderkey bigint, o_custkey bigint, o_totalprice double",
     )
     dim = (
-        spark.readStream.schema(
-            "user_id bigint, ts timestamp, event_id bigint, event_type string"
-        )
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
