@@ -43,20 +43,6 @@ _JOIN_HOW = {
     JoinType.FULL_OUTER_JOIN: "full_outer",
 }
 
-_AGG_FNS = {
-    "count": F.count,
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-    "avg": F.avg,
-    "count_distinct": F.count_distinct,
-    "approx_count_distinct": F.approx_count_distinct,
-    "collect_list": F.collect_list,
-    "first": F.first,
-    "last": F.last,
-}
-
-
 class BatchCompiler:
     """Compile declarative pipelines to batch DataFrame plans.
 
@@ -69,13 +55,12 @@ class BatchCompiler:
         self,
         spark: SparkSession,
         catalog: TableCatalog,
-        cache_shared_tables: bool = False,
         udfs: dict | None = None,
         udtfs: dict | None = None,
     ):
         self.spark = spark
         self.catalog = catalog
-        self.registry = SourceRegistry(spark, catalog, cache_tables=cache_shared_tables)
+        self.registry = SourceRegistry(spark, catalog)
         # Bring-your-own-function extension point: the reference sketches
         # FQCN hooks for custom joiners/extractors (commented
         # ``valueJoinerClass`` / ``groupByKeyExtractorClass``,
@@ -219,7 +204,10 @@ class BatchCompiler:
         elif spec.fn == "count" and not spec.source_field:
             col = F.count(F.lit(1))
         else:
-            col = _AGG_FNS[spec.fn](F.expr(spec.source_field))
+            # every name in AggregationSpec._SUPPORTED (checked by
+            # validate_pipeline) is the pyspark.sql.functions aggregate of
+            # the same name
+            col = getattr(F, spec.fn)(F.expr(spec.source_field))
         if spec.cast:
             col = col.cast(spec.cast)
         return col.alias(spec.output_name())

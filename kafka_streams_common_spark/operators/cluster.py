@@ -31,6 +31,11 @@ def connected_components(
     ``nodes``: one column ``node_col`` (all ids, including singletons).
     ``edges``: undirected pairs in columns ``edge_cols``.
     Returns ``(node_col, cluster_id)``.
+
+    Labels travel one hop per round, so a component of diameter d needs
+    d rounds plus one that changes nothing. Raises ``ValueError`` when
+    labels still change in round ``max_iterations``: the labels at that
+    point are not the component minima.
     """
     a, b = edge_cols
     bi = (
@@ -84,6 +89,11 @@ def connected_components(
         labels = updated.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             break
+    else:
+        raise ValueError(
+            f"connected_components did not converge in max_iterations="
+            f"{max_iterations} rounds: a component's diameter exceeds the cap"
+        )
 
     return (
         all_nodes.join(labels, "node", "left")
@@ -153,7 +163,8 @@ def connected_components_two_phase(
 
     Returns ``(node_col, cluster_id)`` with ``cluster_id`` = minimum
     reachable node id — identical output contract (and oracle) as
-    :func:`connected_components`.
+    :func:`connected_components`. Raises ``ValueError`` when the edge
+    set still changes in round ``max_iterations``.
     """
     a, b = edge_cols
     e = (
@@ -185,11 +196,16 @@ def connected_components_two_phase(
             if cur == prev:
                 break
             prev = cur
+        else:
+            raise ValueError(
+                f"connected_components_two_phase did not converge in "
+                f"max_iterations={max_iterations} rounds"
+            )
     if _stats is not None:
         _stats["rounds"] = rounds
 
     # fixed point = disjoint stars: every non-min node points at its
-    # component min (min(v) guards the pre-convergence truncation case)
+    # component min
     stars = e.groupBy("u").agg(F.min("v").alias("label"))
     return (
         nodes.select(F.col(node_col).alias("node"))

@@ -24,6 +24,9 @@ and reproducible in ANSI SQL for the DuckDB oracles.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -152,19 +155,10 @@ def shingle_pair_census(
     stop-shingles otherwise produce O(df²) join rows (key skew).
     """
     sh = _hashed_shingles(docs, n, text_col, id_col).localCheckpoint(eager=True)
-    if max_df is not None:
-        rare = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("sh")
-        )
-        sh = sh.join(rare, "sh")
+    sh = _cap_buckets(sh, ["sh"], max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        _bucket_pairs(sh, ["sh"], "doc_id")
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
@@ -347,6 +341,36 @@ def _band_keys(sig: Column, width: int, bands: int) -> Column:
     ).otherwise(keys)
 
 
+def _cap_buckets(rows: DataFrame, keys: list[str], max_rows: int | None) -> DataFrame:
+    """The hot-bucket cap of every candidate self-join: drop the buckets
+    (rows sharing ``keys``) that hold more than ``max_rows`` rows, since
+    a bucket of m rows enumerates m² candidates. One census aggregation
+    (map-side combined, |buckets|-sized output), then an AQE-decided join
+    back to the surviving buckets. ``None`` returns ``rows`` unchanged."""
+    if max_rows is None:
+        return rows
+    ok = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bsz"))
+        .filter(F.col("__bsz") <= max_rows)
+        .select(*keys)
+    )
+    return rows.join(ok, keys)
+
+
+def _bucket_pairs(rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """The candidate self-join: every pair of rows that share ``keys``,
+    once per bucket, with ``a.<id_col> < b.<id_col>``. The sides are
+    aliased ``a`` and ``b``; a pair that collides in several buckets
+    appears once per bucket, which callers deduplicate or count."""
+    cond = reduce(
+        operator.and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return rows.alias("a").join(rows.alias("b"), cond)
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -401,26 +425,9 @@ def minhash_lsh_pairs(
         eager=True
     )
     buckets = sig.select("doc_id", F.inline(_band_keys(F.col("sig"), num_perm, bands)))
-    if max_bucket is not None:
-        # bucket-size census is one scalar-row aggregation (O(n·bands)
-        # shuffle rows with map-side combine); the surviving-bucket join
-        # is AQE-decided (the census output is |buckets|-sized)
-        ok = (
-            buckets.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bkey")
-        )
-        buckets = buckets.join(ok, ["band", "bkey"])
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+    buckets = _cap_buckets(buckets, ["band", "bkey"], max_bucket)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(buckets, ["band", "bkey"], "doc_id")
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
         # candidates are consumed three times (verification join + both
@@ -524,15 +531,9 @@ def minhash_lsh_match(
         )
 
     b_new = buckets_of(new_docs, "new_id", new_sigs)
-    b_cor = buckets_of(corpus_docs, "corpus_id", corpus_sigs)
-    if max_bucket is not None:
-        ok = (
-            b_cor.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("band", "bkey")
-        )
-        b_cor = b_cor.join(ok, ["band", "bkey"])
+    b_cor = _cap_buckets(
+        buckets_of(corpus_docs, "corpus_id", corpus_sigs), ["band", "bkey"], max_bucket
+    )
     cand = (
         b_new.join(b_cor, ["band", "bkey"])
         .select("new_id", "corpus_id")
@@ -668,9 +669,8 @@ def simhash_pairs(
     low 32 bits.
 
     ``max_bucket`` is the hot-bucket cap this operator shares with
-    ``minhash_lsh_pairs`` (same census → filter → semi-join shape at
-    ``minhash_lsh_pairs``'s cap site): drop (block, value) groups
-    holding more than that many documents before the self-join.
+    ``minhash_lsh_pairs`` (:func:`_cap_buckets`): drop (block, value)
+    groups holding more than that many documents before the self-join.
     Candidate volume is Σ(occupancy²) per bucket, so a MODAL simhash
     class — boilerplate pages whose token multisets coincide, certain
     at corpus scale — otherwise lands m identical hashes in one bucket
@@ -709,27 +709,10 @@ def simhash_pairs(
     bucketed = sim.select("doc_id", "simhash", F.explode(blocks).alias("b")).select(
         "doc_id", "simhash", F.col("b.blk").alias("blk"), F.col("b.val").alias("val")
     )
-    if max_bucket is not None:
-        # same shape as minhash_lsh_pairs' cap: one small census
-        # aggregation (map-side combined), then an AQE-decided join of
-        # bucket rows against surviving buckets
-        ok = (
-            bucketed.groupBy("blk", "val")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select("blk", "val")
-        )
-        bucketed = bucketed.join(ok, ["blk", "val"])
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
+    bucketed = _cap_buckets(bucketed, ["blk", "val"], max_bucket)
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(bucketed, ["blk", "val"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

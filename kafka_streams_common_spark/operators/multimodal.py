@@ -1428,6 +1428,8 @@ def banded_hamming_pairs(
     near-dup joins — candidates never cross groups, and the plan is the
     same banded exchange it would be for a single group. Default ``()``
     keeps the established single-group behavior bit-identical."""
+    from kafka_streams_common_spark.operators.dedup import _bucket_pairs, _cap_buckets
+
     if not 0 <= max_hamming <= 3:
         raise ValueError("4 bands of 16 bits guarantee recall only for hamming <= 3")
     gcols = list(group_cols)
@@ -1457,26 +1459,9 @@ def banded_hamming_pairs(
         "doc_id", *gcols, "b0", "b1", "b2", "b3", "band.band_idx", "band.band_val"
     )
     keys = [*gcols, "band_idx", "band_val"]
-    if max_bucket is not None:
-        ok = (
-            bands.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .filter(F.col("__bsz") <= max_bucket)
-            .select(*keys)
-        )
-        bands = bands.join(ok, keys)
-    a = bands.select(
-        F.col("doc_id").alias("a_doc"),
-        *[F.col(f"b{k}").alias(f"a{k}") for k in range(4)],
-        *keys,
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_doc"),
-        *[F.col(f"b{k}").alias(f"bb{k}") for k in range(4)],
-        *keys,
-    )
+    bands = _cap_buckets(bands, keys, max_bucket)
     hamming = sum(
-        F.bit_count(F.col(f"a{k}").bitwiseXOR(F.col(f"bb{k}"))) for k in range(4)
+        F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}"))) for k in range(4)
     )
     # hamming-verify BEFORE the pair dedup: the verify is a map-side
     # expression on the join output either way, but filtering first
@@ -1486,9 +1471,13 @@ def banded_hamming_pairs(
     # Safe because hamming depends only on the full signatures, not on
     # which band produced the collision (same value on every duplicate).
     return (
-        a.join(b, keys)
-        .filter(F.col("a_doc") < F.col("b_doc"))
-        .select(*gcols, "a_doc", "b_doc", hamming.cast("bigint").alias("hamming"))
+        _bucket_pairs(bands, keys, "doc_id")
+        .select(
+            *[F.col(f"a.{g}").alias(g) for g in gcols],
+            F.col("a.doc_id").alias("a_doc"),
+            F.col("b.doc_id").alias("b_doc"),
+            hamming.cast("bigint").alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates([*gcols, "a_doc", "b_doc"])  # a pair may collide in >1 band
     )

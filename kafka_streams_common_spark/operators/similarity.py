@@ -27,7 +27,12 @@ from kafka_streams_common_spark.functions.vectors import (
     l2_norm,
     to_double_array,
 )
-from kafka_streams_common_spark.operators.dedup import _band_keys, fan_out
+from kafka_streams_common_spark.operators.dedup import (
+    _band_keys,
+    _bucket_pairs,
+    _cap_buckets,
+    fan_out,
+)
 
 
 def brute_force_cosine_topk(
@@ -77,17 +82,48 @@ def brute_force_cosine_topk(
     )
 
 
-def _lloyd_refine(
-    corpus: DataFrame, centroids: DataFrame, iters: int, vec_col: str, id_col: str
-) -> DataFrame:
-    """Refine IVF centroids with ``iters`` Lloyd (k-means) steps.
+def _centroid_rows(
+    centroids: DataFrame | None,
+    frame: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+) -> list:
+    """The collected IVF centroid set ``(c_id, c_emb double[])`` every IVF
+    operator closes into the :func:`_assign_probes_udf` kernel.
 
-    Each step: assign every corpus vector to its nearest centroid (a
-    map-only Arrow kernel over the collected centroid set — bounded
-    driver state, the :func:`_assign_probes_udf` form every IVF operator
-    uses since r16/r17; the crossJoin+max_by hash agg it replaces existed
-    only to undo the |corpus|·C crossJoin blowup, one corpus-wide
-    Exchange per step), then recompute each centroid as the element-wise
+    ``centroids=None`` seeds the ``n_centroids`` lowest-id vectors of
+    ``frame[id_col, vec_col]``: deterministic, which is the form the SQL
+    oracles replay, and a TakeOrderedAndProject (partial top-N per
+    partition, merged on the driver) that never funnels the corpus
+    through one partition the way a row_number over an unpartitioned
+    window would. The collect holds at most ``n_centroids`` rows, the
+    same constant-size driver state as centroid training. An empty set
+    raises ``ValueError("empty centroid set")``: no vector could be
+    assigned a cell."""
+    if centroids is None:
+        centroids = (
+            frame.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"))
+            .orderBy(F.asc("c_id"))
+            .limit(n_centroids)
+        )
+    rows = centroids.select(
+        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
+    ).collect()
+    if not rows:
+        raise ValueError("empty centroid set")
+    return rows
+
+
+def _lloyd_refine(
+    corpus: DataFrame, n_centroids: int, iters: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Refine the seeded IVF centroids (:func:`_centroid_rows`) with
+    ``iters`` Lloyd (k-means) steps.
+
+    Each step: assign every corpus vector to its nearest centroid (the
+    map-only :func:`_assign_probes_udf` kernel over the collected
+    centroid set), then recompute each centroid as the element-wise
     mean of its members via posexplode → avg per (cell, dim) →
     re-assemble in dim order. Shuffle volume per step is O(rows·dim)
     narrow (cell, dim, x) triples with map-side partial aggregation;
@@ -97,16 +133,9 @@ def _lloyd_refine(
     unique-``id_col`` precondition as :func:`ivf_cosine_topk` (duplicate
     ids would double-weight their vectors in the mean).
     """
+    centroids = None
     for _ in range(iters):
-        # kernel argmax over the collected step centroids (≤ n_centroids
-        # rows per collect — the constant-size-driver-state rule);
-        # identical (score desc, c_id asc) total order, bit-identical
-        # sequential-fold scores
-        cent_rows = centroids.select(
-            "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-        ).collect()
-        if not cent_rows:
-            break
+        cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
         # a null or ragged vector gets no cell: keep it out of the means,
         # or it forms a NULL-keyed centroid the next step cannot assign to
         assigned = corpus.select(
@@ -265,49 +294,25 @@ def ivf_cosine_topk(
     steps (:func:`_lloyd_refine`) — the seeded form is what the hash-gated
     driver query replays in SQL (a trained-centroid run is gated by the
     recall pytest instead).
-    Corpus→cell assignment is one broadcast join; each query probes its
-    ``n_probe`` nearest cells, so only ~n_probe/n_centroids of the corpus is
-    scored per query. Approximate: recall < 1 when a true neighbor lives in
-    an unprobed cell (tested against the brute-force baseline).
+    Corpus→cell assignment is a map-only Arrow kernel over the collected
+    centroids (:func:`_centroid_rows`); each query probes its ``n_probe``
+    nearest cells, so only ~n_probe/n_centroids of the corpus is scored
+    per query (:func:`_cell_topk`). Approximate: recall < 1 when a true
+    neighbor lives in an unprobed cell (tested against the brute-force
+    baseline).
 
-    PRECONDITION: ``id_col`` must be unique per corpus row. The max_by
-    hash-agg assignment groups by id and takes ``any_value(vec)`` — with
-    duplicate ids it would pick an arbitrary duplicate's vector per
-    group, silently breaking the determinism the hash gate rides on (the
-    old row_number window kept the top-scoring row instead). Uniqueness
-    is asserted in the pytest suite; real embedding stores key on a
-    unique vector id by construction. ``id_col``/``query_id_col`` must
+    PRECONDITION: ``id_col`` must be unique per corpus row: self-matches
+    are excluded by id and score ties rank by id, so duplicate ids make
+    both ambiguous. Uniqueness is asserted in the pytest suite; real
+    embedding stores key on a unique vector id by construction. ``id_col``/``query_id_col`` must
     be INTEGRAL types (checked — see :func:`_require_integral_ids`);
     narrower ints widen to bigint in the output.
     """
     _require_integral_ids(corpus, id_col, "ivf_cosine_topk")
     _require_integral_ids(queries, query_id_col, "ivf_cosine_topk")
-    if centroids is None:
-        # TakeOrderedAndProject — a top-N that partial-sorts per partition
-        # and merges n_centroids rows on the driver; never funnels the
-        # corpus through one partition (the naive
-        # row_number-over-unpartitioned-Window seeding would).
-        centroids = (
-            corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"))
-            .orderBy(F.asc("c_id"))
-            .limit(n_centroids)
-        )
-        if kmeans_iters:
-            centroids = _lloyd_refine(corpus, centroids, kmeans_iters, vec_col, id_col)
-    # r16 (guide §2.4 — remove shuffles outright): assignment and probing
-    # run in the Arrow kernel over the COLLECTED centroid set (bounded by
-    # n_centroids, the same constant-size-driver-state rule as training).
-    # The old form crossJoined the broadcast centroids and argmax'd with a
-    # max_by hash aggregation — one corpus-wide Exchange that existed only
-    # to reduce the |corpus|·C candidate rows back to one cell per row;
-    # the kernel's per-row lexsort replays the identical
-    # (score desc, c_id asc) total order with zero exchanges, and scores
-    # are bit-identical (sequential-fold dots — see _assign_probes_udf).
-    cent_rows = centroids.select(
-        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-    ).collect()
-    if not cent_rows:
-        raise ValueError("empty centroid set")
+    if centroids is None and kmeans_iters:
+        centroids = _lloyd_refine(corpus, n_centroids, kmeans_iters, vec_col, id_col)
+    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
     corpus = fan_out(corpus)
     assigned = corpus.select(
         F.col(id_col).alias("__id"),
@@ -321,9 +326,6 @@ def ivf_cosine_topk(
         F.col("__a.n").alias("__n"),
         F.element_at("__a.cells", 1).alias("cell"),
     )
-
-    # query → n_probe nearest cells, same kernel (same probe order the
-    # old row_number window spelled)
     probes = queries.select(
         F.col(query_id_col).alias("__qid"),
         to_double_array(F.col(query_vec_col)).alias("__qv"),
@@ -336,34 +338,66 @@ def ivf_cosine_topk(
         F.col("__a.n").alias("__qn"),
         F.explode("__a.cells").alias("cell"),
     )
+    return _cell_topk(assigned, probes, k).select(
+        F.col("__q").alias(query_id_col), F.col("__nb").alias(id_col), "score"
+    )
 
-    # candidate scoring + per-cell top-k through the grouped block kernel
-    # (the knn_graph r16 form — see _block_topk_udf): vectors cross the
-    # exchange once per cell instead of once per candidate pair, and the
-    # final window ranks <= n_probe·k rows per query (top-k distributes
-    # over the union of per-cell top-k lists under the strict
-    # (score desc, id asc) total order). Scores bit-identical.
-    home_g = assigned.groupBy("cell").agg(
-        F.collect_list(F.struct("__id", "__v", "__n")).alias("hs")
-    )
-    probe_g = probes.groupBy("cell").agg(
-        F.collect_list(F.struct("__qid", "__qv", "__qn")).alias("ps")
-    )
+
+def _cell_topk(
+    home: DataFrame, probes: DataFrame, k: int, block_rows: int | None = None
+) -> DataFrame:
+    """Per-probe top-``k`` over IVF cells: ``(__q, __nb, score)``, ranked
+    ``(score desc, __nb asc)`` with self-matches excluded. ``home`` rows
+    are ``(cell, __id, __v, __n)``, ``probes`` rows ``(cell, __qid, __qv,
+    __qn)``; a probe scores every home vector of each cell it visits.
+
+    Each side is grouped into one row per cell, so every vector crosses
+    the exchange once instead of once per candidate pair, and each
+    (home block, probe block) scores in :func:`_block_topk_udf`, which
+    emits only each probe's block-local top-k. Because (score desc, id
+    asc) is a strict total order, the global top-k is the top-k of the
+    union of the block-local lists, so the final window ranks at most
+    (blocks visited)·k rows per probe, not every candidate.
+
+    ``block_rows`` bounds the physical size of a grouped block: a modal
+    class of m near-identical vectors would otherwise put m full vectors
+    in one ``collect_list`` row (Spark's 2 GiB row buffer at corpus
+    scale). Each side then splits into ``ceil(|cell side| / block_rows)``
+    sub-blocks by ``xxhash64`` of the id (deterministic, never rand())
+    and the cell join crosses sub-blocks, so every (home, probe) pair
+    still meets exactly once and the union argument above keeps the
+    result identical."""
+
+    def blocks(side: DataFrame, id_c: str, cols: list[str], out: str) -> DataFrame:
+        if block_rows is not None:
+            cnt = side.groupBy("cell").agg(F.count(F.lit(1)).alias("__cnt"))
+            side = side.join(cnt, "cell").withColumn(
+                "__sub",
+                F.pmod(F.xxhash64(id_c), F.ceil(F.col("__cnt") / F.lit(block_rows))),
+            )
+            keys = ["cell", "__sub"]
+        else:
+            keys = ["cell"]
+        grouped = side.groupBy(*keys).agg(F.collect_list(F.struct(*cols)).alias(out))
+        return grouped.drop("__sub")
+
+    home_g = blocks(home, "__id", ["__id", "__v", "__n"], "hs")
+    probe_g = blocks(probes, "__qid", ["__qid", "__qv", "__qn"], "ps")
     pairs = (
         home_g.join(probe_g, "cell")
         .select(_block_topk_udf(k)(F.col("hs"), F.col("ps")).alias("__tk"))
         .select(F.explode("__tk").alias("t"))
         .select(
-            F.col("t.q").alias(query_id_col),
-            F.col("t.nb").alias(id_col),
+            F.col("t.q").alias("__q"),
+            F.col("t.nb").alias("__nb"),
             F.col("t.sc").alias("score"),
         )
     )
-    rank_w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    rank_w = Window.partitionBy("__q").orderBy(F.desc("score"), F.asc("__nb"))
     return (
         pairs.withColumn("rn", F.row_number().over(rank_w))
         .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "score")
+        .select("__q", "__nb", "score")
     )
 
 
@@ -387,40 +421,31 @@ def knn_graph(
     Scale shape (IVF-blocked candidate join, never all-pairs):
 
     - ``centroids`` (``(c_id, c_emb)``, e.g. :func:`train_ivf_centroids`)
-      default to the ``n_centroids`` lowest-id corpus vectors
-      (TakeOrderedAndProject — the seeded form the SQL oracle replays).
-      Either way they are COLLECTED once — bounded by ``n_centroids``,
-      the same constant-size-driver-state rule as centroid training —
-      and closed into the Arrow assignment kernel
-      (:func:`_assign_probes_udf`), which makes home-cell assignment AND
-      probe selection one map-only pass: zero exchanges before the
-      single cell-keyed candidate join.
+      default to the ``n_centroids`` lowest-id corpus vectors. Either
+      way they are collected once (:func:`_centroid_rows`) and closed
+      into the Arrow assignment kernel (:func:`_assign_probes_udf`),
+      which makes home-cell assignment AND probe selection one map-only
+      pass: zero exchanges before the single cell-keyed candidate join.
     - Each vector probes its ``n_probe`` nearest cells; candidates =
       vectors whose HOME cell is probed, so scored pairs ≈
       ``n_probe/C · |corpus|²`` instead of ``|corpus|²``.
     - The assignment scan is ``localCheckpoint``'d once and feeds both
       join sides (the banded-join signature-checkpoint rationale).
-    - ``max_cell`` caps hot HOME cells (census → filter → join — the
-      ``banded_hamming_pairs`` pattern): a modal embedding class
+    - ``max_cell`` caps hot HOME cells (:func:`_cap_buckets`, the
+      near-dup operators' bucket cap): a modal embedding class
       (near-identical vectors) floods its cell with m members and the
       join enumerates ``n_probe·m²`` candidates; the cap prunes those
       CANDIDATES (capped-cell vectors still probe outward and keep
       their own edges into cold cells) and routes the modal class to
       exact dedup, the established trade. It also bounds the per-cell
-      block the r16 scoring kernel holds in memory.
-    - ``block_rows`` (r17) bounds the PHYSICAL row size of the grouped
-      cell blocks on BOTH sides — each side salts into hash sub-blocks
-      of ~``block_rows`` vectors before ``collect_list``, so an uncapped
-      hot cell can never form a multi-GB single Spark row; see the
-      inline note at the grouping stage for the result-equivalence
-      argument. ``None`` keeps the one-block-per-cell shape.
+      block the scoring kernel holds in memory.
+    - ``block_rows`` bounds the PHYSICAL row size of the grouped cell
+      blocks on BOTH sides, so an uncapped hot cell can never form a
+      multi-GB single Spark row. ``None`` keeps one block per cell.
     - Candidate scoring + per-cell top-k run as ONE vectorized Arrow
-      kernel per (cell, probe-block) — :func:`_block_topk_udf`: grouped
-      cell blocks shuffle each vector once instead of once per candidate
-      pair, and because (score desc, id asc) is a strict total order the
-      global per-vector top-k is the top-k of the union of per-cell
-      top-k lists — the final window ranks ≤ ``n_probe·k`` rows per
-      vector instead of every candidate (guide §8).
+      kernel per (cell, probe-block) — :func:`_cell_topk`, which carries
+      the result-equivalence argument for the blocks and the final
+      window.
 
     Approximate: recall < 1 when a true neighbor's home cell is not
     probed (pinned vs brute force in pytest). Deterministic end to end:
@@ -431,21 +456,8 @@ def knn_graph(
     ints widen to bigint in the output).
     """
     _require_integral_ids(corpus, id_col, "knn_graph")
-    if centroids is None:
-        centroids = (
-            corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"))
-            .orderBy(F.asc("c_id"))
-            .limit(n_centroids)
-        )
-    cent_rows = centroids.select(
-        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-    ).collect()
-    if not cent_rows:
-        raise ValueError("empty centroid set")
+    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
     corpus = fan_out(corpus)
-    # per-row (norm, probed cells) in one Arrow kernel pass — see
-    # _assign_probes_udf for the bit-exactness argument (same sequential
-    # folds, same (score desc, c_id asc) probe order the oracle spells)
     base = corpus.select(
         F.col(id_col).alias("__id"),
         to_double_array(F.col(vec_col)).alias("__v"),
@@ -461,101 +473,15 @@ def knn_graph(
     home = base.select(
         "__id", "__v", "__n", F.element_at("__probes", 1).alias("cell")
     )
-    if max_cell is not None:
-        ok = (
-            home.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__csz"))
-            .filter(F.col("__csz") <= max_cell)
-            .select("cell")
-        )
-        home = home.join(ok, "cell")
+    home = _cap_buckets(home, ["cell"], max_cell)
     probes = base.select(
         F.col("__id").alias("__qid"),
         F.col("__v").alias("__qv"),
         F.col("__n").alias("__qn"),
         F.explode("__probes").alias("cell"),
     )
-    # Candidate scoring is the O(n_probe/C · |corpus|²) hot stage. The old
-    # pair-explode form joined probes×home into millions of wide rows (two
-    # 64-dim vectors EACH) and ranked them with a corpus-wide window —
-    # measured 56 s at sf0.1 on the planted corpus, ~95% interpreted
-    # HOF-fold cosine (guide §4) plus a multi-GB exchange (guide §2.3).
-    # r16 block form (guide §8 — decide with small rows, move heavy bytes
-    # once): vectors are grouped into ONE row per cell (the shuffle carries
-    # each vector once, ~corpus bytes, not once per candidate pair), each
-    # (home-block, probe-block) scores as a vectorized numpy kernel with
-    # the SEQUENTIAL per-pair accumulation (bit-identical to the JVM fold
-    # — see _block_topk_udf), and the kernel emits only each probe's
-    # cell-local top-k. Because (score desc, id asc) is a strict total
-    # order, the global top-k equals the top-k of the union of per-cell
-    # top-k lists, so the final window ranks ≤ n_probe·k rows per query
-    # instead of every candidate. Measured 9.7 s → ~2.5 s for the whole
-    # kNN graph on the planted corpus; identical rows (oracle-hash-gated).
-    # block_rows (r17, the ADVICE r16 skew item): the grouped cell blocks
-    # put an ENTIRE cell's vectors in one collect_list row on each side —
-    # max_cell bounds only the capped HOME side, so a modal class of m
-    # near-identical vectors lands m full vectors in one probe_g row (a
-    # multi-GB single row at 100 TB — Spark's 2 GiB row buffer limit).
-    # With block_rows set, each side is salted into ceil(|cell side| /
-    # block_rows) hash sub-blocks BEFORE collect_list (deterministic —
-    # xxhash64 of the id, never rand(); guide §2.5) and the cell join
-    # crosses sub-blocks, so every (home, probe) pair still meets exactly
-    # once and row size is bounded ~block_rows·dim·8B. Result-identical
-    # by the same strict-total-order union argument as the cross-cell
-    # top-k: each probe's true cell-local top-k survives every sub-block's
-    # local top-k, and the final (score DESC, id ASC) window re-ranks the
-    # union. The two per-cell counts are narrow id-free aggregates.
-    if block_rows is not None:
-        hc = home.groupBy("cell").agg(F.count(F.lit(1)).alias("__hc"))
-        home_g = (
-            home.join(hc, "cell")
-            .withColumn(
-                "__hsub",
-                F.pmod(
-                    F.xxhash64("__id"),
-                    F.ceil(F.col("__hc") / F.lit(block_rows)),
-                ),
-            )
-            .groupBy("cell", "__hsub")
-            .agg(F.collect_list(F.struct("__id", "__v", "__n")).alias("hs"))
-            .drop("__hsub")
-        )
-        pc = probes.groupBy("cell").agg(F.count(F.lit(1)).alias("__pc"))
-        probe_g = (
-            probes.join(pc, "cell")
-            .withColumn(
-                "__psub",
-                F.pmod(
-                    F.xxhash64("__qid"),
-                    F.ceil(F.col("__pc") / F.lit(block_rows)),
-                ),
-            )
-            .groupBy("cell", "__psub")
-            .agg(F.collect_list(F.struct("__qid", "__qv", "__qn")).alias("ps"))
-            .drop("__psub")
-        )
-    else:
-        home_g = home.groupBy("cell").agg(
-            F.collect_list(F.struct("__id", "__v", "__n")).alias("hs")
-        )
-        probe_g = probes.groupBy("cell").agg(
-            F.collect_list(F.struct("__qid", "__qv", "__qn")).alias("ps")
-        )
-    pairs = (
-        home_g.join(probe_g, "cell")
-        .select(_block_topk_udf(k)(F.col("hs"), F.col("ps")).alias("__tk"))
-        .select(F.explode("__tk").alias("t"))
-        .select(
-            F.col("t.q").alias(id_col),
-            F.col("t.nb").alias("neighbor_id"),
-            F.col("t.sc").alias("score"),
-        )
-    )
-    rank_w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(rank_w))
-        .filter(F.col("rn") <= k)
-        .select(id_col, "neighbor_id", "score")
+    return _cell_topk(home, probes, k, block_rows).select(
+        F.col("__q").alias(id_col), F.col("__nb").alias("neighbor_id"), "score"
     )
 
 
@@ -574,9 +500,9 @@ def semantic_dedup(
     """SemDeDup-style SEMANTIC deduplication over an embedding corpus —
     the composition the k-NN graph exists for: build the approximate
     k-NN edge list (:func:`knn_graph`), keep edges with cosine ≥
-    ``tau``, collapse them into clusters with the alternating min-label
-    propagation (:func:`operators.cluster.connected_components` —
-    singletons keep their own id), and mark each cluster's canonical
+    ``tau``, collapse them into clusters with min-label propagation
+    (:func:`operators.cluster.connected_components` — singletons keep
+    their own id), and mark each cluster's canonical
     (min-id) member as the survivor. Returns
     ``(vec_id, cluster_id, keep)`` — the keep list a curation pipeline
     semi-joins against the document store (bodies never enter the
@@ -586,8 +512,9 @@ def semantic_dedup(
     Scale shape: inherits the k-NN graph's IVF blocking (candidates ≈
     n_probe/C · |corpus|², cell-count grown with the corpus), the
     ``max_cell`` hot-cell cap, the ``block_rows`` physical row-size
-    bound on the grouped cell blocks, and CC's O(log n)-round label
-    propagation with per-round localCheckpoints. The threshold prunes
+    bound on the grouped cell blocks, and CC's label propagation with
+    per-round localCheckpoints, which takes O(diameter) rounds (one per
+    hop of the widest cluster) and raises if that exceeds its cap. The threshold prunes
     the edge list BEFORE the first CC exchange, so cluster work scales
     with near-duplicate mass, not graph size."""
     edges = (
@@ -868,12 +795,13 @@ def _pair_cosine_udf():
     the same operation tree. Pinned bit-identical against the JVM folds
     by ``tests/test_operators.py::test_pair_cosine_kernel_bit_identical``.
 
-    Dirty-data contract: a NULL / length-mismatched vector in a pair
-    yields a NULL score (the pair drops at the ``score >= tau`` filter)
-    — same null-propagation the JVM folds had, instead of a task crash.
-    Zero-norm vectors (0/0 → NaN) are outside the contract: fixtures
-    and real embedding stores have nonzero norms; the JVM form kept NaN
-    (NaN ≥ tau is true in Spark), the Arrow path surfaces it as null.
+    Dirty-data contract: a NULL or length-mismatched vector in a pair
+    yields a NULL score, and so does a zero-norm vector (0/0 is NaN,
+    which the Arrow conversion returns as NULL). A NULL score fails the
+    ``score >= tau`` filter, so such a pair is never emitted; the task
+    does not crash. (Spark orders NaN above every number, so a NaN
+    score would have passed any ``tau``.) Pinned by
+    ``tests/test_operators.py::test_hyperplane_lsh_zero_norm_pair_never_emitted``.
 
     asNondeterministic: guide §4.4 — the downstream ``score >= tau``
     filter references the kernel's output column and would otherwise be
@@ -969,15 +897,8 @@ def hyperplane_lsh_near_dup_pairs(
     # one would persist to parquet anyway.
     sigs = vecs.select("id", bits.alias("sig")).localCheckpoint(eager=True)
     buckets = sigs.select("id", F.inline(_band_keys(F.col("sig"), num_bits, bands)))
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        _bucket_pairs(buckets, ["band", "bkey"], "id")
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
@@ -1227,27 +1148,7 @@ def ivf_int8_rerank_topk(
             "__r"
         ),
     )
-    if centroids is None:
-        centroids = (
-            recon.select(F.col(id_col).alias("c_id"), F.col("__r").alias("c_emb"))
-            .orderBy(F.asc("c_id"))
-            .limit(n_centroids)
-        )
-    # r17 (guide §2.4 — remove shuffles outright; the r16 verdict's #1
-    # carry-over): assignment and probing run in the Arrow kernel over the
-    # COLLECTED centroid set, exactly as ivf_cosine_topk/ivf_pq_topk
-    # already do. The old form crossJoined the broadcast centroids and
-    # undid the |corpus|·C blowup with a max_by hash aggregation — a
-    # corpus-wide Exchange that existed only to reverse the crossJoin —
-    # and ranked query probes with a window over |queries|·C rows. The
-    # kernel replays the identical (score desc, c_id asc) total order
-    # with bit-identical sequential-fold scores (see _assign_probes_udf);
-    # oracle-hash-gated at sf0.01 and sf0.1.
-    cent_rows = centroids.select(
-        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-    ).collect()
-    if not cent_rows:
-        raise ValueError("empty centroid set")
+    cent_rows = _centroid_rows(centroids, recon, id_col, "__r", n_centroids)
     recon = fan_out(recon)
     assigned = recon.select(
         id_col,
@@ -1322,26 +1223,15 @@ def cell_diverse_sample(
 
     Scale shape: cell assignment is a map-only Arrow kernel over the
     collected centroid set (zero exchanges before the per-cell rank —
-    r17, the same ``_assign_probes_udf`` form as ``ivf_cosine_topk``;
-    the crossJoin+max_by hash agg it replaces existed only to undo the
-    |corpus|·C crossJoin blowup), then a per-cell row_number window
-    whose partition count is ``n_centroids`` — each cell's rank runs on
-    its own partition; with trained centroids cells are load-balanced by
-    construction. md5 ranking means the per-cell choice is
-    uniform-random-but-reproducible at any parallelism.
+    the same ``_assign_probes_udf`` form as ``ivf_cosine_topk``), then a
+    per-cell row_number window whose partition count is ``n_centroids``
+    — each cell's rank runs on its own partition; with trained
+    centroids cells are load-balanced by construction. md5 ranking
+    means the per-cell choice is uniform-random-but-reproducible at any
+    parallelism.
     """
     corpus = fan_out(corpus)
-    if centroids is None:
-        centroids = (
-            corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"))
-            .orderBy(F.asc("c_id"))
-            .limit(n_centroids)
-        )
-    cent_rows = centroids.select(
-        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-    ).collect()
-    if not cent_rows:
-        raise ValueError("empty centroid set")
+    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
     assigned = corpus.select(
         id_col,
         F.element_at(
@@ -1596,25 +1486,11 @@ def ivf_pq_topk(
         )
 
     vecs = corpus.select(id_col, to_double_array(F.col(vec_col)).alias("__v"))
-    if centroids is None:
-        centroids = (
-            vecs.select(F.col(id_col).alias("c_id"), F.col("__v").alias("c_emb"))
-            .orderBy(F.asc("c_id"))
-            .limit(n_centroids)
-        )
-    # r16 (guide §2.4): PQ encoding and cell assignment are BOTH map-only
-    # kernels over the same corpus scan, so they run fused in ONE
-    # projection — the old plan computed them as separate corpus passes
-    # and re-united them with a corpus×corpus id-equi-join (an Exchange of
-    # both sides that existed only to zip two derived columns of the same
-    # row). Assignment itself drops its crossJoin+max_by exchange for the
-    # collected-centroid Arrow kernel, identical (score desc, c_id asc)
-    # argmax — see ivf_cosine_topk / _assign_probes_udf.
-    cent_rows = centroids.select(
-        "c_id", to_double_array(F.col("c_emb")).alias("c_emb")
-    ).collect()
-    if not cent_rows:
-        raise ValueError("empty centroid set")
+    cent_rows = _centroid_rows(centroids, vecs, id_col, "__v", n_centroids)
+    # PQ encoding and cell assignment are both map-only kernels over the
+    # same corpus scan: one projection computes both, where two passes
+    # would need an id-equi-join (an Exchange of both sides) to re-unite
+    # two derived columns of the same row
     codes_cells = fan_out(corpus).select(
         F.col(id_col).alias(id_col),
         _pq_encode_udf(codebooks)(to_double_array(F.col(vec_col))).alias("codes"),
@@ -1627,8 +1503,6 @@ def ivf_pq_topk(
     qv = queries.select(
         query_id_col, to_double_array(F.col(query_vec_col)).alias("__q")
     )
-    # query → n_probe nearest cells, same kernel (same probe order the
-    # old row_number window spelled), zero exchanges
     probes = qv.select(
         query_id_col,
         F.explode(

@@ -5,8 +5,9 @@ The reference guarantees one KTable materialization per topic per app via
 ``computeIfAbsent``; Catalyst does NOT dedupe two separately-constructed
 identical scans inside one query, so the registry pattern survives here:
 N pipelines referencing one source share one DataFrame, and table
-(latest-per-key) views are built once. ``cache_tables=True`` additionally
-persists shared table views — the batch analog of a shared RocksDB store.
+(latest-per-key) views are built once. Views are not persisted: the
+registry shares the DataFrame (the plan), and each query that reads it
+executes it.
 """
 
 from __future__ import annotations
@@ -42,10 +43,9 @@ def latest_per_key(
 class SourceRegistry:
     """Per-compiler memoization of stream and table views of each source."""
 
-    def __init__(self, spark: SparkSession, catalog: TableCatalog, cache_tables: bool = False):
+    def __init__(self, spark: SparkSession, catalog: TableCatalog):
         self.spark = spark
         self.catalog = catalog
-        self.cache_tables = cache_tables
         self._streams: dict[str, DataFrame] = {}
         self._tables: dict[str, DataFrame] = {}
 
@@ -82,7 +82,5 @@ class SourceRegistry:
                 df = latest_per_key(df, key, seq, tiebreak)
             # No seq column → source is already a snapshot table (one row per
             # key, e.g. parquet dims); the raw view IS the table view.
-            if self.cache_tables:
-                df = df.cache()
             self._tables[src.name] = df
         return self._tables[src.name]

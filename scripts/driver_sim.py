@@ -117,6 +117,8 @@ def main() -> int:
             print(f"{i:3d} {name} ERR {e}", flush=True)
             failed.append(name)
             continue
+        spark_s = time.time() - t0
+        t0 = time.time()
         if name in os_:
             want = canon(con.execute(os_[name]).df())
             status = "ok" if got == want else "HASH-MISMATCH"
@@ -124,7 +126,12 @@ def main() -> int:
                 failed.append(name)
         else:
             status = "rows-only"
-        print(f"{i:3d} {name} {status} rows={len(got)} {time.time()-t0:.1f}s", flush=True)
+        oracle_s = time.time() - t0
+        print(
+            f"{i:3d} {name} {status} rows={len(got)}"
+            f" spark={spark_s:.1f}s oracle={oracle_s:.1f}s",
+            flush=True,
+        )
     if failed:
         print("FAILED:", failed)
         return 1

@@ -17,7 +17,11 @@ from kafka_streams_common_spark.operators.multimodal import (
 )
 from kafka_streams_common_spark.operators.similarity import (
     brute_force_cosine_topk,
+    cell_diverse_sample,
     ivf_cosine_topk,
+    ivf_int8_rerank_topk,
+    ivf_pq_topk,
+    knn_graph,
 )
 from kafka_streams_common_spark.queries.registry import table
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -2367,3 +2371,98 @@ def test_lloyd_refine_skips_ragged_rows(spark):
 
     want = run(clean)
     assert run(clean + [(101, [1.0, 2.0])]) == want and len(want) > 0
+
+
+def test_connected_components_raise_at_iteration_cap(spark):
+    """Both CC forms raise instead of returning labels that are not yet
+    the component minima: label propagation needs one round per hop (a
+    6-node path has diameter 5), and one star round cannot collapse a
+    64-node path."""
+    from kafka_streams_common_spark.operators.cluster import (
+        connected_components,
+        connected_components_two_phase,
+    )
+
+    def path(n):
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        return nodes, edges
+
+    with pytest.raises(ValueError, match="max_iterations=3"):
+        connected_components(*path(6), max_iterations=3)
+    with pytest.raises(ValueError, match="max_iterations=1"):
+        connected_components_two_phase(*path(64), max_iterations=1)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda c, q: ivf_cosine_topk(c, q, k=1, n_centroids=2, n_probe=1),
+        lambda c, q: ivf_cosine_topk(c, q, k=1, n_centroids=2, kmeans_iters=1),
+        lambda c, q: knn_graph(c, k=1, n_centroids=2, n_probe=1),
+        lambda c, q: ivf_int8_rerank_topk(c, q, k=1, n_centroids=2, n_probe=1),
+        lambda c, q: cell_diverse_sample(c, n_per_cell=1, n_centroids=2),
+        # supplied codebooks: the call goes straight to cell assignment
+        lambda c, q: ivf_pq_topk(
+            c,
+            q,
+            k=1,
+            m=1,
+            n_centroids=2,
+            codebooks=c.sparkSession.createDataFrame(
+                [(0, 0, [0.0, 0.0])], "sub_id int, code_id int, c array<double>"
+            ),
+        ),
+    ],
+    ids=[
+        "ivf_cosine_topk",
+        "ivf_cosine_topk_kmeans",
+        "knn_graph",
+        "ivf_int8_rerank_topk",
+        "cell_diverse_sample",
+        "ivf_pq_topk",
+    ],
+)
+def test_ivf_operators_reject_empty_corpus(spark, run):
+    """An empty corpus seeds no centroid, so no vector could be assigned
+    a cell: every IVF operator raises the one ``empty centroid set``
+    error while building the query."""
+    corpus = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "q_id long, q_emb array<double>"
+    )
+    with pytest.raises(ValueError, match="empty centroid set"):
+        run(corpus, queries)
+
+
+@pytest.mark.parametrize("form", ["pairs", "match"])
+def test_hyperplane_lsh_zero_norm_pair_never_emitted(spark, form):
+    """A zero-norm vector scores 0/0 in verification. The contract is a
+    NULL score, so the pair fails ``score >= tau`` and is never emitted,
+    while the identical non-zero pair still is. (Spark orders NaN above
+    every number, so a NaN score would pass any ``tau``.)"""
+    from kafka_streams_common_spark.operators.similarity import (
+        hyperplane_lsh_match,
+        hyperplane_lsh_near_dup_pairs,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    zero, v = [0.0, 0.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.0]
+    params = dict(tau=0.5, dim=4, num_bits=16, bands=4)
+    if form == "pairs":
+        corpus = spark.createDataFrame([(0, zero), (1, zero), (2, v), (3, v)], schema)
+        got = {
+            (r["id_a"], r["id_b"])
+            for r in hyperplane_lsh_near_dup_pairs(corpus, **params).collect()
+        }
+        assert got == {(2, 3)}
+    else:
+        new = spark.createDataFrame([(10, zero), (11, v)], schema)
+        corpus = spark.createDataFrame([(0, zero), (1, v)], schema)
+        got = {
+            (r["new_id"], r["corpus_id"])
+            for r in hyperplane_lsh_match(new, corpus, **params).collect()
+        }
+        assert got == {(11, 1)}
