@@ -407,10 +407,11 @@ def minhash_lsh_pairs(
     corpus (boilerplate pages sharing most of their shingles) can land
     ~50% of documents in ONE bucket, making candidate enumeration O(hot²)
     even though every such pair fails exact verification — the
-    adversarial-skew shape probed in scripts/skew_probe.py. Dropping a
-    hot bucket only removes candidate-RECALL for pairs whose sole
-    collision was that bucket: a true pair at jaccard ≥ 0.8 collides per
-    band w.p. ≈ 0.41, so losing even several bands leaves the miss
+    adversarial-skew shape recorded in SCALE.md's adversarial-skew probe
+    and pinned by ``test_minhash_max_bucket_cap_preserves_output``.
+    Dropping a hot bucket only removes candidate-RECALL for pairs whose
+    sole collision was that bucket: a true pair at jaccard ≥ 0.8 collides
+    per band w.p. ≈ 0.41, so losing even several bands leaves the miss
     probability ≈ (1-0.41)^remaining ≈ 0. Default None keeps the
     registered query bit-identical to its SQL oracle.
     """
@@ -682,8 +683,9 @@ def simhash_pairs(
     one — the trade a curation pipeline makes deliberately: route modal
     classes to exact dedup (they are exact duplicates of each other),
     keep the near-dup join bounded. Default ``None`` keeps the
-    registered query bit-identical to its SQL oracle; the skew probe
-    (scripts/skew_probe.py) measures the capped/uncapped asymmetry.
+    registered query bit-identical to its SQL oracle. SCALE.md's
+    modal-class hot-bucket probe records the capped/uncapped asymmetry;
+    ``test_simhash_max_bucket_caps_modal_class`` pins it.
     """
     n_blocks = max_hamming + 1
     assert bits % n_blocks == 0, (

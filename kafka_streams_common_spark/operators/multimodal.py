@@ -1398,8 +1398,9 @@ def ahash_near_dup_pairs(
     the cap trades the m² pair list for bounded work: route modal
     classes to exact byte/hash dedup instead (their full 64-bit hashes
     are identical, a plain groupBy). Default ``None`` keeps the
-    registered query bit-identical to its SQL oracle; the skew probe
-    (scripts/skew_probe.py) measures the asymmetry.
+    registered query bit-identical to its SQL oracle. SCALE.md's
+    modal-class hot-bucket probe records the asymmetry;
+    ``test_ahash_near_dup_detects_perturbed_image`` pins the cap.
 
     Returns ``(a_doc, b_doc, hamming)`` with ``a_doc < b_doc``.
     """

@@ -3,6 +3,8 @@
 Imports __spark_entry__ like the grading driver, smoke-checks entry(),
 then runs every registered query against its DuckDB oracle at sf0.01
 with the driver's canonicalization. Exits nonzero on the first mismatch.
+Works from any working directory: the repo root goes on ``sys.path`` and
+on the Python workers' ``PYTHONPATH``.
 
 Usage: python scripts/driver_sim.py [--vanilla] [--limit N] [--only a,b,c]
                                     [--sf DIR]
@@ -15,10 +17,14 @@ Usage: python scripts/driver_sim.py [--vanilla] [--limit N] [--only a,b,c]
 
 from __future__ import annotations
 
+import gc
 import importlib.util
 import math
+import os
 import sys
 import time
+
+from probe import REPO, clear_state, launcher_env
 
 SF = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -57,8 +63,9 @@ def main() -> int:
     limit_arg = flag_value("--limit")
     limit = int(limit_arg) if limit_arg is not None else None
 
+    launcher_env()
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -95,8 +102,6 @@ def main() -> int:
     if limit is not None:
         names = names[:limit]
     failed = []
-    import gc
-
     for i, name in enumerate(names):
         # per-query hygiene (r15): long sweeps accumulate pinned
         # localCheckpoint RDDs, cached plans, and py4j-held JVM plan
@@ -105,10 +110,7 @@ def main() -> int:
         # read 795/733 s in-sweep vs 3-11 s fresh or after a cleared
         # 23-query warm-up — adjudicated in SCALE.md). The grading
         # driver's 50-query sf0.01 window never hits this regime.
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            it.next().getValue().unpersist(False)
+        clear_state(spark)
         gc.collect()
         t0 = time.time()
         try:

@@ -5,17 +5,23 @@ One row per registered query in driver execution order: name, module,
 gate type, first docstring line. Run after any window rotation or query
 addition so the catalog never drifts from the registry.
 
-Usage: PYTHONPATH=/root/repo python scripts/gen_query_catalog.py
+Usage: python scripts/gen_query_catalog.py  (from any working directory)
 """
 
 from __future__ import annotations
 
 import inspect
+import os
 
-from kafka_streams_common_spark import queries as q
+from probe import REPO, launcher_env
+
+CATALOG = os.path.join(REPO, "docs", "query_catalog.md")
 
 
-def main() -> None:
+def catalog_text() -> str:
+    """The catalog as generated from the registry imported right now."""
+    from kafka_streams_common_spark import queries as q
+
     rows = []
     for name, fn in q.QUERIES.items():
         mod = fn.__module__.rsplit(".", 1)[-1]
@@ -34,7 +40,7 @@ def main() -> None:
         return "\n".join(out)
 
     n_oracle = sum(1 for r in rows if r[2] == "SQL oracle")
-    body = f"""# Query catalog (generated)
+    return f"""# Query catalog (generated)
 
 Generated from the live registry by `scripts/gen_query_catalog.py` —
 one row per registered query, in driver execution order. {len(rows)}
@@ -53,9 +59,14 @@ the current driver window
 
 {table(rest, offset=50)}
 """
-    with open("docs/query_catalog.md", "w", encoding="utf-8") as fh:
-        fh.write(body)
-    print(f"wrote docs/query_catalog.md, {len(rows)} rows")
+
+
+def main() -> None:
+    launcher_env()
+    text = catalog_text()
+    with open(CATALOG, "w", encoding="utf-8") as fh:
+        fh.write(text)
+    print(f"wrote {CATALOG}")
 
 
 if __name__ == "__main__":
