@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "kafka_streams_common_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -29,6 +31,10 @@ def get_spark(app_name: str = "kafka_streams_common_spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/kscs_warehouse")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # local[N] only: the workers share this checkout, so they import the
+        # package (daemon and kernel closures) from any cwd
+        .config("spark.python.daemon.module", "kafka_streams_common_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

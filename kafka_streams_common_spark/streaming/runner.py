@@ -28,6 +28,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kafka_streams_common_spark.catalog import _READER_CONFS, TableCatalog, normalize_ts
 from kafka_streams_common_spark.compiler import BatchCompiler
@@ -133,18 +134,22 @@ def _drain(spark: SparkSession, writer) -> list:
             q.awaitTermination()
 
 
-def _current_state(spark: SparkSession, marker: str) -> DataFrame | None:
-    """The state version the ``marker`` file points at, if any."""
+def _current_state(
+    spark: SparkSession, marker: str, schema: StructType
+) -> DataFrame | None:
+    """The state version the ``marker`` file points at, if any, read with
+    its known ``schema`` (inferring it would run a Spark job per read)."""
     if not os.path.exists(marker):
         return None
     with open(marker, encoding="utf-8") as fh:
         path = fh.read().strip()
-    return spark.read.parquet(path) if path else None
+    return spark.read.schema(schema).parquet(path) if path else None
 
 
 def _fold_into_state(
     spark: SparkSession,
     marker: str,
+    schema: StructType,
     batch_df: DataFrame,
     epoch_id: int,
     key_field: str,
@@ -154,8 +159,9 @@ def _fold_into_state(
     """Fold one microbatch into the latest-per-key state beside
     ``marker``: write the merged table to a new versioned directory, then
     atomically repoint the marker at it (plain-parquet MERGE without
-    Delta). Returns the new version's path."""
-    state = _current_state(spark, marker)
+    Delta). ``schema`` is the state's: ``latest_per_key`` over the
+    stream. Returns the new version's path."""
+    state = _current_state(spark, marker, schema)
     merged = batch_df if state is None else state.unionByName(batch_df)
     new_state = latest_per_key(merged, key_field, seq_field, tiebreak_field)
     version_path = os.path.join(
@@ -231,10 +237,12 @@ def run_changelog_materialization(
     """
     os.makedirs(state_dir, exist_ok=True)
     marker = os.path.join(state_dir, "_CURRENT")
+    # by analysis alone: no Spark job
+    schema = latest_per_key(streaming_df, key_field, seq_field, tiebreak_field).schema
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         _fold_into_state(
-            spark, marker, batch_df, epoch_id, key_field, seq_field, tiebreak_field
+            spark, marker, schema, batch_df, epoch_id, key_field, seq_field, tiebreak_field
         )
 
     writer = streaming_df.writeStream.foreachBatch(merge_batch).outputMode("append")
@@ -244,7 +252,7 @@ def run_changelog_materialization(
         # input is NOT replayed into the state merge)
         writer = writer.option("checkpointLocation", checkpoint_dir)
     _drain(spark, writer)
-    state = _current_state(spark, marker)
+    state = _current_state(spark, marker, schema)
     assert state is not None, "no microbatch produced state"
     if tombstone_predicate is not None:
         # coalesce(…, false): a NULL-valued predicate (e.g. a NULL
@@ -294,16 +302,17 @@ def run_fk_join_materialization(
     os.makedirs(dim_dir, exist_ok=True)
     os.makedirs(emit_dir, exist_ok=True)
     marker = os.path.join(dim_dir, "CURRENT")
+    schema = latest_per_key(dim_stream, dim_key, seq_field, tiebreak_field).schema
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         version_path = _fold_into_state(
-            spark, marker, batch_df, epoch_id, dim_key, seq_field, tiebreak_field
+            spark, marker, schema, batch_df, epoch_id, dim_key, seq_field, tiebreak_field
         )
         # changed keys this batch = keys present in the batch (a
         # latest-per-key fold can only change a key it saw); re-emit
         # their dependent facts with the fresh enrichment
         changed = batch_df.select(F.col(dim_key)).distinct()
-        fresh = spark.read.parquet(version_path)
+        fresh = spark.read.schema(schema).parquet(version_path)
         emission = (
             facts.join(
                 F.broadcast(changed),
@@ -322,7 +331,7 @@ def run_fk_join_materialization(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     _drain(spark, writer)
-    state = _current_state(spark, marker)
+    state = _current_state(spark, marker, schema)
     assert state is not None, "no microbatch produced state"
     view = facts.join(
         state, facts[fk_field] == state[dim_key], "left"
