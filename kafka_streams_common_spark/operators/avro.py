@@ -49,6 +49,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_streams_common_spark.operators.protowire import (
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag64,
+)
 from kafka_streams_common_spark.rowkernel import row_kernel
 
 OCF_MAGIC = b"Obj\x01"
@@ -59,42 +65,14 @@ CONFLUENT_MAGIC = 0x00
 # ---------------------------------------------------------------------------
 
 
-def zigzag_encode(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def zigzag_decode(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def write_long(n: int) -> bytes:
     """Avro long: zigzag then little-endian base-128 varint."""
-    u = zigzag_encode(int(n)) & 0xFFFFFFFFFFFFFFFF
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return write_uvarint(zigzag64(int(n)))
 
 
 def read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    u = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return zigzag_decode(u), pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint longer than 64 bits")
+    u, pos = read_uvarint(buf, pos)
+    return unzigzag(u), pos
 
 
 def _write_value(typ: Any, v: Any) -> bytes:

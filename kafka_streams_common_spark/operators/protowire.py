@@ -67,6 +67,8 @@ def write_uvarint(u: int) -> bytes:
 
 
 def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
+    """One base-128 varint of at most 64 bits (the protobuf, Thrift
+    compact and Avro wire limit): a 10th byte may carry only bit 63."""
     u = 0
     shift = 0
     while True:
@@ -78,8 +80,13 @@ def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return u, pos
         shift += 7
-        if shift > 70:
-            raise ValueError("varint longer than 10 bytes")
+        if shift == 63:
+            if pos >= len(buf):
+                raise ValueError("truncated varint")
+            b = buf[pos]
+            if b > 1:
+                raise ValueError("varint exceeds 64 bits")
+            return u | b << 63, pos + 1
 
 
 def zigzag64(n: int) -> int:

@@ -33,6 +33,12 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from kafka_streams_common_spark.operators.protowire import (
+    read_uvarint,
+    unzigzag,
+    write_uvarint,
+    zigzag64,
+)
 from kafka_streams_common_spark.rowkernel import row_kernel
 
 # compact-protocol type ids (field headers and collection element types)
@@ -68,43 +74,6 @@ _PTYPE_CT = {
 }
 
 
-def _write_uvarint(u: int) -> bytes:
-    if u < 0:
-        raise ValueError("uvarint must be non-negative")
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = result = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def _encode_value(ptype: str, v: Any, sub_spec: dict | None = None) -> bytes:
     if ptype == "byte":
         return struct.pack("b", v)
@@ -112,41 +81,41 @@ def _encode_value(ptype: str, v: Any, sub_spec: dict | None = None) -> bytes:
         bits = {"i16": 16, "i32": 32, "i64": 64}[ptype]
         if not -(1 << (bits - 1)) <= v < (1 << (bits - 1)):
             raise ValueError(f"{v} out of {ptype} range")
-        return _write_uvarint(_zigzag(int(v)))
+        return write_uvarint(zigzag64(int(v)))
     if ptype == "double":
         return struct.pack("<d", float(v))  # little-endian per the spec
     if ptype in ("string", "binary"):
         data = v.encode() if isinstance(v, str) else bytes(v)
-        return _write_uvarint(len(data)) + data
+        return write_uvarint(len(data)) + data
     if ptype == "struct":
         return encode_struct(sub_spec, v)
     if ptype in ("list_i32", "set_i32"):
         elems = list(v)
-        body = b"".join(_write_uvarint(_zigzag(int(e))) for e in elems)
+        body = b"".join(write_uvarint(zigzag64(int(e))) for e in elems)
         if len(elems) < 15:
             return bytes([(len(elems) << 4) | CT_I32]) + body
-        return bytes([0xF0 | CT_I32]) + _write_uvarint(len(elems)) + body
+        return bytes([0xF0 | CT_I32]) + write_uvarint(len(elems)) + body
     if ptype in ("list_string", "list_struct"):
         ect = CT_BINARY if ptype == "list_string" else CT_STRUCT
         elems = list(v)
         if ptype == "list_string":
             body = b"".join(
-                _write_uvarint(len(e.encode())) + e.encode() for e in elems
+                write_uvarint(len(e.encode())) + e.encode() for e in elems
             )
         else:
             body = b"".join(encode_struct(sub_spec, e) for e in elems)
         if len(elems) < 15:
             return bytes([(len(elems) << 4) | ect]) + body
-        return bytes([0xF0 | ect]) + _write_uvarint(len(elems)) + body
+        return bytes([0xF0 | ect]) + write_uvarint(len(elems)) + body
     if ptype == "map_string_i64":
         items = list(v.items())
         if not items:
             return b"\x00"  # the empty-map single-byte form
-        out = _write_uvarint(len(items)) + bytes([(CT_BINARY << 4) | CT_I64])
+        out = write_uvarint(len(items)) + bytes([(CT_BINARY << 4) | CT_I64])
         for k, mv in items:
             kb = k.encode()
-            out += _write_uvarint(len(kb)) + kb
-            out += _write_uvarint(_zigzag(int(mv)))
+            out += write_uvarint(len(kb)) + kb
+            out += write_uvarint(zigzag64(int(mv)))
         return out
     raise ValueError(f"unsupported thrift ptype {ptype!r}")
 
@@ -176,7 +145,7 @@ def encode_struct(spec: dict, values: dict) -> bytes:
             out.append((delta << 4) | ct)
         else:
             out.append(ct)  # zero delta nibble = long form
-            out += _write_uvarint(_zigzag(fid))
+            out += write_uvarint(zigzag64(fid))
         out += body
         last_id = fid
     out.append(CT_STOP)
@@ -206,12 +175,12 @@ def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
     if ct == CT_BYTE:
         return pos + 1
     if ct in (CT_I16, CT_I32, CT_I64):
-        _, pos = _read_uvarint(buf, pos)
+        _, pos = read_uvarint(buf, pos)
         return pos
     if ct == CT_DOUBLE:
         return pos + 8
     if ct == CT_BINARY:
-        n, pos = _read_uvarint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         if pos + n > len(buf):
             raise ValueError("truncated binary while skipping")
         return pos + n
@@ -221,13 +190,13 @@ def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
         ect = head & 0x0F
         n = head >> 4
         if n == 15:
-            n, pos = _read_uvarint(buf, pos)
+            n, pos = read_uvarint(buf, pos)
         _check_collection_size(n, buf, pos)
         for _ in range(n):
             pos = _skip_value(ect, buf, pos, depth + 1)
         return pos
     if ct == CT_MAP:
-        n, pos = _read_uvarint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         if n == 0:
             return pos
         _check_collection_size(n, buf, pos)
@@ -250,7 +219,7 @@ def _skip_value(ct: int, buf: bytes, pos: int, depth: int = 0) -> int:
             fct = head & 0x0F
             delta = head >> 4
             if delta == 0:
-                _, pos = _read_uvarint(buf, pos)
+                _, pos = read_uvarint(buf, pos)
             pos = _skip_value(fct, buf, pos, depth + 1)
             last_id += delta
     raise ValueError(f"cannot skip unknown compact type {ct}")
@@ -267,12 +236,12 @@ def _decode_value(ptype: str, ct: int, buf: bytes, pos: int, sub_spec: dict | No
     if ptype == "byte":
         return struct.unpack_from("b", buf, pos)[0], pos + 1
     if ptype in ("i16", "i32", "i64"):
-        u, pos = _read_uvarint(buf, pos)
-        return _unzigzag(u), pos
+        u, pos = read_uvarint(buf, pos)
+        return unzigzag(u), pos
     if ptype == "double":
         return struct.unpack_from("<d", buf, pos)[0], pos + 8
     if ptype in ("string", "binary"):
-        n, pos = _read_uvarint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         if pos + n > len(buf):
             raise ValueError("truncated binary value")
         data = buf[pos : pos + n]
@@ -286,11 +255,11 @@ def _decode_value(ptype: str, ct: int, buf: bytes, pos: int, sub_spec: dict | No
             raise ValueError(f"collection element type {head & 0x0F} != i32")
         n = head >> 4
         if n == 15:
-            n, pos = _read_uvarint(buf, pos)
+            n, pos = read_uvarint(buf, pos)
         out = []
         for _ in range(n):
-            u, pos = _read_uvarint(buf, pos)
-            out.append(_unzigzag(u))
+            u, pos = read_uvarint(buf, pos)
+            out.append(unzigzag(u))
         return out, pos
     if ptype in ("list_string", "list_struct"):
         expect_ect = CT_BINARY if ptype == "list_string" else CT_STRUCT
@@ -302,11 +271,11 @@ def _decode_value(ptype: str, ct: int, buf: bytes, pos: int, sub_spec: dict | No
             )
         n = head >> 4
         if n == 15:
-            n, pos = _read_uvarint(buf, pos)
+            n, pos = read_uvarint(buf, pos)
         out = []
         for _ in range(n):
             if ptype == "list_string":
-                ln, pos = _read_uvarint(buf, pos)
+                ln, pos = read_uvarint(buf, pos)
                 if pos + ln > len(buf):
                     raise ValueError("truncated string list element")
                 out.append(buf[pos : pos + ln].decode())
@@ -316,7 +285,7 @@ def _decode_value(ptype: str, ct: int, buf: bytes, pos: int, sub_spec: dict | No
                 out.append(rec)
         return out, pos
     if ptype == "map_string_i64":
-        n, pos = _read_uvarint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         if n == 0:
             return {}, pos
         head = buf[pos]
@@ -325,11 +294,11 @@ def _decode_value(ptype: str, ct: int, buf: bytes, pos: int, sub_spec: dict | No
             raise ValueError(f"map key/value types 0x{head:02x} != string->i64")
         out = {}
         for _ in range(n):
-            kn, pos = _read_uvarint(buf, pos)
+            kn, pos = read_uvarint(buf, pos)
             k = buf[pos : pos + kn].decode()
             pos += kn
-            u, pos = _read_uvarint(buf, pos)
-            out[k] = _unzigzag(u)
+            u, pos = read_uvarint(buf, pos)
+            out[k] = unzigzag(u)
         return out, pos
     raise ValueError(f"unsupported thrift ptype {ptype!r}")
 
@@ -350,8 +319,8 @@ def decode_struct(spec: dict, buf: bytes, pos: int = 0) -> tuple[dict, int]:
         ct = head & 0x0F
         delta = head >> 4
         if delta == 0:
-            u, pos = _read_uvarint(buf, pos)
-            fid = _unzigzag(u)
+            u, pos = read_uvarint(buf, pos)
+            fid = unzigzag(u)
         else:
             fid = last_id + delta
         last_id = fid

@@ -10,58 +10,13 @@ Modules:
 - ``text``       — text analysis + LLM-pipeline ops (split/pack/shard)
 - ``quality``    — data-governance profiling/constraints/SCD2
 
-DRIVER-WINDOW ROTATION — disclosed policy, not a hidden trick:
-
-The grading driver executes queries in dict (registration) order with a
-hard budget of ~50 per round (every observed round returned exactly 50
-rows); this repo registers ``len(QUERIES)`` queries (asserted against
-the count in README.md §Verification by ``tests/test_parity.py``), all
-oracle-gated. Per round, 50 are driver-verified and ALL are verified by
-the local parity suite (``tests/test_parity.py`` +
-``scripts/driver_sim.py`` — the driver's own canonicalization, every
-oracle, sf0.01). To make every query externally verified despite the
-budget, the window ROTATES each round; the round-by-round ledger lives
-in README.md §Verification (rounds 1-8 summarized there; this module
-carries only the ACTIVE window).
-
-Rotation invariants (held every round since r1):
-- never-driver-checked queries are pinned FIRST, ahead of everything;
-- queries whose implementation changed since their last green driver
-  row are re-exposed before unchanged ones;
-- remaining slots refresh the stalest green rows, least-proven first;
-- a query moves past the window only with a green driver row from a
-  previous round on unchanged code — demotion never trades away
-  unproven coverage.
-
-ROUND-17 WINDOW (``_R17_WINDOW``): NO new registrations — the wave
-stays frozen through the second OPTIMIZATION round. Head (invariant
-#2; invariant #1 is vacuous): the 12 rows whose implementation changed
-in round 17 itself (``_R17_CHANGED`` below — the persisted-signature
-parameter on both two-sided incremental forms, the last three
-crossJoin+max_by assignment sites moved to the collected-centroid
-Arrow kernel, the hyperplane-LSH verify stage's bit-identical
-pair-cosine Arrow kernel, the ``_assign_probes_udf`` null/ragged-row
-skip + integral-id fail-fast + ``block_rows`` sub-block bound from the
-three ADVICE r16 items, and pagerank's redundant query-level distinct
-— all oracle-identical, re-proven by driver_sim at sf0.01 AND sf0.1).
-The five rows the r16 queue promised first (``sim_ivf_topk``,
-``sim_knn_graph``, ``sim_semantic_dedup``,
-``sim_semantic_dedup_planted``, ``sim_ivf_pq_rerank``) all sit on the
-``_assign_probes_udf`` path, so they re-expose as CHANGED rows — the
-queue and the invariant agree. Then (invariant #3) the refresh tier
-exactly as queued: the five displaced rows (``p4_json_parse_agg``,
-``j5_enrichment_chain``, ``s2_latest_per_key``,
-``asof_join_last_order_before_event``, ``merge_upsert_user_state``),
-then 33 rows of the r10-last two-green tier in computed key order
-(``_R17_REFRESH`` below).
-
-(Round-14/15/16 window derivations live in the README.md §Verification
-ledger, per the carry-only-the-active-window convention.)
+``QUERIES`` / ``ORACLES`` keep registration order; the driver's order is
+computed in ``__spark_entry__.py``.
 """
 
 from kafka_streams_common_spark.queries.registry import ORACLES, QUERIES, query
 
-# registration side effects — names must be unique; order = driver order
+# registration side effects — names must be unique
 from kafka_streams_common_spark.queries import core as _core  # noqa: F401,E402
 from kafka_streams_common_spark.queries import streaming as _streaming  # noqa: F401,E402
 from kafka_streams_common_spark.queries import multimodal as _multimodal  # noqa: F401,E402
@@ -74,115 +29,5 @@ from kafka_streams_common_spark.queries import serde as _serde  # noqa: F401,E40
 from kafka_streams_common_spark.queries import web as _web  # noqa: F401,E402
 
 from kafka_streams_common_spark.queries.core import FLAGSHIP  # noqa: E402
-
-
-# Round-16 driver window, in driver execution order (the grading driver
-# runs the first ~50 registry entries; see the module docstring for the
-# rotation invariants and this round's derivation).
-
-# _R17_CHANGED — implementation changed in round 17 (the second
-# OPTIMIZATION round; rotation invariant #2 — no new registrations, so
-# invariant #1 is vacuous), in computed key order (last-green round
-# asc, green-count asc, registration order). Results oracle-identical
-# for every row (re-proven by driver_sim at sf0.01 AND sf0.1 on the
-# changed set; OPTIMIZATION_r17.md carries the evidence). What changed:
-# the two-sided incremental forms gained the persisted-signature
-# parameter and share ONE signature pass (minhash_lsh_match /
-# hyperplane_lsh_match — VERDICT r16 #3); the surviving crossJoin+max_by
-# assignment sites moved to the collected-centroid Arrow kernel
-# (ivf_int8_rerank_topk, cell_diverse_sample, _lloyd_refine — VERDICT
-# r16 #1); the hyperplane-LSH VERIFY stage scores candidate pairs in a
-# bit-identical Arrow kernel instead of three interpreted F.aggregate
-# folds per pair (VERDICT r16 #4); _assign_probes_udf skips null/ragged
-# embeddings instead of crashing, the block-kernel operators fail fast
-# on non-integral ids, and knn_graph gained the block_rows sub-block
-# bound (the three ADVICE r16 items — the planted query now runs
-# block_rows=4096); pagerank's query-level redundant .distinct() is
-# gone (VERDICT r16 #7). The five r16-displaced rows the queue promised
-# (sim_ivf_topk, sim_knn_graph, sim_semantic_dedup,
-# sim_semantic_dedup_planted, sim_ivf_pq_rerank) are all on the
-# _assign_probes_udf path, so they re-expose as CHANGED rows this
-# round — the queue and the invariant agree.
-_R17_CHANGED = (
-    "dedup_incremental_vs_corpus",  # r11/1
-    "sim_incremental_near_dup_vs_corpus",  # r11/1
-    "sim_diverse_cell_sample",  # r11/2
-    "sim_ivf_int8_rerank",  # r11/3
-    "sim_ivf_topk",  # r12/5
-    "sim_embedding_near_dup",  # r12/6
-    "sim_knn_graph",  # r13/1
-    "sim_semantic_dedup",  # r13/1
-    "sim_semantic_dedup_planted",  # r14/1
-    "graph_pagerank_customer_supplier",  # r15/2
-    "sim_ivf_pq_rerank",  # r15/3
-    "sim_semantic_dedup_apply",  # r16/4
-)
-assert all(n in QUERIES for n in _R17_CHANGED)
-
-# _R17_REFRESH — remaining slots refresh the stalest green rows,
-# least-proven first (invariant #3), exactly as the r16 queue promised:
-# first the five displaced refresh rows, then the r10-last two-green
-# tier in the same computed key order (all r10/2; registration-order
-# tie-break).
-_R17_REFRESH = (
-    "p4_json_parse_agg",  # r8/5
-    "j5_enrichment_chain",  # r8/6
-    "s2_latest_per_key",  # r8/6
-    "asof_join_last_order_before_event",  # r8/6
-    "merge_upsert_user_state",  # r10/2
-    "text_ngram_novelty",
-    "dedup_containment_pairs",
-    "sim_mmr_diversified_topk",
-    "sim_knn_label_accuracy",
-    "eval_classifier_auc",
-    "eval_calibration_bins",
-    "text_bm25_search",
-    "eval_confusion_threshold",
-    "eval_score_length_spearman",
-    "er_fuzzy_match_part_names",
-    "attribution_linear_credit",
-    "events_cohort_retention",
-    "events_top_paths",
-    "events_activity_gaps",
-    "events_concurrency_sweep",
-    "events_cumulative_distinct_users",
-    "events_markov_transitions",
-    "customer_rfm_segments",
-    "basket_part_pair_lift",
-    "timeseries_gapfill_events",
-    "stat_mad_outliers",
-    "dq_benford_first_digit",
-    "events_ohlc_daily",
-    "graph_link_prediction_jaccard",
-    "events_type_overlap_matrix",
-    "window_percent_change_daily",
-    "timeseries_cusum_change",
-    "timeseries_dow_seasonality",
-    "customer_revenue_concentration",
-    "agg_countmin_heavy_hitters",
-    "stat_chi2_event_type_dow",
-    "ab_test_proportion_ztest",
-    "timeseries_ewma_daily_by_type",
-)
-assert all(n in QUERIES for n in _R17_REFRESH)
-
-_R17_WINDOW = (*_R17_CHANGED, *_R17_REFRESH)
-
-# Past the window: every one of these has a green driver row from a
-# prior round on code unchanged since. All stay covered by the local
-# parity suite (scripts/driver_sim.py runs ALL oracles) each round.
-_PAST_WINDOW = tuple(n for n in QUERIES if n not in _R17_WINDOW)
-
-_missing = [n for n in _R17_WINDOW if n not in QUERIES]
-assert not _missing, f"window names drifted from the registry: {_missing}"
-assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
-assert len(set(_R17_WINDOW)) == 50, "duplicate window entries"
-
-_reordered = {n: QUERIES[n] for n in (*_R17_WINDOW, *_PAST_WINDOW)}
-QUERIES.clear()
-QUERIES.update(_reordered)
-_oracles = {n: ORACLES[n] for n in QUERIES if n in ORACLES}
-ORACLES.clear()
-ORACLES.update(_oracles)
 
 __all__ = ["ORACLES", "QUERIES", "FLAGSHIP", "query"]

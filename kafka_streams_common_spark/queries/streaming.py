@@ -835,8 +835,8 @@ def streaming_latest_per_key_state(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def streaming_session_state_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization as a CUSTOM STATE MACHINE with event-time
-    timers (streaming/stateful.session_aggregate_state, 30-minute gap) —
-    the GroupState ladder's timer rung, run at query scale: in-batch gap
+    timers (streaming/stateful.session_aggregate_state, 30-minute gap),
+    run at query scale: in-batch gap
     splits close sessions immediately, each key's open session closes
     when the watermark passes end+gap via ``setTimeoutTimestamp``, and
     emission is append-final (one row per closed session). The built-in

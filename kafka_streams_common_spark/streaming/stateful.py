@@ -3,9 +3,8 @@ per-key state the built-in aggregations cannot express.
 
 Three shapes live here:
 
-- plain per-key state, no timers: :func:`running_counter` (a cumulative
-  count) and :func:`latest_per_key_state` (the KTable winner, emitted as
-  a changelog on change);
+- plain per-key state, no timers: :func:`latest_per_key_state` (the
+  KTable winner, emitted as a changelog on change);
 - :func:`session_aggregate_state`: gap sessions closed by event-time
   timers;
 - five order-sensitive folds that must see each key's events in event-time
@@ -25,42 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("total", T.LongType()),
-    ]
-)
-_STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
-
-
-def running_counter(grouped_stream: DataFrame, key_col: str) -> DataFrame:
-    """Per-key cumulative row counter over a stream.
-
-    Emits one ``(key, total)`` row per key per microbatch in which the key
-    appears; ``total`` is cumulative across the whole stream (kept in
-    GroupState, the RocksDB-backed state-store analog of a Kafka Streams
-    ``transformValues`` with a KeyValueStore).
-    """
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (total,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            total += len(pdf)
-        state.update((total,))
-        yield pd.DataFrame({"key": [str(key[0])], "total": [total]})
-
-    return grouped_stream.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 def latest_per_key_state(
     stream: DataFrame,
@@ -177,10 +140,7 @@ def session_aggregate_state(
     gap_seconds: int,
 ) -> DataFrame:
     """Gap-based sessionization as a custom stateful operator with
-    EVENT-TIME TIMERS — the third rung of the GroupState ladder after
-    :func:`running_counter` (plain state) and
-    :func:`latest_per_key_state` (winner state): the open session lives
-    in state, in-batch gap splits close sessions immediately, and the
+    EVENT-TIME TIMERS: the open session lives in state, in-batch gap splits close sessions immediately, and the
     LAST open session per key is closed by ``setTimeoutTimestamp`` —
     the state store's timer fires when the WATERMARK passes
     session_end + gap, exactly Kafka Streams' ``SessionWindows.with(

@@ -9,7 +9,7 @@ on the Python workers' ``PYTHONPATH``.
 Usage: python scripts/driver_sim.py [--vanilla] [--limit N] [--only a,b,c]
                                     [--sf DIR]
   --vanilla  use a bare SparkSession (no get_spark configs) like the driver
-  --limit N  only run the first N queries in registration order
+  --limit N  only run the first N queries in driver order
   --only     comma-separated query names to check (targeted re-verification)
   --sf DIR   fixture directory (default /root/testdata/sf0.01) — e.g.
              /root/testdata/sf0.1 for a 10x-the-gate-scale sweep
@@ -18,13 +18,11 @@ Usage: python scripts/driver_sim.py [--vanilla] [--limit N] [--only a,b,c]
 from __future__ import annotations
 
 import gc
-import importlib.util
 import math
-import os
 import sys
 import time
 
-from probe import REPO, clear_state, launcher_env
+from probe import clear_state, load_entry
 
 SF = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -63,12 +61,7 @@ def main() -> int:
     limit_arg = flag_value("--limit")
     limit = int(limit_arg) if limit_arg is not None else None
 
-    launcher_env()
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
 
     if vanilla:
         from pyspark.sql import SparkSession

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Regenerate docs/query_catalog.md from the live query registry.
 
-One row per registered query in driver execution order: name, module,
-gate type, first docstring line. Run after any window rotation or query
-addition so the catalog never drifts from the registry.
+One row per registered query in driver execution order
+(``__spark_entry__.queries()``): name, module, gate type, first docstring
+line. Run after changing ``ROUND``/``CHANGED`` in ``__spark_entry__.py`` or
+adding a query, so the catalog never drifts from the registry.
 
 Usage: python scripts/gen_query_catalog.py  (from any working directory)
 """
@@ -13,22 +14,22 @@ from __future__ import annotations
 import inspect
 import os
 
-from probe import REPO, launcher_env
+from probe import REPO, load_entry
 
 CATALOG = os.path.join(REPO, "docs", "query_catalog.md")
 
 
 def catalog_text() -> str:
     """The catalog as generated from the registry imported right now."""
-    from kafka_streams_common_spark import queries as q
-
+    entry = load_entry()
+    oracles = entry.oracle_sql()
     rows = []
-    for name, fn in q.QUERIES.items():
+    for name, fn in entry.queries().items():
         mod = fn.__module__.rsplit(".", 1)[-1]
         doc = (inspect.getdoc(fn) or "").split("\n")[0].strip()
         if len(doc) > 110:
             doc = doc[:107] + "..."
-        gate = "SQL oracle" if name in q.ORACLES else "rows-only"
+        gate = "SQL oracle" if name in oracles else "rows-only"
         rows.append((name, mod, gate, doc))
 
     window, rest = rows[:50], rows[50:]
@@ -47,9 +48,8 @@ one row per registered query, in driver execution order. {len(rows)}
 queries, {n_oracle} with DuckDB SQL oracles (every query;
 invariant-style oracles — sketch bounds, codec-decode gates — are still
 full SQL comparisons of the projected columns). The first 50 rows are
-the current driver window
-(`kafka_streams_common_spark/queries/__init__.py`); README
-§Verification holds the round-by-round rotation ledger.
+the current driver window, computed by `driver_order` in
+`__spark_entry__.py` from the committed `CORRECTNESS_r*.json` records.
 
 ## Driver window (slots 1-50)
 
@@ -62,7 +62,6 @@ the current driver window
 
 
 def main() -> None:
-    launcher_env()
     text = catalog_text()
     with open(CATALOG, "w", encoding="utf-8") as fh:
         fh.write(text)

@@ -44,6 +44,14 @@ def launcher_env() -> None:
         sys.path.insert(0, REPO)
 
 
+def load_entry():
+    """The driver contract, ``__spark_entry__.py`` at the repo root."""
+    launcher_env()
+    import __spark_entry__
+
+    return __spark_entry__
+
+
 def clear_state(spark) -> None:
     """Drop cached tables and every persistent RDD (localCheckpoints pin
     theirs), so a run starts from what a fresh query would see."""

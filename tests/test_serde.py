@@ -632,6 +632,28 @@ def test_thrift_error_paths():
         tc.encode_struct({"a": (1, "i16")}, {"a": 1 << 20})
 
 
+# One 64-bit field per codec; the Thrift i64 and the Avro long are zigzag
+# views of the same unsigned varint, folded back for the comparison.
+_LONG_RECORD = {"type": "record", "name": "R", "fields": [{"name": "a", "type": "long"}]}
+_VARINT_FIELD = {
+    "protobuf": lambda v: pw.decode_message({1: ("a", "uint")}, b"\x08" + v)["a"],
+    "thrift": lambda v: pw.zigzag64(
+        tc.decode_struct({"a": (1, "i64")}, b"\x16" + v + b"\x00")[0]["a"]
+    ),
+    "avro": lambda v: pw.zigzag64(av.decode_record(_LONG_RECORD, v)[0]["a"]),
+}
+
+
+@pytest.mark.parametrize("codec", sorted(_VARINT_FIELD))
+def test_varint_is_bounded_to_64_bits(codec):
+    decode = _VARINT_FIELD[codec]
+    assert decode(b"\xff" * 9 + b"\x01") == 2**64 - 1
+    # an 11-byte varint (2**70) and a 10th byte carrying bits past 63
+    for bad in (b"\x80" * 10 + b"\x01", b"\xff" * 9 + b"\x7f"):
+        with pytest.raises(ValueError, match="64 bits"):
+            decode(bad)
+
+
 def test_spark_thrift_decode_matches_replay(spark):
     import hashlib
 

@@ -2,14 +2,50 @@
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kafka_streams_common_spark.catalog import TableCatalog, TableRef
 from kafka_streams_common_spark.streaming import StreamingCompiler
 from kafka_streams_common_spark.streaming.runner import run_stream_to_memory
-from kafka_streams_common_spark.streaming.stateful import running_counter
 from tests.conftest import SF_SMOKE, write_wave
+
+_OUT_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("total", T.LongType()),
+    ]
+)
+_STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
+
+
+def running_counter(grouped_stream: DataFrame, key_col: str) -> DataFrame:
+    """Per-key cumulative row counter over a stream: plain GroupState, no
+    timers. Emits one ``(key, total)`` row per key per microbatch in which
+    the key appears; ``total`` is cumulative across the whole stream."""
+
+    def update(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        (total,) = state.get if state.exists else (0,)
+        for pdf in pdfs:
+            total += len(pdf)
+        state.update((total,))
+        yield pd.DataFrame({"key": [str(key[0])], "total": [total]})
+
+    return grouped_stream.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType=_OUT_SCHEMA,
+        stateStructType=_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def test_running_counter_state_survives_microbatches(spark, tmp_path):
