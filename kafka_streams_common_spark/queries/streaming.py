@@ -825,33 +825,29 @@ def streaming_latest_per_key_state(spark: SparkSession, sf_dir: str) -> DataFram
              max(t) AS session_end_us,
              CAST(count(*) AS BIGINT) AS n_events
       FROM g GROUP BY user_id, sid
-    ),
-    k AS (SELECT key, max(session_end_us) AS last_end FROM s GROUP BY key)
+    )
     SELECT s.key, s.session_start_us, s.session_end_us, s.n_events
-    FROM s JOIN k USING (key) CROSS JOIN m
-    WHERE s.session_end_us < k.last_end
-       OR s.session_end_us + 1800000000 + 1000000 < m.mx - 3600000000
+    FROM s CROSS JOIN m
+    WHERE s.session_end_us + 1800000000 + 1000000 < m.mx - 3600000000
     """,
 )
 def streaming_session_state_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization as a CUSTOM STATE MACHINE with event-time
     timers (streaming/stateful.session_aggregate_state, 30-minute gap),
-    run at query scale: in-batch gap
-    splits close sessions immediately, each key's open session closes
-    when the watermark passes end+gap via ``setTimeoutTimestamp``, and
-    emission is append-final (one row per closed session). The built-in
-    ``session_window`` aggregation expresses the same result
-    declaratively (``session_window_per_user``); this path exists for
-    the semantics the built-in cannot host — per-session state machines,
-    emission policies, enrichment carried across a session.
+    run at query scale: events buffer until the watermark passes them,
+    fold into sessions in event-time order, and each session is emitted
+    once the watermark passes its end + gap, append-final (one row per
+    closed session). The built-in ``session_window`` aggregation
+    expresses the same result declaratively (``session_window_per_user``);
+    this path exists for the semantics the built-in cannot host —
+    per-session state machines, emission policies, enrichment carried
+    across a session.
 
-    Bounded-source equivalence uses the decided region, in two parts:
-    a NON-FINAL session (the key has a later event) is always emitted —
-    its successor's arrival splits it, watermark-independent — and a
-    FINAL session is decided once the final watermark passed its
-    end + gap (1-second margin for millisecond watermark truncation,
-    the streaming outer join's convention). Both the stream output and
-    the oracle filter to exactly that region.
+    Bounded-source equivalence uses the decided region: a session is
+    decided once the final watermark passed its end + gap (1-second
+    margin for millisecond watermark truncation, the streaming outer
+    join's convention). Both the stream output and the oracle filter to
+    exactly that region.
     """
     from pyspark.sql import functions as F
 
@@ -868,28 +864,15 @@ def streaming_session_state_machine(spark: SparkSession, sf_dir: str) -> DataFra
         .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
     )
     streamed = run_stream_to_memory(
-        session_aggregate_state(
-            stream, key_field="user_id", ts_us_field="ts_us",
-            gap_seconds=gap_s,
-        ),
+        session_aggregate_state(stream, gap_seconds=gap_s),
         spark,
         output_mode="append",
     )
-    ev = table(spark, sf_dir, "events")
-    key_max = ev.groupBy(F.col("user_id").alias("__k")).agg(
-        F.unix_micros(F.max("ts")).alias("__key_max_us")
+    closes = streamed.withColumn(
+        "ts_us", F.col("session_end_us") + gap_s * 1_000_000
     )
-    global_max = ev.agg(F.unix_micros(F.max("ts")).alias("__mx"))
-    gap_us = gap_s * 1_000_000
-    decided = (F.col("session_end_us") < F.col("__key_max_us")) | (
-        F.col("session_end_us") + F.lit(gap_us) + F.lit(1_000_000)
-        < F.col("__mx") - F.lit(3_600_000_000)
-    )
-    return (
-        streamed.join(F.broadcast(key_max), F.col("key") == F.col("__k"))
-        .crossJoin(F.broadcast(global_max))
-        .filter(decided)
-        .select("key", "session_start_us", "session_end_us", "n_events")
+    return _decided_region(closes, (table(spark, sf_dir, "events"), "ts")).select(
+        "key", "session_start_us", "session_end_us", "n_events"
     )
 
 
@@ -1287,7 +1270,7 @@ def streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    out = holt_state(stream, alpha=0.5, beta=0.25, key_field="event_type")
+    out = holt_state(stream, alpha=0.5, beta=0.25)
     decided = run_stream_to_memory(out, spark, output_mode="append")
     return _decided_region(decided, (table(spark, sf_dir, "events"), "ts")).select(
         "key", "ts_us", "event_id", "x", "level", "trend", "forecast"
@@ -1354,7 +1337,7 @@ def streaming_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    out = ewma_state(stream, alpha=0.25, key_field="event_type")
+    out = ewma_state(stream, alpha=0.25)
     decided = run_stream_to_memory(out, spark, output_mode="append")
     return _decided_region(decided, (table(spark, sf_dir, "events"), "ts")).select(
         "key", "ts_us", "event_id", "x", "ewma"

@@ -3,8 +3,10 @@ declarative pipelines the batch compiler runs (SURVEY.md §7 Phase 3).
 
 The batch DataFrame expressions ARE the streaming expressions; this package
 adds the roots (readStream sources), the sinks (writeStream / foreachBatch),
-and the one genuinely stateful piece Spark lacks as a primitive: the
-KTable-style latest-per-key changelog materialization.
+the KTable-style latest-per-key changelog materialization, and the custom
+stateful operators Spark lacks as primitives (``stateful``: sessions,
+funnels, quotas, temporal joins and smoothing folds on one event-time
+protocol).
 """
 
 from kafka_streams_common_spark.streaming.runner import (

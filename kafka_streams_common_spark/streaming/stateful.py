@@ -1,19 +1,19 @@
 """Custom stateful streaming operators on ``applyInPandasWithState``:
 per-key state the built-in aggregations cannot express.
 
-Three shapes live here:
+Two shapes live here:
 
 - plain per-key state, no timers: :func:`latest_per_key_state` (the
   KTable winner, emitted as a changelog on change);
-- :func:`session_aggregate_state`: gap sessions closed by event-time
-  timers;
-- five order-sensitive folds that must see each key's events in event-time
+- six order-sensitive folds that must see each key's events in event-time
   order although the stream delivers them out of order:
-  :func:`funnel_state_machine`, :func:`rate_limit_state`,
-  :func:`temporal_asof_state`, :func:`holt_state` and :func:`ewma_state`.
-  They share :func:`_watermark_fold`, which buffers rows in state until
-  the watermark passes them and owns the state layout and the timer; each
-  operator supplies only its schemas and a pure fold.
+  :func:`session_aggregate_state`, :func:`funnel_state_machine`,
+  :func:`rate_limit_state`, :func:`temporal_asof_state`,
+  :func:`holt_state` and :func:`ewma_state`. They share
+  :func:`_watermark_fold`, which buffers rows in state until the
+  watermark passes them and owns the state layout and the timer; each
+  operator supplies only its schemas and a pure fold. Each reads fixed
+  column names, listed in its docstring.
 """
 
 from __future__ import annotations
@@ -116,105 +116,6 @@ def run_latest_per_key_state(
     return final, progress
 
 
-_SESSION_OUT = T.StructType(
-    [
-        T.StructField("key", T.LongType()),
-        T.StructField("session_start_us", T.LongType()),
-        T.StructField("session_end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def session_aggregate_state(
-    stream: DataFrame,
-    key_field: str,
-    ts_us_field: str,
-    gap_seconds: int,
-) -> DataFrame:
-    """Gap-based sessionization as a custom stateful operator with
-    EVENT-TIME TIMERS: the open session lives in state, in-batch gap splits close sessions immediately, and the
-    LAST open session per key is closed by ``setTimeoutTimestamp`` —
-    the state store's timer fires when the WATERMARK passes
-    session_end + gap, exactly Kafka Streams' ``SessionWindows.with(
-    inactivityGap)`` close semantics. Emits one
-    ``(key, session_start_us, session_end_us, n_events)`` row per CLOSED
-    session (append-style — a session row is final when emitted).
-
-    Caller contract: ``stream`` must carry ``withWatermark`` on the
-    event-time column underlying ``ts_us_field`` (event-time timeouts
-    require it), and ``ts_us_field`` is the same instants as bigint
-    microseconds. Sessions still open when a bounded source ends stay in
-    state (their timer never fires) — the same decided-region caveat as
-    stream-stream outer joins; unbounded deployments have no such tail.
-
-    Scale shape: state is one open-session row per ACTIVE key (closed
-    sessions leave state immediately), timers are state-store metadata —
-    no scan, no driver involvement; input streams through per-key Arrow
-    batches.
-    """
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        gap_us = gap_seconds * 1_000_000
-        if state.hasTimedOut:
-            if state.exists:
-                s, e, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "key": [key[0]],
-                        "session_start_us": [s],
-                        "session_end_us": [e],
-                        "n_events": [n],
-                    }
-                )
-            return
-        ts = []
-        for pdf in pdfs:
-            ts.extend(int(x) for x in pdf[ts_us_field])
-        ts.sort()
-        cur = tuple(state.get) if state.exists else None
-        closed = []
-        for t in ts:
-            if cur is None:
-                cur = (t, t, 1)
-            elif t - cur[1] <= gap_us:
-                cur = (cur[0], max(cur[1], t), cur[2] + 1)
-            else:
-                closed.append(cur)
-                cur = (t, t, 1)
-        if cur is not None:
-            state.update(cur)
-            # close the open session when the WATERMARK passes end + gap
-            state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(closed),
-                    "session_start_us": [c[0] for c in closed],
-                    "session_end_us": [c[1] for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=_SESSION_OUT,
-        stateStructType=_SESSION_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
 # Buffered values as plain Python scalars, from pandas input or state
 # arrays alike: a NULL bigint stays None, a NULL double becomes NaN.
 def _long(v):
@@ -243,7 +144,7 @@ def _watermark_fold(
     output_mode: str,
 ) -> DataFrame:
     """Fold each key's rows in event-time order, as the watermark decides
-    them: the one event-time protocol of the buffered stateful operators.
+    them: the one event-time protocol of the six timer-driven operators.
 
     ``buffer`` lists the input columns a row keeps while it waits, as
     ``(column, LongType() | DoubleType())`` pairs; the first is the event
@@ -319,13 +220,67 @@ def _watermark_fold(
     )
 
 
-def funnel_state_machine(
-    stream: DataFrame,
-    n_stages: int,
-    key_field: str = "user_id",
-    ts_us_field: str = "ts_us",
-    stage_field: str = "stage",
-) -> DataFrame:
+def session_aggregate_state(stream: DataFrame, gap_seconds: int) -> DataFrame:
+    """Gap-based sessionization as a custom stateful operator: Kafka
+    Streams' ``SessionWindows.with(inactivityGap)`` on event time. Per
+    ``user_id``, events buffer until the watermark passes them, then fold
+    in event-time order: a session extends while the next event is at
+    most ``gap_seconds`` after its end, else it is emitted and a new one
+    opens. The open session is emitted once the watermark passes
+    end + gap, when no admitted event can still join it. Emits one
+    ``(key, session_start_us, session_end_us, n_events)`` row per closed
+    session, in append mode: a session row is final when emitted.
+
+    Input contract: a watermarked stream of ``(user_id, ts, ts_us)``,
+    ``ts_us`` the event time as bigint microseconds (keep the watermarked
+    ``ts`` in the projection; event-time timeouts resolve the watermark
+    from it). Sessions still open when a bounded source ends stay in
+    state: the decided-region caveat of stream-stream outer joins.
+
+    State per key: the open session plus the events inside the watermark
+    lag; a key with neither has its state row removed.
+    """
+    gap_us = gap_seconds * 1_000_000
+    out_schema = T.StructType(
+        [
+            T.StructField("key", T.LongType()),
+            T.StructField("session_start_us", T.LongType()),
+            T.StructField("session_end_us", T.LongType()),
+            T.StructField("n_events", T.LongType()),
+        ]
+    )
+
+    def fold(key, carry, rows, wm_us):
+        closed = []
+        for (t,) in rows:
+            if carry is None:
+                carry = (t, t, 1)
+            elif t - carry[1] <= gap_us:
+                carry = (carry[0], t, carry[2] + 1)
+            else:
+                closed.append((key[0], *carry))
+                carry = (t, t, 1)
+        if carry is not None and carry[1] + gap_us < wm_us:
+            closed.append((key[0], *carry))
+            carry = None
+        return carry, closed, None if carry is None else carry[1] + gap_us
+
+    return _watermark_fold(
+        stream,
+        "user_id",
+        [("ts_us", T.LongType())],
+        [
+            T.StructField("start_us", T.LongType()),
+            T.StructField("end_us", T.LongType()),
+            T.StructField("n", T.LongType()),
+        ],
+        fold,
+        out_schema,
+        "append",
+    )
+
+
+def funnel_state_machine(stream: DataFrame, n_stages: int) -> DataFrame:
     """STREAMING k-step funnel — the strict-sequential-min semantics of
     ``operators.funnel.funnel_conversion`` computed incrementally, and
     the reason this needs a custom state machine rather than a chain of
@@ -337,7 +292,7 @@ def funnel_state_machine(
     timestamps in global event-time order — at that point no earlier
     event can still arrive, so every fold decision is final.
 
-    Input contract: watermarked stream of ``(key, ts_us, stage)`` where
+    Input contract: watermarked stream of ``(user_id, ts_us, stage)`` where
     ``stage`` ∈ 1..n_stages is the funnel stage the event satisfies
     (map the predicates upstream; non-stage events filtered out). The
     WATERMARKED column itself must survive the caller's projection —
@@ -380,8 +335,8 @@ def funnel_state_machine(
 
     return _watermark_fold(
         stream,
-        key_field,
-        [(ts_us_field, T.LongType()), (stage_field, T.LongType())],
+        "user_id",
+        [("ts_us", T.LongType()), ("stage", T.LongType())],
         [T.StructField("t", T.ArrayType(T.LongType()))],
         fold,
         out_schema,
@@ -390,12 +345,7 @@ def funnel_state_machine(
 
 
 def rate_limit_state(
-    stream: DataFrame,
-    n_per_window: int,
-    window_us: int,
-    key_field: str = "user_id",
-    ts_us_field: str = "ts_us",
-    id_field: str = "event_id",
+    stream: DataFrame, n_per_window: int, window_us: int
 ) -> DataFrame:
     """STREAMING per-key quota enforcement: admit at most ``n_per_window``
     events per key per tumbling window of ``window_us`` microseconds,
@@ -407,8 +357,9 @@ def rate_limit_state(
     so — like the streaming funnel — events buffer in state until the
     watermark passes them, then fold in global (ts, id) event-time
     order; at that point every earlier same-window event has already
-    folded, making each admit/reject decision final. Emits admitted
-    events in APPEND mode: ``(key, id, ts_us, window_start_us)``.
+    folded, making each admit/reject decision final. Input: a
+    watermarked stream of ``(user_id, ts, ts_us, event_id)``. Emits
+    admitted events in APPEND mode: ``(key, id, ts_us, window_start_us)``.
 
     State per key: admitted-count per OPEN window plus the buffered
     events inside the watermark lag. Windows whose end the watermark has
@@ -456,8 +407,8 @@ def rate_limit_state(
 
     return _watermark_fold(
         stream,
-        key_field,
-        [(ts_us_field, T.LongType()), (id_field, T.LongType())],
+        "user_id",
+        [("ts_us", T.LongType()), ("event_id", T.LongType())],
         [
             T.StructField("win_starts", T.ArrayType(T.LongType())),
             T.StructField("win_counts", T.ArrayType(T.LongType())),
@@ -469,10 +420,7 @@ def rate_limit_state(
     )
 
 
-def temporal_asof_state(
-    stream: DataFrame,
-    key_field: str = "key",
-) -> DataFrame:
+def temporal_asof_state(stream: DataFrame) -> DataFrame:
     """STREAMING temporal (backward as-of) join — the Flink
     temporal-table join Spark has no built-in for: each LEFT event is
     enriched with the latest RIGHT version whose event time is ≤ the
@@ -526,7 +474,7 @@ def temporal_asof_state(
                 # carried version must not regress it
                 if last_ts is None or (t, i) >= (last_ts, last_id):
                     last_ts, last_id, last_rkey, last_rval = t, i, rk, rv
-            elif t > evict_wm:  # else: left beyond an earlier fold, late-drop
+            elif t >= evict_wm:  # else: left beyond an earlier fold, late-drop
                 emitted.append((key[0], i, t, last_rkey, last_rval,
                                 last_ts if last_rkey is not None else None))
         carry = (last_ts, last_id, last_rkey, last_rval, max(evict_wm, wm_us))
@@ -534,7 +482,7 @@ def temporal_asof_state(
 
     return _watermark_fold(
         stream,
-        key_field,
+        "key",
         [
             ("ts_us", T.LongType()),
             ("side", T.LongType()),
@@ -556,13 +504,7 @@ def temporal_asof_state(
 
 
 def holt_state(
-    stream: DataFrame,
-    alpha: float = 0.5,
-    beta: float = 0.25,
-    key_field: str = "event_type",
-    ts_us_field: str = "ts_us",
-    id_field: str = "event_id",
-    value_field: str = "value",
+    stream: DataFrame, alpha: float = 0.5, beta: float = 0.25
 ) -> DataFrame:
     """STREAMING Holt linear-trend smoothing — the
     ``operators/timeseries.py: holt_linear`` recurrence computed
@@ -574,7 +516,8 @@ def holt_state(
     (the buffered watermark fold): the only difference is TWO carried
     scalars instead of one — still the O(1)-per-key KTable-aggregate
     footprint, never removed because any later event continues the
-    chain.
+    chain. Input: a watermarked stream of ``(event_type, ts, ts_us,
+    event_id, value)``, as for :func:`ewma_state`.
 
     Determinism contract: both update expressions are evaluated in
     float64 in exactly the shapes the batch kernel and the
@@ -613,11 +556,11 @@ def holt_state(
 
     return _watermark_fold(
         stream,
-        key_field,
+        "event_type",
         [
-            (ts_us_field, T.LongType()),
-            (id_field, T.LongType()),
-            (value_field, T.DoubleType()),
+            ("ts_us", T.LongType()),
+            ("event_id", T.LongType()),
+            ("value", T.DoubleType()),
         ],
         [
             T.StructField("lv", T.DoubleType()),
@@ -630,14 +573,7 @@ def holt_state(
     )
 
 
-def ewma_state(
-    stream: DataFrame,
-    alpha: float = 0.25,
-    key_field: str = "event_type",
-    ts_us_field: str = "ts_us",
-    id_field: str = "event_id",
-    value_field: str = "value",
-) -> DataFrame:
+def ewma_state(stream: DataFrame, alpha: float = 0.25) -> DataFrame:
     """STREAMING EWMA — the ``operators/timeseries.py: ewma`` recurrence
     computed incrementally on a live stream: per key, every event's
     smoothed value is ``a·x + (1−a)·prev`` over the sequence in GLOBAL
@@ -647,6 +583,9 @@ def ewma_state(
     the funnel/rate-limiter buffered-reorder convention: once the
     watermark passes an event no earlier event can arrive, so its folded
     EWMA is final and is emitted exactly once.
+
+    Input: a watermarked stream of ``(event_type, ts, ts_us, event_id,
+    value)``; the key is ``event_type``.
 
     State per key = ONE carried scalar (the running EWMA) + the buffer
     inside the watermark lag (bounded by delay × per-key rate). The
@@ -684,11 +623,11 @@ def ewma_state(
 
     return _watermark_fold(
         stream,
-        key_field,
+        "event_type",
         [
-            (ts_us_field, T.LongType()),
-            (id_field, T.LongType()),
-            (value_field, T.DoubleType()),
+            ("ts_us", T.LongType()),
+            ("event_id", T.LongType()),
+            ("value", T.DoubleType()),
         ],
         [T.StructField("prev", T.DoubleType()), T.StructField("n", T.LongType())],
         fold,

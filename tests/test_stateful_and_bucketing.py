@@ -165,10 +165,11 @@ def test_latest_per_key_state_equals_batch_and_bounds_state(spark, tmp_path):
 
 
 def test_session_aggregate_state_event_time_timers(spark, tmp_path):
-    """Custom sessionization with EVENT-TIME TIMERS: in-batch gap splits
-    close sessions immediately; the last open session per key closes when
-    the WATERMARK passes end+gap (setTimeoutTimestamp); sessions still
-    open at stream end are never emitted (the decided-region contract)."""
+    """Custom sessionization with EVENT-TIME TIMERS: events buffer until
+    the watermark passes them, a session closes when the WATERMARK passes
+    end+gap, and a late but admitted event joins the session it falls in
+    whatever micro-batch it arrives in; sessions still open at stream end
+    are never emitted (the decided-region contract)."""
     import datetime as dt
     import os
 
@@ -190,9 +191,15 @@ def test_session_aggregate_state_event_time_timers(spark, tmp_path):
         (1, t0 + 120 * sec),
         (2, t0),
     ], schema)
-    # wave 1, hours later: advances the watermark far past wave 0 so the
-    # open wave-0 sessions time out; its own sessions stay open forever
-    write_wave(spark, src, 1, [(3, t0 + dt.timedelta(hours=4))], schema)
+    # waves 1-3: user 4's events land one per micro-batch, the last one
+    # 7 s before its predecessor yet inside the 10 s delay, so it is
+    # admitted and bridges the 65 s gap into one session
+    T = t0 + 200 * sec
+    for k, t in enumerate((T, T + 65 * sec, T + 58 * sec), start=1):
+        write_wave(spark, src, k, [(4, t)], schema)
+    # wave 4, hours later: advances the watermark far past the earlier
+    # waves so their open sessions time out; its own stay open forever
+    write_wave(spark, src, 4, [(3, t0 + dt.timedelta(hours=4))], schema)
 
     stream = (
         spark.readStream.schema(schema)
@@ -201,9 +208,7 @@ def test_session_aggregate_state_event_time_timers(spark, tmp_path):
         .withWatermark("ts", "10 seconds")
         .select("user_id", "ts", F.unix_micros("ts").alias("ts_us"))
     )
-    out = session_aggregate_state(
-        stream, key_field="user_id", ts_us_field="ts_us", gap_seconds=60
-    )
+    out = session_aggregate_state(stream, gap_seconds=60)
     name = "sess_probe"
     q = (
         out.writeStream.format("memory")
@@ -224,9 +229,10 @@ def test_session_aggregate_state_event_time_timers(spark, tmp_path):
         for r in spark.table(name).collect()
     }
     assert got == {
-        (1, us(t0), us(t0 + 20 * sec), 3),           # closed by in-batch gap
+        (1, us(t0), us(t0 + 20 * sec), 3),           # split by the gap
         (1, us(t0 + 120 * sec), us(t0 + 120 * sec), 1),  # closed by timer
         (2, us(t0), us(t0), 1),                      # closed by timer
+        (4, us(T), us(T + 65 * sec), 3),             # one session across cuts
         # user 3's session is still open at stream end: not emitted
     }, got
 
@@ -618,7 +624,7 @@ def test_streaming_ewma_out_of_order_across_batches(spark, tmp_path):
             F.unix_micros("ts").alias("ts_us"), "value",
         )
     )
-    out = ewma_state(stream, alpha=0.25, key_field="event_type")
+    out = ewma_state(stream, alpha=0.25)
     name = "ewma_ooo_probe"
     q = (
         out.writeStream.format("memory")
@@ -677,7 +683,7 @@ def test_streaming_holt_out_of_order_across_batches(spark, tmp_path):
             F.unix_micros("ts").alias("ts_us"), "value",
         )
     )
-    out = holt_state(stream, alpha=0.5, beta=0.25, key_field="event_type")
+    out = holt_state(stream, alpha=0.5, beta=0.25)
     name = "holt_ooo_probe"
     q = (
         out.writeStream.format("memory")

@@ -1,16 +1,22 @@
 """Contract of ``streaming.stateful._watermark_fold``, the event-time
-protocol the five buffered stateful operators share. Its ``update``
-function is driven directly with a fake ``GroupState``: no Spark session,
-no stream, every call and its state write visible."""
+protocol the six timer-driven stateful operators share, and micro-batch
+cut invariance for every stateful operator. Each ``update`` function is
+driven directly with a fake ``GroupState``: no Spark session, no stream,
+every call and its state write visible."""
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pandas as pd
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from kafka_streams_common_spark.streaming import stateful
 from kafka_streams_common_spark.streaming.stateful import _watermark_fold
 
 BUFFER = [("ts_us", T.LongType()), ("x", T.DoubleType())]
@@ -55,7 +61,8 @@ class FakeState:
 class FakeStream:
     """Records the one ``groupBy(...).applyInPandasWithState(...)`` call."""
 
-    def __init__(self):
+    def __init__(self, schema=None):
+        self.schema = schema
         self.call = {}
 
     def groupBy(self, key):
@@ -189,3 +196,143 @@ def test_nulls_round_trip_through_the_buffer():
     run(call["func"], state)
     (_, rows, _), = seen[-1:]
     assert rows[0][0] == 20_000 and math.isnan(rows[0][1])
+
+
+# Micro-batch cut invariance (D-Streams: a stream is a series of batch
+# computations whose result matches one batch job over the same input).
+# Every operator reads its columns from one frame: ``a`` doubles as the
+# funnel stage and (odd or even) the as-of side, one id as every id;
+# SCHEMA is the stream schema latest-per-key reads.
+SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("key", "ts_us", "event_id")]
+    + [T.StructField("value", T.DoubleType())]
+)
+OPERATORS = {
+    "session": lambda s: stateful.session_aggregate_state(s, gap_seconds=1),
+    "funnel": lambda s: stateful.funnel_state_machine(s, n_stages=3),
+    "rate_limit": lambda s: stateful.rate_limit_state(s, 2, 1_000_000),
+    "temporal_asof": stateful.temporal_asof_state,
+    "holt": stateful.holt_state,
+    "ewma": stateful.ewma_state,
+    "latest_per_key": lambda s: stateful.latest_per_key_state(
+        s, "key", "ts_us", "event_id"
+    ),
+}
+
+
+def frame(rows):
+    """``(key, ts_us, a, x, id)`` rows as the columns every operator reads."""
+    k, ts, a, x, i = (list(c) for c in zip(*rows))
+    return pd.DataFrame(
+        {"key": k, "ts_us": ts, "event_id": i, "id": i, "stage": a,
+         "side": [v % 2 for v in a], "rkey": i, "rval": x, "value": x}
+    )
+
+
+def canon(v):
+    v = v.item() if hasattr(v, "item") else v
+    return None if v is None or v != v else v
+
+
+def drive(update, timers, batches, delay_ms, final_wm_ms):
+    """Run ``update`` over ``batches`` as Spark runs a stateful operator:
+    each batch's watermark is the previous batches' maximum event time
+    (milliseconds) less the delay, never decreasing; with event-time
+    timeouts, rows below it are dropped, keys with data are called
+    first, then keys without data whose timer the watermark passed. A
+    last batch with no data runs at ``final_wm_ms``. Returns the emitted
+    rows and the admitted ones."""
+    states, emitted, admitted = {}, [], []
+    wm_ms = 0
+
+    def call(key, rows, timed_out):
+        state = states.setdefault(key, FakeState(wm_ms))
+        state.wm_ms, state.hasTimedOut, state.timeout_ms = wm_ms, timed_out, None
+        pdfs = [frame(rows)] if rows else []
+        for pdf in update((key,), iter(pdfs), state):
+            emitted.extend(tuple(map(canon, r)) for r in pdf.itertuples(index=False))
+        if not state.exists:
+            del states[key]
+
+    for n, batch in enumerate([*batches, []]):
+        if n == len(batches) and timers:
+            wm_ms = max(wm_ms, final_wm_ms)
+        live = [r for r in batch if not timers or r[1] >= wm_ms * 1000]
+        admitted += live
+        keys = sorted({r[0] for r in live})
+        for key in keys:
+            call(key, [r for r in live if r[0] == key], False)
+        due = [k for k, s in states.items() if k not in keys
+               and s.timeout_ms is not None and s.timeout_ms < wm_ms]
+        for key in sorted(due):
+            call(key, [], True)
+        if batch:
+            wm_ms = max(wm_ms, max(r[1] for r in batch) // 1000 - delay_ms)
+    return emitted, admitted
+
+
+# (key, ts_us, a, x, rank). Times on a 0.5 s grid meet the watermark and
+# each other exactly; the rank gives the id its high digits, so rows with
+# equal times do not arrive in id order.
+events = st.lists(
+    st.tuples(
+        st.integers(0, 1),
+        st.one_of(
+            st.integers(0, 12).map(lambda t: t * 500_000),
+            st.integers(0, 6_000_000),
+        ),
+        st.integers(1, 3),
+        st.sampled_from([0.5, -1.25, 3.0, 10.0]),
+        st.integers(0, 9),
+    ),
+    max_size=30,
+)
+
+
+@pytest.mark.parametrize("name", sorted(OPERATORS))
+@settings(deadline=None, max_examples=60)
+@given(
+    events=events,
+    cuts=st.lists(st.integers(0, 30), max_size=6),
+    delay_ms=st.sampled_from([0, 500, 2_000, 5_000]),
+)
+# The session counterexample: 150 us is admitted after 5 s under a 5 s
+# delay, and must join the session of 100 us, not the open one at 5 s.
+@example(
+    events=[(7, 100, 1, 0.5, 0), (7, 5_000_000, 1, 0.5, 0), (7, 150, 1, 0.5, 0)],
+    cuts=[2],
+    delay_ms=5_000,
+)
+# A row exactly at the watermark is admitted: an as-of probe there must
+# be emitted, and a session ending one gap before it must not close yet.
+@example(events=[(0, 200_000, 1, 0.5, 0)] * 2, cuts=[1], delay_ms=0)
+@example(
+    events=[(0, 0, 1, 0.5, 0), (1, 1_000_000, 1, 0.5, 0), (0, 1_000_000, 1, 0.5, 0)],
+    cuts=[2],
+    delay_ms=0,
+)
+# Equal-time rows reach the watermark one batch at a time, ids descending.
+@example(
+    events=[(0, 1_000_000, 1, x, r) for x, r in ((0.5, 9), (3.0, 5), (10.0, 1))],
+    cuts=[1, 2],
+    delay_ms=0,
+)
+def test_micro_batch_cuts_do_not_change_the_result(name, events, cuts, delay_ms):
+    """However the input is cut into micro-batches, the rows an operator
+    emits equal one batch over the rows the cut admitted; an update-mode
+    operator is compared by its last emission per key."""
+    rows = [(*e[:4], e[4] * 100 + i) for i, e in enumerate(events)]
+    bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
+    batches = [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
+    stream = FakeStream(SCHEMA)
+    OPERATORS[name](stream)
+    update = stream.call["func"]
+    timers = stream.call["timeoutConf"] == GroupStateTimeout.EventTimeTimeout
+    final_wm_ms = 60_000 + max((r[1] for r in rows), default=0) // 1000
+    got, admitted = drive(update, timers, batches, delay_ms, final_wm_ms)
+    want, _ = drive(update, timers, [admitted], delay_ms, final_wm_ms)
+    if stream.call["outputMode"] == "update":
+        got, want = ({r[0]: r for r in rs} for rs in (got, want))
+    else:
+        got, want = Counter(got), Counter(want)
+    assert got == want
