@@ -10,11 +10,11 @@ NumPy. Parallelism comes from the number of series, state is one scalar per
 key, and no executor ever holds more than one key's series — the same
 contract Structured Streaming's stateful operators make.
 
-Determinism contract: the fold computes ``a*x + (1-a)*prev`` with IEEE
-float64 in exactly that expression shape, which is the same one the DuckDB
-recursive-CTE oracle evaluates — multiply, multiply, add, each correctly
-rounded — so results are bit-identical across engines on any partitioning
-(the per-key scan order is total, fixed by ``order_col``).
+Each recurrence is written once, as a scan with an explicit carry
+(:func:`ewma_scan`, :func:`holt_scan`): the batch kernels here run it over
+a whole sorted series, and the streaming folds in ``streaming/stateful.py``
+continue it across micro-batches from the carry they keep in state. The
+scan's docstring holds the determinism argument for both.
 
 Reference scope note: the reference library (kafka-streams-common) has no
 time-series surface at all; this extends the engine the way its KTable
@@ -29,6 +29,58 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructType
+
+
+def ewma_scan(
+    xs: list[float], alpha: float, prev: float, n: int
+) -> tuple[list[float], tuple[float, int]]:
+    """The EWMA recurrence over ``xs`` in order, continuing from the carry
+    ``(prev, n)`` (``n`` values folded so far; ``(0.0, 0)`` starts a
+    series): the one definition the batch :func:`ewma` kernel and the
+    streaming ``ewma_state`` fold share. Returns the smoothed values and
+    the continued carry.
+
+    Each step is ``a*x + (1.0-a)*prev`` in float64, the expression shape
+    the DuckDB recursive-CTE oracle evaluates (two correctly-rounded
+    multiplies and one add), so every engine, partitioning and micro-batch
+    cut gives bit-identical values with an exactly-representable ``alpha``.
+    """
+    a = float(alpha)
+    out = []
+    for x in xs:
+        prev = x if n == 0 else a * x + (1.0 - a) * prev
+        n += 1
+        out.append(prev)
+    return out, (prev, n)
+
+
+def holt_scan(
+    xs: list[float], alpha: float, beta: float, lv: float, bv: float, n: int
+) -> tuple[list[tuple[float, float]], tuple[float, float, int]]:
+    """Holt's level+trend recurrence over ``xs`` in order, continuing from
+    the carry ``(lv, bv, n)`` (``(0.0, 0.0, 0)`` starts a series): the one
+    definition the batch :func:`holt_linear` kernel and the streaming
+    ``holt_state`` fold share. Returns one ``(level, trend)`` per value
+    and the continued carry.
+
+    Both updates are evaluated in float64 in the shapes the recursive-CTE
+    oracle uses (it re-derives the new level inside the trend update), so
+    results are bit-identical across engines and micro-batch cuts with
+    exactly-representable ``alpha``/``beta``.
+    """
+    a = float(alpha)
+    g = float(beta)
+    out = []
+    for x in xs:
+        if n == 0:
+            lv, bv = x, 0.0
+        else:
+            prev = lv
+            lv = a * x + (1.0 - a) * (prev + bv)
+            bv = g * (lv - prev) + (1.0 - g) * bv
+        n += 1
+        out.append((lv, bv))
+    return out, (lv, bv, n)
 
 
 def ewma(
@@ -60,23 +112,14 @@ def ewma(
     appropriate when series are bounded (per-entity daily rollups), which
     is the case for every pre-aggregated census this engine feeds it.
     """
-    a = float(alpha)
     out_schema = StructType(list(df.schema.fields)).add(out_col, DoubleType())
     cols = list(df.columns) + [out_col]
     sort_cols = [order_col] + list(tiebreak_cols or [])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        vals = pdf[value_col].astype("float64").to_list()
-        out = []
-        prev = 0.0
-        for i, x in enumerate(vals):
-            # same expression shape as the oracle: a*x + (1-a)*prev,
-            # two correctly-rounded multiplies and one add per step
-            prev = x if i == 0 else a * x + (1.0 - a) * prev
-            out.append(prev)
-        pdf = pdf.assign(**{out_col: out})
-        return pdf[cols]
+        out, _ = ewma_scan(pdf[value_col].astype("float64").to_list(), alpha, 0.0, 0)
+        return pdf.assign(**{out_col: out})[cols]
 
     return df.groupBy(*[F.col(c) for c in key_cols]).applyInPandas(
         kernel, out_schema
@@ -101,15 +144,12 @@ def holt_linear(
     ``b_i = beta·(l_i − l_{i−1}) + (1−beta)·b_{i−1}``.
 
     Adds ``level``, ``trend``, and ``forecast`` (= level + trend, the
-    one-step-ahead prediction). Same execution and determinism contract
-    as ``ewma`` above: grouped Arrow kernel, one shuffle on
-    ``key_cols``, float64 in exactly the expression shapes a recursive
-    CTE replays (prefer exactly-representable alpha/beta);
-    ``(key_cols, order_col)`` must be unique unless ``tiebreak_cols``
-    extends the sort to a total order.
+    one-step-ahead prediction). Same execution contract as ``ewma``
+    above: grouped Arrow kernel, one shuffle on ``key_cols``, the
+    :func:`holt_scan` recurrence (prefer exactly-representable
+    alpha/beta); ``(key_cols, order_col)`` must be unique unless
+    ``tiebreak_cols`` extends the sort to a total order.
     """
-    a = float(alpha)
-    g = float(beta)
     out_schema = (
         StructType(list(df.schema.fields))
         .add("level", DoubleType())
@@ -121,25 +161,14 @@ def holt_linear(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        vals = pdf[value_col].astype("float64").to_list()
-        levels, trends = [], []
-        lv = bv = 0.0
-        for i, x in enumerate(vals):
-            if i == 0:
-                lv, bv = x, 0.0
-            else:
-                prev = lv
-                # same expression shapes as the recursive-CTE oracle
-                lv = a * x + (1.0 - a) * (prev + bv)
-                bv = g * (lv - prev) + (1.0 - g) * bv
-            levels.append(lv)
-            trends.append(bv)
-        pdf = pdf.assign(
-            level=levels,
-            trend=trends,
-            forecast=[lv + bv for lv, bv in zip(levels, trends)],
+        out, _ = holt_scan(
+            pdf[value_col].astype("float64").to_list(), alpha, beta, 0.0, 0.0, 0
         )
-        return pdf[cols]
+        return pdf.assign(
+            level=[lv for lv, _ in out],
+            trend=[bv for _, bv in out],
+            forecast=[lv + bv for lv, bv in out],
+        )[cols]
 
     return df.groupBy(*[F.col(c) for c in key_cols]).applyInPandas(
         kernel, out_schema

@@ -760,45 +760,30 @@ def streaming_stream_stream_full_outer_join(
     + "SELECT user_id, event_id, ts, event_type, value, props FROM latest_events",
 )
 def streaming_latest_per_key_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 streaming via a CUSTOM STATEFUL OPERATOR at runtime —
-    ``applyInPandasWithState`` holding one winner row per key and emitting
-    a true changelog on change (streaming/stateful.latest_per_key_state).
-    This is the KTable materialization the reference keeps in RocksDB
-    (``KTableRegistry.java:41-50``), executed through Spark's arbitrary
-    per-key state API rather than the foreachBatch parquet merge that
+    """S2 streaming with the KTable held in the engine's state store —
+    the ``registry.latest_per_key`` aggregation run in update mode, one
+    winner row per key, emitting the keys that changed each micro-batch
+    (streaming/runner.run_latest_per_key_state). This is the KTable
+    materialization the reference keeps in RocksDB
+    (``KTableRegistry.java:41-50``), executed through Spark's streaming
+    aggregation state rather than the foreachBatch parquet merge that
     ``streaming_latest_per_key`` exercises — the two registered paths
-    cover the S2 design ladder from SURVEY §4.2. Timestamps ride through
-    state as ``unix_micros`` (integer, engine-neutral) and are restored on
-    the way out; the update-log compaction is the per-key max over
-    monotone emissions.
+    cover the S2 design ladder from SURVEY §4.2. The update-log
+    compaction is the same ``latest_per_key`` over the emissions.
     """
-    from pyspark.sql import functions as F
-
-    from kafka_streams_common_spark.streaming.stateful import (
+    from kafka_streams_common_spark.streaming.runner import (
         run_latest_per_key_state,
     )
 
     comp = _streaming_compiler(spark, sf_dir)
     stream = comp.stream_source("events").select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_type",
-        "value",
-        "props",
+        "user_id", "event_id", "ts", "event_type", "value", "props"
     )
     final, _progress = run_latest_per_key_state(
-        stream, spark, key_field="user_id", seq_field="ts_us",
+        stream, spark, key_field="user_id", seq_field="ts",
         tiebreak_field="event_id",
     )
-    return final.select(
-        "user_id",
-        "event_id",
-        F.timestamp_micros(F.col("ts_us")).alias("ts"),
-        "event_type",
-        "value",
-        "props",
-    )
+    return final
 
 
 @query(

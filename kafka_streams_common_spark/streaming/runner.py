@@ -13,6 +13,9 @@ Three layers, mirroring SURVEY.md §4.2's staged plan for KTable semantics:
    streaming DataFrame to completion (``processAllAvailable``) into a memory
    sink and return the final result as a batch DataFrame. This is what lets
    streaming queries participate in the driver's DuckDB-oracle check.
+   :func:`run_latest_per_key_state` runs the KTable the same way: the
+   ``registry.latest_per_key`` aggregation in update mode, its per-key
+   winner held in the engine's state store.
 3. :func:`run_changelog_materialization` — the stateful piece
    (S2 streaming): ``foreachBatch`` MERGE of each microbatch into a
    parquet-backed latest-per-key state table (the RocksDB+changelog analog;
@@ -203,6 +206,43 @@ def run_stream_to_memory(
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
+
+
+def run_latest_per_key_state(
+    stream: DataFrame,
+    spark: SparkSession,
+    key_field: str,
+    seq_field: str,
+    tiebreak_field: str,
+    checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, list]:
+    """Materialize a changelog stream as a latest-per-key table held in
+    the engine's state store (KTable/S2 streaming semantics): run
+    :func:`~kafka_streams_common_spark.registry.latest_per_key` over the
+    stream as an update-mode streaming aggregation, one state row per key
+    (the reference's RocksDB-backed KTable, ``KTableRegistry.java:41-50``).
+
+    Each micro-batch emits the keys whose winner changed; the returned
+    batch DataFrame is ``latest_per_key`` over those emissions (the
+    changelog-topic compaction). ``max_by`` over the ``(seq, tiebreak)``
+    total order is associative, so the result does not depend on where
+    micro-batches are cut. Also returns the query's ``recentProgress``
+    for state-size assertions. The ``lpks_*`` temp view is dropped
+    before returning.
+    """
+    name = f"lpks_{uuid.uuid4().hex[:12]}"
+    writer = (
+        latest_per_key(stream, key_field, seq_field, tiebreak_field)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    progress = _drain(spark, writer)
+    final = latest_per_key(spark.table(name), key_field, seq_field, tiebreak_field)
+    spark.catalog.dropTempView(name)
+    return final, progress
 
 
 def run_changelog_materialization(

@@ -1,19 +1,16 @@
 """Custom stateful streaming operators on ``applyInPandasWithState``:
 per-key state the built-in aggregations cannot express.
 
-Two shapes live here:
-
-- plain per-key state, no timers: :func:`latest_per_key_state` (the
-  KTable winner, emitted as a changelog on change);
-- six order-sensitive folds that must see each key's events in event-time
-  order although the stream delivers them out of order:
-  :func:`session_aggregate_state`, :func:`funnel_state_machine`,
-  :func:`rate_limit_state`, :func:`temporal_asof_state`,
-  :func:`holt_state` and :func:`ewma_state`. They share
-  :func:`_watermark_fold`, which buffers rows in state until the
-  watermark passes them and owns the state layout and the timer; each
-  operator supplies only its schemas and a pure fold. Each reads fixed
-  column names, listed in its docstring.
+Six order-sensitive folds that must see each key's events in event-time
+order although the stream delivers them out of order:
+:func:`session_aggregate_state`, :func:`funnel_state_machine`,
+:func:`rate_limit_state`, :func:`temporal_asof_state`, :func:`holt_state`
+and :func:`ewma_state`. They share :func:`_watermark_fold`, which buffers
+rows in state until the watermark passes them and owns the state layout
+and the timer; each operator supplies only its schemas and a pure fold.
+Each reads fixed column names, listed in its docstring. The KTable winner
+needs none of this: it is the engine's own ``latest_per_key`` aggregation
+(``runner.run_latest_per_key_state``).
 """
 
 from __future__ import annotations
@@ -25,95 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-def latest_per_key_state(
-    stream: DataFrame,
-    key_field: str,
-    seq_field: str,
-    tiebreak_field: str,
-) -> DataFrame:
-    """KTable latest-per-key as a custom stateful operator via
-    ``applyInPandasWithState``: one state row per key holding the current
-    winner under the ``(seq, tiebreak)`` total order, emitted on change —
-    a true changelog stream. Runs live in a multi-batch test and in the
-    registered oracle-gated query ``streaming_latest_per_key_state``.
-
-    Caller contract: all columns scalar (project timestamps to
-    ``unix_micros`` first; restore after) so state round-trips through
-    Arrow without engine-specific timestamp semantics. State is one row
-    per distinct key in the state store; emissions per key are monotone
-    in ``(seq, tiebreak)`` by construction. Mirrors
-    ``KTableRegistry.java:41-50`` (the reference's RocksDB-backed KTable).
-    """
-    schema = stream.schema
-    cols = [f.name for f in schema.fields]
-    seq_i, tie_i = cols.index(seq_field), cols.index(tiebreak_field)
-
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        best = tuple(state.get) if state.exists else None
-        changed = False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            top = pdf.sort_values(
-                [seq_field, tiebreak_field], ascending=False
-            ).iloc[0]
-            cand = tuple(
-                x.item() if hasattr(x, "item") else x
-                for x in (top[c] for c in cols)
-            )
-            if best is None or (cand[seq_i], cand[tie_i]) > (
-                best[seq_i],
-                best[tie_i],
-            ):
-                best = cand
-                changed = True
-        if changed:
-            state.update(best)
-            yield pd.DataFrame([best], columns=cols)
-
-    return stream.groupBy(key_field).applyInPandasWithState(
-        update,
-        outputStructType=schema,
-        stateStructType=schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_latest_per_key_state(
-    stream: DataFrame,
-    spark,
-    key_field: str,
-    seq_field: str,
-    tiebreak_field: str,
-    checkpoint_dir: str | None = None,
-):
-    """Drive :func:`latest_per_key_state` to completion; return the final
-    state table as a batch DataFrame (per-key max over the monotone
-    changelog emissions — the Kafka changelog-topic compaction) and the
-    query's last StreamingQueryProgress rows for state-size assertions.
-    Runs through ``runner._drain``; the ``lpks_*`` temp view is dropped
-    before returning."""
-    import uuid
-
-    from kafka_streams_common_spark.registry import latest_per_key
-    from kafka_streams_common_spark.streaming.runner import _drain
-
-    out = latest_per_key_state(stream, key_field, seq_field, tiebreak_field)
-    name = f"lpks_{uuid.uuid4().hex[:12]}"
-    writer = (
-        out.writeStream.format("memory").queryName(name).outputMode("update")
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    progress = _drain(spark, writer)
-    final = latest_per_key(
-        spark.table(name), key_field, seq_field, tiebreak_field
-    )
-    spark.catalog.dropTempView(name)
-    return final, progress
+from kafka_streams_common_spark.operators.timeseries import ewma_scan, holt_scan
 
 
 # Buffered values as plain Python scalars, from pandas input or state
@@ -519,14 +428,11 @@ def holt_state(
     chain. Input: a watermarked stream of ``(event_type, ts, ts_us,
     event_id, value)``, as for :func:`ewma_state`.
 
-    Determinism contract: both update expressions are evaluated in
-    float64 in exactly the shapes the batch kernel and the
-    recursive-CTE oracle use (the oracle re-derives the new level
-    inside the trend update), so stream ≡ batch bit-for-bit on the
-    decided region with exactly-representable α/β.
+    The fold continues ``operators/timeseries.py: holt_scan`` from the
+    carried ``(level, trend, n)``, the same scan the batch kernel runs,
+    so stream ≡ batch bit-for-bit on the decided region (see its
+    determinism contract).
     """
-    a = float(alpha)
-    g = float(beta)
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType()),
@@ -540,19 +446,14 @@ def holt_state(
     )
 
     def fold(key, carry, rows, wm_us):
-        lv, bv, n = carry or (0.0, 0.0, 0)
-        out = []
-        for t, i, x in rows:
-            if n == 0:
-                lv, bv = x, 0.0
-            else:
-                prev = lv
-                # identical expression shapes to the batch kernel/oracle
-                lv = a * x + (1.0 - a) * (prev + bv)
-                bv = g * (lv - prev) + (1.0 - g) * bv
-            n += 1
-            out.append((str(key[0]), t, i, x, lv, bv, lv + bv))
-        return (lv, bv, n), out, None
+        lt, carry = holt_scan(
+            [x for _, _, x in rows], alpha, beta, *(carry or (0.0, 0.0, 0))
+        )
+        out = [
+            (str(key[0]), t, i, x, lv, bv, lv + bv)
+            for (t, i, x), (lv, bv) in zip(rows, lt)
+        ]
+        return carry, out, None
 
     return _watermark_fold(
         stream,
@@ -595,12 +496,11 @@ def ewma_state(stream: DataFrame, alpha: float = 0.25) -> DataFrame:
     never removed (a key's next event, whenever it comes, continues the
     chain; |keys| scalars is the permanent footprint, not a leak).
 
-    Determinism contract: the fold computes ``a*x + (1.0-a)*prev`` in
-    float64 — the same expression shape the batch kernel and the
-    recursive-CTE oracle evaluate — so stream ≡ batch bit-for-bit on
-    the decided region, with an exactly-representable default α.
+    The fold continues ``operators/timeseries.py: ewma_scan`` from the
+    carried ``(ewma, n)``, the same scan the batch kernel runs, so
+    stream ≡ batch bit-for-bit on the decided region (see its
+    determinism contract).
     """
-    a = float(alpha)
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType()),
@@ -612,14 +512,8 @@ def ewma_state(stream: DataFrame, alpha: float = 0.25) -> DataFrame:
     )
 
     def fold(key, carry, rows, wm_us):
-        prev, n = carry or (0.0, 0)
-        out = []
-        for t, i, x in rows:
-            # identical expression shape to the batch kernel/oracle
-            prev = x if n == 0 else a * x + (1.0 - a) * prev
-            n += 1
-            out.append((str(key[0]), t, i, x, prev))
-        return (prev, n), out, None
+        ys, carry = ewma_scan([x for _, _, x in rows], alpha, *(carry or (0.0, 0)))
+        return carry, [(str(key[0]), *r, y) for r, y in zip(rows, ys)], None
 
     return _watermark_fold(
         stream,

@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator + bucketed co-located join."""
+"""Stateful streaming operators + bucketed co-located join."""
 
 from __future__ import annotations
 
@@ -112,12 +112,12 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_latest_per_key_state_equals_batch_and_bounds_state(spark, tmp_path):
-    """applyInPandasWithState latest-per-key under TRUE multi-batch
-    execution: the compacted changelog must equal the batch KTable view,
+    """State-store latest-per-key under TRUE multi-batch execution: the
+    compacted changelog must equal the batch KTable view,
     and the engine's own stateOperators metrics must show exactly one
     state row per distinct key (the operator's whole scale contract)."""
     from kafka_streams_common_spark.registry import latest_per_key
-    from kafka_streams_common_spark.streaming.stateful import (
+    from kafka_streams_common_spark.streaming.runner import (
         run_latest_per_key_state,
     )
 
@@ -162,6 +162,33 @@ def test_latest_per_key_state_equals_batch_and_bounds_state(spark, tmp_path):
     # multi-batch really happened
     batches = [p for p in progress if p.get("numInputRows", 0) > 0]
     assert len(batches) > 1, "expected several microbatches"
+
+
+def test_latest_per_key_state_keeps_bigints_beyond_float64(spark, tmp_path):
+    """A bigint above 2**53 in a stream that also carries a double
+    column keeps every digit through the state-store KTable: no step
+    may widen the winning row to float64."""
+    import os
+
+    from kafka_streams_common_spark.streaming.runner import (
+        run_latest_per_key_state,
+    )
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    schema = "key bigint, ts_us bigint, event_id bigint, value double"
+    rows = [(1, 2**53 + 1, 7, 0.5), (1, 2**53 - 9, 8, 1.5), (2, 5, 9, 2.5)]
+    for k, row in enumerate(rows):
+        write_wave(spark, src, k, [row], schema)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    final, _ = run_latest_per_key_state(stream, spark, "key", "ts_us", "event_id")
+    got = {r["key"]: tuple(r) for r in final.collect()}
+    assert got[1][1] == 2**53 + 1, got
+    assert got == {1: rows[0], 2: rows[2]}
 
 
 def test_session_aggregate_state_event_time_timers(spark, tmp_path):

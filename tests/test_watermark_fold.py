@@ -1,12 +1,13 @@
 """Contract of ``streaming.stateful._watermark_fold``, the event-time
 protocol the six timer-driven stateful operators share, and micro-batch
-cut invariance for every stateful operator. Each ``update`` function is
-driven directly with a fake ``GroupState``: no Spark session, no stream,
-every call and its state write visible."""
+cut invariance for each of them. Each ``update`` function is driven
+directly with a fake ``GroupState``: no Spark session, no stream, every
+call and its state write visible."""
 
 from __future__ import annotations
 
 import math
+import pathlib
 from collections import Counter
 
 import pandas as pd
@@ -61,8 +62,7 @@ class FakeState:
 class FakeStream:
     """Records the one ``groupBy(...).applyInPandasWithState(...)`` call."""
 
-    def __init__(self, schema=None):
-        self.schema = schema
+    def __init__(self):
         self.call = {}
 
     def groupBy(self, key):
@@ -107,6 +107,18 @@ def test_one_call_with_uniform_state_layout():
             T.StructField("buf_x", T.ArrayType(T.DoubleType())),
         ]
     )
+
+
+def test_apply_in_pandas_with_state_is_only_called_by_watermark_fold():
+    """Python per-key state has one entry point: ``_watermark_fold``.
+    Per-key state a built-in aggregation can hold (the KTable winner)
+    stays in the engine."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kafka_streams_common_spark"
+    sites = {
+        str(p.relative_to(pkg)): p.read_text().count(".applyInPandasWithState(")
+        for p in pkg.rglob("*.py")
+    }
+    assert {p: n for p, n in sites.items() if n} == {"streaming/stateful.py": 1}
 
 
 def test_event_at_watermark_stays_buffered_and_eligible_rows_fold_sorted():
@@ -201,12 +213,7 @@ def test_nulls_round_trip_through_the_buffer():
 # Micro-batch cut invariance (D-Streams: a stream is a series of batch
 # computations whose result matches one batch job over the same input).
 # Every operator reads its columns from one frame: ``a`` doubles as the
-# funnel stage and (odd or even) the as-of side, one id as every id;
-# SCHEMA is the stream schema latest-per-key reads.
-SCHEMA = T.StructType(
-    [T.StructField(c, T.LongType()) for c in ("key", "ts_us", "event_id")]
-    + [T.StructField("value", T.DoubleType())]
-)
+# funnel stage and (odd or even) the as-of side, one id as every id.
 OPERATORS = {
     "session": lambda s: stateful.session_aggregate_state(s, gap_seconds=1),
     "funnel": lambda s: stateful.funnel_state_machine(s, n_stages=3),
@@ -214,9 +221,6 @@ OPERATORS = {
     "temporal_asof": stateful.temporal_asof_state,
     "holt": stateful.holt_state,
     "ewma": stateful.ewma_state,
-    "latest_per_key": lambda s: stateful.latest_per_key_state(
-        s, "key", "ts_us", "event_id"
-    ),
 }
 
 
@@ -234,14 +238,14 @@ def canon(v):
     return None if v is None or v != v else v
 
 
-def drive(update, timers, batches, delay_ms, final_wm_ms):
-    """Run ``update`` over ``batches`` as Spark runs a stateful operator:
-    each batch's watermark is the previous batches' maximum event time
-    (milliseconds) less the delay, never decreasing; with event-time
-    timeouts, rows below it are dropped, keys with data are called
-    first, then keys without data whose timer the watermark passed. A
-    last batch with no data runs at ``final_wm_ms``. Returns the emitted
-    rows and the admitted ones."""
+def drive(update, batches, delay_ms, final_wm_ms):
+    """Run ``update`` over ``batches`` as Spark runs an operator with
+    event-time timeouts: each batch's watermark is the previous batches'
+    maximum event time (milliseconds) less the delay, never decreasing;
+    rows below it are dropped, keys with data are called first, then
+    keys without data whose timer the watermark passed. A last batch with
+    no data runs at ``final_wm_ms``. Returns the emitted rows and the
+    admitted ones."""
     states, emitted, admitted = {}, [], []
     wm_ms = 0
 
@@ -255,9 +259,9 @@ def drive(update, timers, batches, delay_ms, final_wm_ms):
             del states[key]
 
     for n, batch in enumerate([*batches, []]):
-        if n == len(batches) and timers:
+        if n == len(batches):
             wm_ms = max(wm_ms, final_wm_ms)
-        live = [r for r in batch if not timers or r[1] >= wm_ms * 1000]
+        live = [r for r in batch if r[1] >= wm_ms * 1000]
         admitted += live
         keys = sorted({r[0] for r in live})
         for key in keys:
@@ -324,13 +328,12 @@ def test_micro_batch_cuts_do_not_change_the_result(name, events, cuts, delay_ms)
     rows = [(*e[:4], e[4] * 100 + i) for i, e in enumerate(events)]
     bounds = sorted({0, len(rows), *(c for c in cuts if c < len(rows))})
     batches = [rows[lo:hi] for lo, hi in zip(bounds, bounds[1:])]
-    stream = FakeStream(SCHEMA)
+    stream = FakeStream()
     OPERATORS[name](stream)
     update = stream.call["func"]
-    timers = stream.call["timeoutConf"] == GroupStateTimeout.EventTimeTimeout
     final_wm_ms = 60_000 + max((r[1] for r in rows), default=0) // 1000
-    got, admitted = drive(update, timers, batches, delay_ms, final_wm_ms)
-    want, _ = drive(update, timers, [admitted], delay_ms, final_wm_ms)
+    got, admitted = drive(update, batches, delay_ms, final_wm_ms)
+    want, _ = drive(update, [admitted], delay_ms, final_wm_ms)
     if stream.call["outputMode"] == "update":
         got, want = ({r[0]: r for r in rs} for rs in (got, want))
     else:
