@@ -34,14 +34,14 @@ _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
 
 
 def _gzip_compress_bytes(
-    data: bytes, fname: str | None = None, mtime: int = 0, level: int = 6
+    data: bytes, fname: str | None = None, level: int = 6
 ) -> bytes:
     """Build an RFC 1952 gzip member by hand: fixed 10-byte header
     (magic, CM=8 deflate, FLG, little-endian MTIME, XFL=0, OS=255
     unknown), optional zero-terminated FNAME (Latin-1 per spec), RAW
     deflate body (``wbits=-15`` — the zlib wrapper is NOT part of
-    gzip), and the CRC-32 + ISIZE little-endian trailer. ``mtime``
-    defaults to 0 so the container is deterministic."""
+    gzip), and the CRC-32 + ISIZE little-endian trailer. MTIME is
+    always 0 so the container is deterministic."""
     import zlib
 
     flg = _FNAME if fname is not None else 0
@@ -49,7 +49,7 @@ def _gzip_compress_bytes(
         GZIP_MAGIC
         + b"\x08"
         + bytes([flg])
-        + int(mtime).to_bytes(4, "little")
+        + b"\x00\x00\x00\x00"
         + b"\x00\xff"
     )
     name = fname.encode("latin-1") + b"\x00" if fname is not None else b""
@@ -336,9 +336,7 @@ def _parse_zip(payload: bytes) -> list[tuple[str, bytes]]:
 # Spark surface
 
 
-def encode_gzip_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_gzip_docs(docs: DataFrame) -> DataFrame:
     """Encode each document's utf-8 text as a genuine RFC 1952 gzip
     member — EVEN doc_ids carry the FNAME header field
     (``doc-<id>.txt``), odd ones are anonymous (FLG=0), so the decode
@@ -347,7 +345,7 @@ def encode_gzip_docs(
     compressed-text-lake ingest shape. The input rides ``fan_out`` (r16)
     so a single-split local lake spreads the kernel across the session's
     cores; a many-split production table takes the no-op branch and no
-    exchange is inserted."""
+    exchange is inserted. Reads ``doc_id`` and ``text``."""
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
@@ -361,7 +359,7 @@ def encode_gzip_docs(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 GZIP_TEXT_SCHEMA = T.StructType(
@@ -391,9 +389,7 @@ def decode_gzip_text_stats(gz: DataFrame) -> DataFrame:
     return row_kernel(gz.select("doc_id", "payload"), decode, GZIP_TEXT_SCHEMA)
 
 
-def encode_webdataset_shard(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_webdataset_shard(docs: DataFrame) -> DataFrame:
     """Encode each document as a WebDataset-style ustar shard: two
     members under one key — ``doc-<id>.pgm`` (the document's byte-exact
     Netpbm P5 image, the established md5 geometry/raster arithmetic)
@@ -404,7 +400,8 @@ def encode_webdataset_shard(
     stage must recover the key from member names. The input rides
     ``fan_out`` (r16) so a single-split local lake spreads the kernel
     across the session's cores; a many-split production table takes the
-    no-op branch and no exchange is inserted."""
+    no-op branch and no exchange is inserted.
+    Reads ``doc_id`` and ``text``."""
     import hashlib
 
     out_schema = T.StructType([T.StructField("payload", T.BinaryType(), True)])
@@ -420,7 +417,7 @@ def encode_webdataset_shard(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 WEBDATASET_SCHEMA = T.StructType(
@@ -477,9 +474,7 @@ def decode_webdataset_pairs(shards: DataFrame) -> DataFrame:
     return row_kernel(shards.select("payload"), decode, WEBDATASET_SCHEMA)
 
 
-def encode_zip_bundles(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_zip_bundles(docs: DataFrame) -> DataFrame:
     """Encode each document as a two-member PKZIP bundle — the scraped-
     document-bundle shape of real lakes: ``doc-<id>.txt`` (the utf-8
     text, method 8 DEFLATE) and ``doc-<id>.rev`` (the CHARACTER-reversed
@@ -490,7 +485,7 @@ def encode_zip_bundles(
     ``mapInPandas``, map-only. The input rides ``fan_out`` (r16) so a
     single-split local lake spreads the kernel across the session's
     cores; a many-split production table takes the no-op branch and no
-    exchange is inserted."""
+    exchange is inserted. Reads ``doc_id`` and ``text``."""
     out_schema = T.StructType([T.StructField("payload", T.BinaryType(), True)])
 
     def encode(did, text):
@@ -506,7 +501,7 @@ def encode_zip_bundles(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 ZIP_BUNDLE_SCHEMA = T.StructType(
@@ -703,9 +698,7 @@ def _xz_verify_and_decompress(payload: bytes) -> tuple[str, bytes]:
     return _XZ_CHECK_NAMES[flags[1]], data
 
 
-def encode_bz2_xz_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_bz2_xz_docs(docs: DataFrame) -> DataFrame:
     """Encode each document's utf-8 text as a real single-member
     compressed stream — EVEN doc_ids as bzip2 at block-size level
     ``1 + doc_id % 9`` (all nine header digits live in one lake), ODD
@@ -714,7 +707,7 @@ def encode_bz2_xz_docs(
     Arrow-batched ``mapInPandas``, map-only. The input rides ``fan_out``
     (r16) so a single-split local lake spreads the kernel across the
     session's cores; a many-split production table takes the no-op
-    branch and no exchange is inserted."""
+    branch and no exchange is inserted. Reads ``doc_id`` and ``text``."""
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
@@ -732,7 +725,7 @@ def encode_bz2_xz_docs(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 BZ2_XZ_TEXT_SCHEMA = T.StructType(

@@ -33,12 +33,11 @@ from pyspark.sql import functions as F
 END_OF_WORD = "</w>"
 
 
-def word_frequencies(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Distinct-word counts: ``(word, c)`` — the one corpus-sized pass."""
+def word_frequencies(docs: DataFrame) -> DataFrame:
+    """Distinct-word counts: ``(word, c)`` — the one corpus-sized pass.
+    Reads ``text``."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -139,12 +138,12 @@ def _batch_select(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 32,
-    text_col: str = "text",
     batch: int = 16,
     _stats: dict | None = None,
 ) -> list[tuple[str, str, int]]:
     """Train ``n_merges`` BPE merges; returns the learned merge table
     ``[(left, right, pair_count), ...]`` in merge order.
+    Trains on the ``text`` column.
 
     Ties in the pair census break deterministically on
     (count desc, left asc, right asc) so the merge table is identical on
@@ -171,7 +170,7 @@ def bpe_train(
         raise ValueError("n_merges must be >= 1")
     if batch < 1:
         raise ValueError("batch must be >= 1")
-    vocab = _initial_symbols(word_frequencies(docs, text_col)).localCheckpoint(
+    vocab = _initial_symbols(word_frequencies(docs)).localCheckpoint(
         eager=True
     )
     merges: list[tuple[str, str, int]] = []
@@ -225,13 +224,11 @@ def bpe_train(
     return merges
 
 
-def bpe_merge_table(
-    docs: DataFrame, n_merges: int = 32, text_col: str = "text"
-) -> DataFrame:
+def bpe_merge_table(docs: DataFrame, n_merges: int = 32) -> DataFrame:
     """The merge table as a DataFrame ``(merge_rank, left_sym, right_sym,
     pair_count)`` — convenience wrapper for pipelines that persist the
     tokenizer artifact next to the corpus."""
-    merges = bpe_train(docs, n_merges, text_col)
+    merges = bpe_train(docs, n_merges)
     spark = docs.sparkSession
     return spark.createDataFrame(
         [
@@ -245,15 +242,13 @@ def bpe_merge_table(
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     checkpoint_every: int = 8,
 ) -> DataFrame:
     """Apply a trained merge table — the TOKENIZE step that closes the
     train→apply loop: returns ``(doc_id, tokens array<string>,
     n_tokens)`` with merges applied greedy-leftmost in merge-rank order
     (exactly the classic BPE apply; pinned against a pure-Python
-    reference in tests/test_bpe.py).
+    reference in tests/test_bpe.py). Reads ``doc_id`` and ``text``.
 
     Scale shape — the vocabulary trick again, on the apply side: the
     corpus is scanned ONCE into (doc_id, position, word); DISTINCT
@@ -268,8 +263,8 @@ def bpe_encode(
     initial scan and final join.
     """
     words_pos = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word"),
     )
     vocab = words_pos.select("word").distinct()
     enc = vocab.select(

@@ -69,9 +69,9 @@ def bucketed_join(
     left_table: str,
     right_table: str,
     on: str | list[str] | Callable[[DataFrame, DataFrame], Column],
-    how: str = "inner",
 ) -> DataFrame:
     """Join two same-bucketed catalog tables on their bucket keys.
+    An inner join.
 
     ``on`` may name shared columns, or be a callable ``(left, right) ->
     Column`` for differently-named bucket keys (``o_orderkey`` vs
@@ -88,4 +88,4 @@ def bucketed_join(
     left = spark.table(left_table)
     right = spark.table(right_table)
     cond = on(left, right) if callable(on) else on
-    return left.hint("merge").join(right, cond, how)
+    return left.hint("merge").join(right, cond, "inner")

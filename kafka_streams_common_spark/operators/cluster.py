@@ -221,8 +221,6 @@ def pagerank(
     edges: DataFrame,
     n_iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — the
     importance-propagation twin of connected components (both: iterative
@@ -230,7 +228,7 @@ def pagerank(
     ``rank`` an exact DECIMAL (see below), one row per node appearing as
     a source (callers wanting dangling nodes union them in with
     out-degree edges first; an undirected graph — both directions in
-    ``edges`` — has none by construction).
+    ``edges`` — has none by construction). Reads ``(src, dst)`` edges.
 
     Determinism contract (the repo-wide md5/DECIMAL convention): each
     contribution ``rank/out_degree`` is computed in double, rounded to
@@ -249,7 +247,7 @@ def pagerank(
     if n_iterations < 1:
         raise ValueError("n_iterations must be >= 1")
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         # consumed every iteration (plus the degree build) — materialize
         # once, same posture as connected_components' edge checkpoint
@@ -298,11 +296,9 @@ def pagerank(
     return ranks.select("node", "rank")
 
 
-def triangle_count(
-    edges: DataFrame,
-    edge_cols: tuple[str, str] = ("a", "b"),
-) -> DataFrame:
-    """Global triangle count over an undirected simple graph — the
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count over an undirected simple graph of ``(a, b)``
+    edges — the
     classic cohesion/clustering metric (and the canonical skew-bounded
     graph-join exemplar). Returns a single row ``(n_triangles)``.
 
@@ -329,11 +325,10 @@ def triangle_count(
     argument as the wedge form, so the count is identical (oracle-gated
     against the naive triple self-join).
     """
-    a, b = edge_cols
     e = (
         edges.select(
-            F.least(F.col(a), F.col(b)).alias("x"),
-            F.greatest(F.col(a), F.col(b)).alias("y"),
+            F.least(F.col("a"), F.col("b")).alias("x"),
+            F.greatest(F.col("a"), F.col("b")).alias("y"),
         )
         .filter(F.col("x") != F.col("y"))
         .distinct()
@@ -373,13 +368,11 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int,
-    src_col: str = "a",
-    dst_col: str = "b",
-    node_col: str = "node",
 ) -> DataFrame:
     """Bounded breadth-first search: minimum hop count from any seed to
     every node reachable within ``max_hops``, over a DIRECTED edge list
     (pass both directions for an undirected graph).
+    Edges are ``(a, b)`` pairs and seeds a ``node`` column.
 
     The Pregel-shaped iteration: hop h's frontier joins the edge list
     (one shuffle on the node key, id-only rows), unions into the
@@ -389,12 +382,12 @@ def bfs_hops(
     non-trivial plan (it is scanned once per round). Returns
     ``(node, hops)`` with ``hops`` = 0 for seeds.
     """
-    dist = seeds.select(F.col(node_col).alias("node"), F.lit(0).alias("hop"))
+    dist = seeds.select("node", F.lit(0).alias("hop"))
     for h in range(1, max_hops + 1):
         frontier = (
             dist.filter(F.col("hop") == h - 1)
-            .join(edges, F.col("node") == F.col(src_col))
-            .select(F.col(dst_col).alias("node"), F.lit(h).alias("hop"))
+            .join(edges, F.col("node") == F.col("a"))
+            .select(F.col("b").alias("node"), F.lit(h).alias("hop"))
         )
         dist = (
             dist.unionAll(frontier)

@@ -33,23 +33,24 @@ from pyspark.sql import functions as F
 from kafka_streams_common_spark.functions.hashing import md5_int64
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: one canonical (min-id) row per distinct text.
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """Exact dedup: one canonical (min-``doc_id``) row per distinct
+    ``text``.
 
     Returns ``(doc_id, n_copies)`` — the surviving id and how many rows it
     represents. Grouping key is md5(text) so the exchange carries digests.
     """
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("__digest"))
+        docs.groupBy(F.md5(F.col("text")).alias("__digest"))
         .agg(
-            F.min(F.col(id_col)).alias(id_col),
+            F.min(F.col("doc_id")).alias("doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-        .select(id_col, "n_copies")
+        .select("doc_id", "n_copies")
     )
 
 
-def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Parallelism guard for CPU-heavy per-row stages (shingling, hashing).
 
     A small local corpus arrives as one or two parquet splits, which would
@@ -85,7 +86,7 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     try:
         n_files = len(df.inputFiles())
     except Exception:  # non-file plans where the listing is unavailable
@@ -97,10 +98,9 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
-def word_shingles(
-    docs: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Distinct word n-gram shingles per document: ``(doc_id, shingle)``.
+def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles of the ``text`` column per document:
+    ``(doc_id, shingle)``.
 
     Documents shorter than ``n`` words contribute their full text as the one
     shingle (the ``greatest(1, ...)`` clamp).
@@ -113,8 +113,8 @@ def word_shingles(
     split is non-cheap and multiply-referenced).
     """
     tokened = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("__toks"),
+        F.col("doc_id"),
+        F.split(F.col("text"), " ").alias("__toks"),
     )
     tokens = F.col("__toks")
     starts = F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(tokens) - (n - 1)))
@@ -125,9 +125,9 @@ def word_shingles(
     )
 
 
-def _hashed_shingles(docs: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+def _hashed_shingles(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, sh) with sh = 60-bit shingle hash — narrow shuffle rows."""
-    return word_shingles(docs, n, text_col, id_col).select(
+    return word_shingles(docs, n).select(
         "doc_id", md5_int64("shingle").alias("sh")
     )
 
@@ -135,14 +135,13 @@ def _hashed_shingles(docs: DataFrame, n: int, text_col: str, id_col: str) -> Dat
 def shingle_pair_census(
     docs: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The shared inverted-index census every shingle-overlap score is
     built from: ``(pairs, sizes)`` with pairs ``(doc_a, doc_b, common)``
     (``doc_a < doc_b``, count of shared distinct shingle hashes) and
-    sizes ``(doc_id, sz)``. Jaccard, containment and novelty differ only
+    sizes ``(doc_id, sz)``, shingled from the ``doc_id`` and ``text``
+    columns. Jaccard, containment and novelty differ only
     in the expression applied downstream — sharing the census keeps the
     max_df skew cap and the materialization pattern in one place.
 
@@ -154,7 +153,7 @@ def shingle_pair_census(
     shingles appearing in more than that many documents — a handful of
     stop-shingles otherwise produce O(df²) join rows (key skew).
     """
-    sh = _hashed_shingles(docs, n, text_col, id_col).localCheckpoint(eager=True)
+    sh = _hashed_shingles(docs, n).localCheckpoint(eager=True)
     sh = _cap_buckets(sh, ["sh"], max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
@@ -169,19 +168,18 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     tau: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs: ``(doc_a, doc_b, jaccard)``,
-    ``doc_a < doc_b``, ``jaccard >= tau``.
+    """Exact n-gram Jaccard near-dup pairs of the ``doc_id``/``text``
+    corpus: ``(doc_a, doc_b, jaccard)``, ``doc_a < doc_b``,
+    ``jaccard >= tau``.
 
     Inverted-index join (:func:`shingle_pair_census` — one materialized
     shingle table, df-capped, pair census + sizes), then
     ``|A∩B| / (|A|+|B|-|A∩B|)``. Dropping over-``max_df`` stop-shingles
     only lowers jaccard estimates for unrelated pairs.
     """
-    common, sizes = shingle_pair_census(docs, n, text_col, id_col, max_df)
+    common, sizes = shingle_pair_census(docs, n, max_df)
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     return (
@@ -200,6 +198,10 @@ def ngram_jaccard_pairs(
 
 
 _MERSENNE_31 = (1 << 31) - 1
+# MinHash signature width and LSH band count, shared by the signature pass,
+# both banding operators and the band-key width check: 32 bands of 4 rows.
+_NUM_PERM = 128
+_BANDS = 32
 
 
 def _perm_params(num_perm: int) -> list[tuple[int, int]]:
@@ -215,7 +217,7 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     ]
 
 
-def _minhash_sig_udf(n: int, num_perm: int):
+def _minhash_sig_udf(n: int):
     """Arrow-batched MinHash signature kernel (one call per record batch).
 
     Map-only: the (doc, shingle) rows never exist in the plan, so the only
@@ -244,7 +246,7 @@ def _minhash_sig_udf(n: int, num_perm: int):
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
-    ab = np.asarray(_perm_params(num_perm), dtype=np.int64)
+    ab = np.asarray(_perm_params(_NUM_PERM), dtype=np.int64)
     A, B = ab[:, 0][None, :], ab[:, 1][None, :]
     # polynomial base powers: base^(n-1), ..., base^0 mod M31
     base = 1_000_003
@@ -285,14 +287,9 @@ def _minhash_sig_udf(n: int, num_perm: int):
     return pandas_udf(sig, "array<bigint>")
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    num_perm: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature per document: ``(doc_id, sig array<bigint>)``.
+def minhash_signatures(docs: DataFrame, n: int = 3) -> DataFrame:
+    """MinHash signature of the ``text`` column per document: ``(doc_id,
+    sig array<bigint>)`` with ``_NUM_PERM`` (128) entries.
 
     The classical affine-permutation family: a 31-bit shingle hash (md5
     token hashes combined polynomially — see :func:`_minhash_sig_udf`),
@@ -302,8 +299,8 @@ def minhash_signatures(
     shuffle.
     """
     return fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        _minhash_sig_udf(n, num_perm)(F.col(text_col)).alias("sig"),
+        F.col("doc_id"),
+        _minhash_sig_udf(n)(F.col("text")).alias("sig"),
     )
 
 
@@ -375,16 +372,14 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
     tau: float = 0.8,
-    num_perm: int = 128,
-    bands: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs, exact-verified: ``(doc_a, doc_b, jaccard)``.
+    """MinHash+LSH near-dup pairs of the ``doc_id``/``text`` corpus,
+    exact-verified: ``(doc_a, doc_b, jaccard)``.
 
     1. signatures (one shuffle);
-    2. band each signature into ``bands`` groups of ``num_perm/bands`` rows,
+    2. band each signature into ``_BANDS`` (32) groups of
+       ``_NUM_PERM / _BANDS`` (4) rows,
        bucket key = md5 of the band's values; equi-join on (band, bucket) —
        candidates only, never O(n²);
     3. verify candidates with exact Jaccard over shingle sets
@@ -420,15 +415,15 @@ def minhash_lsh_pairs(
     # band self-join and, transitively, every candidate re-expansion —
     # without this the Arrow kernel re-runs per consumer (measured 10
     # ArrowEvalPython instances in the un-checkpointed plan). The table is
-    # O(rows · num_perm · 8B) — at 100 TB corpus scale this is the
+    # O(rows · _NUM_PERM · 8B) — at 100 TB corpus scale this is the
     # signature layer one would persist to parquet anyway. Kept by
     # measurement (`probe.py dedup_minhash_lsh --runs 7`, 4 cores, two
     # sessions each): sf0.1 total median 2.74-2.92 s with it, 3.54-3.59 s
     # without.
-    sig = minhash_signatures(docs, n, num_perm, text_col, id_col).localCheckpoint(
-        eager=True
+    sig = minhash_signatures(docs, n).localCheckpoint(eager=True)
+    buckets = sig.select(
+        "doc_id", F.inline(_band_keys(F.col("sig"), _NUM_PERM, _BANDS))
     )
-    buckets = sig.select("doc_id", F.inline(_band_keys(F.col("sig"), num_perm, bands)))
     buckets = _cap_buckets(buckets, ["band", "bkey"], max_bucket)
     cand = (
         _bucket_pairs(buckets, ["band", "bkey"], "doc_id")
@@ -448,10 +443,10 @@ def minhash_lsh_pairs(
         cand.select(F.col("doc_b").alias("__cid"))
     ).distinct()
     cand_docs = docs.join(
-        F.broadcast(cand_ids), F.col(id_col) == F.col("__cid"), "left_semi"
+        F.broadcast(cand_ids), F.col("doc_id") == F.col("__cid"), "left_semi"
     )
     sets = (
-        _hashed_shingles(cand_docs, n, text_col, id_col)
+        _hashed_shingles(cand_docs, n)
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("shset"), F.count(F.lit(1)).alias("sz"))
     )
@@ -475,11 +470,6 @@ def minhash_lsh_match(
     corpus_docs: DataFrame,
     n: int = 3,
     tau: float = 0.8,
-    num_perm: int = 128,
-    bands: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket: int | None = None,
     new_sigs: DataFrame | None = None,
     corpus_sigs: DataFrame | None = None,
 ) -> DataFrame:
@@ -493,8 +483,7 @@ def minhash_lsh_match(
     equi-join NEW×CORPUS only, and exact Jaccard verifies candidates.
     Same banding math and miss-probability analysis as the self-join
     form; same hashed-shingle verification, so the brute-force SQL
-    ground truth is the oracle. ``max_bucket`` caps CORPUS-side bucket
-    occupancy (the indexed side is where template skew accumulates).
+    ground truth is the oracle. Both sides read ``doc_id`` and ``text``.
 
     ``new_sigs`` / ``corpus_sigs`` (r17, guide §5/§6 — don't recompute
     what an index already persists): optionally supply PREBUILT
@@ -504,7 +493,7 @@ def minhash_lsh_match(
     whose slices feed both sides — and that side's signature pass
     (fan_out + Arrow kernel + localCheckpoint) is skipped entirely.
     Supplied signatures MUST be the :func:`minhash_signatures` values
-    for the same ``(n, num_perm)`` over exactly that side's docs — the
+    for the same ``n`` over exactly that side's docs — the
     per-row kernel is deterministic, so any slice of a signature table
     computed over a superset of the docs is bit-identical to
     recomputing (results unchanged by construction; the no-index
@@ -525,19 +514,15 @@ def minhash_lsh_match(
         sig = (
             sigs.select("doc_id", "sig")
             if sigs is not None
-            else minhash_signatures(
-                docs, n, num_perm, text_col, id_col
-            ).localCheckpoint(eager=True)
+            else minhash_signatures(docs, n).localCheckpoint(eager=True)
         )
         return sig.select(
             F.col("doc_id").alias(out_id),
-            F.inline(_band_keys(F.col("sig"), num_perm, bands)),
+            F.inline(_band_keys(F.col("sig"), _NUM_PERM, _BANDS)),
         )
 
     b_new = buckets_of(new_docs, "new_id", new_sigs)
-    b_cor = _cap_buckets(
-        buckets_of(corpus_docs, "corpus_id", corpus_sigs), ["band", "bkey"], max_bucket
-    )
+    b_cor = buckets_of(corpus_docs, "corpus_id", corpus_sigs)
     cand = (
         b_new.join(b_cor, ["band", "bkey"])
         .select("new_id", "corpus_id")
@@ -547,11 +532,11 @@ def minhash_lsh_match(
     def sets_of(docs: DataFrame, ids: DataFrame, idc: str) -> DataFrame:
         sel = docs.join(
             F.broadcast(ids.distinct()),
-            F.col(id_col) == F.col(idc),
+            F.col("doc_id") == F.col(idc),
             "left_semi",
         )
         return (
-            _hashed_shingles(sel, n, text_col, id_col)
+            _hashed_shingles(sel, n)
             .groupBy("doc_id")
             .agg(
                 F.collect_set("sh").alias("shset"),
@@ -632,10 +617,9 @@ def _simhash_udf(bits: int):
     return pandas_udf(sim, "bigint")
 
 
-def simhash_values(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
-    """32-bit SimHash per document: ``(doc_id, simhash)``.
+def simhash_values(docs: DataFrame, bits: int = 32) -> DataFrame:
+    """32-bit SimHash of the ``text`` column per document: ``(doc_id,
+    simhash)``.
 
     Token-frequency-weighted: bit j of the hash of each token contributes
     +count / -count to position j; the sign of the sum sets output bit j.
@@ -645,20 +629,19 @@ def simhash_values(
     bit-for-bit in integer arithmetic.
     """
     return fan_out(docs).select(
-        F.col(id_col).alias("doc_id"),
-        _simhash_udf(bits)(F.col(text_col)).alias("simhash"),
+        F.col("doc_id"),
+        _simhash_udf(bits)(F.col("text")).alias("simhash"),
     )
 
 
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 32,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs ``(doc_a, doc_b, hamming)``, hamming ≤ max_hamming.
+    """SimHash near-dup pairs ``(doc_a, doc_b, hamming)``, hamming ≤ max_hamming,
+    of the ``doc_id``/``text`` corpus.
 
     Pigeonhole banding: the ``bits``-wide hash splits into
     ``max_hamming + 1`` blocks; two hashes within hamming distance
@@ -699,7 +682,7 @@ def simhash_pairs(
     mask = (1 << width) - 1
     # materialize once — map-only kernel output feeds both sides of the
     # block self-join (same rationale as the minhash signature checkpoint)
-    sim = simhash_values(docs, text_col, id_col, bits=bits).localCheckpoint(eager=True)
+    sim = simhash_values(docs, bits=bits).localCheckpoint(eager=True)
     blocks = F.array(
         *[
             F.struct(
@@ -789,14 +772,13 @@ def passage_dedup(
     corpus: DataFrame,
     k: int = 8,
     max_doc_freq: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Duplicated-PASSAGE excision — the ExactSubstr idea ("Deduplicating
     Training Data Makes Language Models Better", Lee et al. 2021)
     re-expressed relationally: drop every token covered by some k-token
     window whose hash appears in more than ``max_doc_freq`` DISTINCT
-    documents, rebuild the survivors in order. Where :func:`line_dedup`
+    documents, rebuild the survivors in order. Reads ``doc_id`` and
+    ``text``. Where :func:`line_dedup`
     needs a delimiter to agree with the boilerplate's framing,
     OVERLAPPING windows catch a duplicated run at ANY alignment — the
     cross-document half of suffix-array substring dedup (within-document
@@ -823,8 +805,8 @@ def passage_dedup(
     # per-window slice() re-tokenizes the row per window position (see
     # word_shingles for the same fix + CollapseProject argument)
     base = fan_out(corpus).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ").alias("__toks"),
+        F.col("doc_id"),
+        F.split(F.col("text"), " ").alias("__toks"),
     )
     toks = F.col("__toks")
     n = F.size(toks)
@@ -880,12 +862,11 @@ def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Benchmark decontamination: drop every corpus document that shares at
     least one word ``n``-gram with a benchmark/eval set — the overlap
     filter run before training so eval data never leaks into the corpus.
+    Both sides read ``doc_id`` and ``text``.
 
     Scale shape: the benchmark side is tiny relative to the corpus (an eval
     suite, not a second corpus), so its distinct shingle-hash set is
@@ -899,15 +880,15 @@ def decontaminate(
     where the forced broadcast simply dies).
     """
     bench_sh = (
-        _hashed_shingles(benchmark, n, text_col, id_col).select("sh").distinct()
+        _hashed_shingles(benchmark, n).select("sh").distinct()
     )
-    corpus_sh = _hashed_shingles(corpus, n, text_col, id_col)
+    corpus_sh = _hashed_shingles(corpus, n)
     contaminated = (
         corpus_sh.join(F.broadcast(bench_sh), "sh").select("doc_id").distinct()
     )
     return corpus.join(
         contaminated,
-        corpus[id_col] == contaminated["doc_id"],
+        corpus["doc_id"] == contaminated["doc_id"],
         "left_anti",
     )
 
@@ -916,13 +897,12 @@ def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-benchmark-document leak census — the REPORT side of
     :func:`decontaminate`: for every benchmark/eval document, how many
     corpus documents share at least one word ``n``-gram with it and how
-    many of its distinct shingles leak. A curation run publishes exactly
+    many of its distinct shingles leak (both sides read ``doc_id`` and
+    ``text``). A curation run publishes exactly
     this table next to the decontaminated corpus (which benchmarks are
     compromised, and how badly), and a benchmark owner reads it to decide
     whether eval numbers on the ORIGINAL corpus are trustworthy.
@@ -940,11 +920,11 @@ def contamination_report(
     zero-fill is a broadcast-sized left join against the benchmark ids.
     """
     bench_sh = (
-        _hashed_shingles(benchmark, n, text_col, id_col)
+        _hashed_shingles(benchmark, n)
         .select(F.col("doc_id").alias("bench_doc_id"), "sh")
         .distinct()
     )
-    hits = _hashed_shingles(corpus, n, text_col, id_col).join(
+    hits = _hashed_shingles(corpus, n).join(
         F.broadcast(bench_sh), "sh"
     )
     per = hits.groupBy("bench_doc_id").agg(
@@ -952,7 +932,7 @@ def contamination_report(
         F.count_distinct("sh").cast("bigint").alias("n_shared_shingles"),
     )
     return (
-        benchmark.select(F.col(id_col).alias("bench_doc_id"))
+        benchmark.select(F.col("doc_id").alias("bench_doc_id"))
         .join(F.broadcast(per), "bench_doc_id", "left")
         .select(
             "bench_doc_id",
@@ -964,6 +944,12 @@ def contamination_report(
             ),
         )
     )
+
+
+# Bloom filter size and probe count: the filter's build and every probe
+# against it must agree on both.
+_BLOOM_BITS = 1 << 20
+_BLOOM_K = 4
 
 
 def _bloom_probe_structs(key, m_bits: int, k: int):
@@ -985,8 +971,8 @@ def _bloom_probe_structs(key, m_bits: int, k: int):
 def bloom_filter_words(
     keys: DataFrame,
     key_col: str = "sh",
-    m_bits: int = 1 << 20,
-    k: int = 4,
+    m_bits: int = _BLOOM_BITS,
+    k: int = _BLOOM_K,
 ) -> DataFrame:
     """Build a Bloom filter over a key column as a table of 64-bit words:
     ``(word_idx, bits)`` — only words with at least one set bit are
@@ -1011,10 +997,6 @@ def bloom_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    m_bits: int = 1 << 20,
-    k: int = 4,
 ) -> DataFrame:
     """:func:`decontaminate` with a Bloom pre-filter — bit-identical
     output (the Bloom admits false POSITIVES only; an exact verify pass
@@ -1031,23 +1013,24 @@ def bloom_decontaminate(
     lossy structure corpus-wide to keep the exact structure off the hot
     path.
 
-    False-positive posture at defaults: m=2²⁰ bits, k=4 →
+    False-positive posture: m = ``_BLOOM_BITS`` = 2²⁰ bits, k =
+    ``_BLOOM_K`` = 4 →
     p ≈ (1-e^(-kn/m))^k ≈ 2.4e-3 per probed shingle at n=100k benchmark
     shingles, so candidate spill stays proportional to corpus shingle
     count × p — and every false candidate dies in the exact verify.
     """
     bench_sh = (
-        _hashed_shingles(benchmark, n, text_col, id_col).select("sh").distinct()
+        _hashed_shingles(benchmark, n).select("sh").distinct()
         # consumed twice (bloom build + exact verify) — materialize once
         .localCheckpoint(eager=True)
     )
-    bloom = bloom_filter_words(bench_sh, "sh", m_bits, k)
+    bloom = bloom_filter_words(bench_sh)
 
-    corpus_sh = _hashed_shingles(corpus, n, text_col, id_col)
+    corpus_sh = _hashed_shingles(corpus, n)
     probes = corpus_sh.select(
         "doc_id",
         "sh",
-        F.explode(_bloom_probe_structs(F.col("sh"), m_bits, k)).alias("p"),
+        F.explode(_bloom_probe_structs(F.col("sh"), _BLOOM_BITS, _BLOOM_K)).alias("p"),
     )
     # a shingle MIGHT be in the benchmark iff all k probed bits are set;
     # inner join drops probes whose word is absent (all-zero word = bit
@@ -1057,22 +1040,20 @@ def bloom_decontaminate(
         .filter(F.col("p.mask").bitwiseAND(F.col("bits")) != 0)
         .groupBy("doc_id", "sh")
         .agg(F.count(F.lit(1)).alias("nbits"))
-        .filter(F.col("nbits") == k)
+        .filter(F.col("nbits") == _BLOOM_K)
         .select("doc_id")
         .distinct()
     )
     # exact verify: only candidate docs re-shingle against the true set
-    cand_docs = corpus.join(
-        might.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
-    )
+    cand_docs = corpus.join(might, "doc_id", "left_semi")
     contaminated = (
-        _hashed_shingles(cand_docs, n, text_col, id_col)
+        _hashed_shingles(cand_docs, n)
         .join(F.broadcast(bench_sh), "sh")
         .select("doc_id")
         .distinct()
     )
     return corpus.join(
         contaminated,
-        corpus[id_col] == contaminated["doc_id"],
+        corpus["doc_id"] == contaminated["doc_id"],
         "left_anti",
     )

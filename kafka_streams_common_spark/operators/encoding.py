@@ -76,9 +76,7 @@ _SUFFIX_PLAIN = " café"  # ' café'
 _SUFFIX_QUOTED = " “café”"  # ' “café”'
 
 
-def plant_encoding_lake(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def plant_encoding_lake(docs: DataFrame) -> DataFrame:
     """Derive a raw-bytes lake with a planted encoding per ``doc_id %
     4``: 0 = clean UTF-8, 1 = double-encoded UTF-8, 2 = Windows-1252
     (with cp1252-only smart quotes), 3 = ISO-8859-1 — each document's
@@ -89,7 +87,7 @@ def plant_encoding_lake(
     ``mapInPandas``, map-only. The input rides ``fan_out`` (r16) so a
     single-split local lake spreads the kernel across the session's
     cores; a many-split production table takes the no-op branch and no
-    exchange is inserted."""
+    exchange is inserted. Reads ``doc_id`` and ``text``."""
     out_schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), False),
@@ -111,7 +109,7 @@ def plant_encoding_lake(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 ENCODING_CENSUS_SCHEMA = T.StructType(

@@ -156,16 +156,15 @@ def _md5_exif_fields(text: str) -> tuple[str, str, int, str]:
     return make, dt, orientation, hx
 
 
-def encode_jpeg_exif(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", dim_mod: int = 16
-) -> DataFrame:
+def encode_jpeg_exif(docs: DataFrame) -> DataFrame:
     """Encode each document as a genuine grayscale JPEG with an EXIF
     APP1 segment spliced after SOI: IFD0 carries Make (ASCII,
     out-of-line), DateTime (ASCII, out-of-line), Orientation (SHORT,
     inline) and ImageWidth (LONG, inline) — all md5-derived; EVEN
     doc_ids write little-endian (``II``) TIFF, odd BIG-endian
     (``MM``), so the decoder's byte-order dispatch is load-bearing.
-    Arrow-batched ``mapInPandas``, map-only."""
+    Arrow-batched ``mapInPandas``, map-only.
+    Reads ``doc_id`` and ``text``."""
     import hashlib
 
     from kafka_streams_common_spark.operators.jpeg import _encode_jpeg_bytes
@@ -181,8 +180,8 @@ def encode_jpeg_exif(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
         px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
         jpeg = _encode_jpeg_bytes(px)
@@ -198,7 +197,7 @@ def encode_jpeg_exif(
         )
         yield did, jpeg[:2] + app1 + jpeg[2:]
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 EXIF_SCHEMA = T.StructType(

@@ -760,21 +760,19 @@ _FLAC_AUDIO_OUT = T.StructType(
 )
 
 
-def encode_flac_audio_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_flac_audio_docs(docs: DataFrame) -> DataFrame:
     """documents → real FLAC files with encoded frames. Map-only after
     the ``fan_out`` parallelism guard (a small local corpus arrives as
     one parquet split, which would serialize the whole entropy-coding
     pipeline on one core; on a many-split production table the guard
-    is a no-op)."""
+    is a no-op). Reads ``doc_id`` and ``text``."""
     from kafka_streams_common_spark.operators.dedup import fan_out
 
     def encode(did, text):
         chans, rate, bs, mode = _doc_audio_params(int(did), str(text))
         yield did, encode_flac_audio(chans, rate, 16, bs, mode)
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, _FLAC_AUDIO_OUT)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, _FLAC_AUDIO_OUT)
 
 
 FLAC_AUDIO_SCHEMA = T.StructType(

@@ -26,24 +26,23 @@ from pyspark.sql import functions as F
 def funnel_conversion(
     events: DataFrame,
     stages: list[tuple[str, Column]],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     max_gap: Column | int | float | None = None,
     keep_timestamps: bool = False,
 ) -> DataFrame:
     """Strict-sequential-min funnel over ``stages`` = ordered
-    ``(stage_name, predicate)`` pairs (≥ 2 stages).
+    ``(stage_name, predicate)`` pairs (≥ 2 stages), per ``user_id`` in
+    ``ts`` order.
 
     ``max_gap`` additionally requires each stage's qualifying event to
     land WITHIN that window of the previous stage's earliest qualifying
     timestamp — the "conversion within N minutes" product-analytics
     convention. Pass ``F.expr("INTERVAL 30 minutes")`` for timestamp
-    ``ts_col``s, or a plain number for numeric ones (the gap is in the
+    ``ts``, or a plain number for numeric ones (the gap is in the
     column's own units). None (the default) keeps the unbounded
     strict-sequential semantics.
 
     Returns one row per user who completed stage 1:
-    ``(user_col, reached_<stage_2>, ..., reached_<stage_k>,
+    ``(user_id, reached_<stage_2>, ..., reached_<stage_k>,
     funnel_stage)`` where ``reached_<name>`` is true iff the user has an
     event matching that stage's predicate strictly after their previous
     stage's earliest qualifying timestamp, and ``funnel_stage`` (bigint)
@@ -66,29 +65,29 @@ def funnel_conversion(
     _, first_pred = stages[0]
     prev = (
         events.filter(first_pred)
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("__t1"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("__t1"))
     )
     frames = [prev]
     for i, (_, pred) in enumerate(stages[1:], start=2):
-        in_order = F.col(ts_col) > F.col(f"__t{i - 1}")
+        in_order = F.col("ts") > F.col(f"__t{i - 1}")
         if max_gap is not None:
             gap = max_gap if isinstance(max_gap, Column) else F.lit(max_gap)
             in_order = in_order & (
-                F.col(ts_col) <= F.col(f"__t{i - 1}") + gap
+                F.col("ts") <= F.col(f"__t{i - 1}") + gap
             )
         prev = (
             events.filter(pred)
-            .join(prev.select(user_col, f"__t{i - 1}"), user_col)
+            .join(prev.select("user_id", f"__t{i - 1}"), "user_id")
             .filter(in_order)
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias(f"__t{i}"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(f"__t{i}"))
         )
         frames.append(prev)
 
     out = frames[0]
     for f in frames[1:]:
-        out = out.join(f, user_col, "left")
+        out = out.join(f, "user_id", "left")
     reached = [F.col(f"__t{i}").isNotNull() for i in range(2, len(stages) + 1)]
     stage_depth = F.lit(1)
     for r in reached:
@@ -102,7 +101,7 @@ def funnel_conversion(
         else []
     )
     return out.select(
-        user_col,
+        "user_id",
         *[r.alias(f"reached_{name}") for r, name in zip(reached, names[1:])],
         stage_depth.cast("bigint").alias("funnel_stage"),
         *ts_cols,

@@ -593,9 +593,6 @@ def _parse_gif_frames(
 
 def encode_gif(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim_mod: int = 16,
     uncompressed: bool = False,
     interlaced: bool = False,
 ) -> DataFrame:
@@ -603,12 +600,12 @@ def encode_gif(
     LZW (or the deterministic-size CLEAR-per-pixel framing when
     ``uncompressed=True``), 8-bit grayscale over the identity palette.
     Geometry and raster use the SAME md5 arithmetic as ``encode_pgm`` /
-    ``encode_png`` (``width = md5(text) % dim_mod + 1``, digest-cycled
+    ``encode_png`` (``width = md5(text) % 16 + 1``, digest-cycled
     pixels), so a SQL oracle replays the DECODED content without
     replaying LZW — and because the raster repeats with period 16, the
     dictionary builds real multi-byte phrases (genuine compression,
     not a degenerate stream). Arrow-batched ``mapInPandas``, map-only,
-    same 100 TB shape as ``encode_png``."""
+    same 100 TB shape as ``encode_png``. Reads ``doc_id`` and ``text``."""
     import hashlib
 
     out_schema = T.StructType(
@@ -620,21 +617,19 @@ def encode_gif(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
         px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
         yield did, _encode_gif_bytes(
             px, uncompressed=uncompressed, interlaced=interlaced
         )
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 def encode_gif_anim(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     composite: bool = False,
 ) -> DataFrame:
     """Encode each document as an ANIMATED GIF89a clip with the SAME
@@ -644,7 +639,7 @@ def encode_gif_anim(
     GCE delay ``digest_byte[f % 16] % 50 + 2`` centiseconds — all
     md5-derived, so a SQL oracle replays frame content, frame ORDER,
     and the delays without replaying LZW. Arrow-batched
-    ``mapInPandas``, map-only.
+    ``mapInPandas``, map-only. Reads ``doc_id`` and ``text``.
 
     ``composite=True`` (r14) stores the SAME rendered canvases through
     the frame-diffed container form (``_encode_gif_anim_bytes``
@@ -676,12 +671,10 @@ def encode_gif_anim(
         delays = [d[f % 16] % 50 + 2 for f in range(nf)]
         yield did, _encode_gif_anim_bytes(frames, delays, composite=composite)
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
-def encode_gif_anim_composite(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_gif_anim_composite(docs: DataFrame) -> DataFrame:
     """Encode each document as a frame-diffed ANIMATED GIF89a whose
     CANVAS EVOLUTION is md5-replayable (r14): ``w/h = md5 % 8 + 2``,
     ``nf = md5(text||'|nf') % 5 + 2``; canvas 0 is the digest cycled to
@@ -698,7 +691,8 @@ def encode_gif_anim_composite(
     per-frame palettes, the transparent-index mask, and compositing
     order are ALL load-bearing for the content hash. Per-frame GCE
     delay ``d[f%16] % 50 + 2`` cs. Arrow-batched ``mapInPandas``,
-    map-only — the same 100 TB shape as every encoder."""
+    map-only — the same 100 TB shape as every encoder.
+    Reads ``doc_id`` and ``text``."""
     import hashlib
 
     out_schema = T.StructType(
@@ -733,7 +727,7 @@ def encode_gif_anim_composite(
             [c[:, :, None] for c in canvases], delays, composite=True
         )
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 GIF_ANIM_STATS_SCHEMA = T.StructType(

@@ -460,12 +460,6 @@ def _encode_jpeg_color_bytes(
 # the equality gate the tests and the registered query ride on.
 
 
-def _pt_ac(c: int, al: int) -> int:
-    """AC point transform: divide by 2^Al truncating TOWARD ZERO (the
-    spec's AC convention; DC uses the arithmetic shift instead)."""
-    return c >> al if c >= 0 else -((-c) >> al)
-
-
 def _enc_ac_first(
     bw: _BitWriterMSB,
     zblocks: np.ndarray,
@@ -490,9 +484,9 @@ def _enc_ac_first(
                 bw.put(eobrun - (1 << n), n)
             eobrun = 0
 
-    # point-transform the whole band grid at once (r14): truncate
-    # toward zero per the spec's AC convention — same values _pt_ac
-    # produced per element, without a Python comprehension per block
+    # point-transform the whole band grid at once: divide by 2^Al
+    # truncating toward zero per the spec's AC convention (DC uses the
+    # arithmetic shift instead)
     band = zblocks[:, :, ss : se + 1].astype(np.int64)
     tgrid = np.where(band >= 0, band >> al, -((-band) >> al))
     for by in range(nby):
@@ -1967,16 +1961,11 @@ def _comp_block_grid(
 # ---------------------------------------------------------------------------
 # Spark surface
 
-def encode_jpeg(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim_mod: int = 16,
-) -> DataFrame:
+def encode_jpeg(docs: DataFrame) -> DataFrame:
     """Encode each document as a baseline grayscale JPEG — REAL DCT +
     quantization + canonical Huffman entropy coding. Geometry and
     source raster use the SAME md5 arithmetic as the other image
-    encoders (``width = md5(text) % dim_mod + 1``, digest-cycled
+    encoders (``width = md5(text) % 16 + 1``, digest-cycled
     pixels), which is what lets the registered query bound the LOSSY
     reconstruction against a known source deterministically. Keeps the
     ``text`` column alongside the payload so the evaluation stage can
@@ -1985,7 +1974,7 @@ def encode_jpeg(
     small local corpus arriving as one parquet split spreads the
     kernel-bound stage across the session's cores — on a many-split
     production table the guard is a no-op and the stage stays
-    exchange-free."""
+    exchange-free. Reads ``doc_id`` and ``text``."""
     import hashlib
 
     from kafka_streams_common_spark.operators.dedup import fan_out
@@ -2002,13 +1991,13 @@ def encode_jpeg(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
         px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
         yield did, _encode_jpeg_bytes(px), text
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 JPEG_RECON_SCHEMA = T.StructType(
@@ -2024,9 +2013,7 @@ JPEG_RECON_SCHEMA = T.StructType(
 )
 
 
-def decode_jpeg_recon_report(
-    images: DataFrame, dim_mod: int = 16, decoder=None
-) -> DataFrame:
+def decode_jpeg_recon_report(images: DataFrame, decoder=None) -> DataFrame:
     """Arrow-batched JPEG decode + reconstruction report over
     ``(doc_id, payload, text)``: parses the container (markers, DHT/DQT
     from the file, Huffman, dequant, IDCT), recomputes the md5-derived
@@ -2187,9 +2174,6 @@ def _default_jpeg_encoder(px: np.ndarray, subsample: str, progressive: bool) -> 
 
 def encode_jpeg_color(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim_mod: int = 32,
     restart_interval: int = 0,
 ) -> DataFrame:
     """Encode each document as a baseline YCbCr COLOR JPEG of its
@@ -2200,7 +2184,7 @@ def encode_jpeg_color(
     per row without a join. Arrow-batched ``mapInPandas``, map-only;
     the input rides ``fan_out`` (r15) so a single-split local corpus
     spreads the kernel across cores while a many-split production
-    table inserts no exchange."""
+    table inserts no exchange. Reads ``doc_id`` and ``text``."""
     from kafka_streams_common_spark.operators.dedup import fan_out
 
     docs = fan_out(docs)
@@ -2213,11 +2197,11 @@ def encode_jpeg_color(
     )
 
     def encode(did, text):
-        px = _md5_color_image(text, dim_mod)
+        px = _md5_color_image(text)
         mode = "444" if int(did) % 2 == 0 else "420"
         yield did, _encode_jpeg_color_bytes(px, mode, restart_interval), text
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 JPEG_COLOR_RECON_SCHEMA = T.StructType(
@@ -2234,9 +2218,7 @@ JPEG_COLOR_RECON_SCHEMA = T.StructType(
 )
 
 
-def decode_jpeg_color_recon_report(
-    images: DataFrame, dim_mod: int = 32, decoder=None
-) -> DataFrame:
+def decode_jpeg_color_recon_report(images: DataFrame, decoder=None) -> DataFrame:
     """Arrow-batched COLOR JPEG decode + reconstruction report: parses
     the container (interleaved MCUs, per-component DQT/DHT selectors,
     chroma upsampling, BT.601 to RGB), recomputes the md5-derived RGB
@@ -2258,7 +2240,7 @@ def decode_jpeg_color_recon_report(
         channels, w, h, px = decode(payload)
         if channels != 3:
             raise ValueError(f"expected a color JPEG, got {channels} channel")
-        src = _md5_color_image(text, dim_mod)
+        src = _md5_color_image(text)
         err = np.abs(px.astype(np.int64) - src.astype(np.int64))
         yield {
             "doc_id": did,
@@ -2294,7 +2276,6 @@ JPEG_PROGRESSIVE_SCHEMA = T.StructType(
 
 def jpeg_progressive_report(
     docs: DataFrame,
-    dim_mod: int = 32,
     equality_mod: int = 1,
     decoder=None,
     encoder=None,
@@ -2334,7 +2315,7 @@ def jpeg_progressive_report(
     docs = fan_out(docs)
 
     def report(did, text):
-        src = _md5_color_image(text, dim_mod)
+        src = _md5_color_image(text)
         ss = "444" if int(did) % 2 == 0 else "420"
         prog = encode(src, ss, True)
         mode, got_ss, w, h = _sof_header(prog)

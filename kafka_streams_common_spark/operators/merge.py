@@ -16,9 +16,8 @@ Spark-first plan, chosen for the 100 TB case where the TARGET is the
 100 TB side and the SOURCE is a bounded delta (the overwhelmingly
 common CDC shape):
 
-- one LEFT OUTER join target ⟕ source on the key. With
-  ``broadcast_source=True`` the delta broadcasts and the snapshot
-  NEVER SHUFFLES — the matched/unmatched/update/delete logic is
+- one LEFT OUTER join target ⟕ source on the key. The delta
+  broadcasts and the snapshot NEVER SHUFFLES — the matched/unmatched/update/delete logic is
   map-side CASE expressions over the joined row.
 - the INSERT leg is source ⟲ anti-join against the target's KEY COLUMN
   ONLY, projected before the join: this leg does shuffle (a left-anti
@@ -50,7 +49,6 @@ def merge_into(
     update_cols: list[str] | None = None,
     delete_condition: Column | None = None,
     insert: bool = True,
-    broadcast_source: bool = True,
     dedup_source_by: list[str] | None = None,
 ) -> DataFrame:
     """Apply ``source`` onto ``target`` keyed by column ``on``; returns
@@ -77,7 +75,7 @@ def merge_into(
     insert satisfying it is suppressed (a tombstone for an absent key
     is a no-op — Kafka-compaction semantics). NULL counts as false.
     ``insert``: include source keys absent from the target.
-    ``broadcast_source``: hint the delta side small (the CDC norm).
+    The delta side is hinted broadcast (small, the CDC norm).
     """
     if on not in target.columns or on not in source.columns:
         raise ValueError(f"join key {on!r} must exist on both sides")
@@ -114,7 +112,7 @@ def merge_into(
             )
             .select(on, *[F.col(f"__latest.{c}").alias(c) for c in cols])
         )
-    s = (F.broadcast(src) if broadcast_source else src).alias("__s")
+    s = F.broadcast(src).alias("__s")
     t = target.alias("__t")
     matched = F.col(f"__s.{on}").isNotNull()
 

@@ -174,9 +174,7 @@ def _parse_mp3_meta(payload: bytes) -> dict:
 # Spark surface
 
 
-def encode_mp3_meta(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_mp3_meta(docs: DataFrame) -> DataFrame:
     """Encode each document as a genuine CBR MPEG-1 Layer III file with
     an ID3v1 trailer, every recoverable field derived from the corpus
     so the SQL oracle replays it: bitrate index ``doc_id % 14 + 1``,
@@ -187,7 +185,8 @@ def encode_mp3_meta(
     metadata walk never reads it. Arrow-batched ``mapInPandas``,
     map-only. The input rides ``fan_out`` (r16) so a single-split local
     lake spreads the kernel across the session's cores; a many-split
-    production table takes the no-op branch and no exchange is inserted."""
+    production table takes the no-op branch and no exchange is inserted.
+    Reads ``doc_id`` and ``text``."""
     import hashlib
 
     out_schema = T.StructType(
@@ -216,7 +215,7 @@ def encode_mp3_meta(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col)), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text")), encode, out_schema)
 
 
 MP3_META_SCHEMA = T.StructType(
@@ -409,9 +408,7 @@ def _parse_id3v2(payload: bytes) -> tuple[dict[str, str], str, int]:
 # Spark surface: ID3v2-tagged MP3 files
 
 
-def encode_mp3_id3v2(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_mp3_id3v2(docs: DataFrame) -> DataFrame:
     """Each document becomes an MP3 with BOTH tag generations — a
     leading ID3v2.3 tag (TIT2/TPE1/TALB/TYER/TRCK + COMM; odd doc_ids
     UTF-16, even latin-1, padding ``doc_id % 33``) and the legacy
@@ -420,7 +417,8 @@ def encode_mp3_id3v2(
     established CBR frame fixture. Map-only. The input rides ``fan_out``
     (r16) so a single-split local lake spreads the kernel across the
     session's cores; a many-split production table takes the no-op
-    branch and no exchange is inserted."""
+    branch and no exchange is inserted. Reads ``doc_id``, ``text`` and
+    ``lang``."""
     import hashlib
 
     out_schema = T.StructType(
@@ -461,7 +459,7 @@ def encode_mp3_id3v2(
 
     from kafka_streams_common_spark.operators.dedup import fan_out
 
-    return row_kernel(fan_out(docs.select(id_col, text_col, "lang")), encode, out_schema)
+    return row_kernel(fan_out(docs.select("doc_id", "text", "lang")), encode, out_schema)
 
 
 MP3_ID3V2_SCHEMA = T.StructType(

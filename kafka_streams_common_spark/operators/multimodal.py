@@ -41,24 +41,23 @@ IMAGE_META_SCHEMA = T.StructType(
 N_HIST_BINS = 16
 
 
-def attach_fake_image_payload(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_fake_image_payload(docs: DataFrame) -> DataFrame:
     """Give each document an opaque binary payload + typed metadata struct —
-    the canonical multimodal row shape ``(id, payload binary, meta struct)``.
+    the canonical multimodal row shape ``(doc_id, payload binary, meta
+    struct)``, from the ``doc_id`` and ``text`` columns.
 
     The payload is the utf-8 text bytes standing in for encoded image data;
     width/height are md5-derived so metadata is deterministic and
     oracle-reproducible.
     """
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("fake").alias("format"),
-            (F.pmod(md5_int64(F.col(text_col)), F.lit(512)) + 1).cast("int").alias("width"),
-            (F.pmod(md5_int64(F.reverse(F.col(text_col))), F.lit(512)) + 1)
+            (F.pmod(md5_int64(F.col("text")), F.lit(512)) + 1).cast("int").alias("width"),
+            (F.pmod(md5_int64(F.reverse(F.col("text"))), F.lit(512)) + 1)
             .cast("int")
             .alias("height"),
             F.octet_length(payload).cast("bigint").alias("n_bytes"),
@@ -85,52 +84,48 @@ def _decode_payload(payload: bytes) -> list[float]:
     return (bins / len(payload)).tolist()
 
 
-def encode_pgm(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", dim_mod: int = 16
-) -> DataFrame:
+def encode_pgm(docs: DataFrame) -> DataFrame:
     """Encode each document as a genuine binary Netpbm PGM (P5) image —
     entirely JVM-side expressions, no Python in the encode path.
 
-    Geometry: ``width = md5(text) % dim_mod + 1``,
-    ``height = md5(reverse(text)) % dim_mod + 1`` (deterministic and
+    Reads ``doc_id`` and ``text``. Geometry: ``width = md5(text) % 16 + 1``,
+    ``height = md5(reverse(text)) % 16 + 1`` (deterministic and
     oracle-reproducible); raster: the 16-byte md5 digest of the text
     cycled to ``width*height`` bytes. The output ``payload`` column is a
     byte-exact P5 file (``P5\\n<w> <h>\\n255\\n`` + raster) that any
     Netpbm-compliant reader opens — the point is that the DECODER must
     recover dims and pixels by actually parsing the container.
     """
-    text = F.col(text_col)
-    w = (F.pmod(md5_int64(text), F.lit(dim_mod)) + 1).cast("int")
-    h = (F.pmod(md5_int64(F.reverse(text)), F.lit(dim_mod)) + 1).cast("int")
-    # 16-byte digest repeated to >= dim_mod*dim_mod bytes, cut to w*h;
-    # Column.substr takes Column args, so the length can be per-row
-    raster = F.unhex(F.repeat(F.md5(text), (dim_mod * dim_mod + 15) // 16)).substr(
+    text = F.col("text")
+    w = (F.pmod(md5_int64(text), F.lit(16)) + 1).cast("int")
+    h = (F.pmod(md5_int64(F.reverse(text)), F.lit(16)) + 1).cast("int")
+    # 16-byte digest repeated to 16*16 bytes, cut to w*h; Column.substr
+    # takes Column args, so the length can be per-row
+    raster = F.unhex(F.repeat(F.md5(text), 16)).substr(
         F.lit(1), (w * h).cast("int")
     )
     header = F.encode(F.format_string("P5\n%d %d\n255\n", w, h), "utf-8")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.concat(header, raster).alias("payload"),
     )
 
 
-def encode_ppm(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", dim_mod: int = 16
-) -> DataFrame:
+def encode_ppm(docs: DataFrame) -> DataFrame:
     """The TRUECOLOR twin of ``encode_pgm`` (r13): a genuine binary
     Netpbm PPM (P6) — same JVM-side expressions, same md5 geometry,
     raster = the digest cycled to ``3·width·height`` bytes (RGB
     triples in raster order). The decoder must recover 3 channels from
-    the P6 magic and de-interleave them."""
-    text = F.col(text_col)
-    w = (F.pmod(md5_int64(text), F.lit(dim_mod)) + 1).cast("int")
-    h = (F.pmod(md5_int64(F.reverse(text)), F.lit(dim_mod)) + 1).cast("int")
+    the P6 magic and de-interleave them. Reads ``doc_id`` and ``text``."""
+    text = F.col("text")
+    w = (F.pmod(md5_int64(text), F.lit(16)) + 1).cast("int")
+    h = (F.pmod(md5_int64(F.reverse(text)), F.lit(16)) + 1).cast("int")
     raster = F.unhex(
-        F.repeat(F.md5(text), (3 * dim_mod * dim_mod + 15) // 16)
+        F.repeat(F.md5(text), 3 * 16)
     ).substr(F.lit(1), (3 * w * h).cast("int"))
     header = F.encode(F.format_string("P6\n%d %d\n255\n", w, h), "utf-8")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         F.concat(header, raster).alias("payload"),
     )
 
@@ -261,16 +256,14 @@ def _parse_bmp(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     return 3, w, h, np.ascontiguousarray(px)
 
 
-def encode_bmp(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", dim_mod: int = 16
-) -> DataFrame:
+def encode_bmp(docs: DataFrame) -> DataFrame:
     """Encode each document as a genuine 24-bit BMP: the SAME md5
     geometry and digest-cycled RGB raster as ``encode_ppm`` (so the
     same SQL oracle replays the decoded content), wrapped in the
     Windows container — bottom-up rows, BGR channel order, 4-byte row
     padding. The decoder must undo all three to recover the PPM-equal
     pixels; passing any through breaks the content hash. Arrow-batched
-    ``mapInPandas``, map-only."""
+    ``mapInPandas``, map-only. Reads ``doc_id`` and ``text``."""
     import hashlib
 
     out_schema = T.StructType(
@@ -282,14 +275,14 @@ def encode_bmp(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         n = 3 * w * h
         raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
         px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
         yield did, _encode_bmp_bytes(px)
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
@@ -761,19 +754,14 @@ def decode_image_features(images: DataFrame) -> DataFrame:
 decode_pgm_features = decode_image_features
 
 
-def encode_compressed_image_mixed(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim_mod: int = 16,
-    level: int = 6,
-) -> DataFrame:
+def encode_compressed_image_mixed(docs: DataFrame) -> DataFrame:
     """Even doc_ids → genuine PNG (zlib DEFLATE), odd → genuine GIF87a
     (real variable-width LZW), in ONE Arrow pass — the single-scan
     spelling of the all-compressed mixed lake. Unlike the union-of-two-
     encoders spelling this needs no self-union of the source, so it is
     STREAMING-SAFE (one stateless ``mapInPandas`` over the stream).
-    Same md5 geometry/raster arithmetic as every image encoder."""
+    Same md5 geometry/raster arithmetic as every image encoder, over the
+    ``doc_id`` and ``text`` columns; PNGs use zlib level 6."""
     import hashlib
 
     from kafka_streams_common_spark.operators.gif import _encode_gif_bytes
@@ -787,23 +775,20 @@ def encode_compressed_image_mixed(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         raster = (bytes.fromhex(hx) * ((w * h + 15) // 16))[: w * h]
         px = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 1)
         if int(did) % 2 == 0:
-            yield did, _encode_png_bytes(px, level=level, filter_seed=int(did))
+            yield did, _encode_png_bytes(px, filter_seed=int(did))
         else:
             yield did, _encode_gif_bytes(px)
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 def encode_png(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim_mod: int = 16,
     level: int = 6,
     indexed: bool = False,
     channels: int = 1,
@@ -815,13 +800,13 @@ def encode_png(
     deterministic stored blocks at ``level=0``), scanline filters
     cycling through all five spec types (seeded by ``doc_id``), 8-bit
     grayscale. Geometry and raster use the SAME md5 arithmetic as
-    ``encode_pgm`` (``width = md5(text) % dim_mod + 1``, digest-cycled
+    ``encode_pgm`` (``width = md5(text) % 16 + 1``, digest-cycled
     pixels), so a SQL oracle replays the DECODED content without ever
     replaying DEFLATE — compression is exactly the part the decoder
     must undo. Unlike the other encoders this one cannot be JVM-side
     expressions (no zlib in Catalyst), so it runs as an Arrow-batched
     ``mapInPandas`` stage — map-only, the same 100 TB shape as the
-    decoders.
+    decoders. Reads ``doc_id`` and ``text``.
 
     ``indexed=True`` (r13) writes COLOR TYPE 3: the digest bytes become
     palette INDEXES and a PLTE chunk carries the affine grayscale
@@ -865,8 +850,8 @@ def encode_png(
 
     def encode(did, text):
         hx = hashlib.md5(text.encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(text[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         nch = channels + (1 if alpha else 0)
         n = nch * w * h * (depth // 8)
         raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]
@@ -884,7 +869,7 @@ def encode_png(
             depth=depth,
         )
 
-    return row_kernel(docs.select(id_col, text_col), encode, out_schema)
+    return row_kernel(docs.select("doc_id", "text"), encode, out_schema)
 
 
 def _le16(n) -> "F.Column":
@@ -913,8 +898,6 @@ WAV_SAMPLE_RATE = 8000
 
 def encode_wav(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     codec: str = "pcm",
 ) -> DataFrame:
     """Encode each document as a genuine RIFF/WAVE file (1 channel,
@@ -926,6 +909,7 @@ def encode_wav(
     RIFF chunks to recover the sample stream. Odd-length data chunks
     carry the RIFF word-alignment pad byte (chunk size stays the
     UNPADDED ``n`` per spec; strict readers require the pad).
+    Reads ``doc_id`` and ``text``.
 
     ``codec="pcm"`` (default) writes WAVE_FORMAT_PCM (tag 1, 16-byte fmt
     chunk; container length ``44 + n + n%2``). ``codec="mulaw"`` — the
@@ -943,7 +927,7 @@ def encode_wav(
     """
     if codec not in ("pcm", "mulaw", "alaw"):
         raise ValueError(f"unsupported WAV codec {codec!r} (pcm, mulaw or alaw)")
-    text = F.col(text_col)
+    text = F.col("text")
     n = (F.pmod(md5_int64(text), F.lit(241)) + F.lit(16)).cast("int")
     data = F.unhex(F.repeat(F.md5(text), 17)).substr(F.lit(1), n)
     rate = F.lit(WAV_SAMPLE_RATE)
@@ -991,7 +975,7 @@ def encode_wav(
         # word-alignment pad for odd data chunks, per the RIFF spec
         F.unhex(F.repeat(F.lit("00"), pad)),
     )
-    return docs.select(F.col(id_col).alias("doc_id"), payload.alias("payload"))
+    return docs.select(F.col("doc_id"), payload.alias("payload"))
 
 
 def _mulaw_expand(codes: np.ndarray) -> np.ndarray:
@@ -1192,13 +1176,12 @@ def decode_audio_codec_features(audio: DataFrame) -> DataFrame:
     )
 
 
-def encode_y4m(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def encode_y4m(docs: DataFrame) -> DataFrame:
     """Encode each document as a genuine YUV4MPEG2 (Y4M) video clip —
     the public raw-frame container (ASCII stream header ``YUV4MPEG2
     W<w> H<h> F<fps> ... C<colourspace>\\n``, then per frame an ASCII
     ``FRAME\\n`` marker + raw planes) — entirely JVM-side expressions.
+    Reads ``doc_id`` and ``text``.
 
     Geometry: ``w/h = md5 % 8 + 1``; ``n_frames = md5(text||'|nf') % 6
     + 2``; colourspace ``Cmono`` (one Y plane per frame); frame ``f``'s
@@ -1207,7 +1190,7 @@ def encode_y4m(
     ``F.aggregate`` fold over ``sequence(0, nf-1)`` with a binary
     accumulator — no Python in the encode path.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     w = (F.pmod(md5_int64(text), F.lit(8)) + 1).cast("int")
     h = (F.pmod(md5_int64(F.reverse(text)), F.lit(8)) + 1).cast("int")
     nf = (
@@ -1228,7 +1211,7 @@ def encode_y4m(
         ),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"), F.concat(header, body).alias("payload")
+        F.col("doc_id"), F.concat(header, body).alias("payload")
     )
 
 

@@ -39,12 +39,9 @@ def brute_force_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "q_emb",
 ) -> DataFrame:
-    """Exact cosine top-k per query: ``(q_id, vec_id, score)``.
+    """Exact cosine top-k per query: ``(q_id, vec_id, score)`` for
+    ``(vec_id, embedding)`` corpus rows and ``(q_id, q_emb)`` queries.
 
     Deterministic ranking: (score desc, vec_id asc) is a total order, so
     results are stable under any parallelism. Self-matches are excluded.
@@ -57,28 +54,28 @@ def brute_force_cosine_topk(
     # precompute per-vector norms once (linear pass) instead of per pair;
     # the per-pair score dot/(na*nb) stays bit-identical to the inline form
     corpus_n = fan_out(corpus).select(
-        id_col, vec_col, l2_norm(F.col(vec_col)).alias("__cn")
+        "vec_id", "embedding", l2_norm(F.col("embedding")).alias("__cn")
     )
     queries_n = queries.select(
-        query_id_col, query_vec_col, l2_norm(F.col(query_vec_col)).alias("__qn")
+        "q_id", "q_emb", l2_norm(F.col("q_emb")).alias("__qn")
     )
     scored = (
         corpus_n.crossJoin(F.broadcast(queries_n))
-        .filter(F.col(query_id_col) != F.col(id_col))
+        .filter(F.col("q_id") != F.col("vec_id"))
         .select(
-            F.col(query_id_col),
-            F.col(id_col),
+            F.col("q_id"),
+            F.col("vec_id"),
             (
-                dot_product(F.col(vec_col), F.col(query_vec_col))
+                dot_product(F.col("embedding"), F.col("q_emb"))
                 / (F.col("__cn") * F.col("__qn"))
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "score")
+        .select("q_id", "vec_id", "score")
     )
 
 
@@ -115,11 +112,9 @@ def _centroid_rows(
     return rows
 
 
-def _lloyd_refine(
-    corpus: DataFrame, n_centroids: int, iters: int, vec_col: str, id_col: str
-) -> DataFrame:
-    """Refine the seeded IVF centroids (:func:`_centroid_rows`) with
-    ``iters`` Lloyd (k-means) steps.
+def _lloyd_refine(corpus: DataFrame, n_centroids: int, iters: int) -> DataFrame:
+    """Refine the seeded IVF centroids (:func:`_centroid_rows`) of a
+    ``(vec_id, embedding)`` corpus with ``iters`` Lloyd (k-means) steps.
 
     Each step: assign every corpus vector to its nearest centroid (the
     map-only :func:`_assign_probes_udf` kernel over the collected
@@ -130,25 +125,25 @@ def _lloyd_refine(
     empty cells simply drop out. Deterministic given deterministic
     seeding (double-avg ordering aside, which is why the hash-gated
     driver query keeps iters=0 — see queries/similarity.py). Same
-    unique-``id_col`` precondition as :func:`ivf_cosine_topk` (duplicate
+    unique-``vec_id`` precondition as :func:`ivf_cosine_topk` (duplicate
     ids would double-weight their vectors in the mean).
     """
     centroids = None
     for _ in range(iters):
-        cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
+        cent_rows = _centroid_rows(centroids, corpus, "vec_id", "embedding", n_centroids)
         # a null or ragged vector gets no cell: keep it out of the means,
         # or it forms a NULL-keyed centroid the next step cannot assign to
         assigned = corpus.select(
-            F.col(vec_col).alias(vec_col),
+            F.col("embedding"),
             F.element_at(
                 _assign_probes_udf(cent_rows, 1)(
-                    to_double_array(F.col(vec_col))
+                    to_double_array(F.col("embedding"))
                 )["cells"],
                 1,
             ).alias("c_id"),
         ).where(F.col("c_id").isNotNull())
         centroids = (
-            assigned.select("c_id", F.posexplode(to_double_array(F.col(vec_col))))
+            assigned.select("c_id", F.posexplode(to_double_array(F.col("embedding"))))
             .groupBy("c_id", "pos")
             .agg(F.avg("col").alias("x"))
             .groupBy("c_id")
@@ -165,20 +160,19 @@ def _lloyd_refine(
 def collect_training_sample(
     corpus: DataFrame,
     sample_size: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list:
     """The deterministic md5-ordered training sample both index trainers
     draw from: the ``sample_size`` rows with the smallest
-    ``(md5(id), id)`` key (TakeOrderedAndProject — partial top-N per
+    ``(md5(vec_id), vec_id)`` key, as ``(__id, __v)`` rows holding
+    ``vec_id`` and ``embedding`` (TakeOrderedAndProject — partial top-N per
     partition, constant-size driver merge). A prefix of a larger sample
     IS the smaller sample, so one collect can feed trainers of different
     sizes with bit-identical inputs."""
     return (
         corpus.select(
-            F.col(id_col).alias("__id"),
-            to_double_array(F.col(vec_col)).alias("__v"),
-            md5_int64(id_col).alias("__h"),
+            F.col("vec_id").alias("__id"),
+            to_double_array(F.col("embedding")).alias("__v"),
+            md5_int64("vec_id").alias("__h"),
         )
         .orderBy(F.asc("__h"), F.asc("__id"))
         .limit(sample_size)
@@ -189,18 +183,14 @@ def collect_training_sample(
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
-    sample_per_centroid: int = 32,
-    iters: int = 10,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     _sample_rows: list | None = None,
 ) -> DataFrame:
-    """Deterministic sampled k-means++ centroid training for IVF.
+    """Deterministic sampled k-means++ centroid training for IVF over the
+    ``(vec_id, embedding)`` corpus, then 10 spherical Lloyd iterations.
 
     Scale shape: the ONLY corpus-scale work is a deterministic sample —
-    the ``n_centroids · sample_per_centroid`` vectors with the smallest
-    md5(id) (TakeOrderedAndProject: partial top-N per partition, merge on
+    the ``n_centroids · 32`` vectors with the smallest
+    md5(vec_id) (TakeOrderedAndProject: partial top-N per partition, merge on
     the driver — never a global sort, and md5 ordering is uniform i.i.d.
     regardless of how ids cluster). The sample is CONSTANT-SIZED in the
     corpus (k·32 rows ≈ a few hundred KB at any corpus scale), so running
@@ -208,7 +198,7 @@ def train_ivf_centroids(
     driver-loop anti-pattern: it is the standard "train on a sample,
     apply distributed" split (the apply side — cell assignment — stays a
     broadcast join in :func:`ivf_cosine_topk`). Everything is seeded:
-    md5 sampling, ``numpy.random.default_rng(seed)`` for k-means++ — the
+    md5 sampling, ``numpy.random.default_rng(0)`` for k-means++ — the
     same corpus always yields the same centroids, on any cluster.
 
     Spherical k-means: vectors are L2-normalized so nearest-by-cosine =
@@ -225,19 +215,17 @@ def train_ivf_centroids(
     import numpy as np
 
     spark = corpus.sparkSession
-    sample_size = n_centroids * sample_per_centroid
+    sample_size = n_centroids * 32
     rows = (
         _sample_rows[:sample_size]
         if _sample_rows is not None
-        else collect_training_sample(
-            corpus, sample_size, id_col=id_col, vec_col=vec_col
-        )
+        else collect_training_sample(corpus, sample_size)
     )
     X = np.asarray([r["__v"] for r in rows], dtype="float64")
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     n = len(Xn)
     k = min(n_centroids, n)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(0)
 
     # k-means++ init on cosine distance (1 - dot of normalized vectors)
     first = int(rng.integers(n))
@@ -251,7 +239,7 @@ def train_ivf_centroids(
         d = np.minimum(d, 1.0 - Xn @ centers[-1])
     C = np.vstack(centers)
 
-    for _ in range(iters):
+    for _ in range(10):
         sims = Xn @ C.T  # n×k
         assign = sims.argmax(axis=1)
         for c in range(k):
@@ -278,10 +266,6 @@ def ivf_cosine_topk(
     n_probe: int = 4,
     kmeans_iters: int = 0,
     centroids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "q_emb",
 ) -> DataFrame:
     """IVF-bucketed approximate cosine top-k: ``(q_id, vec_id, score)``.
 
@@ -301,24 +285,25 @@ def ivf_cosine_topk(
     neighbor lives in an unprobed cell (tested against the brute-force
     baseline).
 
-    PRECONDITION: ``id_col`` must be unique per corpus row: self-matches
-    are excluded by id and score ties rank by id, so duplicate ids make
-    both ambiguous. Uniqueness is asserted in the pytest suite; real
-    embedding stores key on a unique vector id by construction. ``id_col``/``query_id_col`` must
-    be INTEGRAL types (checked — see :func:`_require_integral_ids`);
+    Reads ``(vec_id, embedding)`` corpus rows and ``(q_id, q_emb)``
+    queries. PRECONDITION: ``vec_id`` must be unique per corpus row:
+    self-matches are excluded by id and score ties rank by id, so
+    duplicate ids make both ambiguous. Uniqueness is asserted in the
+    pytest suite; real embedding stores key on a unique vector id by
+    construction. ``vec_id``/``q_id`` must be INTEGRAL types (checked — see :func:`_require_integral_ids`);
     narrower ints widen to bigint in the output.
     """
-    _require_integral_ids(corpus, id_col, "ivf_cosine_topk")
-    _require_integral_ids(queries, query_id_col, "ivf_cosine_topk")
+    _require_integral_ids(corpus, "vec_id", "ivf_cosine_topk")
+    _require_integral_ids(queries, "q_id", "ivf_cosine_topk")
     if centroids is None and kmeans_iters:
-        centroids = _lloyd_refine(corpus, n_centroids, kmeans_iters, vec_col, id_col)
-    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
+        centroids = _lloyd_refine(corpus, n_centroids, kmeans_iters)
+    cent_rows = _centroid_rows(centroids, corpus, "vec_id", "embedding", n_centroids)
     corpus = fan_out(corpus)
     assigned = corpus.select(
-        F.col(id_col).alias("__id"),
-        to_double_array(F.col(vec_col)).alias("__v"),
+        F.col("vec_id").alias("__id"),
+        to_double_array(F.col("embedding")).alias("__v"),
         _assign_probes_udf(cent_rows, 1)(
-            to_double_array(F.col(vec_col))
+            to_double_array(F.col("embedding"))
         ).alias("__a"),
     ).select(
         "__id",
@@ -327,10 +312,10 @@ def ivf_cosine_topk(
         F.element_at("__a.cells", 1).alias("cell"),
     )
     probes = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        to_double_array(F.col(query_vec_col)).alias("__qv"),
+        F.col("q_id").alias("__qid"),
+        to_double_array(F.col("q_emb")).alias("__qv"),
         _assign_probes_udf(cent_rows, n_probe)(
-            to_double_array(F.col(query_vec_col))
+            to_double_array(F.col("q_emb"))
         ).alias("__a"),
     ).select(
         "__qid",
@@ -339,7 +324,7 @@ def ivf_cosine_topk(
         F.explode("__a.cells").alias("cell"),
     )
     return _cell_topk(assigned, probes, k).select(
-        F.col("__q").alias(query_id_col), F.col("__nb").alias(id_col), "score"
+        F.col("__q").alias("q_id"), F.col("__nb").alias("vec_id"), "score"
     )
 
 
@@ -408,8 +393,6 @@ def knn_graph(
     n_probe: int = 2,
     centroids: DataFrame | None = None,
     max_cell: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_rows: int | None = None,
 ) -> DataFrame:
     """Distributed k-NN GRAPH construction — every corpus vector gets its
@@ -451,18 +434,19 @@ def knn_graph(
     probed (pinned vs brute force in pytest). Deterministic end to end:
     seeding, assignment, probing, and ranking are total orders with
     explicit tie-breaks, so a SQL oracle replays the identical graph.
-    PRECONDITION: ``id_col`` unique per row (as in ``ivf_cosine_topk``)
+    Reads ``vec_id`` and ``embedding``. PRECONDITION: ``vec_id`` unique
+    per row (as in ``ivf_cosine_topk``)
     and INTEGRAL (checked — see :func:`_require_integral_ids`; narrower
     ints widen to bigint in the output).
     """
-    _require_integral_ids(corpus, id_col, "knn_graph")
-    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
+    _require_integral_ids(corpus, "vec_id", "knn_graph")
+    cent_rows = _centroid_rows(centroids, corpus, "vec_id", "embedding", n_centroids)
     corpus = fan_out(corpus)
     base = corpus.select(
-        F.col(id_col).alias("__id"),
-        to_double_array(F.col(vec_col)).alias("__v"),
+        F.col("vec_id").alias("__id"),
+        to_double_array(F.col("embedding")).alias("__v"),
         _assign_probes_udf(cent_rows, n_probe)(
-            to_double_array(F.col(vec_col))
+            to_double_array(F.col("embedding"))
         ).alias("__a"),
     ).select(
         "__id",
@@ -481,7 +465,7 @@ def knn_graph(
         F.explode("__probes").alias("cell"),
     )
     return _cell_topk(home, probes, k, block_rows).select(
-        F.col("__q").alias(id_col), F.col("__nb").alias("neighbor_id"), "score"
+        F.col("__q").alias("vec_id"), F.col("__nb").alias("neighbor_id"), "score"
     )
 
 
@@ -491,18 +475,16 @@ def semantic_dedup(
     k: int = 8,
     n_centroids: int = 16,
     n_probe: int = 2,
-    centroids: DataFrame | None = None,
     max_cell: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_rows: int | None = None,
 ) -> DataFrame:
-    """SemDeDup-style SEMANTIC deduplication over an embedding corpus —
-    the composition the k-NN graph exists for: build the approximate
-    k-NN edge list (:func:`knn_graph`), keep edges with cosine ≥
-    ``tau``, collapse them into clusters with min-label propagation
-    (:func:`operators.cluster.connected_components` — singletons keep
-    their own id), and mark each cluster's canonical
+    """SemDeDup-style SEMANTIC deduplication over an embedding corpus of
+    ``(vec_id, embedding)`` rows — the composition the k-NN graph exists
+    for: build the approximate k-NN edge list (:func:`knn_graph`, its
+    centroids seeded from the corpus), keep edges with cosine ≥ ``tau``,
+    collapse them into clusters with large-star/small-star rounds
+    (:func:`operators.cluster.connected_components_two_phase` —
+    singletons keep their own id), and mark each cluster's canonical
     (min-id) member as the survivor. Returns
     ``(vec_id, cluster_id, keep)`` — the keep list a curation pipeline
     semi-joins against the document store (bodies never enter the
@@ -512,33 +494,35 @@ def semantic_dedup(
     Scale shape: inherits the k-NN graph's IVF blocking (candidates ≈
     n_probe/C · |corpus|², cell-count grown with the corpus), the
     ``max_cell`` hot-cell cap, the ``block_rows`` physical row-size
-    bound on the grouped cell blocks, and CC's label propagation with
-    per-round localCheckpoints, which takes O(diameter) rounds (one per
-    hop of the widest cluster) and raises if that exceeds its cap. The threshold prunes
-    the edge list BEFORE the first CC exchange, so cluster work scales
-    with near-duplicate mass, not graph size."""
+    bound on the grouped cell blocks, and two-phase CC with per-round
+    localCheckpoints, which takes O(log n) rounds whatever the clusters'
+    diameter (the thresholded sf0.1 graph of ``sim_semantic_dedup``
+    needs 21 min-label rounds, past that engine's cap of 20, and 6 here).
+    The threshold prunes the edge list BEFORE the first CC exchange, so
+    cluster work scales with near-duplicate mass, not graph size."""
     edges = (
         knn_graph(
             corpus,
             k=k,
             n_centroids=n_centroids,
             n_probe=n_probe,
-            centroids=centroids,
             max_cell=max_cell,
-            id_col=id_col,
-            vec_col=vec_col,
             block_rows=block_rows,
         )
         .filter(F.col("score") >= tau)
-        .select(F.col(id_col).alias("doc_a"), F.col("neighbor_id").alias("doc_b"))
+        .select(F.col("vec_id").alias("doc_a"), F.col("neighbor_id").alias("doc_b"))
     )
-    from kafka_streams_common_spark.operators.cluster import connected_components
+    from kafka_streams_common_spark.operators.cluster import (
+        connected_components_two_phase,
+    )
 
-    cc = connected_components(corpus.select(id_col), edges, node_col=id_col)
+    cc = connected_components_two_phase(
+        corpus.select("vec_id"), edges, node_col="vec_id"
+    )
     return cc.select(
-        id_col,
+        "vec_id",
         "cluster_id",
-        (F.col(id_col) == F.col("cluster_id")).alias("keep"),
+        (F.col("vec_id") == F.col("cluster_id")).alias("keep"),
     )
 
 
@@ -1006,10 +990,9 @@ def hyperplane_lsh_match(
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     tau: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Cosine near-duplicate pairs ``(id_a, id_b, score)``, a < b, score ≥ tau.
+    """Cosine near-duplicate pairs ``(id_a, id_b, score)``, a < b, score ≥ tau,
+    over the ``vec_id`` and ``embedding`` columns.
 
     EXACT QUADRATIC FORM — the semantic definition used as the oracle and
     in tests; the registered query runs the scale path
@@ -1018,9 +1001,9 @@ def embedding_near_dup_pairs(
     all-pairs theta-join is O(n²).
     """
     vecs = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        l2_norm(F.col("embedding")).alias("nrm"),
     )
     a = vecs.alias("a")
     b = vecs.alias("b")
@@ -1036,11 +1019,8 @@ def embedding_near_dup_pairs(
     )
 
 
-def quantize_embeddings_int8(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Symmetric int8 scalar quantization of an embedding column:
+def quantize_embeddings_int8(corpus: DataFrame) -> DataFrame:
+    """Symmetric int8 scalar quantization of the ``embedding`` column:
     appends ``scale`` and ``qvec array<int>`` to the input row, with
     ``q_i = round(x_i · scale)`` and ``scale = 127 / max|x|`` per vector —
     the storage/IO workhorse for large embedding stores (4× smaller than
@@ -1054,7 +1034,7 @@ def quantize_embeddings_int8(
     same vector always quantizes identically on any engine (round
     half-away-from-zero in both Spark and DuckDB).
     """
-    v = to_double_array(F.col(vec_col))
+    v = to_double_array(F.col("embedding"))
     # the greatest() floor keeps an all-zero vector finite (q stays 0)
     amax = F.greatest(F.array_max(F.transform(v, F.abs)), F.lit(1e-30))
     scale = F.lit(127.0) / amax
@@ -1064,12 +1044,9 @@ def quantize_embeddings_int8(
     )
 
 
-def embedding_centroids(
-    corpus: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label centroid statistics ``(label, centroid_norm, n_vectors)`` —
+def embedding_centroids(corpus: DataFrame) -> DataFrame:
+    """Per-``label`` centroid statistics of the ``embedding`` column,
+    ``(label, centroid_norm, n_vectors)`` —
     the cluster-summary/statistics pass of an embedding pipeline (and the
     aggregation step a k-means/IVF trainer runs every iteration).
 
@@ -1082,7 +1059,7 @@ def embedding_centroids(
     last ulp, the semantics don't.
     """
     pos = corpus.select(
-        F.col(label_col).alias("label"), F.posexplode(vec_col).alias("pos", "v")
+        F.col("label"), F.posexplode("embedding").alias("pos", "v")
     )
     dim_stats = pos.groupBy("label", "pos").agg(
         F.avg("v").alias("m"), F.count(F.lit(1)).alias("cnt")
@@ -1101,10 +1078,6 @@ def ivf_int8_rerank_topk(
     n_probe: int = 4,
     shortlist: int = 30,
     centroids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "q_emb",
 ) -> DataFrame:
     """Storage-aware IVF: int8-scored candidate search + full-precision
     re-rank — ``(q_id, vec_id, score)`` with EXACT final scores.
@@ -1138,20 +1111,21 @@ def ivf_int8_rerank_topk(
     kernels over the collected centroid set (zero exchanges — see
     ``_assign_probes_udf``), one cell-local candidate join against the
     broadcast probe set, one broadcast re-rank join — the corpus itself
-    never shuffles. Same unique-``id_col`` precondition as the other IVF
-    operators.
+    never shuffles. Reads ``(vec_id, embedding)`` corpus rows and
+    ``(q_id, q_emb)`` queries; same unique-``vec_id`` precondition as
+    the other IVF operators.
     """
-    q8 = quantize_embeddings_int8(corpus, vec_col=vec_col)
+    q8 = quantize_embeddings_int8(corpus)
     recon = q8.select(
-        id_col,
+        "vec_id",
         F.transform("qvec", lambda qq: qq.cast("double") / F.col("scale")).alias(
             "__r"
         ),
     )
-    cent_rows = _centroid_rows(centroids, recon, id_col, "__r", n_centroids)
+    cent_rows = _centroid_rows(centroids, recon, "vec_id", "__r", n_centroids)
     recon = fan_out(recon)
     assigned = recon.select(
-        id_col,
+        "vec_id",
         "__r",
         F.element_at(
             _assign_probes_udf(cent_rows, 1)(F.col("__r"))["cells"], 1
@@ -1159,42 +1133,42 @@ def ivf_int8_rerank_topk(
     )
 
     probes = queries.select(
-        query_id_col,
-        query_vec_col,
+        "q_id",
+        "q_emb",
         F.explode(
             _assign_probes_udf(cent_rows, n_probe)(
-                to_double_array(F.col(query_vec_col))
+                to_double_array(F.col("q_emb"))
             )["cells"]
         ).alias("cell"),
     )
 
-    short_w = Window.partitionBy(query_id_col).orderBy(F.desc("score8"), F.asc(id_col))
+    short_w = Window.partitionBy("q_id").orderBy(F.desc("score8"), F.asc("vec_id"))
     short = (
         assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(query_id_col) != F.col(id_col))
+        .filter(F.col("q_id") != F.col("vec_id"))
         .select(
-            query_id_col,
-            query_vec_col,
-            id_col,
-            cosine_similarity(F.col("__r"), F.col(query_vec_col)).alias("score8"),
+            "q_id",
+            "q_emb",
+            "vec_id",
+            cosine_similarity(F.col("__r"), F.col("q_emb")).alias("score8"),
         )
         .withColumn("rn", F.row_number().over(short_w))
         .filter(F.col("rn") <= shortlist)
-        .select(query_id_col, query_vec_col, id_col)
+        .select("q_id", "q_emb", "vec_id")
     )
 
-    rank_w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    rank_w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
-        corpus.select(id_col, vec_col)
-        .join(F.broadcast(short), id_col)
+        corpus.select("vec_id", "embedding")
+        .join(F.broadcast(short), "vec_id")
         .select(
-            query_id_col,
-            id_col,
-            cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+            "q_id",
+            "vec_id",
+            cosine_similarity(F.col("embedding"), F.col("q_emb")).alias("score"),
         )
         .withColumn("rn", F.row_number().over(rank_w))
         .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "score")
+        .select("q_id", "vec_id", "score")
     )
 
 
@@ -1203,12 +1177,11 @@ def cell_diverse_sample(
     n_per_cell: int = 8,
     n_centroids: int = 16,
     centroids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Diversity-aware representative sampling over an embedding corpus:
     ``(vec_id, cell)`` — at most ``n_per_cell`` vectors per IVF cell,
-    chosen uniformly WITHIN each cell by md5(id) rank.
+    chosen uniformly WITHIN each cell by md5(vec_id) rank, from the
+    ``vec_id`` and ``embedding`` columns.
 
     The curation use-case: a plain hash sample of a skewed corpus
     reproduces the skew (90% of a crawl can be one content genre); cell-
@@ -1231,35 +1204,33 @@ def cell_diverse_sample(
     parallelism.
     """
     corpus = fan_out(corpus)
-    cent_rows = _centroid_rows(centroids, corpus, id_col, vec_col, n_centroids)
+    cent_rows = _centroid_rows(centroids, corpus, "vec_id", "embedding", n_centroids)
     assigned = corpus.select(
-        id_col,
+        "vec_id",
         F.element_at(
             _assign_probes_udf(cent_rows, 1)(
-                to_double_array(F.col(vec_col))
+                to_double_array(F.col("embedding"))
             )["cells"],
             1,
         ).alias("cell"),
     )
     w = Window.partitionBy("cell").orderBy(
-        F.asc(md5_int64(id_col)), F.asc(id_col)
+        F.asc(md5_int64("vec_id")), F.asc("vec_id")
     )
     return (
         assigned.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n_per_cell)
-        .select(id_col, "cell")
+        .select("vec_id", "cell")
     )
 
 
 def centroid_cosine_outliers(
     corpus: DataFrame,
     tau: float = 0.0,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Embedding outlier detection against per-label centroids:
-    ``(vec_id, label, centroid_cosine, is_outlier)`` — the
+    ``(vec_id, label, centroid_cosine, is_outlier)`` from the ``vec_id``,
+    ``label`` and ``embedding`` columns — the
     embedding-space quality gate a training pipeline runs before
     ingesting a labeled/clustered corpus (vectors pointing away from
     their cohort are mislabels, noise, or adversarial rows; SemDeDup's
@@ -1282,11 +1253,11 @@ def centroid_cosine_outliers(
     corpus scan. No corpus shuffle anywhere.
     """
     v6 = F.transform(
-        to_double_array(F.col(vec_col)),
+        to_double_array(F.col("embedding")),
         lambda x: F.round(x, 6).cast("decimal(28,12)"),
     )
     pos = corpus.select(
-        F.col(label_col).alias("__lbl"), F.posexplode(v6).alias("pos", "v")
+        F.col("label").alias("__lbl"), F.posexplode(v6).alias("pos", "v")
     )
     cent = (
         pos.groupBy("__lbl", "pos")
@@ -1298,12 +1269,12 @@ def centroid_cosine_outliers(
             ).alias("c_emb")
         )
     )
-    cos = cosine_similarity(F.col(vec_col), F.col("c_emb"))
+    cos = cosine_similarity(F.col("embedding"), F.col("c_emb"))
     return (
-        corpus.join(F.broadcast(cent), F.col(label_col) == F.col("__lbl"))
+        corpus.join(F.broadcast(cent), F.col("label") == F.col("__lbl"))
         .select(
-            id_col,
-            label_col,
+            "vec_id",
+            "label",
             cos.alias("centroid_cosine"),
             (cos < F.lit(tau)).alias("is_outlier"),
         )
@@ -1314,11 +1285,6 @@ def train_pq_codebooks(
     corpus: DataFrame,
     m: int = 8,
     k_codes: int = 16,
-    sample_size: int = 512,
-    iters: int = 10,
-    seed: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     _sample_rows: list | None = None,
 ) -> DataFrame:
     """Deterministic sampled product-quantization codebook training —
@@ -1327,9 +1293,10 @@ def train_pq_codebooks(
 
     Same train-on-sample/apply-distributed split as
     :func:`train_ivf_centroids` and the same scale argument: the ONLY
-    corpus-scale work is the constant-size md5-ordered sample
-    (TakeOrderedAndProject), then plain-L2 Lloyd's per subspace runs
-    driver-side in numpy, fully seeded — the same corpus always yields
+    corpus-scale work is the constant-size md5-ordered sample of 512
+    ``(vec_id, embedding)`` rows (TakeOrderedAndProject), then 10
+    plain-L2 Lloyd iterations per subspace run driver-side in numpy,
+    seeded with ``default_rng(0)`` — the same corpus always yields
     the same codebooks on any cluster. Plain L2 (not spherical): PQ
     approximates the vector ITSELF; cosine comes back at ADC time from
     the reconstructed dot and norm. ``_sample_rows``: see
@@ -1340,18 +1307,16 @@ def train_pq_codebooks(
 
     spark = corpus.sparkSession
     rows = (
-        _sample_rows[:sample_size]
+        _sample_rows[:512]
         if _sample_rows is not None
-        else collect_training_sample(
-            corpus, sample_size, id_col=id_col, vec_col=vec_col
-        )
+        else collect_training_sample(corpus, 512)
     )
     X = np.asarray([r["__v"] for r in rows], dtype="float64")
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     d = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(0)
     out = []
     for s in range(m):
         Xs = X[:, s * d : (s + 1) * d]
@@ -1368,7 +1333,7 @@ def train_pq_codebooks(
             centers.append(Xs[nxt])
             dist = np.minimum(dist, ((Xs - centers[-1]) ** 2).sum(axis=1))
         C = np.vstack(centers)
-        for _ in range(iters):
+        for _ in range(10):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(-1)
             assign = d2.argmin(axis=1)
             for c in range(k):
@@ -1430,18 +1395,14 @@ def ivf_pq_topk(
     queries: DataFrame,
     k: int = 10,
     m: int = 8,
-    k_codes: int = 16,
     n_centroids: int = 16,
     n_probe: int = 4,
     rerank: int | None = None,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "q_emb",
 ) -> DataFrame:
-    """IVF-PQ approximate top-k — ``(q_id, vec_id, score)`` where
+    """IVF-PQ approximate top-k over ``(vec_id, embedding)`` corpus rows
+    and ``(q_id, q_emb)`` queries — ``(q_id, vec_id, score)`` where
     ``score`` is the ADC cosine (query against the PQ-RECONSTRUCTED
     candidate), the FAISS-taxonomy IVF-PQ shape done relationally:
 
@@ -1453,7 +1414,8 @@ def ivf_pq_topk(
     2. candidates = probed cells only (the IVF pruning);
     3. ADC scoring WITHOUT touching the vectors again: each candidate's
        m codes join a per-(query, subspace, code) LOOKUP TABLE built by
-       crossing the queries against the m·k codebook rows — broadcast-
+       crossing the queries against the m·k codebook rows (k = 16 codes
+       per subspace when trained here) — broadcast-
        sized by construction — carrying the partial dot
        ``⟨q_sub, c⟩`` and partial squared norm ``|c|²``; per (query,
        candidate) the m partials aggregate to
@@ -1481,30 +1443,28 @@ def ivf_pq_topk(
     the final order. ``None`` returns raw ADC scores.
     """
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            corpus, m=m, k_codes=k_codes, id_col=id_col, vec_col=vec_col
-        )
+        codebooks = train_pq_codebooks(corpus, m=m)
 
-    vecs = corpus.select(id_col, to_double_array(F.col(vec_col)).alias("__v"))
-    cent_rows = _centroid_rows(centroids, vecs, id_col, "__v", n_centroids)
+    vecs = corpus.select("vec_id", to_double_array(F.col("embedding")).alias("__v"))
+    cent_rows = _centroid_rows(centroids, vecs, "vec_id", "__v", n_centroids)
     # PQ encoding and cell assignment are both map-only kernels over the
     # same corpus scan: one projection computes both, where two passes
     # would need an id-equi-join (an Exchange of both sides) to re-unite
     # two derived columns of the same row
     codes_cells = fan_out(corpus).select(
-        F.col(id_col).alias(id_col),
-        _pq_encode_udf(codebooks)(to_double_array(F.col(vec_col))).alias("codes"),
+        F.col("vec_id"),
+        _pq_encode_udf(codebooks)(to_double_array(F.col("embedding"))).alias("codes"),
         F.element_at(
-            _assign_probes_udf(cent_rows, 1)(to_double_array(F.col(vec_col)))["cells"],
+            _assign_probes_udf(cent_rows, 1)(to_double_array(F.col("embedding")))["cells"],
             1,
         ).alias("cell"),
     )
 
     qv = queries.select(
-        query_id_col, to_double_array(F.col(query_vec_col)).alias("__q")
+        "q_id", to_double_array(F.col("q_emb")).alias("__q")
     )
     probes = qv.select(
-        query_id_col,
+        "q_id",
         F.explode(
             _assign_probes_udf(cent_rows, n_probe)(F.col("__q"))["cells"]
         ).alias("cell"),
@@ -1516,7 +1476,7 @@ def ivf_pq_topk(
     lut = (
         qv.crossJoin(F.broadcast(codebooks))
         .select(
-            query_id_col,
+            "q_id",
             "sub_id",
             "code_id",
             F.round(
@@ -1542,32 +1502,32 @@ def ivf_pq_topk(
         )
     )
     qnorm = qv.select(
-        query_id_col, l2_norm(F.col("__q")).alias("__qn")
+        "q_id", l2_norm(F.col("__q")).alias("__qn")
     )
 
     cand_codes = (
         codes_cells.join(F.broadcast(probes), "cell")
-        .filter(F.col(query_id_col) != F.col(id_col))
+        .filter(F.col("q_id") != F.col("vec_id"))
         .select(
-            query_id_col,
-            id_col,
+            "q_id",
+            "vec_id",
             F.posexplode("codes").alias("sub_id", "code_id"),
         )
     )
-    rank_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.asc(id_col)
+    rank_w = Window.partitionBy("q_id").orderBy(
+        F.desc("score"), F.asc("vec_id")
     )
     adc = (
-        cand_codes.join(F.broadcast(lut), [query_id_col, "sub_id", "code_id"])
-        .groupBy(query_id_col, id_col)
+        cand_codes.join(F.broadcast(lut), ["q_id", "sub_id", "code_id"])
+        .groupBy("q_id", "vec_id")
         .agg(
             F.sum("pdot").cast("double").alias("__dot"),
             F.sum("pn2").cast("double").alias("__n2"),
         )
-        .join(F.broadcast(qnorm), query_id_col)
+        .join(F.broadcast(qnorm), "q_id")
         .select(
-            query_id_col,
-            id_col,
+            "q_id",
+            "vec_id",
             (
                 F.col("__dot")
                 / F.greatest(
@@ -1578,22 +1538,22 @@ def ivf_pq_topk(
         .withColumn("rn", F.row_number().over(rank_w))
     )
     if rerank is None:
-        return adc.filter(F.col("rn") <= k).select(query_id_col, id_col, "score")
-    short = adc.filter(F.col("rn") <= rerank).select(query_id_col, id_col)
-    exact_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.asc(id_col)
+        return adc.filter(F.col("rn") <= k).select("q_id", "vec_id", "score")
+    short = adc.filter(F.col("rn") <= rerank).select("q_id", "vec_id")
+    exact_w = Window.partitionBy("q_id").orderBy(
+        F.desc("score"), F.asc("vec_id")
     )
     return (
-        vecs.join(F.broadcast(short), id_col)
-        .join(F.broadcast(qv), query_id_col)
+        vecs.join(F.broadcast(short), "vec_id")
+        .join(F.broadcast(qv), "q_id")
         .select(
-            query_id_col,
-            id_col,
+            "q_id",
+            "vec_id",
             cosine_similarity(F.col("__v"), F.col("__q")).alias("score"),
         )
         .withColumn("rn", F.row_number().over(exact_w))
         .filter(F.col("rn") <= k)
-        .select(query_id_col, id_col, "score")
+        .select("q_id", "vec_id", "score")
     )
 
 
@@ -1625,13 +1585,12 @@ def random_project(
     in_dim: int,
     out_dim: int = 8,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Johnson–Lindenstrauss dimensionality reduction with a ±1 sign
     matrix (Achlioptas 2003): ``p_j = (Σ_i ± v_i) / sqrt(out_dim)`` —
     the cheap pre-projection in front of clustering / LSH / ANN when
-    the raw embedding dimension makes those shuffles too wide.
+    the raw embedding dimension makes those shuffles too wide. Reads the
+    ``vec_id`` and ``embedding`` columns.
 
     Exact-reproducibility design: components are scaled to integers
     (``round(v * 1e6)`` as bigint) and summed with ±1 signs in integer
@@ -1651,9 +1610,9 @@ def random_project(
         raise ValueError("in_dim and out_dim must be >= 1")
     signs = achlioptas_signs(in_dim, out_dim, seed)
     ints = vecs.select(
-        id_col,
+        "vec_id",
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.round(x.cast("double") * 1e6, 0).cast("bigint"),
         ).alias("__ints"),
     )
@@ -1676,7 +1635,7 @@ def random_project(
         projections.append(
             (summed.cast("double") / F.lit(scale)).alias(f"p{j}")
         )
-    return ints.select(id_col, *projections)
+    return ints.select("vec_id", *projections)
 
 
 def mmr_diversified_topk(
@@ -1684,16 +1643,10 @@ def mmr_diversified_topk(
     queries: DataFrame,
     k: int = 5,
     shortlist: int = 12,
-    lam: float = 0.7,
-    div_weight: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "q_emb",
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k (Carbonell &
     Goldstein 1998): greedily pick ``k`` results per query maximizing
-    ``lam * sim(q, c) - div_weight * max_{s in selected} sim(c, s)`` —
+    ``0.7 * sim(q, c) - 0.3 * max_{s in selected} sim(c, s)`` —
     the RAG-retrieval staple that stops the result list collapsing onto
     near-duplicate passages.
 
@@ -1707,35 +1660,29 @@ def mmr_diversified_topk(
     queries, never a driver loop. The kernel performs only IEEE scalar
     multiply/subtract/max on similarities already computed by the JVM
     fold, so results are bit-reproducible against an engine-independent
-    oracle. ``lam`` and ``div_weight`` are taken as SEPARATE literals:
-    deriving ``1 - 0.7`` in floating point yields 0.30000000000000004
-    and breaks cross-engine parity with oracles that spell ``0.3``.
+    oracle. The relevance weight 0.7 and the diversity weight 0.3 are
+    SEPARATE literals: deriving ``1 - 0.7`` in floating point yields
+    0.30000000000000004 and breaks cross-engine parity with oracles that
+    spell ``0.3``.
 
-    Returns ``(q_id, step, vec_id, mmr_score)`` with ``step`` 1-based in
-    selection order.
+    Reads ``(vec_id, embedding)`` corpus rows and ``(q_id, q_emb)``
+    queries. Returns ``(q_id, step, vec_id, mmr_score)`` with ``step``
+    1-based in selection order.
     """
     import pandas as pd
 
-    cand = brute_force_cosine_topk(
-        corpus,
-        queries,
-        k=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    )
+    cand = brute_force_cosine_topk(corpus, queries, k=shortlist)
     emb = corpus.select(
-        F.col(id_col).alias("__eid"), F.col(vec_col).alias("__evec")
+        F.col("vec_id").alias("__eid"), F.col("embedding").alias("__evec")
     )
-    c1 = cand.join(emb, F.col(id_col) == F.col("__eid")).select(
-        query_id_col,
-        F.col(id_col).alias("a"),
+    c1 = cand.join(emb, F.col("vec_id") == F.col("__eid")).select(
+        "q_id",
+        F.col("vec_id").alias("a"),
         F.col("score").alias("qsim_a"),
         F.col("__evec").alias("__va"),
     )
     c2 = c1.select(
-        F.col(query_id_col).alias("__q2"),
+        F.col("q_id").alias("__q2"),
         F.col("a").alias("b"),
         F.col("__va").alias("__vb"),
     )
@@ -1745,11 +1692,11 @@ def mmr_diversified_topk(
     pairs = (
         c1.join(
             c2,
-            (F.col(query_id_col) == F.col("__q2")) & (F.col("a") != F.col("b")),
+            (F.col("q_id") == F.col("__q2")) & (F.col("a") != F.col("b")),
             "left",
         )
         .select(
-            query_id_col,
+            "q_id",
             "a",
             "qsim_a",
             "b",
@@ -1757,12 +1704,10 @@ def mmr_diversified_topk(
         )
     )
 
-    out_schema = (
-        f"{query_id_col} long, step long, {id_col} long, mmr_score double"
-    )
+    out_schema = "q_id long, step long, vec_id long, mmr_score double"
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf[query_id_col].iloc[0]
+        qid = pdf["q_id"].iloc[0]
         qsim: dict[int, float] = {}
         sim: dict[tuple[int, int], float] = {}
         for a, qs, b, s in zip(pdf["a"], pdf["qsim_a"], pdf["b"], pdf["sim_ab"]):
@@ -1779,7 +1724,7 @@ def mmr_diversified_topk(
                 if c in selected:
                     continue
                 pen = max((sim[(c, s)] for s in selected), default=0.0)
-                score = lam * qsim[c] - div_weight * pen
+                score = 0.7 * qsim[c] - 0.3 * pen
                 key = (-score, c)
                 if best_key is None or key < best_key:
                     best_key, best_score = key, score
@@ -1787,7 +1732,7 @@ def mmr_diversified_topk(
             selected.append(picked)
             rows.append((qid, step, picked, best_score))
         return pd.DataFrame(
-            rows, columns=[query_id_col, "step", id_col, "mmr_score"]
+            rows, columns=["q_id", "step", "vec_id", "mmr_score"]
         )
 
-    return pairs.groupBy(query_id_col).applyInPandas(greedy, out_schema)
+    return pairs.groupBy("q_id").applyInPandas(greedy, out_schema)

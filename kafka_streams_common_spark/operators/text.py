@@ -21,21 +21,23 @@ LANG_PROFILES: tuple[tuple[str, tuple[str, ...]], ...] = (
 )
 
 
-def _tokens(text_col: str) -> Column:
-    return F.split(F.col(text_col), " ")
+def _tokens() -> Column:
+    """The whitespace tokens of the ``text`` column."""
+    return F.split(F.col("text"), " ")
 
 
-def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def text_quality(docs: DataFrame) -> DataFrame:
     """Per-document quality metrics: the standard cheap filters a training
-    pipeline gates on (length, token shape, repetition, symbol noise).
+    pipeline gates on (length, token shape, repetition, symbol noise),
+    from the ``doc_id`` and ``text`` columns.
 
     Token array materialized once (dedicated projection) — inlining the
     split() into every metric re-tokenizes the row per reference; see
     lang_id for the CollapseProject argument. Still map-only."""
     tokened = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("__text"),
-        _tokens(text_col).alias("__toks"),
+        F.col("doc_id"),
+        F.col("text").alias("__text"),
+        _tokens().alias("__toks"),
     )
     toks = F.col("__toks")
     n_tokens = F.size(toks)
@@ -56,12 +58,13 @@ def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate (≈ len/4 per word
     — the standard "chars/4" rule of thumb, computed per-token so long words
-    weigh in correctly). Token array materialized once — see lang_id."""
+    weigh in correctly), per ``doc_id`` over the ``text`` column. Token
+    array materialized once — see lang_id."""
     tokened = docs.select(
-        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("__toks")
+        F.col("doc_id"), _tokens().alias("__toks")
     )
     toks = F.col("__toks")
     bpeish = F.aggregate(
@@ -76,10 +79,11 @@ def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-profile language heuristic: score each language by how many
     tokens (with multiplicity) hit its profile; argmax wins, ties resolve in
-    profile order, all-zero scores → 'und' (undetermined).
+    profile order, all-zero scores → 'und' (undetermined). Reads
+    ``doc_id`` and ``text``.
 
     The token array is materialized in its own projection: inlining the
     split() into every per-language score put ~40 tokenizations per row
@@ -89,7 +93,7 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     non-cheap and multiply-referenced). Still a pure two-projection
     map-only scan — no shuffle."""
     tokened = docs.select(
-        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("__toks")
+        F.col("doc_id"), _tokens().alias("__toks")
     )
     toks = F.col("__toks")
 
@@ -109,11 +113,10 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
-def document_fingerprints(
-    docs: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def document_fingerprints(docs: DataFrame, n: int = 5) -> DataFrame:
     """Content fingerprints: full-text digest + a min-shingle (winnowing-
-    style) fingerprint robust to local edits. Both md5-derived 60-bit ints.
+    style) fingerprint robust to local edits, of each ``doc_id``'s
+    ``text``. Both md5-derived 60-bit ints.
 
     Token array materialized once: a split() referenced inside the
     per-shingle slice() lambda re-tokenizes the row PER SHINGLE POSITION
@@ -121,9 +124,9 @@ def document_fingerprints(
     duplication lang_id had), so the dedicated projection turns an
     O(doc_len) tokenization per row into one."""
     tokened = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("__text"),
-        _tokens(text_col).alias("__toks"),
+        F.col("doc_id"),
+        F.col("text").alias("__text"),
+        _tokens().alias("__toks"),
     )
     toks = F.col("__toks")
     starts = F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(toks) - (n - 1)))
@@ -137,11 +140,10 @@ def document_fingerprints(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document — the keyword/topic-extraction pass
-    of a corpus pipeline (tf · ln(N/df), plain IDF).
+    of a corpus pipeline (tf · ln(N/df), plain IDF), over the ``doc_id``
+    and ``text`` columns.
 
     Scale shape: explode → (doc, term) pairs; the tf aggregation shuffles on
     (doc_id, term) with map-side partial combine; the document-frequency
@@ -156,7 +158,7 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(_tokens()).alias("term")
     ).filter(F.col("term") != "")
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_tab = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -178,12 +180,11 @@ def tfidf_top_terms(
     )
 
 
-def bigram_repetition(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_repetition(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition metrics per document: total bigrams, fraction
     held by the single most frequent bigram, and distinct-bigram ratio —
     the repetition gates used to drop boilerplate/spam before training.
+    Reads ``doc_id`` and ``text``.
 
     Documents with fewer than two tokens have no bigrams and are excluded
     (matching the oracle's WHERE). The bigram build is a per-row
@@ -191,8 +192,8 @@ def bigram_repetition(
     the two aggregations, both keyed by doc_id so the second reuses the
     first's partitioning.
     """
-    toks = _tokens(text_col)
-    docs2 = docs.select(F.col(id_col).alias("doc_id"), toks.alias("w")).filter(
+    toks = _tokens()
+    docs2 = docs.select(F.col("doc_id"), toks.alias("w")).filter(
         F.size("w") >= 2
     )
     bg = docs2.select(
@@ -209,13 +210,12 @@ def bigram_repetition(
     )
 
 
-def unigram_logprob(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Corpus-unigram-LM quality score per document — the cheap stand-in
     for a perplexity filter: score each token by −ln p(token) under the
     corpus's own unigram distribution and average per document
-    (``(doc_id, n_scored, avg_neg_logprob)``). High values flag documents
+    (``(doc_id, n_scored, avg_neg_logprob)`` from the ``doc_id`` and
+    ``text`` columns). High values flag documents
     full of rare/garbage tokens; low values flag stopword soup — both
     standard pre-training gates.
 
@@ -236,8 +236,8 @@ def unigram_logprob(
     words_agg = (
         fan_out(docs)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_tokens(text_col)).alias("term"),
+            F.col("doc_id"),
+            F.explode(_tokens()).alias("term"),
         )
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
@@ -270,10 +270,9 @@ def stratified_hash_sample(
     docs: DataFrame,
     rates_pct: dict[str, int],
     strata_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic stratified sampling: per-stratum keep-percentages over
-    an md5(id) bucket in [0, 100) — the language-rebalancing primitive of a
+    an md5(``doc_id``) bucket in [0, 100) — the language-rebalancing primitive of a
     corpus pipeline (e.g. downsample English, keep all low-resource
     languages). Like :mod:`text_hash_sample`, selection is a pure function
     of the row id: reproducible bit-for-bit across runs, engines and
@@ -284,20 +283,19 @@ def stratified_hash_sample(
     rate = F.lit(0)
     for stratum, pct in rates_pct.items():
         rate = F.when(F.col(strata_col) == stratum, F.lit(pct)).otherwise(rate)
-    return docs.filter(F.pmod(md5_int64(id_col), F.lit(100)) < rate)
+    return docs.filter(F.pmod(md5_int64("doc_id"), F.lit(100)) < rate)
 
 
 def mix_corpus_by_tokens(
     docs: DataFrame,
     token_budgets: dict[str, int],
-    strata_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Token-BUDGET corpus mixing — the Pile/Dolma-style recipe step: given
     a target token count per stratum (language/source/domain), down-sample
     each stratum deterministically so its expected token mass meets the
-    budget, keeping strata already under budget whole.
+    budget, keeping strata already under budget whole. The stratum is
+    the ``lang`` column, the tokens are those of ``text`` and the row id
+    is ``doc_id``.
 
     Per stratum: ``keep_rate = min(1, budget / stratum_tokens)``, applied
     as an md5(id) bucket test in parts-per-million —
@@ -322,13 +320,13 @@ def mix_corpus_by_tokens(
         raise ValueError("mix_corpus_by_tokens: token_budgets must be non-empty")
     if any(b < 0 for b in token_budgets.values()):
         raise ValueError(f"negative token budget in {token_budgets}")
-    n_tokens = F.size(_tokens(text_col)).cast("bigint")
+    n_tokens = F.size(_tokens()).cast("bigint")
     with_toks = docs.withColumn("n_tokens", n_tokens)
     # explicit whitelist filter — NOT a null budget flowing into least():
     # Spark's least() SKIPS nulls (least(1.0, NULL) = 1.0), so an unlisted
     # stratum would silently sample at rate 1.0 instead of dropping
     totals = (
-        with_toks.groupBy(F.col(strata_col).alias("__st"))
+        with_toks.groupBy(F.col("lang").alias("__st"))
         .agg(F.sum("n_tokens").alias("__stream_tokens"))
         .filter(F.col("__st").isin(*token_budgets))
     )
@@ -348,9 +346,9 @@ def mix_corpus_by_tokens(
     )
     return (
         with_toks.join(
-            F.broadcast(rates), F.col(strata_col) == F.col("__st")
+            F.broadcast(rates), F.col("lang") == F.col("__st")
         )
-        .filter(F.pmod(md5_int64(id_col), F.lit(1_000_000)) < F.col("__rate_ppm"))
+        .filter(F.pmod(md5_int64("doc_id"), F.lit(1_000_000)) < F.col("__rate_ppm"))
         .drop("__st", "__rate_ppm")
     )
 
@@ -358,10 +356,9 @@ def mix_corpus_by_tokens(
 def hash_split(
     docs: DataFrame,
     weights: dict[str, int],
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic train/val/test split: adds a ``split`` column assigned
-    by md5(id) bucket in [0, 100). ``weights`` maps split name → percent
+    by md5(``doc_id``) bucket in [0, 100). ``weights`` maps split name → percent
     (must sum to ≤ 100; remainder falls into the last split). Like
     :func:`stratified_hash_sample`, assignment is a pure function of the
     row id — disjoint, exhaustive, reproducible across runs, engines and
@@ -377,7 +374,7 @@ def hash_split(
             f" (got {weights}, sum {total}); the last split absorbs any"
             f" remainder"
         )
-    bucket = F.pmod(md5_int64(id_col), F.lit(100))
+    bucket = F.pmod(md5_int64("doc_id"), F.lit(100))
     expr = None
     lo = 0
     names = list(weights)
@@ -393,13 +390,11 @@ def pack_sequences(
     docs: DataFrame,
     budget_tokens: int,
     n_groups: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sequence packing: assign documents to fixed-token-budget packs
     (training sequences) — ``(doc_id, n_tokens, pack_id)`` with every doc
     in exactly one pack and no pack over budget (unless a single document
-    alone exceeds it).
+    alone exceeds it). Tokens are the whitespace tokens of ``text``.
 
     Bin packing is inherently sequential, so the scalable shape is
     two-level: hash documents into ``n_groups`` independent groups (the
@@ -431,9 +426,9 @@ def pack_sequences(
     import pandas as pd
 
     counts = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(_tokens(text_col)).cast("bigint").alias("n_tokens"),
-        F.pmod(md5_int64(id_col), F.lit(n_groups)).alias("grp"),
+        F.col("doc_id"),
+        F.size(_tokens()).cast("bigint").alias("n_tokens"),
+        F.pmod(md5_int64("doc_id"), F.lit(n_groups)).alias("grp"),
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -468,15 +463,12 @@ def pack_sequences(
 def token_budget_shards(
     docs: DataFrame,
     budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str = "shard",
 ) -> DataFrame:
     """ORDER-PRESERVING token-budget sharding: walk the corpus in
-    ``id_col`` order and cut a new shard every ``budget_tokens`` tokens —
-    ``shard = floor(start_offset / budget)`` where ``start_offset`` is
-    the exact number of tokens strictly before the document. Returns
-    ``(id_col, n_tokens, shard)``.
+    ``doc_id`` order and cut a new shard every ``budget_tokens`` tokens
+    of ``text`` — ``shard = floor(start_offset / budget)`` where
+    ``start_offset`` is the exact number of tokens strictly before the
+    document. Returns ``(doc_id, n_tokens, shard)``.
 
     This is the writer shape for dataloaders that stream a REPRODUCIBLE
     global order (curriculum schedules, resumable epochs): unlike
@@ -491,19 +483,19 @@ def token_budget_shards(
     from kafka_streams_common_spark.operators.prefix import global_prefix
 
     counts = docs.select(
-        F.col(id_col),
-        F.size(_tokens(text_col)).cast("bigint").alias("n_tokens"),
+        F.col("doc_id"),
+        F.size(_tokens()).cast("bigint").alias("n_tokens"),
     )
-    run = global_prefix(counts, [id_col], sum_cols=["n_tokens"])
+    run = global_prefix(counts, ["doc_id"], sum_cols=["n_tokens"])
     return run.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         (
             (F.col("run_n_tokens") - F.col("n_tokens"))
             / F.lit(int(budget_tokens))
         )
         .cast("bigint")
-        .alias(shard_col),
+        .alias("shard"),
     )
 
 
@@ -516,20 +508,13 @@ GOPHER_STOP_WORDS: tuple[str, ...] = (
 )
 
 
-def gopher_quality(
-    docs: DataFrame,
-    min_words: int = 20,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_frac: float = 0.80,
-    min_stop_hits: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gopher_quality(docs: DataFrame) -> DataFrame:
     """Gopher-style document quality rules — the pre-training gate battery
     (word-count bounds, mean word length band, alphabetic-word fraction,
-    stop-word presence) as ONE map-only projection.
+    stop-word presence) as ONE map-only projection over the ``doc_id``
+    and ``text`` columns. The Gopher thresholds: 20 to 100,000 words,
+    mean word length 3 to 10, at least 80% of words alphabetic, at least
+    two ``GOPHER_STOP_WORDS`` hits.
 
     Every rule is a built-in column expression over the shared token
     array — materialized ONCE in its own projection (inlining the
@@ -542,7 +527,7 @@ def gopher_quality(
     the standard curation-report requirement.
     """
     docs = docs.select(
-        F.col(id_col), F.col(text_col), _tokens(text_col).alias("__toks")
+        F.col("doc_id"), F.col("text"), _tokens().alias("__toks")
     )
     toks = F.col("__toks")
     n_words = F.size(toks)
@@ -555,11 +540,10 @@ def gopher_quality(
     alpha_frac = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]"))) / n_words
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*GOPHER_STOP_WORDS)))
     rules = {
-        "word_count_ok": (n_words >= min_words) & (n_words <= max_words),
-        "mean_word_len_ok": (mean_len >= min_mean_word_len)
-        & (mean_len <= max_mean_word_len),
-        "alpha_frac_ok": alpha_frac >= min_alpha_frac,
-        "stop_words_ok": stop_hits >= min_stop_hits,
+        "word_count_ok": (n_words >= 20) & (n_words <= 100_000),
+        "mean_word_len_ok": (mean_len >= 3.0) & (mean_len <= 10.0),
+        "alpha_frac_ok": alpha_frac >= 0.80,
+        "stop_words_ok": stop_hits >= 2,
     }
     keep = rules["word_count_ok"]
     for c in list(rules.values())[1:]:
@@ -570,7 +554,7 @@ def gopher_quality(
     # HALF_UP vs DuckDB scaled-multiply; the bigram scorer hit exactly
     # that), so rounding would ADD a cross-engine hazard, not remove one
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         n_words.cast("bigint").alias("n_words"),
         mean_len.alias("mean_word_len"),
         alpha_frac.alias("alpha_frac"),
@@ -583,11 +567,10 @@ def gopher_quality(
 def bigram_logprob(
     docs: DataFrame,
     lam: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Interpolated bigram-LM quality score per document —
-    ``(doc_id, n_bigrams, avg_neg_logprob)`` — one rung up the
+    ``(doc_id, n_bigrams, avg_neg_logprob)`` from the ``doc_id`` and
+    ``text`` columns — one rung up the
     perplexity-filter ladder from :func:`unigram_logprob`: each bigram
     scores ``−ln(λ·p(cur|prev) + (1−λ)·p(cur))`` under the corpus's own
     counts, so repeated boilerplate transitions score cheap (low surprise)
@@ -627,7 +610,7 @@ def bigram_logprob(
     # single-split local scan serializing the explode on one core (no-op
     # on a many-split production table — see fan_out's docstring).
     tokened = fan_out(docs).select(
-        F.col(id_col).alias("doc_id"), _tokens(text_col).alias("__toks")
+        F.col("doc_id"), _tokens().alias("__toks")
     )
     toks = F.col("__toks")
     idx = F.when(F.size(toks) >= 2, F.sequence(F.lit(2), F.size(toks))).otherwise(
@@ -697,8 +680,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Overlapping token-window chunking — the RAG/context-window
     preprocessing step: split each document into chunks of
@@ -706,7 +687,8 @@ def chunk_documents(
     ``chunk_size - stride``), so every token lands in at least one chunk
     and boundary-spanning passages land in two.
 
-    Returns ``(id_col, chunk_id, n_chunk_tokens, chunk_text)`` with
+    Reads ``doc_id`` and ``text``. Returns ``(doc_id, chunk_id,
+    n_chunk_tokens, chunk_text)`` with
     ``chunk_id`` 0-based per document. A document with ``n <=
     chunk_size`` tokens yields exactly one chunk; otherwise
     ``1 + ceil((n - chunk_size) / stride)`` chunks (the final chunk may
@@ -723,14 +705,14 @@ def chunk_documents(
     if stride > chunk_size:
         raise ValueError("stride > chunk_size would drop tokens between chunks")
     toks = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("__toks")
+        "doc_id", F.split(F.col("text"), " ").alias("__toks")
     ).withColumn("__n", F.size("__toks"))
     n_chunks = F.lit(1) + F.greatest(
         F.lit(0),
         F.ceil((F.col("__n") - F.lit(chunk_size)) / F.lit(float(stride))),
     )
     chunked = toks.select(
-        id_col,
+        "doc_id",
         "__toks",
         F.explode(F.sequence(F.lit(0), (n_chunks - 1).cast("int"))).alias(
             "chunk_id"
@@ -740,30 +722,25 @@ def chunk_documents(
         F.col("__toks"), F.col("chunk_id") * stride + 1, chunk_size
     )
     return chunked.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("bigint").alias("chunk_id"),
         F.size(window).cast("bigint").alias("n_chunk_tokens"),
         F.array_join(window, " ").alias("chunk_text"),
     )
 
 
-def classifier_score(
-    docs: DataFrame,
-    seed: str = "w1",
-    threshold: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def classifier_score(docs: DataFrame) -> DataFrame:
     """Hashed-bag-of-words linear quality classifier — the fastText-style
     filter shape (CCNet / LLaMA-pipeline quality gate): each token hashes
     to a weight, the document's score is the weight sum, and the gate
-    keeps documents above ``threshold``. Weights here are md5-derived
+    keeps documents whose logit is above 0. Returns ``(doc_id, logit,
+    keep)`` from the ``doc_id`` and ``text`` columns. Weights here are md5-derived
     placeholders in [-1, 1] (a real deployment broadcasts trained
     weights; the plumbing — hashing, lookup-free scoring, gating — is
     identical and is what this operator pins).
 
     Engine-exact arithmetic: weights are integer MILLS (thousandths,
-    ``md5_int64(seed|token) % 2001 - 1000``) accumulated as bigints —
+    ``md5_int64("w1|" + token) % 2001 - 1000``) accumulated as bigints —
     order-free — and divided back to a double logit once per document.
 
     Scale shape: tokenize once, one map-only fold per row — no explode,
@@ -773,22 +750,17 @@ def classifier_score(
     # ONE scoring core: the gate and its evaluation suite (AUC,
     # calibration, confusion, Spearman) must score the same model —
     # both derive from classifier_logit_mills
-    scored = classifier_logit_mills(
-        docs, seed=seed, text_col=text_col, id_col=id_col
-    )
+    scored = classifier_logit_mills(docs)
     logit = F.col("logit_mills") / 1000.0
     return scored.select(
-        id_col,
+        "doc_id",
         logit.alias("logit"),
-        (logit > F.lit(threshold)).alias("keep"),
+        (logit > F.lit(0.0)).alias("keep"),
     )
 
 
 def classifier_logit_mills(
     docs: DataFrame,
-    seed: str = "w1",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     extra_cols: tuple = (),
 ) -> DataFrame:
     """The :func:`classifier_score` logit kept in exact integer MILLS
@@ -796,21 +768,21 @@ def classifier_logit_mills(
     integer is total and engine-exact, so AUC ranks and calibration bins
     built on it never hinge on float ties. ``extra_cols`` (Columns over
     the input, e.g. a label expression) ride along in the same map-only
-    projection so callers never re-join on id. Same scale shape as the
+    projection so callers never re-join on ``doc_id``. Same scale shape as the
     scorer: tokenize once, hash-is-the-lookup fold, no shuffle."""
     toks = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("__toks"), *extra_cols
+        "doc_id", F.split(F.col("text"), " ").alias("__toks"), *extra_cols
     )
     mills = lambda t: (  # noqa: E731
-        md5_int64(F.concat(F.lit(seed + "|"), t)) % 2001 - 1000
+        md5_int64(F.concat(F.lit("w1|"), t)) % 2001 - 1000
     )
     carried = [
         fld.name
         for fld in toks.schema.fields
-        if fld.name not in (id_col, "__toks")
+        if fld.name not in ("doc_id", "__toks")
     ]
     return toks.select(
-        id_col,
+        "doc_id",
         F.aggregate(
             F.transform(F.col("__toks"), mills),
             F.lit(0).cast("bigint"),
@@ -824,8 +796,6 @@ def dsir_importance_weights(
     corpus: DataFrame,
     target: DataFrame,
     n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """DSIR-style data-selection weights (Xie et al. 2023, "Data
     Selection for Language Models via Importance Resampling"): score
@@ -836,8 +806,8 @@ def dsir_importance_weights(
     score positive — the standard cheap importance filter a pretraining
     pipeline runs to tilt a 100 TB crawl toward a target domain.
 
-    Returns ``(doc_id, n_bigrams, dsir_score, keep)`` for every corpus
-    doc; ``dsir_score`` = Σ m_f·lr_f / Σ m_f over the doc's bucket
+    Both sides read ``doc_id`` and ``text``. Returns ``(doc_id,
+    n_bigrams, dsir_score, keep)`` for every corpus doc; ``dsir_score`` = Σ m_f·lr_f / Σ m_f over the doc's bucket
     counts, ``lr_f = ln(p̂_target(f)/p̂_corpus(f))`` with add-one
     smoothing over ``n_buckets`` hashed buckets; ``keep`` = score > 0.
 
@@ -859,7 +829,7 @@ def dsir_importance_weights(
 
     def bucket_counts(docs: DataFrame) -> DataFrame:
         tokened = fan_out(docs).select(
-            F.col(id_col).alias("doc_id"), _tokens(text_col).alias("__toks")
+            F.col("doc_id"), _tokens().alias("__toks")
         )
         toks = F.col("__toks")
         idx = F.when(
@@ -923,7 +893,7 @@ def dsir_importance_weights(
         )
     )
     return (
-        corpus.select(F.col(id_col).alias("doc_id"))
+        corpus.select("doc_id")
         .join(scored, "doc_id", "left")
         .select(
             "doc_id",
@@ -938,7 +908,6 @@ def weighted_priority_sample(
     docs: DataFrame,
     k: int,
     weight_col: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis 2006,
     "Weighted random sampling with a reservoir"): each row gets key
@@ -947,7 +916,7 @@ def weighted_priority_sample(
     deserve inclusion odds proportional to a quality/length weight —
     one distributed top-k, no sequential reservoir, no RNG state.
 
-    Determinism (repo convention): ``u`` derives from md5 of the id
+    Determinism (repo convention): ``u`` derives from md5 of ``doc_id``
     (reproducible on any engine/cluster/partitioning — the
     hash-as-uniform trick every sampling operator here uses), the
     ranking key is ``ln(u)/w`` (monotone in ``u^(1/w)``, avoids pow
@@ -960,11 +929,11 @@ def weighted_priority_sample(
     """
     from kafka_streams_common_spark.functions.hashing import md5_int64
 
-    u = (md5_int64(F.col(id_col)) + 1).cast("double") / float(1 << 60)
+    u = (md5_int64(F.col("doc_id")) + 1).cast("double") / float(1 << 60)
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 12)
     return (
         docs.filter(F.col(weight_col).cast("double") > 0)
         .withColumn("sample_key", key)
-        .orderBy(F.desc("sample_key"), F.asc(id_col))
+        .orderBy(F.desc("sample_key"), F.asc("doc_id"))
         .limit(k)
     )

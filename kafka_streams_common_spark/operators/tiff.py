@@ -198,19 +198,21 @@ _TIFF_OUT = T.StructType(
 )
 
 
-def encode_tiff(docs: DataFrame, dim_mod: int = 16) -> DataFrame:
+def encode_tiff(docs: DataFrame) -> DataFrame:
     """documents → genuine baseline TIFFs with the established md5
     geometry and digest-cycled raster: EVEN doc_ids are little-endian
     (``II``) grayscale single-strip files; ODD are big-endian (``MM``)
     RGB files stripped at 4 rows/strip — so byte order, photometric
     class, and multi-strip assembly all vary inside one lake.
-    Map-only."""
+    Map-only.
+    Reads ``doc_id`` and ``text``; width and height are ``md5 % 16 +
+    1``."""
 
     def encode(did, text):
         did = int(did)
         hx = hashlib.md5(str(text).encode()).hexdigest()
-        w = int(hx[:15], 16) % dim_mod + 1
-        h = int(hashlib.md5(str(text)[::-1].encode()).hexdigest()[:15], 16) % dim_mod + 1
+        w = int(hx[:15], 16) % 16 + 1
+        h = int(hashlib.md5(str(text)[::-1].encode()).hexdigest()[:15], 16) % 16 + 1
         if did % 2 == 0:
             n = w * h
             raster = (bytes.fromhex(hx) * ((n + 15) // 16))[:n]

@@ -89,10 +89,10 @@ def ewma(
     order_col: str,
     value_col: str,
     alpha: float = 0.25,
-    out_col: str = "ewma",
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Exponentially weighted moving average per key series.
+    """Exponentially weighted moving average per key series, added as
+    the ``ewma`` column.
 
     ``y_1 = x_1`` (first observation seeds the state), then
     ``y_i = alpha·x_i + (1-alpha)·y_{i-1}`` in ``order_col`` order within
@@ -112,14 +112,14 @@ def ewma(
     appropriate when series are bounded (per-entity daily rollups), which
     is the case for every pre-aggregated census this engine feeds it.
     """
-    out_schema = StructType(list(df.schema.fields)).add(out_col, DoubleType())
-    cols = list(df.columns) + [out_col]
+    out_schema = StructType(list(df.schema.fields)).add("ewma", DoubleType())
+    cols = list(df.columns) + ["ewma"]
     sort_cols = [order_col] + list(tiebreak_cols or [])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(sort_cols, kind="mergesort")
         out, _ = ewma_scan(pdf[value_col].astype("float64").to_list(), alpha, 0.0, 0)
-        return pdf.assign(**{out_col: out})[cols]
+        return pdf.assign(ewma=out)[cols]
 
     return df.groupBy(*[F.col(c) for c in key_cols]).applyInPandas(
         kernel, out_schema
@@ -133,7 +133,6 @@ def holt_linear(
     value_col: str,
     alpha: float = 0.5,
     beta: float = 0.25,
-    tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """Holt's linear-trend (double exponential) smoothing per key series
     — the level+trend recurrence behind short-horizon forecasting that
@@ -147,8 +146,7 @@ def holt_linear(
     one-step-ahead prediction). Same execution contract as ``ewma``
     above: grouped Arrow kernel, one shuffle on ``key_cols``, the
     :func:`holt_scan` recurrence (prefer exactly-representable
-    alpha/beta); ``(key_cols, order_col)`` must be unique unless
-    ``tiebreak_cols`` extends the sort to a total order.
+    alpha/beta); ``(key_cols, order_col)`` must be unique.
     """
     out_schema = (
         StructType(list(df.schema.fields))
@@ -157,10 +155,9 @@ def holt_linear(
         .add("forecast", DoubleType())
     )
     cols = list(df.columns) + ["level", "trend", "forecast"]
-    sort_cols = [order_col] + list(tiebreak_cols or [])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        pdf = pdf.sort_values(order_col, kind="mergesort")
         out, _ = holt_scan(
             pdf[value_col].astype("float64").to_list(), alpha, beta, 0.0, 0.0, 0
         )

@@ -354,12 +354,13 @@ def render_docs_html(docs: DataFrame) -> DataFrame:
     return row_kernel(fan_out(docs.select("doc_id", "text", "lang")), render, out_schema)
 
 
-def extract_docs_main_text(pages: DataFrame, page_col: str = "page") -> DataFrame:
+def extract_docs_main_text(pages: DataFrame) -> DataFrame:
     """Map-only extraction over rendered pages: id recovered from the
     article <h1>, title/lang/main-text/chrome stats emitted — every
-    column oracle-replayable from ``documents``."""
+    column oracle-replayable from ``documents``.
+    Reads the ``page`` column."""
 
     def extract(p):
         yield _extract_row(str(p))
 
-    return row_kernel(pages.select(page_col), extract, _EXTRACT_SCHEMA)
+    return row_kernel(pages.select("page"), extract, _EXTRACT_SCHEMA)

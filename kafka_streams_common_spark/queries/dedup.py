@@ -730,9 +730,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once — the df census and the score join would
     # otherwise each re-shingle the corpus (the shingle_pair_census
     # pattern; no pair join here, so only the checkpoint is shared)
-    sh = _hashed_shingles(docs, n=3, text_col="text", id_col="doc_id").localCheckpoint(
-        eager=True
-    )
+    sh = _hashed_shingles(docs, n=3).localCheckpoint(eager=True)
     dfreq = sh.groupBy(F.col("sh").alias("k")).agg(
         F.count(F.lit(1)).alias("df")
     )

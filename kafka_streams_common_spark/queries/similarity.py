@@ -349,7 +349,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     assigned AS (SELECT id, v, cell FROM cells WHERE rn = 1),
     ok AS (
-      SELECT cell FROM assigned GROUP BY cell HAVING count(*) <= 100
+      SELECT cell FROM assigned GROUP BY cell HAVING count(*) <= 130
     ),
     probes AS (SELECT id AS q_id, v AS q_emb, cell FROM cells WHERE rn <= 2),
     scored AS (
@@ -386,10 +386,13 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style SEMANTIC dedup — the k-NN graph consumed by the
     composition it exists for: approximate kNN edges (16 cells, 2
-    probes, cell cap 100), threshold at cosine ≥ 0.35, alternating
-    min-label connected components, canonical (min-id) survivor per
-    cluster → ``(vec_id, cluster_id, keep)``. The fixture embeddings
-    carry NO true semantic duplicates (measured max pairwise cosine
+    probes, cell cap 130), threshold at cosine ≥ 0.35, large-star/
+    small-star connected components, canonical (min-id) survivor per
+    cluster → ``(vec_id, cluster_id, keep)``. The cap binds on no cell
+    at sf0.01 (372 clusters); the sf0.1 cells hold 105–148 vectors, so
+    it drops only those above 130 (1,912 edges, 817 clusters), where a
+    cap of 100 dropped every cell and left 2,000 singletons. The
+    fixture embeddings carry NO true semantic duplicates (measured max pairwise cosine
     0.513 at sf0.01), so the threshold sits inside the ambient
     similarity mass to exercise real multi-member clusters externally
     (201 directed edges at sf0.01); planted-near-duplicate keep-list
@@ -400,7 +403,7 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end."""
     emb = table(spark, sf_dir, "embeddings")
     return semantic_dedup(
-        emb, tau=0.35, k=8, n_centroids=16, n_probe=2, max_cell=100
+        emb, tau=0.35, k=8, n_centroids=16, n_probe=2, max_cell=130
     )
 
 

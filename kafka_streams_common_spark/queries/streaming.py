@@ -524,7 +524,7 @@ def streaming_mix_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     budgets = {"en": 5000, "de": 5000, "zh": 2000, "es": 1000}
     static_docs = table(spark, sf_dir, "documents")
-    n_tokens = F.size(_tokens("text")).cast("bigint")
+    n_tokens = F.size(_tokens()).cast("bigint")
     budget = F.lit(None).cast("bigint")
     for stratum, b in budgets.items():
         budget = F.when(F.col("__st") == stratum, F.lit(b)).otherwise(budget)
